@@ -158,12 +158,12 @@ object Bench {
       val c = cc.map(s => s""","cc":$s""").getOrElse("")
       s"""{"name":"$k","start_off":${f3(off)},"sec":${f3(v)}$e$c}"""
     }.mkString("[", ",", "]")
-    val full = s"""{"metric":"total","value":${f3(total)},"unit":"sec","value_per_calib":${f3(valuePerCalib)},"calib_median":${f3(calibMedian)},"calib_sec":${f3(calib)},"calib_every":$calibEvery,"calibs":$calibJson,"start_epoch":${f3(startEpoch)},"sf":"$sfDir","failures":$failures,"detail":$detail}"""
+    val full = s"""{"metric":"total","value":${f3(total)},"unit":"sec","value_per_calib":${f3(valuePerCalib)},"calib_median":${f3(calibMedian)},"calib_sec":${f3(calib)},"calib_every":$calibEvery,"calibs":$calibJson,"start_epoch":${f3(startEpoch)},"sf":"${esc(sfDir)}","failures":$failures,"detail":$detail}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       full.getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: $e") }
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","value_per_calib":${f3(valuePerCalib)},"calib_median":${f3(calibMedian)},"calib_sec":${f3(calib)},"calibs":$calibJson,"queries":$qs,"sf":"$sfDir","failures":$failures}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","value_per_calib":${f3(valuePerCalib)},"calib_median":${f3(calibMedian)},"calib_sec":${f3(calib)},"calibs":$calibJson,"queries":$qs,"sf":"${esc(sfDir)}","failures":$failures}""")
     // r13 verdict #1: the full line above now carries 199 query
     // entries (~6 KB) and the driver's BOUNDED stdout-tail capture
     // cut its head in rounds 12 AND 13 (BENCH_r12/r13 parsed:null,
@@ -172,7 +172,7 @@ object Bench {
     // $outPath — so any tail window of the stdout ends with
     // parseable JSON. Reporting addition only: the timed region,
     // action, warmup and query set are unchanged.
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","value_per_calib":${f3(valuePerCalib)},"calib_median":${f3(calibMedian)},"sf":"$sfDir","failures":$failures,"detail":"$outPath"}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","value_per_calib":${f3(valuePerCalib)},"calib_median":${f3(calibMedian)},"sf":"${esc(sfDir)}","failures":$failures,"detail":"${esc(outPath)}"}""")
     spark.stop()
     if (failures > 0) sys.exit(1)
   }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast,
   Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, FloatType, IntegerType}
+import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType,
+  IntegerType, StringType}
 import graft.core.IpCodec
 
 /** Native Catalyst expression for the convip encode codec (C4/C5,
@@ -94,6 +95,21 @@ object GraftFunctions {
     exprs => ShingleSigExpr(
       Cast(exprs.head, org.apache.spark.sql.types.StringType))
 
+  /** (d, from_name, from_factor, to_name, to_factor); the target unit
+    * must be constant, since the kernel resolves its branch per row.
+    */
+  private[functions] val unitConvertBuilder
+      : Seq[Expression] => Expression = exprs => {
+    require(exprs.length == 5,
+      s"graft_unit_convert takes 5 arguments, got ${exprs.length}")
+    val Seq(d, fromName, fromFactor, toName, toFactor) = exprs
+    require(toName.foldable && toFactor.foldable && toName.eval() != null,
+      "graft_unit_convert: to_name and to_factor must be constants")
+    UnitConvertExpr(d, Cast(fromName, StringType),
+      Cast(fromFactor, DoubleType), toName.eval().toString,
+      Cast(toFactor, DoubleType).eval().asInstanceOf[Double])
+  }
+
   private[functions] val all: Seq[(String, Seq[Expression] => Expression,
       Class[_])] = Seq(
     ("graft_encode_ip", encodeIpBuilder, classOf[EncodeIpExpr]),
@@ -118,7 +134,12 @@ object GraftFunctions {
           org.apache.spark.sql.types.LongType)),
         Cast(exprs(1), org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.LongType))),
-      classOf[JaccardLongExpr]))
+      classOf[JaccardLongExpr]),
+    ("graft_array_sum",
+      // no cast, like graft_dot: the kernel reads float and double
+      // arrays as they are
+      exprs => ArraySumExpr(exprs.head), classOf[ArraySumExpr]),
+    ("graft_unit_convert", unitConvertBuilder, classOf[UnitConvertExpr]))
 
   def install(spark: SparkSession): Unit =
     all.foreach { case (name, builder, _) =>
@@ -148,6 +169,25 @@ object GraftFunctions {
   def dot(a: Column, b: Column): Column = {
     SparkSession.getActiveSession.foreach(install)
     call_function("graft_dot", a, b)
+  }
+
+  /** Left-fold double sum of a float/double array column via the native
+    * codegen kernel (bit-identical to the `aggregate` form).
+    */
+  def arraySum(a: Column): Column = {
+    SparkSession.getActiveSession.foreach(install)
+    call_function("graft_array_sum", a)
+  }
+
+  /** Per-element conversion of payload `d` from the row's unit
+    * (`fromName`, `fromFactor`) to the constant target unit, via the
+    * native codegen kernel (bit-identical to the `transform` form).
+    */
+  def unitConvert(d: Column, fromName: Column, fromFactor: Column,
+                  toName: String, toFactor: Double): Column = {
+    SparkSession.getActiveSession.foreach(install)
+    call_function("graft_unit_convert", d, fromName, fromFactor,
+      lit(toName), lit(toFactor))
   }
 
   /** Exact Jaccard of two distinct-element long arrays via the native

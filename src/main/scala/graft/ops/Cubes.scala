@@ -43,9 +43,18 @@ object Cubes {
     * window's rank-1 filter picked, and both order rid structs
     * lexicographically. `graft.cubes.minByPick=off` restores the
     * window pick for paired A/B.
+    *
+    * A null rid fails the query: min_by skips null orderings while
+    * the window ranks them first, so the two picks would disagree (and
+    * min_by would yield a null `d` for a group of null rids). The
+    * check folds away when the rid column is not nullable.
     */
-  private def pickMinRid(data: DataFrame, keys: Seq[String])
+  private def pickMinRid(data0: DataFrame, keys: Seq[String])
       : DataFrame = {
+    val data = data0.withColumn("rid", when(col("rid").isNull,
+        raise_error(lit("to_cube: a record has a null rid; the " +
+          "representative pick needs a unique non-null record id")))
+      .otherwise(col("rid")))
     if (!sys.props.get("graft.cubes.minByPick").contains("off"))
       data.groupBy(keys.map(col): _*)
         .agg(min_by(col("d"), col("rid")).as("d"))

@@ -1,40 +1,36 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Per-record payload statistics (fststat / compute_stats,
   * /root/reference/fstpy/dataframe_utils.py:147-182) and the voir
   * listing projection (:117-140).
   *
-  * All stats are built from higher-order array functions — per-row,
-  * no shuffle, inside whole-stage codegen. Sums fold left in DOUBLE so
-  * the result is deterministic and oracle-reproducible. argmin/argmax
-  * positions are 1-based (i,j) on the (ni,nj) field; first occurrence
-  * in Fortran storage order breaks ties.
+  * All stats are per-row, with no shuffle. The two sums run in the
+  * codegen'd primitive kernels `graft_array_sum` and `graft_dot(d, d)`
+  * (Spark's `aggregate` is `CodegenFallback`, which would box every
+  * element through an interpreted lambda); both fold left in DOUBLE
+  * from 0.0, so the result is deterministic and oracle-reproducible.
+  * argmin/argmax positions are 1-based (i,j) on the (ni,nj) field;
+  * first occurrence in Fortran storage order breaks ties.
   */
 object Stats {
-
-  private def foldSum(arr: Column): Column =
-    aggregate(arr, lit(0.0), (a, x) => a + x.cast("double"))
-
-  private def foldSumSq(arr: Column): Column =
-    aggregate(arr, lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double"))
 
   /** A1/M17 fststat: min/max/mean/std + (i,j) extrema positions. */
   def fststat(df: DataFrame): DataFrame = {
     graft.core.Checks.requireColumns(df, "fststat", "d", "ni", "nj")
     val d = col("d")
     val n = size(d).cast("double")
-    val mean = foldSum(d) / n
+    val mean = GraftFunctions.arraySum(d) / n
     val posMin = array_position(d, array_min(d))
     val posMax = array_position(d, array_max(d))
     df.withColumn("min", array_min(d))
       .withColumn("max", array_max(d))
       .withColumn("mean", mean)
-      .withColumn("std",
-        sqrt(greatest(lit(0.0), foldSumSq(d) / n - mean * mean)))
+      .withColumn("std", sqrt(greatest(lit(0.0),
+        GraftFunctions.dot(d, d) / n - mean * mean)))
       .withColumn("min_pos_i",
         (pmod(posMin - 1, col("ni").cast("long")) + 1).cast("int"))
       .withColumn("min_pos_j",

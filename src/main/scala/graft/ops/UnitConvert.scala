@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import graft.meta.Lookups
 
 /** M1 unit_convert (/root/reference/fstpy/unit.py:193-313): per-record
@@ -14,39 +15,16 @@ import graft.meta.Lookups
   * Element math runs in DOUBLE with a single float32 cast — identical
   * rounding to the reference's single-op numpy float32 arithmetic for
   * the affine forms used here, and bit-reproducible in the oracle.
+  * [[unitConvert]] runs it in the codegen'd `graft_unit_convert`
+  * kernel, one primitive loop per record (Spark's `transform` is
+  * `CodegenFallback` and would box every element).
   */
 object UnitConvert {
 
-  /** Spark + SQL twin of the scalar conversion formula from
-    * `fromName/fromFactor/fromBias` (columns) to the fixed target.
+  /** DuckDB twin of the per-element conversion the engine runs in the
+    * `graft_unit_convert` kernel ([[graft.functions.UnitKernel]]):
+    * from `fu_name`/`fu_factor` (columns) to the fixed target.
     */
-  private def formula(x: Column, fromName: Column, fromFactor: Column,
-                      toName: String, toFactor: Double): Column = {
-    val v = x.cast("double")
-    val temp = toName match {
-      case "kelvin" =>
-        when(fromName === "celsius", v + 273.15)
-          .when(fromName === "fahrenheit", (v - 32) * 5 / 9 + 273.15)
-          .when(fromName === "rankine", v * fromFactor)
-      case "celsius" =>
-        when(fromName === "kelvin", v - 273.15)
-          .when(fromName === "fahrenheit", (v - 32) * 5 / 9)
-          .when(fromName === "rankine", v * fromFactor - 273.15)
-      case "fahrenheit" =>
-        when(fromName === "kelvin", (v - 273.15) * 9 / 5 + 32)
-          .when(fromName === "celsius", v * 9 / 5 + 32)
-          .when(fromName === "rankine",
-            (v * fromFactor - 273.15) * 9 / 5 + 32)
-      case "rankine" =>
-        when(fromName === "kelvin", v / toFactor)
-          .when(fromName === "celsius", (v + 273.15) / toFactor)
-          .when(fromName === "fahrenheit",
-            ((v - 32) * 5 / 9 + 273.15) / toFactor)
-      case _ => lit(null).cast("double")
-    }
-    coalesce(temp, v * (fromFactor / lit(toFactor)))
-  }
-
   def formulaSql(x: String, toName: String, toFactor: Double): String = {
     val v = s"CAST($x AS DOUBLE)"
     val temp = toName match {
@@ -115,9 +93,8 @@ object UnitConvert {
       lit(toUnit) =!= "scalar" && col("fu_expr") === toExpr
     val converted = joined
       .withColumn("d",
-        when(convertible, transform(col("d"), x =>
-          formula(x, col("fu_name"), col("fu_factor"), toName, toFactor)
-            .cast("float")))
+        when(convertible, GraftFunctions.unitConvert(col("d"),
+          col("fu_name"), col("fu_factor"), toName, toFactor))
           .otherwise(col("d")))
       .withColumn("unit_converted", convertible)
       .withColumn("unit",

@@ -43,6 +43,20 @@ object PipelineQueries {
     UNION ALL SELECT doc_id + 1000000 AS doc_id,
       text || ' zzz extra tail qq' AS text FROM documents)"""
 
+  /** p49's bucket log-ratio type: |lr| is a difference of two logs of
+    * count ratios, far inside 9 integer digits.
+    */
+  private[graft] val DsirLr = "decimal(18,9)"
+
+  /** p49's per-doc weight: Σ lr·n over the (doc, source, bucket, n)
+    * rollup, rounded to 6 places. lr (18,9) × n (18,0) is (37,9), so
+    * any count below 10^18 multiplies exactly (a count cast to
+    * decimal(9,0) would overflow above 10^9), and the (38,9) sum
+    * equals the oracle's per-instance Σ lr.
+    */
+  private[graft] def dsirWeight(lr: Column, n: Column): Column =
+    round(sum(lr * n.cast("decimal(18,0)")).cast("double"), 6)
+
   /** Fixed keyword set for the BM25 search query (p19). */
   private val BM25Terms = Seq("spark", "merge", "window")
 
@@ -814,9 +828,9 @@ object PipelineQueries {
       // document length, and both consumers survive the rollup
       // exactly — the census sums n instead of counting rows, and
       // the per-doc weight Σ lr becomes Σ lr·n, exact in DECIMAL
-      // (lr(28,9) x n(9,0) -> (38,9), no precision loss) so the
-      // rounded double is bit-identical. `graft.p49.rollup=off`
-      // restores the per-instance cache for paired A/B.
+      // ([[dsirWeight]]) so the rounded double is bit-identical.
+      // `graft.p49.rollup=off` restores the per-instance cache for
+      // paired A/B.
       val rollup = !sys.props.get("graft.p49.rollup").contains("off")
       val inst = docs(s, dir).select(col("doc_id"), col("source"),
           explode(transform(words(col("text")), w => lower(w)))
@@ -842,12 +856,11 @@ object PipelineQueries {
               (col("tgt_n") + b)) -
             log((col("raw_cnt").cast("double") + 1.0) /
               (col("raw_n") + b)), 9)
-            .cast("decimal(28,9)").as("lr"))
+            .cast(DsirLr).as("lr"))
       val scored = toks.join(broadcast(lr), Seq("b"))
         .groupBy("doc_id")
         .agg(sum(col("n")).as("n_tok"),
-          round(sum(col("lr") * col("n").cast("decimal(9,0)"))
-            .cast("double"), 6).as("weight"))
+          dsirWeight(col("lr"), col("n")).as("weight"))
         .transform(graft.core.CacheRegistry.persist(_))
       scored.count() // materialize before the threshold + flag branches
       // 100th-best (weight desc, doc_id asc) as a broadcast threshold:

@@ -946,14 +946,16 @@ class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
       out
     }
 
+  private def narrow(d: Array[Double]): Array[Float] = {
+    val out = new Array[Float](d.length)
+    var i = 0
+    while (i < d.length) { out(i) = d(i).toFloat; i += 1 }
+    out
+  }
+
   private def readPayload32(m: FstFormat.Meta): Array[Float] =
-    if (isXdf) {
-      val d = XdfFormat.readPayload(readAt, m)
-      val out = new Array[Float](d.length)
-      var i = 0
-      while (i < d.length) { out(i) = d(i).toFloat; i += 1 }
-      out
-    } else {
+    if (isXdf) narrow(XdfFormat.readPayload(readAt, m))
+    else {
       val n = m.ni * math.max(m.nj, 1) * math.max(m.nk, 1)
       val bb = java.nio.ByteBuffer.wrap(
         readAt(m.addrWords.toLong * 8, n * 4))
@@ -966,6 +968,15 @@ class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
   override def next(): Boolean = {
     while (!entries.hasNext) if (!openNext()) return false
     current = entries.next(); true
+  }
+
+  private val bothPayloads =
+    required.fieldNames.contains("d") && required.fieldNames.contains("d64")
+  // the current row's native-precision payload; get() clears it
+  private var row64: Array[Double] = _
+  private def rowPayload64(m: FstFormat.Meta): Array[Double] = {
+    if (row64 == null) row64 = readPayload64(m)
+    row64
   }
 
   // One extractor closure per required ordinal, resolved ONCE at
@@ -996,15 +1007,20 @@ class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
       case "datev" => (m, _) => m.datev
       case "path" => (_, _) => fileUtF8
       case "key" => (_, key) => key
-      // payloads decoded only on demand (lazy column)
+      // payloads decoded only on demand (lazy column); a row that
+      // needs both decodes once and narrows that decode for d (the
+      // float32 of the native value, exactly what readPayload32 gives)
+      case "d" if bothPayloads =>
+        (m, _) => ArrayData.toArrayData(narrow(rowPayload64(m)))
       case "d" => (m, _) => ArrayData.toArrayData(readPayload32(m))
-      case "d64" => (m, _) => ArrayData.toArrayData(readPayload64(m))
+      case "d64" => (m, _) => ArrayData.toArrayData(rowPayload64(m))
       case other => throw new IllegalArgumentException(other)
     }
 
   override def get(): InternalRow = {
     val (m, key) = current
     val values = new Array[Any](extractors.length)
+    row64 = null
     var i = 0
     while (i < extractors.length) {
       values(i) = extractors(i)(m, key)

@@ -359,6 +359,46 @@ object XdfFormat {
     j
   }
 
+  // Element-wise conversions as primitive loops: Array.map into a
+  // primitive array writes every element through a boxing
+  // ScalaRunTime.array_update, which dominated codec profiles.
+
+  /** `math.round` of every value, each required to lie in [lo, hi). */
+  private def roundChecked(values: Array[Double], lo: Long, hi: Long,
+                           datyp: Int, range: String): Array[Long] = {
+    val out = new Array[Long](values.length)
+    var i = 0
+    while (i < values.length) {
+      val k = math.round(values(i))
+      if (k < lo || k >= hi) throw new IllegalArgumentException(
+        s"xdf: datyp $datyp value ${values(i)} out of $range range")
+      out(i) = k
+      i += 1
+    }
+    out
+  }
+
+  private def toInts(ks: Array[Long]): Array[Int] = {
+    val out = new Array[Int](ks.length)
+    var i = 0
+    while (i < ks.length) { out(i) = ks(i).toInt; i += 1 }
+    out
+  }
+
+  private def toLongs(ts: Array[Int]): Array[Long] = {
+    val out = new Array[Long](ts.length)
+    var i = 0
+    while (i < ts.length) { out(i) = ts(i).toLong; i += 1 }
+    out
+  }
+
+  private def toDoubles(ks: Array[Long]): Array[Double] = {
+    val out = new Array[Double](ks.length)
+    var i = 0
+    while (i < ks.length) { out(i) = ks(i).toDouble; i += 1 }
+    out
+  }
+
   /** Encode one record's payload to stored words. */
   def encodePayload(datyp: Int, nbits: Int, values: Array[Double])
       : Array[Int] = baseDatyp(datyp) match {
@@ -373,7 +413,15 @@ object XdfFormat {
           i += 1
         }
         out
-      } else values.map(v => java.lang.Float.floatToIntBits(v.toFloat))
+      } else {
+        val out = new Array[Int](values.length)
+        var i = 0
+        while (i < values.length) {
+          out(i) = java.lang.Float.floatToIntBits(values(i).toFloat)
+          i += 1
+        }
+        out
+      }
     case 2 =>
       // encode caps at 32 bits (compact_integer's packing domain; a
       // wider nbits would also wrap the 1L << nbits range masks) —
@@ -381,29 +429,16 @@ object XdfFormat {
       require(nbits >= 1 && nbits <= 32,
         s"xdf: datyp 2 nbits $nbits outside the 1-32 packing range")
       val lim = if (nbits == 32) 1L << 32 else 1L << nbits
-      packBits(values.map { v =>
-        val k = math.round(v)
-        require(k >= 0 && k < lim,
-          s"xdf: datyp 2 value $v out of unsigned $nbits-bit range")
-        k
-      }, nbits)
+      packBits(roundChecked(values, 0, lim, 2, s"unsigned $nbits-bit"),
+        nbits)
     case 4 =>
       require(nbits >= 2 && nbits <= 32,
         s"xdf: datyp 4 nbits $nbits outside the 2-32 packing range")
       val lim = 1L << (nbits - 1)
-      packBits(values.map { v =>
-        val k = math.round(v)
-        require(k >= -lim && k < lim,
-          s"xdf: datyp 4 value $v out of signed $nbits-bit range")
-        k
-      }, nbits)
+      packBits(roundChecked(values, -lim, lim, 4, s"signed $nbits-bit"),
+        nbits)
     case 7 =>
-      packBits(values.map { v =>
-        val k = math.round(v)
-        require(k >= 0 && k < 256,
-          s"xdf: datyp 7 value $v out of 8-bit character range")
-        k
-      }, 8)
+      packBits(roundChecked(values, 0, 256, 7, "8-bit character"), 8)
     case 1 | 129 =>
       val turbo = baseDatyp(datyp) == 129
       require(nbits <= 32, s"xdf: datyp 1 nbits $nbits > 32 " +
@@ -415,26 +450,35 @@ object XdfFormat {
       // stored header value back, so encoding against the unrounded
       // double would introduce a systematic offset of the float
       // rounding error
-      val minS = (if (values.isEmpty) 0.0 else values.min).toFloat
-      val max = if (values.isEmpty) 0.0 else values.max
+      // min/max in the total order of java.lang.Double.compare (NaN
+      // above +Inf, -0.0 below 0.0), first of equals kept
+      var min = if (values.isEmpty) 0.0 else values(0)
+      var max = min
+      var i = 1
+      while (i < values.length) {
+        val v = values(i)
+        if (java.lang.Double.compare(v, min) < 0) min = v
+        if (java.lang.Double.compare(v, max) > 0) max = v
+        i += 1
+      }
+      val minS = min.toFloat
       val j = stepExponent(max - minS, nbits)
       val step = math.pow(2, j.toDouble)
       val maxK = (1L << nbits) - 1
-      val ks = values.map { v =>
-        math.max(0L, math.min(maxK,
-          math.round((v - minS.toDouble) / step)))
+      val ks = new Array[Long](values.length)
+      i = 0
+      while (i < values.length) {
+        ks(i) = math.max(0L, math.min(maxK,
+          math.round((values(i) - minS.toDouble) / step)))
+        i += 1
       }
       Array(java.lang.Float.floatToIntBits(minS), j, values.length) ++
-        (if (turbo) compressTokens(ks.map(_.toInt))
+        (if (turbo) compressTokens(toInts(ks))
          else packBits(ks, nbits))
     case 130 =>
       // compressed unsigned-short field: tokens ARE the values
-      compressTokens(values.map { v =>
-        val k = math.round(v)
-        require(k >= 0 && k < 65536,
-          s"xdf: datyp 130 value $v out of unsigned 16-bit range")
-        k.toInt
-      })
+      compressTokens(toInts(
+        roundChecked(values, 0, 65536, 130, "unsigned 16-bit")))
     case 133 =>
       // compressed IEEE 32: lossless — each float's bits split into
       // 16-bit halves; the hi halves (sign+exponent+mantissa head) of
@@ -466,25 +510,32 @@ object XdfFormat {
       require(!turbo6 || nbits <= 16,
         s"xdf: datyp 134 nbits $nbits > 16 (compressed tokens are " +
           "16-bit, std_io.py:558-560)")
-      val refExpo = values.foldLeft(0) { (acc, v) =>
-        val bits = java.lang.Float.floatToIntBits(v.toFloat)
-        math.max(acc, (bits >>> 23) & 0xFF)
+      var refExpo = 0
+      var i = 0
+      while (i < values.length) {
+        val bits = java.lang.Float.floatToIntBits(values(i).toFloat)
+        refExpo = math.max(refExpo, (bits >>> 23) & 0xFF)
+        i += 1
       }
       val magBits = nbits - 1
-      val ks = values.map { v =>
-        val bits = java.lang.Float.floatToIntBits(v.toFloat)
+      val ks = new Array[Long](values.length)
+      i = 0
+      while (i < values.length) {
+        val bits = java.lang.Float.floatToIntBits(values(i).toFloat)
         val expo = (bits >>> 23) & 0xFF
         val sign = bits >>> 31
-        if (expo == 0) 0L // zero/denormal -> zero token
-        else {
-          val mant24 = (bits & 0x7FFFFF) | 0x800000 // hidden bit
-          val shift = (refExpo - expo) + (24 - magBits)
-          val mag = if (shift >= 32) 0L else (mant24.toLong >>> shift)
-          (sign.toLong << magBits) | mag
-        }
+        ks(i) =
+          if (expo == 0) 0L // zero/denormal -> zero token
+          else {
+            val mant24 = (bits & 0x7FFFFF) | 0x800000 // hidden bit
+            val shift = (refExpo - expo) + (24 - magBits)
+            val mag = if (shift >= 32) 0L else (mant24.toLong >>> shift)
+            (sign.toLong << magBits) | mag
+          }
+        i += 1
       }
       Array(FlpMagic | nbits, refExpo, values.length) ++
-        (if (turbo6) compressTokens(ks.map(_.toInt))
+        (if (turbo6) compressTokens(toInts(ks))
          else packBits(ks, nbits))
     case other => throw new UnsupportedOperationException(
       s"xdf: cannot encode datyp $other " +
@@ -516,14 +567,20 @@ object XdfFormat {
           out
         }
       case 2 =>
-        unpackBits(words, nbits, nelm).map(_.toDouble)
+        toDoubles(unpackBits(words, nbits, nelm))
       case 7 =>
-        unpackBits(words, 8, nelm).map(_.toDouble)
+        toDoubles(unpackBits(words, 8, nelm))
       case 4 =>
         val lim = 1L << (nbits - 1)
-        unpackBits(words, nbits, nelm).map { k =>
-          (if (k >= lim) k - (lim << 1) else k).toDouble
+        val ks = unpackBits(words, nbits, nelm)
+        val out = new Array[Double](nelm)
+        var i = 0
+        while (i < nelm) {
+          val k = ks(i)
+          out(i) = (if (k >= lim) k - (lim << 1) else k).toDouble
+          i += 1
         }
+        out
       case 1 | 129 =>
         val min = java.lang.Float.intBitsToFloat(words(0)).toDouble
         val step = math.pow(2, words(1).toDouble)
@@ -531,11 +588,18 @@ object XdfFormat {
           s"xdf: datyp 1 header nelm ${words(2)} != directory $nelm")
         val ks =
           if (baseDatyp(datyp) == 129)
-            decompressTokens(words.drop(3), nelm).map(_.toLong)
+            toLongs(decompressTokens(words.drop(3), nelm))
           else unpackBits(words.drop(3), nbits, nelm)
-        ks.map(min + _ * step)
+        val out = new Array[Double](nelm)
+        var i = 0
+        while (i < nelm) { out(i) = min + ks(i) * step; i += 1 }
+        out
       case 130 =>
-        decompressTokens(words, nelm).map(_.toDouble)
+        val toks = decompressTokens(words, nelm)
+        val out = new Array[Double](nelm)
+        var i = 0
+        while (i < nelm) { out(i) = toks(i).toDouble; i += 1 }
+        out
       case 133 =>
         val toks = decompressTokens(words, 2 * nelm)
         val out = new Array[Double](nelm)
@@ -559,13 +623,18 @@ object XdfFormat {
         val step = math.pow(2, (refExpo - 126 - magBits).toDouble)
         val ks =
           if (baseDatyp(datyp) == 134)
-            decompressTokens(words.drop(3), nelm).map(_.toLong)
+            toLongs(decompressTokens(words.drop(3), nelm))
           else unpackBits(words.drop(3), nbits, nelm)
-        ks.map { k =>
+        val out = new Array[Double](nelm)
+        var i = 0
+        while (i < nelm) {
+          val k = ks(i)
           val mag = k & ((1L << magBits) - 1)
           val sign = if ((k >>> magBits) == 1L) -1.0 else 1.0
-          sign * mag * step
+          out(i) = sign * mag * step
+          i += 1
         }
+        out
       case other => throw new UnsupportedOperationException(
         s"xdf: cannot decode datyp $other " +
           "(not a documented FST encoding, std_io.py:492-563)")
@@ -660,7 +729,8 @@ object XdfFormat {
         entry.foreach(buf.putInt)
         buf.putInt(FstFormat.stampToRaw(m.datev)) // xtra1 = datev
         buf.putInt(0)
-        payload.foreach(buf.putInt)
+        var i = 0
+        while (i < payload.length) { buf.putInt(payload(i)); i += 1 }
         r += 1
       }
       p += 1

@@ -69,4 +69,31 @@ class PlanLintSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     assert(problems.isEmpty, problems.mkString("\n", "\n", ""))
   }
+
+  test("fststat and unit_convert keep payload math off higher-order functions") {
+    // needs no testdata: a two-record fixture catalog is enough to
+    // build both optimized plans (over a range, not a local relation,
+    // which the optimizer would fold away with the math on top)
+    import org.apache.spark.sql.functions._
+    val cat = spark.range(2).select(
+      when(col("id") === 0, "TT").otherwise("UU").as("nomvar"),
+      lit(2).as("ni"), lit(1).as("nj"),
+      array(col("id").cast("float"), lit(1.5f)).as("d"))
+    val plans = Seq(
+      "fststat" -> graft.ops.Stats.fststat(cat),
+      "unit_convert" -> graft.ops.UnitConvert.unitConvert(cat, "kelvin"))
+      .map { case (op, df) => op -> df.queryExecution.optimizedPlan.toString }
+    // a lambda in the plan means a CodegenFallback HOF (aggregate,
+    // transform, zip_with, ...) boxes every payload element again
+    val hof = plans.filter { case (_, p) =>
+      p.contains("aggregate(") || p.contains("transform(") ||
+        p.contains("lambdafunction(")
+    }
+    assert(hof.isEmpty, hof.map { case (op, p) => s"$op:\n$p" }
+      .mkString("\n", "\n", ""))
+    assert(plans.forall { case (op, p) =>
+      p.contains(if (op == "fststat") "graft_array_sum(" else
+        "graft_unit_convert(")
+    })
+  }
 }

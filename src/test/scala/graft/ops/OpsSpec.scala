@@ -300,6 +300,32 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(5f, 6f, 7f, 8f, 1f, 2f, 3f, 4f))
   }
 
+  test("cube pick fails loudly on a null rid in both pick modes") {
+    // min_by skips a null rid where the window ranked it first; both
+    // modes must reject it rather than pick different records
+    val nullable = mkCatalog().withColumn("rid",
+      when(col("rid") === 2, lit(null).cast("long")).otherwise(col("rid")))
+    def pick(mode: Option[String]) = {
+      val key = "graft.cubes.minByPick"
+      val old = sys.props.get(key)
+      mode.fold(sys.props -= key)(m => sys.props += key -> m)
+      try intercept[Exception](Cubes.toCube(nullable).collect())
+      finally old.fold(sys.props -= key)(v => sys.props += key -> v)
+    }
+    Seq(None, Some("off")).foreach { mode =>
+      val e = pick(mode)
+      assert(Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("null rid"))),
+        s"mode $mode: $e")
+    }
+    // a nullable rid column holding no null still assembles
+    val ok = mkCatalog().withColumn("rid",
+      when(col("rid") > 0, col("rid")))
+    assert(Cubes.toCube(ok).filter(col("nomvar") === "TT").head()
+      .getAs[Int]("n_levels") == 2)
+  }
+
   test("asof join matches same-instant rows and nulls with no prior") {
     import spark.implicits._
     val clicks = Seq((1L, 10L, 100L), (1L, 20L, 101L), (2L, 5L, 102L))

@@ -26,6 +26,32 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     Seq(1).toDF("i").select(c.as("v")).collect()(0).get(0)
   }
 
+  test("p49 weight stays exact and non-null for per-group counts above 1e9") {
+    import spark.implicits._
+    import graft.queries.PipelineQueries.{DsirLr, dsirWeight}
+    // doc 1 has two buckets whose rolled-up counts pass decimal(9,0)'s
+    // range; doc 2 the largest count a long-valued census could reach
+    // in a realistic corpus
+    val rows = Seq((1L, -1.234567891, 3000000000L),
+        (1L, 0.5, 1000000001L), (2L, 2.000000001, 999999999999L))
+      .toDF("doc_id", "lr", "n")
+      .withColumn("lr", round(col("lr"), 9).cast(DsirLr))
+    Seq("true", "false").foreach { ansi =>
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val got = rows.groupBy("doc_id").agg(dsirWeight(col("lr"),
+            col("n")).as("w"))
+          .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+        val exact1 = BigDecimal("-1.234567891") * 3000000000L +
+          BigDecimal("0.5") * 1000000001L
+        val exact2 = BigDecimal("2.000000001") * 999999999999L
+        assert(got(1L) == exact1.toDouble, s"ansi=$ansi")
+        assert(got(2L) == exact2.setScale(6,
+          BigDecimal.RoundingMode.HALF_UP).toDouble, s"ansi=$ansi")
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("shingles: n-grams of a short text, distinct, empty under n") {
     val sh = one(shingles(words(lit("a b c d")), 3))
       .asInstanceOf[scala.collection.Seq[String]]

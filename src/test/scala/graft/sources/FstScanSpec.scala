@@ -145,6 +145,51 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("d read with d64 equals d read alone, for every datyp and both containers") {
+    import graft.sources.fst.{FstFormat, FstTable, XdfFormat}
+    val path = "/tmp/graft_scan_spec_d_d64"
+    writeSmallFiles(path, rows = 6, perFile = 8) // compact container
+    def meta(i: Int, datyp: Int, nbits: Int) =
+      FstFormat.Meta("XX", "P", "D64", 4, 2, 1, 0L, 1000 + i, 0, 0, 0, 0,
+        datyp, nbits, "X", 0, 0, 0, 0, 442998800L, 0, 0)
+    // off-grid values for the lossy codecs, in range for the integer
+    // ones; each record decodes to doubles that are not all floats
+    val real = Array(1.5, -2.25, 0.1, 3e7, math.Pi, -1.0 / 3, 1e-3, 7.0)
+    val ints = Array(0.0, 3.0, 65535.0, 1234.0, 17.0, 20.0, 4050.0, 9.0)
+    val recs = Seq[(FstFormat.Meta, Array[Double])](
+      (meta(0, 1, 12), real.map(_.abs % 4000)),
+      (meta(1, 2, 16), ints),
+      (meta(2, 5, 32), real),
+      (meta(3, 5, 64), real),
+      (meta(4, 6, 16), real),
+      (meta(5, 129, 16), real.map(_.abs % 4000)),
+      (meta(6, 130, 16), ints),
+      (meta(7, 133, 32), real),
+      (meta(8, 134, 16), real))
+    java.nio.file.Files.write(new java.io.File(path, "datyps.fst").toPath,
+      XdfFormat.writeFile(recs))
+    val read = spark.read.schema(FstTable.ExtendedSchema)
+      .format("fstrec").load(path)
+    def byIp1(cols: String*) = read.select(("ip1" +: cols).map(col): _*)
+      .collect().map(r => r.getInt(0) -> r.toSeq.tail).toMap
+    val both = byIp1("d", "d64")
+    val dAlone = byIp1("d")
+    val d64Alone = byIp1("d64")
+    assert(both.size == 6 + recs.size)
+    both.foreach { case (ip1, Seq(d, d64)) =>
+      assert(d == dAlone(ip1).head, s"d of ip1 $ip1")
+      assert(d64 == d64Alone(ip1).head, s"d64 of ip1 $ip1")
+    }
+    // the XDF records decode to their native values at double width
+    recs.foreach { case (m, _) =>
+      val want = XdfFormat.decodePayload(m.datyp, m.nbits, 8,
+        XdfFormat.encodePayload(m.datyp, m.nbits, recs(m.ip1 - 1000)._2))
+      assert(both(m.ip1)(1) == want.toSeq, s"datyp ${m.datyp}")
+      assert(both(m.ip1)(0) == want.map(_.toFloat).toSeq,
+        s"datyp ${m.datyp}")
+    }
+  }
+
   test("metadata-only projection still prunes payload reads") {
     val path = "/tmp/graft_scan_spec_meta"
     writeSmallFiles(path, rows = 64, perFile = 16)
