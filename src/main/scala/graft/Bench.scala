@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: times every declared query at the env-selected
   * scale factor and emits ONE JSON line. A failing query reports an
@@ -8,52 +7,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the documented deployment conf (README "Running at scale"):
-      // pushes WindowGroupLimit below the shuffle for the library's
-      // rank-filtered audit-sample windows (caps are 4096 > the 1000
-      // default threshold); a semantics-exact optimizer rule
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "8192")
-      // same documented deployment conf as Verify: bench plans must
-      // come from the same planning mode the gate verifies
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering",
-        "true")
-      // let AQE coalesce tiny post-shuffle partitions even when the
-      // result is being persisted (small cached intermediates
-      // otherwise schedule full-width near-empty shuffle tasks)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
       case c if c < ' ' => " "
       case c => c.toString
     }
-    // untimed warmup: JVM/codegen/session startup should not be
-    // attributed to whichever query sorts first
-    try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    // the streaming engine (micro-batch planner, state stores,
-    // checkpoint I/O) class-loads and codegens on first use — a
-    // multi-second one-time cost that otherwise lands on whichever
-    // streaming query sorts first (f43). One tiny untimed drain
-    // absorbs it.
-    try {
-      graft.streaming.StreamDrain.drain(spark,
-        spark.readStream.format("rate")
-          .option("rowsPerSecond", "1").option("numPartitions", "1")
-          .load().groupBy().count(),
-        "complete", "bench_warmup", shufflePartitions = 1,
-        timeoutMs = 60000L).count()
-    } catch { case _: Throwable => () }
+    Tool.warmUp(spark, sfDir)
     // fixed-work calibration probe: a deterministic in-memory job
     // (hash + shuffle + aggregate over 600M rows) whose work is
     // IDENTICAL every run, so its seconds measure the BOX, not the
@@ -142,11 +103,7 @@ object Bench {
     // readably instead of leaving it to a hand-kept ledger. Median of
     // the whole in-run calib series (not just the opening probe) so a
     // mid-run contention window can't skew the normalizer.
-    val calibMedian = {
-      val s = calibs.map(_._2).sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
+    val calibMedian = Tool.median(calibs.map(_._2).toSeq)
     val valuePerCalib = total / calibMedian
     // full per-query detail (driver stdout truncates to a tail): name,
     // start offset from startEpoch, seconds, error — plus the calib

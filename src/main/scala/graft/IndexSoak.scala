@@ -33,21 +33,7 @@ object IndexSoak {
     val docsPath = if (args.nonEmpty) args(0)
       else "/root/testdata/sf0.1/documents.parquet"
     val batchSize = if (args.length > 1) args(1).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the documented bucketed-index deployment conf (README
-      // "Running at scale"): a one-file-per-bucket bucketed scan
-      // exposes its sort order, so post-compaction probes elide the
-      // keep window's Sort — phases 5/6 measure the layout at its
-      // advertised best
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     graft.functions.GraftFunctions.install(spark)
 
     val base = spark.read.parquet(docsPath).select("doc_id", "text")

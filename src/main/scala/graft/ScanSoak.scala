@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measured A/B for the sub-file scan split
@@ -33,14 +32,7 @@ object ScanSoak {
     val nRecords = if (args.nonEmpty) args(0).toInt else 12800
     val nFloats = if (args.length > 1) args(1).toInt else 8192
     val container = if (args.length > 2) args(2) else "xdf"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val dir = graft.core.Scratch.path("graft_scansoak")
     val t0 = System.nanoTime()

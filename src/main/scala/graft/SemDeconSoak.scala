@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: scale behavior of the semantic-decon probe (p86/p89).
@@ -21,14 +20,7 @@ object SemDeconSoak {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val mults = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
                 else Seq(1, 10, 30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     graft.functions.GraftFunctions.install(spark)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

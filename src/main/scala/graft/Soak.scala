@@ -32,14 +32,14 @@ import org.apache.spark.sql.functions._
   * Measurements printed per phase (and summarized in DESIGN.md):
   *  - band-bucket histogram: max / p50 / p99 bucket size, buckets
   *    over cap, share of band rows lost to capped buckets;
-  *  - per-CC-round wall time (GRAFT_CC_DEBUG=1 prints rounds) and
+  *  - p16's per-CC-round wall time (`Clusters.lastStats`) and
   *    per-job shuffle read/write bytes+records from a listener, so
   *    round-over-round growth is visible directly;
   *  - end-to-end times for p02/p16/p33/p47/p67 pointed at the
   *    fixture dir through the very SparkEntry registry the driver
   *    runs.
   *
-  * Usage: GRAFT_CC_DEBUG=1 runMain graft.Soak [sfDir] [copies]
+  * Usage: runMain graft.Soak [sfDir] [copies]
   */
 object Soak {
 
@@ -222,17 +222,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val copies = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val listener = new ShuffleListener
     spark.sparkContext.addSparkListener(listener)
 
@@ -254,7 +244,10 @@ object Soak {
       val rows = df.count()
       val secs = (System.nanoTime() - t) / 1e9
       println(f"[soak] $q: $secs%.1f s ($rows rows)")
-      if (q == "p16_dup_clusters") listener.dump(q)
+      if (q == "p16_dup_clusters") {
+        listener.dump(q)
+        graft.pipeline.Clusters.lastStats.foreach(c => println(s"[soak]   cc $c"))
+      }
       if (q == "p43_incremental_dedup") {
         // stratified-keep evidence: the hot-identical docs re-arrive
         // in the incoming batch (baseId%50==0 implies %5==0) wearing

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: adversarial stride-miss soak for
@@ -43,13 +42,7 @@ import org.apache.spark.sql.functions._
   */
 object StrideSoak {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     import spark.implicits._
 
     def sigOf(texts: Seq[String]): Seq[(Seq[String], Int)] = {

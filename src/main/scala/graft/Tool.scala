@@ -1,0 +1,114 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The dev tool, on the [[GraftSession]] conf the bench and gate run:
+  *
+  *  - `time <sfDir> <reps> <q,..|all>` runs each query `reps` times in
+  *    one warm JVM. Run 1 carries the per-plan fixed cost (Catalyst,
+  *    codegen compile, JIT); later runs are the data work.
+  *  - `ab <sfDir> <q> <reps> <spark.key> <a> <b>` is a PAIRED A/B of one
+  *    session conf. The local host's throughput drifts ±40% over hours
+  *    (DESIGN.md round 7), so unpaired runs cannot resolve sub-second
+  *    deltas: the two values alternate run by run (A B A B ...) so both
+  *    see the same drift, after one untimed run of each (plan codegen is
+  *    per-variant and must not land on either's run 1).
+  *  - `plan <sfDir> <q..>` prints each query's formatted physical plan.
+  *
+  * Every timed run is a full `write.format("noop")` of the query's
+  * result, so no projection or aggregate is pruned away as under
+  * `count()`, and each timing line ends in the median.
+  *
+  * Usage: runMain graft.Tool time|ab|plan <args..>
+  */
+object Tool {
+  val usage: String = "usage: graft.Tool time <sfDir> <reps> <q,..|all> " +
+    "| ab <sfDir> <q> <reps> <spark.key> <a> <b> | plan <sfDir> <q..>"
+
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession()
+    try run(spark, args.toList) finally spark.stop()
+  }
+
+  def run(spark: SparkSession, args: List[String]): Unit = args match {
+    case "time" :: sfDir :: reps :: which :: Nil =>
+      val names =
+        if (which == "all") SparkEntry.queries.keys.toSeq.sorted
+        else which.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      warmUp(spark, sfDir)
+      names.foreach { q =>
+        try {
+          val ts = (1 to reps.toInt).map(_ => timed(spark, sfDir, q))
+          println(s"[tool] time $q ${ts.map(f2).mkString(" ")} " +
+            s"median=${f2(median(ts))}")
+        } catch { case e: Exception => println(s"[tool] time $q ERR $e") }
+      }
+    case "ab" :: sfDir :: q :: reps :: key :: a :: b :: Nil =>
+      require(key.startsWith("spark."),
+        s"ab varies a session conf (spark.*), got '$key'")
+      warmUp(spark, sfDir)
+      Seq(a, b).foreach { v => spark.conf.set(key, v); timed(spark, sfDir, q) }
+      val runs = (1 to reps.toInt).flatMap { i =>
+        Seq(a, b).map { v =>
+          spark.conf.set(key, v)
+          val t = timed(spark, sfDir, q)
+          println(s"[tool] ab $q $key=$v run $i: ${f2(t)} s")
+          v -> t
+        }
+      }
+      Seq(a, b).foreach { v =>
+        val ts = runs.collect { case (`v`, t) => t }
+        println(s"[tool] ab MEDIAN $q $key=$v: ${f2(median(ts))} s " +
+          s"(${ts.map(f2).mkString(", ")})")
+      }
+    case "plan" :: sfDir :: names if names.nonEmpty =>
+      names.foreach { q =>
+        println(s"\n========== $q ==========")
+        SparkEntry.queries(q)(spark, sfDir).explain("formatted")
+      }
+    case _ => throw new IllegalArgumentException(usage)
+  }
+
+  /** Untimed warm-up: JVM, codegen and session start-up must not land
+    * on whichever query runs first. The streaming engine (micro-batch
+    * planner, state stores, checkpoint I/O) class-loads and codegens on
+    * first use, a multi-second one-time cost, so one tiny drain absorbs
+    * it too.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
+    catch { case _: Throwable => () }
+    try {
+      graft.streaming.StreamDrain.drain(spark,
+        spark.readStream.format("rate")
+          .option("rowsPerSecond", "1").option("numPartitions", "1")
+          .load().groupBy().count(),
+        "complete", "warmup", shufflePartitions = 1,
+        timeoutMs = 60000L).count()
+    } catch { case _: Throwable => () }
+  }
+
+  /** True median: the two middle values averaged for an even count. */
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.length % 2 == 1) s(s.length / 2)
+    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
+
+  /** Seconds to materialize the query's whole result, then release its
+    * persisted intermediates (outside the clock).
+    */
+  private def timed(spark: SparkSession, sfDir: String, q: String): Double = {
+    val t0 = System.nanoTime()
+    try {
+      SparkEntry.queries(q)(spark, sfDir).write.format("noop")
+        .mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } finally {
+      graft.core.CacheRegistry.releaseAll()
+      spark.catalog.clearCache()
+    }
+  }
+
+  private def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.US, v)
+}

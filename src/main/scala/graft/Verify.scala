@@ -1,37 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); Spark 4 only reads it
-      // via the legacy long path (converted in Tables.events).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the documented deployment conf (README "Running at scale"):
-      // pushes WindowGroupLimit below the shuffle for the library's
-      // rank-filtered audit-sample windows (caps are 4096 > the 1000
-      // default threshold); a semantics-exact optimizer rule
-      .config("spark.sql.optimizer.windowGroupLimitThreshold", "8192")
-      // second documented deployment conf: one-file-per-bucket
-      // bucketed scans expose their sort order (Spark self-guards —
-      // only trusted when every bucket holds exactly one file), so
-      // compacted bucketed-index probes plan no index-side sort
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering",
-        "true")
-      // same AQE cached-plan coalescing as Bench: correctness results
-      // must come from the same planning mode the bench measures
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // dev filter: SPARK_GRAFT_ONLY=f51,f52 runs just those queries
     // (comma-separated name prefixes); unset = full suite

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** G5/§1.5: xarray-style cube assembly — pivot the record catalog into
@@ -41,29 +40,20 @@ object Cubes {
     * per group and the per-partition sort disappears; rid is unique
     * (record id / (path,key)), so min_by picks exactly the row the
     * window's rank-1 filter picked, and both order rid structs
-    * lexicographically. `graft.cubes.minByPick=off` restores the
-    * window pick for paired A/B.
+    * lexicographically.
     *
-    * A null rid fails the query: min_by skips null orderings while
-    * the window ranks them first, so the two picks would disagree (and
-    * min_by would yield a null `d` for a group of null rids). The
-    * check folds away when the rid column is not nullable.
+    * A null rid fails the query: min_by skips null orderings, so a
+    * group of null rids would otherwise yield a null `d`. The check
+    * folds away when the rid column is not nullable.
     */
-  private def pickMinRid(data0: DataFrame, keys: Seq[String])
-      : DataFrame = {
-    val data = data0.withColumn("rid", when(col("rid").isNull,
+  private def pickMinRid(data: DataFrame, keys: Seq[String])
+      : DataFrame =
+    data.withColumn("rid", when(col("rid").isNull,
         raise_error(lit("to_cube: a record has a null rid; the " +
           "representative pick needs a unique non-null record id")))
       .otherwise(col("rid")))
-    if (!sys.props.get("graft.cubes.minByPick").contains("off"))
-      data.groupBy(keys.map(col): _*)
-        .agg(min_by(col("d"), col("rid")).as("d"))
-    else {
-      val w = Window.partitionBy(keys.map(col): _*).orderBy("rid")
-      data.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-    }
-  }
+      .groupBy(keys.map(col): _*)
+      .agg(min_by(col("d"), col("rid")).as("d"))
 
   def toCube(df0: DataFrame): DataFrame = {
     val df = withRid(df0)

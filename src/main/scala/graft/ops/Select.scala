@@ -172,68 +172,31 @@ object Select {
     // dedup candidates are identical (no cross-nomvar collapse is
     // possible), and the left join + null-propagating predicates
     // reproduce the inner-join semantics (a null has_* flag fails
-    // every conjunct that needs it). `graft.cleanup.fusedKept=off`
-    // restores the four-branch shape for paired A/B.
-    val fusedKept =
-      !sys.props.get("graft.cleanup.fusedKept").contains("off")
+    // every conjunct that needs it).
     val hv = graft.meta.Lookups.HybridVcodes
     val sv = graft.meta.Lookups.SigmaVcodes
     val pv = graft.meta.Lookups.PressureVcodes
-    val keptBranches: Seq[DataFrame] = if (fusedKept) {
-      val dimsOk =
-        col("ni") === col("gni") && col("nj") === col("gnj")
-      val kept4 = metaDf
-        .filter(col("nomvar").isin("P0", "PT", "HY", "!!"))
-        .join(broadcast(perGrid
-          .withColumnRenamed("grid", "kgrid")),
-          col("grid") === col("kgrid"), "left")
-        .crossJoin(broadcast(hybridAny))
-        .filter(
-          (col("nomvar") === "P0" &&
-            (col("has_sigma") || col("has_hybrid")) && dimsOk) ||
-          (col("nomvar") === "PT" && col("has_sigma") && dimsOk) ||
-          (col("nomvar") === "HY" && col("any_hybrid")) ||
-          (col("nomvar") === "!!" && (
-            (col("has_hybrid") && col("ig1").isin(hv: _*)) ||
-            (col("has_sigma") && col("ig1").isin(sv: _*)) ||
-            (col("has_pressure") && col("ig1").isin(pv: _*)))))
-        .select(cols.map(col): _*)
-        .dropDuplicates(MetaSubset)
-      Seq(deform, kept4)
-    } else {
-      // J6: P0/PT records matching grid and dims of model-level grids
-      def surfaceFields(nomvar: String, flag: Column): DataFrame =
-        metaDf.filter(col("nomvar") === nomvar)
-          .join(broadcast(perGrid.filter(flag)
-            .select(col("grid").as("sgrid"), col("gni"), col("gnj"))),
-            col("grid") === col("sgrid") && col("ni") === col("gni")
-              && col("nj") === col("gnj"))
-          .select(cols.map(col): _*)
-          .dropDuplicates(MetaSubset)
-      val p0 =
-        surfaceFields("P0", col("has_sigma") || col("has_hybrid"))
-      val pt = surfaceFields("PT", col("has_sigma"))
-      // HY kept iff hybrid levels exist anywhere (HY is grid-less)
-      val hy = metaDf.filter(col("nomvar") === "HY")
-        .crossJoin(broadcast(hybridAny))
-        .filter(col("any_hybrid"))
-        .select(cols.map(col): _*)
-        .dropDuplicates(MetaSubset)
-      // !! filtered per vcode family of the grid's level kinds
-      val toctoc = metaDf.filter(col("nomvar") === "!!")
-        .join(broadcast(perGrid.select(
-          "grid", "has_sigma", "has_hybrid", "has_pressure")),
-          Seq("grid"))
-        .filter(
+    val dimsOk =
+      col("ni") === col("gni") && col("nj") === col("gnj")
+    val kept = metaDf
+      .filter(col("nomvar").isin("P0", "PT", "HY", "!!"))
+      .join(broadcast(perGrid
+        .withColumnRenamed("grid", "kgrid")),
+        col("grid") === col("kgrid"), "left")
+      .crossJoin(broadcast(hybridAny))
+      .filter(
+        (col("nomvar") === "P0" &&
+          (col("has_sigma") || col("has_hybrid")) && dimsOk) ||
+        (col("nomvar") === "PT" && col("has_sigma") && dimsOk) ||
+        (col("nomvar") === "HY" && col("any_hybrid")) ||
+        (col("nomvar") === "!!" && (
           (col("has_hybrid") && col("ig1").isin(hv: _*)) ||
           (col("has_sigma") && col("ig1").isin(sv: _*)) ||
-          (col("has_pressure") && col("ig1").isin(pv: _*)))
-        .select(cols.map(col): _*)
-        .dropDuplicates(MetaSubset)
-      Seq(deform, p0, pt, hy, toctoc)
-    }
+          (col("has_pressure") && col("ig1").isin(pv: _*)))))
+      .select(cols.map(col): _*)
+      .dropDuplicates(MetaSubset)
 
-    keptBranches.foldLeft(noMeta)((acc, d) => acc.unionByName(d))
+    noMeta.unionByName(deform).unionByName(kept)
   }
 
   // ---------- DuckDB twin ----------

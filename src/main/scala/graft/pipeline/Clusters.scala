@@ -103,11 +103,8 @@ object Clusters {
     graft.core.Checks.requireColumns(nodes, "connected_components", "id")
     graft.core.Checks.requireColumns(pairs, "connected_components",
       "a", "b")
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     val tA = System.nanoTime()
     def secsSince(t0: Long): Double = (System.nanoTime() - t0) / 1e9
-    def dbg(msg: String, t0: Long): Unit =
-      if (debug) println(f"[cc] $msg: ${secsSince(t0)}%.2f s")
     // the symmetrized edge view scans `pairs` twice (a->b and b->a):
     // persist the pair set so an expensive upstream pair generator
     // (LSH candidate join + verify) runs once, not twice. The count()
@@ -118,7 +115,6 @@ object Clusters {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nPairs = p.count()
     val pairsSec = secsSince(tA)
-    dbg(s"pairs materialize ($nPairs pairs)", tA)
     // size the LOOP's fan-out to the ACTIVE set, not the session
     // default: edge-incident nodes are a sliver of a real corpus
     // (most docs have no near-dup pair), so a loop partitioned at
@@ -127,12 +123,9 @@ object Clusters {
     // amplification of r11/r12's p16. ~250k edge rows per task keeps
     // single-task rounds for test-scale graphs while a 100 TB pair
     // set still fans out to full cluster parallelism.
-    val sizedParts =
-      !sys.props.get("graft.cc.sizedParts").contains("off")
     val loopParts = math.max(1L, math.min(
       nodes.sparkSession.sparkContext.defaultParallelism.toLong,
       2L * nPairs / 250000L + 1L)).toInt
-    if (debug) println(s"[cc] loopParts=$loopParts sized=$sizedParts")
     // Stray-endpoint guard: semi-join the SYMMETRIZED edges against
     // `nodes` on BOTH sides. The a-side guard removes (stray, *)
     // rows — and it alone is load-bearing for label flow: labels
@@ -156,8 +149,7 @@ object Clusters {
       else edges0
         .join(nodes.select(col("id").as("a")), Seq("a"), "left_semi")
         .join(nodes.select(col("id").as("b")), Seq("b"), "left_semi"))
-    val edges = (if (sizedParts) edges1.repartition(loopParts)
-      else edges1)
+    val edges = edges1.repartition(loopParts)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     // only edge-incident nodes iterate (lazy localCheckpoint: the
@@ -195,16 +187,9 @@ object Clusters {
     // are unchanged (labels are component ids, monotonically
     // non-increasing; hash-to-min from any such seeding converges to
     // the component min), so the returned labels are identical.
-    // `graft.cc.fusedInit=off` restores the identity seed for paired
-    // A/B.
-    val fusedInit = !sys.props.get("graft.cc.fusedInit").contains("off")
     var labels = ckpt(
-      if (fusedInit)
-        edges.groupBy(col("a").as("id")).agg(min(col("b")).as("mb"))
-          .select(col("id"), least(col("id"), col("mb")).as("label"))
-      else
-        edges.select(col("a").as("id")).distinct()
-          .select(col("id"), col("id").as("label")))
+      edges.groupBy(col("a").as("id")).agg(min(col("b")).as("mb"))
+        .select(col("id"), least(col("id"), col("mb")).as("label")))
     def labelSum(df: org.apache.spark.sql.DataFrame)
         : java.math.BigDecimal =
       Option(df.agg(sum(col("label").cast("decimal(38,0)")))
@@ -212,7 +197,6 @@ object Clusters {
         .getOrElse(java.math.BigDecimal.ZERO) // empty graph -> 0
     var prevSum = labelSum(labels)
     val initSec = secsSince(tB)
-    dbg("active labels materialize", tB)
 
     var iter = 0
     var converged = false
@@ -241,7 +225,6 @@ object Clusters {
       labels = next
       iter += 1
       roundSecs += secsSince(t0)
-      if (debug) println(f"[cc] iter $iter: ${secsSince(t0)}%.2f s converged=$converged")
     }
     def f3(v: Double): String =
       "%.3f".formatLocal(java.util.Locale.US, v)

@@ -102,11 +102,8 @@ object NearDup {
     // band table keeps constant blk/jk columns (byte-identical pairs,
     // the predicate is vacuously true) and the self-join plans
     // exchange-only, no sort; any over-cap bucket -> the exact
-    // window pipeline below, unchanged. graft.lsh.censusGate=off
-    // forces the window path for paired A/B.
-    val censusGate =
-      !sys.props.get("graft.lsh.censusGate").contains("off")
-    val anyOverCap = !censusGate || !bands0
+    // window pipeline below, unchanged.
+    val anyOverCap = !bands0
       .groupBy("band", "bkey").agg(count(lit(1)).as("bn"))
       .filter(col("bn") > lit(LshBucketCap)).isEmpty
     val w = Window.partitionBy("band", "bkey").orderBy("nsh", "doc_id")

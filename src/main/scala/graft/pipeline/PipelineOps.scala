@@ -288,43 +288,17 @@ object PipelineOps {
       : org.apache.spark.sql.DataFrame = {
     def pairDups(in: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame = {
-      // A/B probe (graft.p42.idonly, read at plan construction by
-      // AbProfile): the id-only discipline README's "vector-carrying
-      // pair joins" section discusses — build the pair topology with
-      // NO payload columns (ids ride the rank-block explode and the
-      // self-join exchange alone), then join v/nrm back by id for
-      // the cosine. Measured (AbProfile, DESIGN.md round 10):
-      // NEUTRAL on natural sf0.1 (1.86 s vs 1.86 s median) and
-      // STRICTLY WORSE on the over-cap soak fixture (4.86 s vs
-      // 6.13 s, +26%, slower in every paired round) — the two
-      // re-attach joins cost more than carrying vectors through the
-      // exchange, because Spark STREAMS the pair rows (SMJ) instead
-      // of materializing them. Default stays the carry-through join;
-      // the id-only rule applies at PERSISTENCE boundaries, not
-      // inside streamed joins. Knob kept for re-measuring on wider
-      // payloads.
-      if (sys.props.get("graft.p42.idonly").contains("true")) {
-        val rpx = rankBlockProbes(
-          in.select(col("cluster"), col("vec_id"),
-            rankProj(col("v")).as("proj")), cap, block)
-        val a = rpx.select(col("cluster"), col("jk"),
-          col("vec_id").as("a"), col("blk").as("blka"))
-        val b = rpx.select(col("cluster"), col("jk"),
-          col("vec_id").as("b"), col("blk").as("blkb"))
-        return a.join(b, Seq("cluster", "jk"))
-          .filter(col("a") < col("b") &&
-            (col("blka") =!= col("blkb") || col("jk") === col("blka")))
-          .select("a", "b")
-          .join(in.select(col("vec_id").as("a"), col("v").as("va"),
-            col("nrm").as("na_")), Seq("a"))
-          .join(in.select(col("vec_id").as("b"), col("v").as("vb"),
-            col("nrm").as("nb_")), Seq("b"))
-          .withColumn("cos", aggregate(
-            zip_with(col("va"), col("vb"), (x, y) => x * y),
-            lit(0.0), (p, x) => p + x) / (col("na_") * col("nb_")))
-          .filter(col("cos") >= lit(minCos))
-          .groupBy(col("b").as("vec_id")).agg(min("a").as("dup"))
-      }
+      // The pair join carries the vectors through the exchange. The
+      // id-only alternative README's "vector-carrying pair joins"
+      // section discusses (build the pair topology with NO payload
+      // columns, then join v/nrm back by id for the cosine) was
+      // measured (DESIGN.md round 10): NEUTRAL on natural sf0.1
+      // (1.86 s vs 1.86 s median) and STRICTLY WORSE on the over-cap
+      // soak fixture (4.86 s vs 6.13 s, +26%, slower in every paired
+      // round) — the two re-attach joins cost more than carrying
+      // vectors through the exchange, because Spark STREAMS the pair
+      // rows (SMJ) instead of materializing them. The id-only rule
+      // applies at PERSISTENCE boundaries, not inside streamed joins.
       val rpx = rankBlockProbes(
         in.select(col("cluster"), col("vec_id"), col("v"), col("nrm"),
           rankProj(col("v")).as("proj")), cap, block)

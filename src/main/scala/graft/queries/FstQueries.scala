@@ -582,9 +582,8 @@ object FstQueries {
       // NO cacheCoords: the input is a one-row local frame; r13's
       // unconditional persist+count inside latLon2d cost f57 a fixed
       // materialization action it cannot amortize (~1.5x the query,
-      // r13 verdict #3). The sys-prop exists only for paired A/B.
-      graft.ops.Grids.latLon2d(recs, cacheCoords =
-        sys.props.get("graft.f57.cacheCoords").contains("on"))
+      // r13 verdict #3).
+      graft.ops.Grids.latLon2d(recs, cacheCoords = false)
         .select(col("grid"), col("nomvar"), col("ni"), col("nj"),
           posexplode(col("d")))
         .select(col("grid"), col("nomvar"), col("ni"), col("nj"),

@@ -829,18 +829,13 @@ object PipelineQueries {
       // exactly — the census sums n instead of counting rows, and
       // the per-doc weight Σ lr becomes Σ lr·n, exact in DECIMAL
       // ([[dsirWeight]]) so the rounded double is bit-identical.
-      // `graft.p49.rollup=off` restores the per-instance cache for
-      // paired A/B.
-      val rollup = !sys.props.get("graft.p49.rollup").contains("off")
-      val inst = docs(s, dir).select(col("doc_id"), col("source"),
+      val toks = docs(s, dir).select(col("doc_id"), col("source"),
           explode(transform(words(col("text")), w => lower(w)))
             .as("w"))
         .select(col("doc_id"), col("source"),
           pmod(h64(col("w"), 7), lit(b.toLong)).as("b"))
-      val toks = (if (rollup)
-          inst.groupBy("doc_id", "source", "b")
-            .agg(count(lit(1)).as("n"))
-        else inst.withColumn("n", lit(1L)))
+        .groupBy("doc_id", "source", "b")
+        .agg(count(lit(1)).as("n"))
         .transform(graft.core.CacheRegistry.persist(_))
       toks.count() // materialize before the two-branch fan-out
       val buckets = toks.groupBy("b").agg(
@@ -1830,14 +1825,6 @@ object PipelineQueries {
       // lambdas never codegen), which measured ~5x slower than this
       // shape; post-combine the exchange carries <= 9 rows per doc,
       // so it stays O(docs), not O(tokens), at any corpus size.
-      val dbg77 = sys.env.contains("GRAFT_P77_DEBUG")
-      def t77[T](msg: String)(body: => T): T = {
-        val t0 = System.nanoTime()
-        val r = body
-        if (dbg77) println(
-          f"[p77] $msg: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
       val f = docs(s, dir)
         // the fixture table is one (unsplittable) parquet row group:
         // widen BEFORE the explode fans out to token rows, or the
@@ -1865,7 +1852,6 @@ object PipelineQueries {
       // sequentially — acc needs broadcast(w2) needs broadcast(w1)
       // — so the cache fills exactly once during w1's stage and
       // every later scan hits it; the whole query is ONE action.
-      if (dbg77) t77("features")(f.count())
       def zOf(wv: Column): Column = aggregate(
         zip_with(col("x"), wv, (a, b) => a.cast("double") * b),
         lit(0.0), (a, t) => a + t)

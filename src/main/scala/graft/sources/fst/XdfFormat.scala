@@ -461,8 +461,18 @@ object XdfFormat {
         if (java.lang.Double.compare(v, max) > 0) max = v
         i += 1
       }
+      // a non-finite bound would make the range Inf (stepExponent then
+      // walks j down from Int.MaxValue, minutes of math.pow) or NaN
+      // (step 1.0, the whole record silently quantized)
+      val bad = if (java.lang.Double.isFinite(min)) max else min
+      if (!java.lang.Double.isFinite(bad)) throw new IllegalArgumentException(
+        s"xdf: datyp $datyp cannot quantize the non-finite value $bad")
       val minS = min.toFloat
-      val j = stepExponent(max - minS, nbits)
+      val range = max - minS
+      if (range.isInfinite) throw new IllegalArgumentException(
+        s"xdf: datyp $datyp value range [$min, $max] overflows the " +
+          "float32 quantization header")
+      val j = stepExponent(range, nbits)
       val step = math.pow(2, j.toDouble)
       val maxK = (1L << nbits) - 1
       val ks = new Array[Long](values.length)
@@ -649,11 +659,15 @@ object XdfFormat {
     */
   def writeFile(records: Seq[(FstFormat.Meta, Array[Double])])
       : Array[Byte] = {
-    val encoded = records.map { case (m, vals) =>
+    val encoded = records.zipWithIndex.map { case ((m, vals), r) =>
       val nelm = m.ni * math.max(m.nj, 1) * math.max(m.nk, 1)
       require(vals.length == nelm,
         s"xdf write: payload length ${vals.length} != ni*nj*nk $nelm")
-      (m, encodePayload(m.datyp, m.nbits, vals))
+      try (m, encodePayload(m.datyp, m.nbits, vals))
+      catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(
+          s"xdf write: record $r (nomvar ${m.nomvar}): ${e.getMessage}", e)
+      }
     }
     val npages = math.max(1, (records.size + EntriesPerPage - 1) /
       EntriesPerPage)

@@ -14,13 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanLintSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  // the bench and gate conf, so the lint checks the plans they run
+  lazy val spark: SparkSession = GraftSession(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,13 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 class SmokeEntrySpec extends AnyFunSuite {
   test("driver entry smoke") {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession(4)
     try assert(SparkEntry.entry(spark).count() > 0)
     finally spark.stop()
   }

@@ -1,0 +1,44 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Runs every [[Tool]] subcommand once on a small query, so the dev
+  * tool cannot rot untested.
+  */
+class ToolSpec extends AnyFunSuite {
+  private val dir = "/root/testdata/sf0.001"
+  private val q = "f19_quick_pressure"
+
+  private def tool(args: String*): String = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Tool.main(args.toArray))
+    out.toString("UTF-8")
+  }
+
+  test("time, ab and plan run a query under the session conf") {
+    assume(new java.io.File(dir).exists())
+    val time = tool("time", dir, "1", q)
+    assert(s"""\\[tool\\] time $q \\d+\\.\\d\\d median=\\d+\\.\\d\\d""".r
+      .findFirstIn(time).isDefined, time)
+
+    val key = "spark.sql.shuffle.partitions"
+    val ab = tool("ab", dir, q, "1", key, "2", "4")
+    Seq("2", "4").foreach { v =>
+      assert(ab.contains(s"[tool] ab $q $key=$v run 1: "), ab)
+      assert(ab.contains(s"[tool] ab MEDIAN $q $key=$v: "), ab)
+    }
+
+    val plan = tool("plan", dir, q)
+    assert(plan.contains(s"========== $q ==========") &&
+      plan.contains("Physical Plan"), plan)
+  }
+
+  test("bad arguments fail with the usage line") {
+    val e = intercept[IllegalArgumentException](
+      Tool.run(null, List("time", dir)))
+    assert(e.getMessage == Tool.usage)
+    val k = intercept[IllegalArgumentException](
+      Tool.run(null, List("ab", dir, q, "1", "graft.knob", "a", "b")))
+    assert(k.getMessage.contains("spark.*"), k.getMessage)
+  }
+}

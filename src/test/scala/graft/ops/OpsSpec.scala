@@ -300,25 +300,16 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(5f, 6f, 7f, 8f, 1f, 2f, 3f, 4f))
   }
 
-  test("cube pick fails loudly on a null rid in both pick modes") {
-    // min_by skips a null rid where the window ranked it first; both
-    // modes must reject it rather than pick different records
+  test("cube pick fails loudly on a null rid") {
+    // min_by skips a null rid, which would leave a group of null rids
+    // with a null `d`; the pick rejects it instead
     val nullable = mkCatalog().withColumn("rid",
       when(col("rid") === 2, lit(null).cast("long")).otherwise(col("rid")))
-    def pick(mode: Option[String]) = {
-      val key = "graft.cubes.minByPick"
-      val old = sys.props.get(key)
-      mode.fold(sys.props -= key)(m => sys.props += key -> m)
-      try intercept[Exception](Cubes.toCube(nullable).collect())
-      finally old.fold(sys.props -= key)(v => sys.props += key -> v)
-    }
-    Seq(None, Some("off")).foreach { mode =>
-      val e = pick(mode)
-      assert(Iterator.iterate[Throwable](e)(_.getCause)
-        .takeWhile(_ != null)
-        .exists(t => Option(t.getMessage).exists(_.contains("null rid"))),
-        s"mode $mode: $e")
-    }
+    val e = intercept[Exception](Cubes.toCube(nullable).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("null rid"))),
+      e.toString)
     // a nullable rid column holding no null still assembles
     val ok = mkCatalog().withColumn("rid",
       when(col("rid") > 0, col("rid")))

@@ -1,7 +1,9 @@
 package graft.sources
 
 import java.nio.ByteBuffer
+import org.scalatest.concurrent.TimeLimits
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.sources.fst.{FstFormat, XdfFormat}
 import graft.sources.fst.FstFormat.Meta
 
@@ -11,7 +13,7 @@ import graft.sources.fst.FstFormat.Meta
   * independently of [[XdfFormat.writeFile]] — so the writer and reader
   * are both pinned to the published layout, not merely to each other.
   */
-class XdfFormatSpec extends AnyFunSuite {
+class XdfFormatSpec extends AnyFunSuite with TimeLimits {
 
   private def ascii(s: String): Int =
     ByteBuffer.wrap(s.getBytes("ASCII")).getInt
@@ -387,6 +389,33 @@ class XdfFormatSpec extends AnyFunSuite {
       assert(words.length == XdfFormat.packedWords(ks.length, nbits))
       assert(XdfFormat.unpackBits(words, nbits, ks.length).toSeq ==
         ks.toSeq, s"nbits=$nbits")
+    }
+  }
+
+  test("datyp 1/129 encode rejects a non-finite value, naming it") {
+    // an infinite bound used to walk the step exponent down from
+    // Int.MaxValue (minutes) and a NaN one to quantize with step 1.0
+    for (datyp <- Seq(1, 129);
+         v <- Seq(Double.PositiveInfinity, Double.NegativeInfinity,
+           Double.NaN)) {
+      failAfter(10.seconds) {
+        val ex = intercept[IllegalArgumentException] {
+          XdfFormat.encodePayload(datyp, 16, Array(1.0, v, 2.0))
+        }
+        assert(ex.getMessage.contains(s"datyp $datyp") &&
+          ex.getMessage.contains(v.toString), ex.getMessage)
+        val wx = intercept[IllegalArgumentException] {
+          XdfFormat.writeFile(Seq(
+            (meta(0, 2, 1, 5, 32), Array(1.0, 2.0)),
+            (meta(1, 3, 1, datyp, 16), Array(1.0, v, 2.0))))
+        }
+        assert(wx.getMessage.contains("record 1 (nomvar TT)") &&
+          wx.getMessage.contains(v.toString), wx.getMessage)
+      }
+    }
+    // a finite value past float32 overflows the stored minimum
+    intercept[IllegalArgumentException] {
+      XdfFormat.encodePayload(1, 16, Array(-1e300, 1.0))
     }
   }
 }
