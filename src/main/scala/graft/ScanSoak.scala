@@ -56,9 +56,11 @@ object ScanSoak {
       .filter(f => f.isFile && !graft.sources.fst.FstScan.hidden(f.getName))
     require(files.length == 1, files.mkString(", "))
     val len = files.head.length()
-    val unitDesc =
-      if (container == "xdf") s"${(nRecords + 255) / 256} dir pages"
-      else s"$nRecords record units"
+    val unitDesc = graft.sources.fst.Container.named(container) match {
+      case graft.sources.fst.Container.Xdf =>
+        s"${(nRecords + 255) / 256} dir pages"
+      case graft.sources.fst.Container.Compact => s"$nRecords record units"
+    }
     println(f"[scansoak] fixture: 1 $container file, $nRecords records x " +
       f"$nFloats float32 = ${len / 1e6}%.0f MB, $unitDesc, " +
       f"written in ${(System.nanoTime() - t0) / 1e9}%.1f s")

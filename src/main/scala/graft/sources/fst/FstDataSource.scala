@@ -35,10 +35,11 @@ class FstDataSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     // load(a, b, ...) arrives as a JSON string array under "paths"
-    // (the DSv2 convention); single load(path) under "path". The
-    // streaming-offset tokenizer doubles as the JSON-array parser.
+    // (the DSv2 convention, written with Jackson); single load(path)
+    // under "path"
     val paths: Seq[String] = Option(properties.get("paths")) match {
-      case Some(json) => FstOffset.fromJson(json).files
+      case Some(json) => new com.fasterxml.jackson.databind.ObjectMapper()
+        .readValue(json, classOf[Array[String]]).toSeq
       case None => Seq(Option(properties.get("path")).getOrElse(
         throw new IllegalArgumentException(
           "fstrec: a path is required (load(path) or option(\"path\", ...))")))
@@ -113,7 +114,8 @@ class FstTable(paths: Seq[String], givenSchema: Option[StructType] = None)
         FstBatchWrite.MaxRecordsPerFile),
       Option(info.options().get("partitionBy")).toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
-      Option(info.options().get("container")).getOrElse("fstrec"))
+      Container.named(
+        Option(info.options().get("container")).getOrElse("fstrec")))
   }
 }
 
@@ -203,47 +205,44 @@ object FstScan {
     * Streaming re-plans on EVERY micro-batch, and without the memo
     * each plan re-walks every oversized file's headers on the
     * driver — one positioned read per page per file per batch on a
-    * remote FS. Value encoding: an `Array[Int]` of length >= 2 is a
-    * multi-page XDF file's directory-page word ADDRESSES (split unit
-    * = page run; the start address rides each slice so tasks seek to
-    * their first page instead of re-walking the chain); an `Integer`
-    * n <= -2 is a compact container with -n records (split unit =
-    * record range); `Integer` -1 / an array of length <= 1 cache
-    * "not splittable" (non-FST, empty, or single page/record).
+    * remote FS. The value is the file's [[SplitUnits]]: directory
+    * pages with their word addresses for multi-page XDF files,
+    * records for compact containers, and [[SplitUnits.Whole]] for
+    * anything not splittable (non-FST, empty, single page/record).
     * Cleared wholesale if it ever grows past 100k entries (a bound,
     * not an eviction policy — entries are ~100 bytes, plus 4 bytes
-    * per page for multi-page XDF files, which cap at 4,095 pages).
+    * per page for multi-page XDF files, which cap at
+    * [[XdfFormat.MaxDirPages]] = 1024 pages).
     * Residual assumption: a path rewritten in place with identical
     * byte length AND identical modification time would read a stale
     * count — sub-second rewrites on filesystems with coarse mtime
-    * granularity; the compact branch would then silently clip to
-    * the stale record count, so the mtime key matters there (the
-    * XDF branch fails loudly via DIR0 checks either way).
+    * granularity; a compact slice would then silently clip to the
+    * stale record count, so the mtime key matters there (XDF slices
+    * fail loudly via DIR0 checks either way).
     */
-  private val pageCountMemo =
+  private val splitUnitsMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
-      AnyRef]()
+      SplitUnits]()
 
   /** Split one oversized file into sub-file slices, each close to
     * `target` bytes (estimated as a proportional share of the file).
     * Multi-page XDF files split by directory-page run (record
     * payloads are chained from their pages, so a page run's bytes
     * are not contiguous but average out); compact containers split
-    * by record range over their single flat directory block (the
-    * record count sits in the fixed header, and payloads lie in
-    * directory order, so each range demand-reads one contiguous
-    * region). Driver-side cost is one header read — plus a 32-byte
-    * page-header walk for XDF — paid once per (path, length) thanks
-    * to [[pageCountMemo]]. Single-page XDF files and single-record
-    * compact files stay whole; so does anything whose sniff fails —
-    * the task-side reader raises the real error with full context.
+    * by record range over their single flat directory block (payloads
+    * lie in directory order, so each range demand-reads one
+    * contiguous region). Driver-side cost is one header read — plus
+    * a 32-byte page-header walk for XDF — paid once per (path,
+    * length, mtime) thanks to [[splitUnitsMemo]]. Single-page XDF
+    * files and single-record compact files stay whole; so does
+    * anything whose sniff fails — the task-side reader raises the
+    * real error with full context.
     */
   private def splitByPages(f: String, len: Long, mtime: Long,
                            target: Long): Seq[(FstFileSlice, Long)] = {
-    val whole = Seq((FstFileSlice(f), len))
     val key = (f, len, mtime)
-    val cached = pageCountMemo.get(key)
-    val info: AnyRef =
+    val cached = splitUnitsMemo.get(key)
+    val units =
       if (cached != null) cached
       else {
         // IN-BAND results (incl. "not splittable") memoize; a
@@ -251,56 +250,26 @@ object FstScan {
         // plan degrades to a whole-file slice and the next plan
         // retries, instead of pinning a multi-GB file to one core
         // for the process lifetime
-        val probed: AnyRef = try {
-          val fs = FileSystem.get(new java.net.URI(f), new Configuration())
-          val in = fs.open(new Path(f))
+        try {
+          val rf = new RecordFile(f, new Configuration())
           try {
-            def readAt(off: Long, n: Int): Array[Byte] = {
-              val b = new Array[Byte](n); in.readFully(off, b); b
-            }
-            val hdr = readAt(0, FstFormat.HeaderBytes)
-            val v: AnyRef =
-              if (!FstFormat.maybeFst(hdr)) Integer.valueOf(-1)
-              else if (XdfFormat.isXdf(hdr)) XdfFormat.dirPageAddrs(readAt)
-              else {
-                // compact container: record count at header bytes
-                // 16-19 — negate to mark the unit kind (a corrupt
-                // negative count maps to "not splittable"; the
-                // task-side reader raises the real error)
-                val hb = java.nio.ByteBuffer.wrap(hdr)
-                val r = hb.getInt(16)
-                Integer.valueOf(if (r < 0) -1 else -r)
-              }
-            if (pageCountMemo.size > 100000) pageCountMemo.clear()
-            pageCountMemo.put(key, v)
+            val v = Container.splitUnits(rf.header, rf.readAt)
+            if (splitUnitsMemo.size > 100000) splitUnitsMemo.clear()
+            splitUnitsMemo.put(key, v)
             v
-          } finally in.close()
-        } catch { case scala.util.control.NonFatal(_) => Integer.valueOf(-1) }
-        probed
+          } finally rf.close()
+        } catch { case scala.util.control.NonFatal(_) => SplitUnits.Whole }
       }
-    def ranges(n: Int): Seq[(Int, Int)] = {
-      val bytesPerUnit = math.max(1L, len / n)
+    if (units.n <= 1) Seq((FstFileSlice(f), len))
+    else {
+      val bytesPerUnit = math.max(1L, len / units.n)
       val unitsPerSlice =
-        math.max(1, math.min(n.toLong, target / bytesPerUnit).toInt)
-      (0 until n by unitsPerSlice)
-        .map(u0 => (u0, math.min(n, u0 + unitsPerSlice)))
-    }
-    info match {
-      case addrs: Array[Int] if addrs.length >= 2 =>
-        // multi-page XDF: page runs, each slice seeded with its
-        // start page's address so the task seeks straight to it
-        ranges(addrs.length).map { case (u0, u1) =>
-          (FstFileSlice(f, u0, u1, addrs(u0)),
-            (u1 - u0).toLong * math.max(1L, len / addrs.length))
-        }
-      case n: Integer if n.intValue <= -2 =>
-        // compact container: record ranges over the flat directory
-        val nrecs = -n.intValue
-        ranges(nrecs).map { case (u0, u1) =>
-          (FstFileSlice(f, u0, u1),
-            (u1 - u0).toLong * math.max(1L, len / nrecs))
-        }
-      case _ => whole
+        math.max(1, math.min(units.n.toLong, target / bytesPerUnit).toInt)
+      (0 until units.n by unitsPerSlice).map { u0 =>
+        val u1 = math.min(units.n, u0 + unitsPerSlice)
+        (FstFileSlice(f, u0, u1, units.startAddr(u0)),
+          (u1 - u0).toLong * bytesPerUnit)
+      }
     }
   }
 
@@ -418,9 +387,9 @@ class FstScan(paths: Seq[String], required: StructType,
 
   private def listWithSizesUncached(): Seq[(String, Long, Long)] =
     paths.flatMap { path =>
-      val fs = FileSystem.get(new java.net.URI(path),
-        new Configuration())
-      val st = fs.getFileStatus(new Path(path))
+      val p = new Path(path)
+      val fs = p.getFileSystem(new Configuration())
+      val st = fs.getFileStatus(p)
       if (st.isDirectory)
         FstScan.listPruned(fs, st.getPath, pushed).sortBy(_._1)
       else Seq((path, st.getLen, st.getModificationTime))
@@ -460,71 +429,6 @@ class FstScan(paths: Seq[String], required: StructType,
       "fstrec streaming requires exactly one source directory")
     new FstMicroBatchStream(paths.head, required, pushed,
       checkpointLocation, maxFilesPerTrigger)
-  }
-}
-
-/** Legacy streaming offset (sorted file-name set, self-contained in
-  * the offset JSON). Superseded by the O(1) [[FstLogOffset]] + the
-  * checkpoint-dir file log, but kept for two jobs: restarts from
-  * checkpoints written before the log existed, and parsing the DSv2
-  * `paths` property (a JSON string array of load() paths).
-  */
-case class FstOffset(files: Seq[String])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json: String = files.map { f =>
-    "\"" + f.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      // control chars would break Spark's line-oriented offset log
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-  }.mkString("[", ",", "]")
-}
-
-object FstOffset {
-  /** Parse the JSON string array. Hand-rolled tokenizer (no JSON lib
-    * on the classpath) that honors escapes, so paths containing
-    * quotes/commas round-trip exactly.
-    */
-  def fromJson(json: String): FstOffset = {
-    val t = json.trim
-    require(t.startsWith("[") && t.endsWith("]"), s"bad offset: $json")
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var i = 1
-    var inString = false
-    while (i < t.length - 1) {
-      val c = t.charAt(i)
-      if (!inString) {
-        if (c == '"') { inString = true; sb.clear() }
-        else require(c == ',' || c.isWhitespace, s"bad offset: $json")
-      } else c match {
-        case '\\' =>
-          i += 1
-          require(i < t.length - 1, s"bad offset: $json")
-          t.charAt(i) match {
-            // full JSON escape set: Jackson-emitted "paths" arrays may
-            // contain \uXXXX / \n for control chars in path names
-            case 'u' =>
-              require(i + 4 < t.length - 1, s"bad offset: $json")
-              sb.append(Integer.parseInt(
-                t.substring(i + 1, i + 5), 16).toChar)
-              i += 4
-            case 'n' => sb.append('\n')
-            case 't' => sb.append('\t')
-            case 'r' => sb.append('\r')
-            case 'b' => sb.append('\b')
-            case 'f' => sb.append('\f')
-            case other => sb.append(other) // \\ \" \/ pass through
-          }
-        case '"' => inString = false; out += sb.toString
-        case other => sb.append(other)
-      }
-      i += 1
-    }
-    require(!inString, s"bad offset: $json")
-    FstOffset(out.toSeq)
   }
 }
 
@@ -714,17 +618,6 @@ class FstMicroBatchStream(path: String, required: StructType,
     id
   }
 
-  /** Seed the seen set from a legacy (file-list) offset so restarts
-    * from pre-log checkpoints admit only genuinely new files.
-    */
-  private def seedLegacy(off: Offset): Unit = off match {
-    case FstOffset(files) => synchronized {
-      replay()
-      files.foreach(f => if (!seen.contains(f)) seen(f) = 0L)
-    }
-    case _ => ()
-  }
-
   override def initialOffset(): Offset = FstLogOffset(-1L)
   override def latestOffset(): Offset =
     FstLogOffset(admit(maxFilesPerTrigger))
@@ -737,7 +630,6 @@ class FstMicroBatchStream(path: String, required: StructType,
     if (maxFilesPerTrigger > 0) ReadLimit.maxFiles(maxFilesPerTrigger)
     else ReadLimit.allAvailable()
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    seedLegacy(start)
     val cap = limit match {
       case f: org.apache.spark.sql.connector.read.streaming.ReadMaxFiles =>
         f.maxFiles()
@@ -753,21 +645,14 @@ class FstMicroBatchStream(path: String, required: StructType,
   }
   override def reportLatestOffset(): Offset =
     FstLogOffset(synchronized { replay(); maxBatch })
-  override def deserializeOffset(json: String): Offset = {
-    val t = json.trim
-    if (t.startsWith("[")) FstOffset.fromJson(t) // pre-log checkpoint
-    else FstLogOffset(t.toLong)
-  }
+  override def deserializeOffset(json: String): Offset =
+    FstLogOffset(json.trim.toLong)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = synchronized {
     replay()
-    val endId = end match {
-      case FstLogOffset(id) => id
-      case FstOffset(_) => maxBatch // legacy end: everything admitted
-    }
     // a batch pruned from memory (or skipped by compact replay) is
     // reloaded from its plain log file on demand. A MISSING file is
     // a corrupted checkpoint: planning the batch as empty would
@@ -781,31 +666,8 @@ class FstMicroBatchStream(path: String, required: StructType,
           s"fstrec stream: batch log $id missing from $logDir — " +
             "cannot re-plan the batch (corrupted/truncated checkpoint)")
       })
-    val files = (start, end) match {
-      case (_, eLegacy: FstOffset) =>
-        // both-legacy replay (an uncommitted batch from a pre-log
-        // checkpoint): honor the original file-list semantics —
-        // everything in `end` not already in `start`
-        val old = start match {
-          case FstOffset(fs) => fs.toSet
-          case _ => Set.empty[String]
-        }
-        eLegacy.files.filterNot(old).map(f =>
-          (f, seen.getOrElse(f, srcFs.getFileStatus(new Path(f)).getLen)))
-      case (FstLogOffset(startId), _) =>
-        ((startId + 1) to endId).flatMap(ofBatch)
-      case (FstOffset(legacy), _) =>
-        // legacy start: every admitted file minus the legacy set.
-        // This replay only happens for the first batch admitted
-        // after a pre-log-checkpoint upgrade, so the replayed `seen`
-        // set IS the union of batches 0..endId (later batches can't
-        // have been admitted before this one commits) — and unlike a
-        // 0..endId per-batch walk it survives log retention.
-        val old = legacy.toSet
-        require(maxBatch == endId, s"fstrec stream: legacy replay " +
-          s"expects log tip $endId, found $maxBatch")
-        seen.toSeq.sortBy(_._1).filterNot(f => old.contains(f._1))
-    }
+    val files = ((start.asInstanceOf[FstLogOffset].batchId + 1) to
+      end.asInstanceOf[FstLogOffset].batchId).flatMap(ofBatch)
     // mtime -1: these lengths come from the commit log, and committed
     // stream files are immutable (temp-name write + commit rename), so
     // the stale-rewrite window the batch path's mtime key closes
@@ -858,6 +720,30 @@ class FstReaderFactory(required: StructType, pushed: Array[Filter])
   }
 }
 
+/** One open record file. A short positioned read fails naming the
+  * file, the offset, the requested length and the file's length.
+  */
+final class RecordFile(path: String, conf: Configuration) {
+  private val p = new Path(path)
+  private val in = p.getFileSystem(conf).open(p)
+
+  def readAt(off: Long, len: Int): Array[Byte] = {
+    val buf = new Array[Byte](len)
+    try in.readFully(off, buf)
+    catch { case e: java.io.EOFException =>
+      val fileLen = p.getFileSystem(conf).getFileStatus(p).getLen
+      throw new java.io.EOFException(s"fstrec: $path: short read at " +
+        s"offset $off (wanted $len bytes, file is $fileLen bytes)")
+        .initCause(e)
+    }
+    buf
+  }
+
+  def header: Array[Byte] = readAt(0, FstFormat.HeaderBytes)
+
+  def close(): Unit = in.close()
+}
+
 class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
                          pushed: Array[Filter])
     extends PartitionReader[InternalRow] {
@@ -871,99 +757,29 @@ class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
   // opened one at a time, in order.
   private val hconf = new Configuration()
   private val remaining = slices.iterator
-  private var in: org.apache.hadoop.fs.FSDataInputStream = _
-  private var file: String = _
+  private var in: RecordFile = _
+  private var readAt: XdfFormat.ReadAt = _
   private var fileUtF8: UTF8String = _
-  private var isXdf: Boolean = false
+  private var container: Container = _
   private var entries: Iterator[(FstFormat.Meta, Int)] = Iterator.empty
   private var current: (FstFormat.Meta, Int) = _
-
-  private def readAt(off: Long, len: Int): Array[Byte] = {
-    val buf = new Array[Byte](len)
-    in.readFully(off, buf)
-    buf
-  }
 
   private def openNext(): Boolean = {
     if (in != null) { in.close(); in = null }
     if (!remaining.hasNext) return false
     val slice = remaining.next()
-    file = slice.path
+    val file = slice.path
     fileUtF8 = UTF8String.fromString(file)
-    val fs = FileSystem.get(new java.net.URI(file), hconf)
-    in = fs.open(new Path(file))
-    val hdr = readAt(0, FstFormat.HeaderBytes)
-    require(FstFormat.maybeFst(hdr),
-      s"not a standard file (missing STDR magic): $file")
-    isXdf = XdfFormat.isXdf(hdr)
-    val raw: Iterator[(FstFormat.Meta, Int)] =
-      if (isXdf) XdfFormat.scanEntries(readAt, slice.unitStart,
-        slice.unitEnd, slice.startAddr).iterator
-      else {
-        // compact container: the slice's unit range is RECORD
-        // indices over the flat directory block — a partial slice
-        // reads only its own directory rows, and its demand reads
-        // cover one contiguous payload region (directory order is
-        // write order)
-        val hb = java.nio.ByteBuffer.wrap(hdr)
-        hb.position(16)
-        val nrecs = hb.getInt
-        val dirOffset = hb.getInt
-        val r0 = math.min(slice.unitStart, nrecs)
-        val r1 = math.min(nrecs, slice.unitEnd)
-        val db = java.nio.ByteBuffer.wrap(
-          readAt(dirOffset.toLong + r0.toLong * 18 * 4,
-            (r1 - r0) * 18 * 4))
-        (r0 until r1).iterator.map { r =>
-          val w = new Array[Int](18)
-          (0 until 18).foreach(i =>
-            w(i) = db.getInt((r - r0) * 18 * 4 + i * 4))
-          // compact-container handle: GLOBAL record index in the
-          // key's recno position (consistent with MAKE_RND_HANDLE's
-          // recno << 10) — identical keys whether the file is read
-          // whole or sliced
-          (FstFormat.unpackEntry(w), r << 10)
-        }
+    in = new RecordFile(file, hconf)
+    readAt = in.readAt
+    val hdr = in.header
+    container = Container.sniff(hdr, file)
+    entries = container.scanEntries(hdr, readAt, slice.unitStart,
+      slice.unitEnd, slice.startAddr).filter { case (m, key) =>
+        pushed.forall(f => FstFilters.eval(f, m, file, key))
       }
-    entries = raw.filter { case (m, key) =>
-      pushed.forall(f => FstFilters.eval(f, m, file, key))
-    }
     true
   }
-
-  /** Payload at native precision: datyp-aware XDF decode, or the
-    * compact container's plain float32 words.
-    */
-  private def readPayload64(m: FstFormat.Meta): Array[Double] =
-    if (isXdf) XdfFormat.readPayload(readAt, m)
-    else {
-      val n = m.ni * math.max(m.nj, 1) * math.max(m.nk, 1)
-      val bb = java.nio.ByteBuffer.wrap(
-        readAt(m.addrWords.toLong * 8, n * 4))
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) { out(i) = bb.getFloat(i * 4).toDouble; i += 1 }
-      out
-    }
-
-  private def narrow(d: Array[Double]): Array[Float] = {
-    val out = new Array[Float](d.length)
-    var i = 0
-    while (i < d.length) { out(i) = d(i).toFloat; i += 1 }
-    out
-  }
-
-  private def readPayload32(m: FstFormat.Meta): Array[Float] =
-    if (isXdf) narrow(XdfFormat.readPayload(readAt, m))
-    else {
-      val n = m.ni * math.max(m.nj, 1) * math.max(m.nk, 1)
-      val bb = java.nio.ByteBuffer.wrap(
-        readAt(m.addrWords.toLong * 8, n * 4))
-      val out = new Array[Float](n)
-      var i = 0
-      while (i < n) { out(i) = bb.getFloat(i * 4); i += 1 }
-      out
-    }
 
   override def next(): Boolean = {
     while (!entries.hasNext) if (!openNext()) return false
@@ -975,7 +791,7 @@ class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
   // the current row's native-precision payload; get() clears it
   private var row64: Array[Double] = _
   private def rowPayload64(m: FstFormat.Meta): Array[Double] = {
-    if (row64 == null) row64 = readPayload64(m)
+    if (row64 == null) row64 = container.readPayload64(readAt, m)
     row64
   }
 
@@ -985,36 +801,20 @@ class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
   private type Extract = (FstFormat.Meta, Int) => Any
   private val extractors: Array[Extract] =
     required.fieldNames.map[Extract] {
-      case "nomvar" => (m, _) => UTF8String.fromString(m.nomvar)
-      case "typvar" => (m, _) => UTF8String.fromString(m.typvar)
-      case "etiket" => (m, _) => UTF8String.fromString(m.etiket)
-      case "ni" => (m, _) => m.ni
-      case "nj" => (m, _) => m.nj
-      case "nk" => (m, _) => m.nk
-      case "dateo" => (m, _) => m.dateo
-      case "ip1" => (m, _) => m.ip1
-      case "ip2" => (m, _) => m.ip2
-      case "ip3" => (m, _) => m.ip3
-      case "deet" => (m, _) => m.deet
-      case "npas" => (m, _) => m.npas
-      case "datyp" => (m, _) => m.datyp
-      case "nbits" => (m, _) => m.nbits
-      case "grtyp" => (m, _) => UTF8String.fromString(m.grtyp)
-      case "ig1" => (m, _) => m.ig1
-      case "ig2" => (m, _) => m.ig2
-      case "ig3" => (m, _) => m.ig3
-      case "ig4" => (m, _) => m.ig4
-      case "datev" => (m, _) => m.datev
       case "path" => (_, _) => fileUtF8
       case "key" => (_, key) => key
       // payloads decoded only on demand (lazy column); a row that
       // needs both decodes once and narrows that decode for d (the
       // float32 of the native value, exactly what readPayload32 gives)
       case "d" if bothPayloads =>
-        (m, _) => ArrayData.toArrayData(narrow(rowPayload64(m)))
-      case "d" => (m, _) => ArrayData.toArrayData(readPayload32(m))
+        (m, _) => ArrayData.toArrayData(Container.narrow(rowPayload64(m)))
+      case "d" =>
+        (m, _) => ArrayData.toArrayData(container.readPayload32(readAt, m))
       case "d64" => (m, _) => ArrayData.toArrayData(rowPayload64(m))
-      case other => throw new IllegalArgumentException(other)
+      case name =>
+        val get = FstFilters.fields(name)
+        if (FstTable.Schema(name).dataType != StringType) (m, _) => get(m)
+        else (m, _) => UTF8String.fromString(get(m).asInstanceOf[String])
     }
 
   override def get(): InternalRow = {
@@ -1051,30 +851,23 @@ object FstFilters {
 
   private def metaCol(a: String): Boolean = a != "d" && a != "d64"
 
+  /** Each directory-entry scan column's value, by name, as the Scala
+    * type filters compare.
+    */
+  val fields: Map[String, FstFormat.Meta => Any] =
+    Map[String, FstFormat.Meta => Any](("nomvar", _.nomvar),
+      ("typvar", _.typvar), ("etiket", _.etiket), ("ni", _.ni),
+      ("nj", _.nj), ("nk", _.nk), ("dateo", _.dateo), ("ip1", _.ip1),
+      ("ip2", _.ip2), ("ip3", _.ip3), ("deet", _.deet), ("npas", _.npas),
+      ("datyp", _.datyp), ("nbits", _.nbits), ("grtyp", _.grtyp),
+      ("ig1", _.ig1), ("ig2", _.ig2), ("ig3", _.ig3), ("ig4", _.ig4),
+      ("datev", _.datev))
+
   private def value(m: FstFormat.Meta, file: String, key: Int,
                     a: String): Any = a match {
-    case "nomvar" => m.nomvar
-    case "typvar" => m.typvar
-    case "etiket" => m.etiket
-    case "ni" => m.ni
-    case "nj" => m.nj
-    case "nk" => m.nk
-    case "dateo" => m.dateo
-    case "ip1" => m.ip1
-    case "ip2" => m.ip2
-    case "ip3" => m.ip3
-    case "deet" => m.deet
-    case "npas" => m.npas
-    case "datyp" => m.datyp
-    case "nbits" => m.nbits
-    case "grtyp" => m.grtyp
-    case "ig1" => m.ig1
-    case "ig2" => m.ig2
-    case "ig3" => m.ig3
-    case "ig4" => m.ig4
-    case "datev" => m.datev
     case "path" => file
     case "key" => key // already a full record handle
+    case other => fields(other)(m)
   }
 
   private def cmp(a: Any, b: Any): Int = (a, b) match {

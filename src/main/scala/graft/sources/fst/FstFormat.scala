@@ -1,6 +1,7 @@
 package graft.sources.fst
 
 import java.nio.ByteBuffer
+import XdfFormat.{ReadAt, byteReader}
 
 /** Binary record-file format core: a standard-file container whose
   * per-record directory entries use the XDF directory-word bit layout
@@ -180,33 +181,92 @@ object FstFormat {
     buf.array()
   }
 
-  /** Parse a file image into directory entries (metadata-only scan —
-    * payloads stay untouched, S2 semantics).
+  /** Directory entries of records [recStart, recEnd) (clipped to the
+    * record count in `header`, the file's first [[HeaderBytes]] bytes),
+    * each with its record handle. One read covers the range's
+    * directory rows, so a record-range slice of a large file reads only
+    * its own rows; payloads stay untouched (S2 semantics). The handle
+    * is the GLOBAL record index in MAKE_RND_HANDLE's recno position
+    * (`r << 10`), identical whether the file is read whole or sliced.
     */
-  def readDirectory(bytes: Array[Byte]): Seq[Meta] = {
-    require(maybeFst(bytes), "not a standard file (missing STDR magic)")
-    val buf = ByteBuffer.wrap(bytes)
-    buf.position(16)
-    val nrecs = buf.getInt
-    val dirOffset = buf.getInt
-    (0 until nrecs).map { r =>
-      buf.position(dirOffset + r * 18 * 4)
-      val w = new Array[Int](18)
-      (0 until 18).foreach(i => w(i) = buf.getInt)
-      unpackEntry(w)
+  def scanEntries(header: Array[Byte], readAt: ReadAt, recStart: Int,
+                  recEnd: Int): Iterator[(Meta, Int)] = {
+    require(maybeFst(header), "not a standard file (missing STDR magic)")
+    val nrecs = recordCount(header)
+    val dirOffset = ByteBuffer.wrap(header).getInt(20)
+    require(nrecs >= 0 && nrecs <= Int.MaxValue / DirEntryBytes &&
+      dirOffset >= HeaderBytes,
+      s"fstrec: corrupt header (record count $nrecs, directory offset " +
+        s"$dirOffset)")
+    val r0 = math.min(recStart, nrecs)
+    val r1 = math.min(recEnd, nrecs)
+    val db = ByteBuffer.wrap(readAt(dirOffset.toLong +
+      r0.toLong * DirEntryBytes, (r1 - r0) * DirEntryBytes))
+    (r0 until r1).iterator.map { r =>
+      (unpackEntry(entryAt(db, (r - r0) * DirEntryBytes)), r << 10)
     }
   }
 
-  /** Read one record's payload by directory entry (S4 semantics).
-    * Element count comes from the dims (lng is rounded up to 64-bit
-    * words in the directory, so it can overshoot by one element).
+  /** Record count in a header (the file's first [[HeaderBytes]] bytes). */
+  def recordCount(header: Array[Byte]): Int = ByteBuffer.wrap(header).getInt(16)
+
+  /** The 18 directory words at byte `at` of `buf`. */
+  private[fst] def entryAt(buf: ByteBuffer, at: Int): Array[Int] = {
+    val w = new Array[Int](18)
+    var i = 0
+    while (i < 18) { w(i) = buf.getInt(at + i * 4); i += 1 }
+    w
+  }
+
+  private[fst] def putEntry(buf: ByteBuffer, at: Int,
+                            w: Array[Int]): Unit = {
+    var i = 0
+    while (i < 18) { buf.putInt(at + i * 4, w(i)); i += 1 }
+  }
+
+  /** Read one record's stored float32 words (S4 semantics), keeping
+    * their bits. Element count comes from the dims (lng is rounded up
+    * to 64-bit words in the directory, so it can overshoot by one
+    * element).
     */
-  def readPayload(bytes: Array[Byte], m: Meta): Array[Float] = {
-    val n = m.ni * math.max(m.nj, 1) * math.max(m.nk, 1)
-    val buf = ByteBuffer.wrap(bytes)
-    buf.position(m.addrWords * 8)
-    val out = new Array[Float](n)
-    (0 until n).foreach(i => out(i) = buf.getFloat)
+  def readPayload32(readAt: ReadAt, m: Meta): Array[Float] = {
+    val out = new Array[Float](m.ni * math.max(m.nj, 1) * math.max(m.nk, 1))
+    ByteBuffer.wrap(readAt(m.addrWords.toLong * 8, out.length * 4))
+      .asFloatBuffer().get(out)
     out
   }
+
+  /** [[readPayload32]] widened to the native-precision `d64` view. */
+  def readPayload64(readAt: ReadAt, m: Meta): Array[Double] = {
+    val f = readPayload32(readAt, m)
+    val out = new Array[Double](f.length)
+    var i = 0
+    while (i < f.length) { out(i) = f(i).toDouble; i += 1 }
+    out
+  }
+
+  /** Metadata-only rewrite of a file image in place: each (handle,
+    * edit) pair re-packs that record's directory entry with the edited
+    * metadata. Payload words stay where they are.
+    */
+  def patchEntries(image: Array[Byte],
+                   edits: Seq[(Int, Meta => Meta)]): Unit = {
+    val buf = ByteBuffer.wrap(image)
+    val nrecs = recordCount(image)
+    val dirOffset = buf.getInt(20)
+    edits.foreach { case (key, edit) =>
+      val idx = key >> 10
+      require(idx >= 0 && idx < nrecs, s"record handle $key out of range")
+      val at = dirOffset + idx * DirEntryBytes
+      putEntry(buf, at, packEntry(edit(unpackEntry(entryAt(buf, at)))))
+    }
+  }
+
+  /** Parse a file image into directory entries (metadata-only scan). */
+  def readDirectory(bytes: Array[Byte]): Seq[Meta] =
+    scanEntries(bytes, byteReader(bytes), 0, Int.MaxValue).map(_._1).toVector
+
+  /** Read one record's payload from a file image. */
+  def readPayload(bytes: Array[Byte], m: Meta): Array[Float] =
+    readPayload32(byteReader(bytes), m)
 }

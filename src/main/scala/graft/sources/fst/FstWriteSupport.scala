@@ -28,72 +28,28 @@ import org.apache.spark.sql.types._
   */
 class FstWriteBuilder(path: String, schema: StructType,
                       maxRecordsPerFile: Int,
-                      partitionBy: Seq[String] = Nil,
-                      container: String = "fstrec")
+                      partitionBy: Seq[String], container: Container)
     extends WriteBuilder with SupportsTruncate {
-  require(container == "fstrec" || container == "xdf",
-    s"fstrec write: unknown container '$container' (fstrec | xdf)")
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
       new FstBatchWrite(path, schema, doTruncate, maxRecordsPerFile,
         partitionBy, container)
+    // a streaming sink never truncates: each epoch only adds files
     override def toStreaming
         : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-      new FstStreamingWrite(path, schema, maxRecordsPerFile,
+      new FstBatchWrite(path, schema, false, maxRecordsPerFile,
         partitionBy, container)
   }
-}
-
-/** Streaming sink: each epoch's tasks write files named
-  * `part-e<epoch>-p<partition>-<n>.fst` — deterministic per (epoch,
-  * partition), so an epoch replayed after failure overwrites its own
-  * files instead of duplicating records (idempotent micro-batch
-  * commit).
-  */
-class FstStreamingWrite(path: String, schema: StructType,
-                        maxRecordsPerFile: Int,
-                        partitionBy: Seq[String] = Nil,
-                        container: String = "fstrec")
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-
-  private val ordinals = FstBatchWrite.resolveOrdinals(schema)
-  private val d64Ordinal = FstBatchWrite.resolveD64(schema)
-  private val partSpec = FstBatchWrite.resolvePartitionSpec(
-    schema, partitionBy)
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
-    fs.mkdirs(new Path(path))
-    new FstStreamingWriterFactory(path, ordinals, maxRecordsPerFile,
-      partSpec, container, d64Ordinal)
-  }
-
-  override def commit(epochId: Long,
-                      messages: Array[WriterCommitMessage]): Unit =
-    FstBatchWrite.publish(path, messages)
-  override def abort(epochId: Long,
-                     messages: Array[WriterCommitMessage]): Unit =
-    FstBatchWrite.discard(path, messages)
 }
 
 object FstBatchWrite {
   val MaxRecordsPerFile = 128
 
   /** (name, expected type) of every writable record column. */
-  val Fields: Seq[(String, DataType)] = Seq(
-    "nomvar" -> StringType, "typvar" -> StringType,
-    "etiket" -> StringType, "ni" -> IntegerType, "nj" -> IntegerType,
-    "nk" -> IntegerType, "dateo" -> LongType, "ip1" -> IntegerType,
-    "ip2" -> IntegerType, "ip3" -> IntegerType, "deet" -> IntegerType,
-    "npas" -> IntegerType, "datyp" -> IntegerType,
-    "nbits" -> IntegerType, "grtyp" -> StringType,
-    "ig1" -> IntegerType, "ig2" -> IntegerType, "ig3" -> IntegerType,
-    "ig4" -> IntegerType, "datev" -> LongType,
-    "d" -> ArrayType(FloatType))
+  val Fields: Seq[(String, DataType)] =
+    FstWriter.Columns.map(c => c -> FstTable.Schema(c).dataType)
 
   /** Resolve (and validate) the record-column ordinals in `schema`,
     * failing with a named error on a missing column or a type
@@ -187,11 +143,12 @@ object FstBatchWrite {
   }
 }
 
+/** The job side of a batch write and of every streaming epoch. */
 class FstBatchWrite(path: String, schema: StructType,
                     truncate: Boolean, maxRecordsPerFile: Int,
-                    partitionBy: Seq[String] = Nil,
-                    container: String = "fstrec")
-    extends BatchWrite {
+                    partitionBy: Seq[String], container: Container)
+    extends BatchWrite
+    with org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   // resolve (and validate) the column ordinals once, on the driver
   private val ordinals: Array[Int] = FstBatchWrite.resolveOrdinals(schema)
@@ -200,7 +157,7 @@ class FstBatchWrite(path: String, schema: StructType,
     schema, partitionBy)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = {
+      : FstDataWriterFactory = {
     val fs = FileSystem.get(new java.net.URI(path), new Configuration())
     val dir = new Path(path)
     if (truncate && fs.exists(dir)) fs.delete(dir, true)
@@ -208,11 +165,21 @@ class FstBatchWrite(path: String, schema: StructType,
     new FstDataWriterFactory(path, ordinals, maxRecordsPerFile,
       partSpec, container, d64Ordinal)
   }
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
+      : FstDataWriterFactory = createBatchWriterFactory(info)
+  // both interfaces default to true; Scala needs the choice spelled out
+  override def useCommitCoordinator(): Boolean = true
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     FstBatchWrite.publish(path, messages)
+  override def commit(epochId: Long,
+                      messages: Array[WriterCommitMessage]): Unit =
+    FstBatchWrite.publish(path, messages)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
+    FstBatchWrite.discard(path, messages)
+  override def abort(epochId: Long,
+                     messages: Array[WriterCommitMessage]): Unit =
     FstBatchWrite.discard(path, messages)
 }
 
@@ -220,43 +187,36 @@ class FstBatchWrite(path: String, schema: StructType,
 case class FstCommitMessage(renames: Seq[(String, String)])
   extends WriterCommitMessage
 
-class FstStreamingWriterFactory(path: String, ordinals: Array[Int],
-                                maxRecordsPerFile: Int,
-                                partSpec: Seq[(String, Int, DataType)]
-                                  = Nil,
-                                container: String = "fstrec",
-                                d64Ordinal: Int = -1)
-    extends org.apache.spark.sql.connector.write.streaming
-      .StreamingDataWriterFactory with Serializable {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new FstDataWriter(path, ordinals, partitionId, taskId,
-      maxRecordsPerFile,
-      namePrefix = s"part-e$epochId-p$partitionId",
-      partSpec = partSpec, container = container,
-      d64Ordinal = d64Ordinal)
-}
-
+/** Writer factory of both the batch write and the streaming sink. A
+  * streaming epoch's tasks write files named
+  * `part-e<epoch>-p<partition>-<n>.fst` — deterministic per (epoch,
+  * partition), so an epoch replayed after failure overwrites its own
+  * files instead of duplicating records (idempotent micro-batch
+  * commit).
+  */
 class FstDataWriterFactory(path: String, ordinals: Array[Int],
                            maxRecordsPerFile: Int,
-                           partSpec: Seq[(String, Int, DataType)] = Nil,
-                           container: String = "fstrec",
-                           d64Ordinal: Int = -1)
-    extends DataWriterFactory {
+                           partSpec: Seq[(String, Int, DataType)],
+                           container: Container, d64Ordinal: Int)
+    extends DataWriterFactory with org.apache.spark.sql.connector.write
+      .streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new FstDataWriter(path, ordinals, partitionId, taskId,
-      maxRecordsPerFile, partSpec = partSpec, container = container,
-      d64Ordinal = d64Ordinal)
+      maxRecordsPerFile, null, partSpec, container, d64Ordinal)
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    new FstDataWriter(path, ordinals, partitionId, taskId,
+      maxRecordsPerFile, s"part-e$epochId-p$partitionId", partSpec,
+      container, d64Ordinal)
 }
 
 class FstDataWriter(path: String, ordinals: Array[Int],
                     partitionId: Int, taskId: Long,
                     maxRecordsPerFile: Int,
-                    namePrefix: String = null,
-                    partSpec: Seq[(String, Int, DataType)] = Nil,
-                    container: String = "fstrec",
-                    d64Ordinal: Int = -1)
+                    namePrefix: String,
+                    partSpec: Seq[(String, Int, DataType)],
+                    container: Container, d64Ordinal: Int)
     extends DataWriter[InternalRow] {
 
   // own (non-cached) FS instance so checksum sidecars can be disabled
@@ -349,12 +309,7 @@ class FstDataWriter(path: String, ordinals: Array[Int],
     // retry, speculation — must never write the same in-progress file
     val tmp = new Path(dir, s".$prefix-$fileNo.$uid.fst.inprogress")
     val out = fs.create(tmp, true)
-    val image =
-      if (container == "xdf") XdfFormat.writeFile(batch.toSeq)
-      else FstFormat.writeFile(batch.toSeq.map { case (m, d) =>
-        (m, d.map(_.toFloat))
-      })
-    try out.write(image)
+    try out.write(container.writeFile(batch.toSeq))
     finally out.close()
     written += ((tmp.toString, fin.toString))
     fileNo += 1

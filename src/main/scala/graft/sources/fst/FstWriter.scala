@@ -148,19 +148,16 @@ object FstWriter {
           val bytes = new Array[Byte](len)
           val in = fs.open(p)
           try in.readFully(0, bytes) finally in.close()
-          val buf = java.nio.ByteBuffer.wrap(bytes)
-
           // metadata-only patch shared by both containers: payload
           // words and their addr/length/nbits stay in place, so edits
           // that change the payload's declared geometry or encoding
           // would desynchronize the entry from the stored data
-          def patched(old: FstFormat.Meta,
-                      r: org.apache.spark.sql.Row,
-                      idx: Int): FstFormat.Meta = {
+          def patched(r: org.apache.spark.sql.Row)(old: FstFormat.Meta)
+              : FstFormat.Meta = {
             require(r.getInt(5) == old.ni && r.getInt(6) == old.nj &&
               r.getInt(7) == old.nk && r.getInt(14) == old.datyp,
-              s"fstrec update: cannot change ni/nj/nk/datyp of $file " +
-                s"record ${idx} (payload is not rewritten)")
+              s"cannot change ni/nj/nk/datyp of record handle " +
+                s"${r.getInt(1)} (payload is not rewritten)")
             val deet = r.getInt(12); val npas = r.getInt(13)
             val datev = FstFormat.rawToStamp(
               FstFormat.stampToRaw(r.getLong(8)) + deet.toLong * npas / 5)
@@ -173,62 +170,12 @@ object FstWriter {
               ig1 = r.getInt(16), ig2 = r.getInt(17), ig3 = r.getInt(18),
               ig4 = r.getInt(19), datev = datev)
           }
-
-          if (XdfFormat.isXdf(
-            java.util.Arrays.copyOfRange(bytes, 0, 24))) {
-            // real XDF container: locate the entry through the page
-            // chain by handle, patch it in the page AND in the 18-word
-            // record header at swa (plus the datev auxiliary word) so
-            // the two copies stay consistent
-            val hlng = buf.getInt(0) & 0xFFFFFF
-            val pageOffsets =
-              scala.collection.mutable.ArrayBuffer.empty[Int]
-            var addr = 1 + hlng
-            while (addr != 0 &&
-              pageOffsets.size < XdfFormat.MaxDirPages) {
-              val off = (addr - 1) * 8
-              require(buf.getInt(off + 8) == XdfFormat.Dir0,
-                s"fstrec update: bad directory page in $file")
-              pageOffsets += off
-              addr = buf.getInt(off + 16)
-            }
-            rows.foreach { r =>
-              val key = r.getInt(1)
-              val pageno = XdfFormat.handlePage(key)
-              val recno = XdfFormat.handleRec(key)
-              require(pageno < pageOffsets.size &&
-                recno < buf.getInt(pageOffsets(pageno) + 20),
-                s"record handle $key out of range for $file")
-              val at = pageOffsets(pageno) + 32 + recno * 72
-              val w = new Array[Int](18)
-              (0 until 18).foreach(i => w(i) = buf.getInt(at + i * 4))
-              // unpackEntry doubles the 64-bit lng; packEntry halves
-              // it back — w0/addr round-trip unchanged
-              val m = patched(FstFormat.unpackEntry(w), r, recno)
-              val entry = FstFormat.packEntry(m)
-              buf.position(at)
-              entry.foreach(buf.putInt)
-              val recOff = (m.addrWords - 1) * 8
-              buf.position(recOff)
-              entry.foreach(buf.putInt)
-              buf.putInt(FstFormat.stampToRaw(m.datev)) // aux xtra1
-            }
-          } else {
-            buf.position(16)
-            val nrecs = buf.getInt
-            val dirOffset = buf.getInt
-            rows.foreach { r =>
-              val idx = r.getInt(1) >> 10
-              require(idx >= 0 && idx < nrecs,
-                s"record handle ${r.getInt(1)} out of range for $file")
-              val at = dirOffset + idx * 18 * 4
-              buf.position(at)
-              val w = new Array[Int](18)
-              (0 until 18).foreach(i => w(i) = buf.getInt)
-              val m = patched(FstFormat.unpackEntry(w), r, idx)
-              buf.position(at)
-              FstFormat.packEntry(m).foreach(buf.putInt)
-            }
+          val container = Container.sniff(bytes, file)
+          try container.patchEntries(bytes,
+            rows.map(r => (r.getInt(1), patched(r) _)))
+          catch { case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(
+              s"fstrec update: $file: ${e.getMessage}", e)
           }
           // Never truncate-then-rewrite the original in place: a crash
           // mid-write would destroy the file's payload data. Write the

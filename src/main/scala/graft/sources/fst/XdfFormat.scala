@@ -759,8 +759,14 @@ object XdfFormat {
 
   type ReadAt = (Long, Int) => Array[Byte]
 
+  /** Reads an in-memory file image; a read past its end fails rather
+    * than come back zero-padded.
+    */
   def byteReader(bytes: Array[Byte]): ReadAt = (off, len) =>
-    java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len)
+    if (off >= 0 && off + len <= bytes.length)
+      java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len)
+    else throw new java.io.EOFException(
+      s"read of $len bytes at offset $off past a ${bytes.length}-byte image")
 
   /** Walk the linked directory pages and return every non-deleted
     * record's metadata with its MAKE_RND_HANDLE key (S2 semantics:
@@ -786,64 +792,57 @@ object XdfFormat {
   def scanEntries(readAt: ReadAt, pageStart: Int,
                   pageEnd: Int,
                   startAddr: Int = 0): Seq[(FstFormat.Meta, Int)] = {
-    val head = ByteBuffer.wrap(readAt(0L, 8))
-    val hlng = head.getInt(0) & 0xFFFFFF
     val out = Vector.newBuilder[(FstFormat.Meta, Int)]
     // seek straight to pageStart when its address is known
-    var addr = if (startAddr != 0 && pageStart > 0) startAddr
-               else 1 + hlng // first page follows the header
-    var pageno = if (startAddr != 0 && pageStart > 0) pageStart else 0
-    while (addr != 0 && pageno < MaxDirPages && pageno < pageEnd) {
-      val ph = ByteBuffer.wrap(readAt((addr - 1) * 8L, 32))
-      require(ph.getInt(8) == Dir0,
-        s"xdf: directory page at $addr missing DIR0 marker")
-      val nxt = ph.getInt(16)
-      val nent = ph.getInt(20)
-      require(nent >= 0 && nent <= EntriesPerPage,
-        s"xdf: directory page at $addr has nent $nent")
-      if (nent > 0 && pageno >= pageStart) {
-        val eb = ByteBuffer.wrap(readAt((addr - 1) * 8L + 32, nent * 72))
-        var r = 0
-        while (r < nent) {
-          val w = new Array[Int](18)
-          var i = 0
-          while (i < 18) { w(i) = eb.getInt(r * 72 + i * 4); i += 1 }
-          val dltf = w(0) >>> 31 // deleted:1 (std_io.py:736, :807)
-          if (dltf == 0) out += ((FstFormat.unpackEntry(w),
-            handle(pageno, r)))
-          r += 1
+    val seek = startAddr != 0 && pageStart > 0
+    pages(readAt, if (seek) pageStart else 0,
+      if (seek) startAddr else firstPage(readAt), pageEnd).foreach {
+      case (pageno, addr, ph) =>
+        val nent = ph.getInt(20)
+        require(nent >= 0 && nent <= EntriesPerPage,
+          s"xdf: directory page at $addr has nent $nent")
+        if (nent > 0 && pageno >= pageStart) {
+          val eb = ByteBuffer.wrap(readAt((addr - 1) * 8L + 32, nent * 72))
+          var r = 0
+          while (r < nent) {
+            val w = FstFormat.entryAt(eb, r * 72)
+            val dltf = w(0) >>> 31 // deleted:1 (std_io.py:736, :807)
+            if (dltf == 0) out += ((FstFormat.unpackEntry(w),
+              handle(pageno, r)))
+            r += 1
+          }
         }
-      }
-      addr = nxt
-      pageno += 1
     }
     out.result()
   }
+
+  /** Word address of the first directory page: it follows the header. */
+  private def firstPage(readAt: ReadAt): Int =
+    1 + (ByteBuffer.wrap(readAt(0L, 8)).getInt(0) & 0xFFFFFF)
+
+  /** The chained directory pages from page `pageno` at word address
+    * `addr` up to `pageEnd` (capped at [[MaxDirPages]]), as (page
+    * number, address, 32-byte page header). Only the headers are read.
+    */
+  private def pages(readAt: ReadAt, pageno: Int, addr: Int, pageEnd: Int)
+      : Iterator[(Int, Int, ByteBuffer)] =
+    Iterator.unfold((pageno, addr)) { case (p, a) =>
+      if (a == 0 || p >= math.min(pageEnd, MaxDirPages)) None
+      else {
+        val ph = ByteBuffer.wrap(readAt((a - 1) * 8L, 32))
+        require(ph.getInt(8) == Dir0,
+          s"xdf: directory page at $a missing DIR0 marker")
+        Some(((p, a, ph), (p + 1, ph.getInt(16))))
+      }
+    }
 
   /** Word address of every directory page, from the 32-byte page
     * headers only (planner-side: decides whether a large file splits
     * into page-run slices, how many, and hands each slice its start
     * page's address so tasks seek instead of re-walking the chain).
     */
-  def dirPageAddrs(readAt: ReadAt): Array[Int] = {
-    val head = ByteBuffer.wrap(readAt(0L, 8))
-    val hlng = head.getInt(0) & 0xFFFFFF
-    val addrs = Array.newBuilder[Int]
-    var addr = 1 + hlng
-    var pageno = 0
-    while (addr != 0 && pageno < MaxDirPages) {
-      val ph = ByteBuffer.wrap(readAt((addr - 1) * 8L, 32))
-      require(ph.getInt(8) == Dir0,
-        s"xdf: directory page at $addr missing DIR0 marker")
-      addrs += addr
-      addr = ph.getInt(16)
-      pageno += 1
-    }
-    addrs.result()
-  }
-
-  /** Number of directory pages (the chain walk of [[dirPageAddrs]]). */
-  def countDirPages(readAt: ReadAt): Int = dirPageAddrs(readAt).length
+  def dirPageAddrs(readAt: ReadAt): Array[Int] =
+    pages(readAt, 0, firstPage(readAt), MaxDirPages).map(_._2).toArray
 
   /** Read and decode one record's payload (S4): seek to
     * `swa*8-8 + 80` (past the 20-word record header) and decode
@@ -867,4 +866,32 @@ object XdfFormat {
 
   def readDirectory(bytes: Array[Byte]): Seq[(FstFormat.Meta, Int)] =
     scanEntries(byteReader(bytes))
+
+  /** Metadata-only rewrite of a file image in place: each (handle,
+    * edit) pair re-packs that record's entry in its directory page AND
+    * in the 18-word record header at swa, plus the datev auxiliary
+    * word, so the copies stay consistent. Payload words stay where
+    * they are.
+    */
+  def patchEntries(image: Array[Byte],
+                   edits: Seq[(Int, FstFormat.Meta => FstFormat.Meta)])
+      : Unit = {
+    val buf = ByteBuffer.wrap(image)
+    val pages = dirPageAddrs(byteReader(image)).map(a => (a - 1) * 8)
+    edits.foreach { case (key, edit) =>
+      val pageno = handlePage(key)
+      val recno = handleRec(key)
+      require(pageno < pages.length && recno < buf.getInt(pages(pageno) + 20),
+        s"record handle $key out of range")
+      val at = pages(pageno) + 32 + recno * 72
+      // unpackEntry doubles the 64-bit lng; packEntry halves it back,
+      // so w0 and the address round-trip unchanged
+      val m = edit(FstFormat.unpackEntry(FstFormat.entryAt(buf, at)))
+      val entry = FstFormat.packEntry(m)
+      val recOff = (m.addrWords - 1) * 8
+      FstFormat.putEntry(buf, at, entry)
+      FstFormat.putEntry(buf, recOff, entry)
+      buf.putInt(recOff + 72, FstFormat.stampToRaw(m.datev)) // aux xtra1
+    }
+  }
 }

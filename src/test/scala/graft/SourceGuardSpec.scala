@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the library free of hidden code-path switches and of drifting
   * session confs: no `graft.*` system-property knob, no
   * `GRAFT_*_DEBUG` env switch, and no session built anywhere but
-  * [[GraftSession]].
+  * [[GraftSession]]. Keeps each record container's byte layout behind
+  * its own module: only the format modules and the `Container`
+  * dispatch sniff a header or compare a container name.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -23,6 +25,28 @@ class SourceGuardSpec extends AnyFunSuite {
       """(sys\.env|System\.getenv)[^\n]*"GRAFT_\w*_DEBUG"""".r,
     "a SparkSession.builder outside GraftSession" ->
       """SparkSession\s*\.\s*builder\b""".r)
+
+  private val containerFiles =
+    Set("FstFormat.scala", "XdfFormat.scala", "Container.scala")
+
+  private val containerRules = Seq(
+    "a container sniff outside the format modules" ->
+      """XdfFormat\s*\.\s*isXdf\b|FstFormat\s*\.\s*maybeFst\b""".r,
+    "a container name comparison outside Container" ->
+      """[=!]=\s*"(xdf|fstrec)"|"(xdf|fstrec)"\s*[=!]=""".r)
+
+  test("only the format modules and Container know the container layouts") {
+    val files = sources
+    assert(containerFiles.forall(n => files.exists(_.getName == n)))
+    val hits = for {
+      f <- files
+      if !containerFiles(f.getName)
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      (what, re) <- containerRules
+      m <- re.findAllMatchIn(text)
+    } yield s"${f.getPath}: $what: ${m.matched}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 
   test("src/main reads no knob and builds sessions only in GraftSession") {
     val files = sources

@@ -131,19 +131,29 @@ class FstFormatSpec extends AnyFunSuite {
 
   test("in-place directory patch keeps payload address and words") {
     val img = FstFormat.writeFile(Seq(
-      (m.copy(ni = 1, nj = 3), Array(7f, 8f, 9f))))
-    val buf = java.nio.ByteBuffer.wrap(img)
-    buf.position(20)
-    val dirOffset = buf.getInt
-    val entry = FstFormat.readDirectory(img).head
-    // fst_edit_dir-style metadata patch: same addr/lng, new identity
-    val patched = entry.copy(etiket = "UPDATED", ip2 = entry.ip2 + 100)
-    buf.position(dirOffset)
-    FstFormat.packEntry(patched).foreach(buf.putInt)
-    val after = FstFormat.readDirectory(img).head
-    assert(after.etiket == "UPDATED")
-    assert(after.ip2 == entry.ip2 + 100)
-    assert(after.addrWords == entry.addrWords)
-    assert(FstFormat.readPayload(img, after).toSeq == Seq(7f, 8f, 9f))
+      (m.copy(ni = 1, nj = 3), Array(7f, 8f, 9f)),
+      (m.copy(ni = 1, nj = 2, ip3 = 1), Array(5f, 6f))))
+    val before = img.clone()
+    val entries = FstFormat.readDirectory(img)
+    // fst_edit_dir-style metadata patch of record 1 (handle 1 << 10):
+    // same addr/lng, new identity
+    FstFormat.patchEntries(img, Seq((1 << 10) ->
+      ((e: Meta) => e.copy(etiket = "UPDATED", ip2 = e.ip2 + 100))))
+    val after = FstFormat.readDirectory(img)
+    assert(after(0) == entries(0))
+    assert(after(1).etiket == "UPDATED")
+    assert(after(1).ip2 == entries(1).ip2 + 100)
+    assert(after(1).addrWords == entries(1).addrWords)
+    assert(FstFormat.readPayload(img, after(0)).toSeq == Seq(7f, 8f, 9f))
+    assert(FstFormat.readPayload(img, after(1)).toSeq == Seq(5f, 6f))
+    // only record 1's directory row changed
+    val dirOffset = java.nio.ByteBuffer.wrap(img).getInt(20)
+    val row1 = dirOffset + FstFormat.DirEntryBytes
+    val changed = img.indices.filter(i => img(i) != before(i))
+    assert(changed.nonEmpty &&
+      changed.forall(i => i >= row1 && i < row1 + FstFormat.DirEntryBytes))
+    intercept[IllegalArgumentException] {
+      FstFormat.patchEntries(img, Seq((2 << 10) -> ((e: Meta) => e)))
+    }
   }
 }

@@ -235,16 +235,67 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
       Option(e.getCause).exists(_.getMessage.contains("nomvar")))
   }
 
-  test("streaming offsets round-trip through JSON, incl. odd paths") {
-    import graft.sources.fst.FstOffset
+  test("load(a, b) reads directories whose names hold quote, comma and backslash") {
+    import graft.sources.fst.{FstFormat, XdfFormat}
+    val root = new java.io.File("/tmp/graft_scan_spec_oddpaths")
+    val a = new java.io.File(root, "we\"ird,dir")
+    val b = new java.io.File(root, "back\\slash")
+    Seq(a, b).foreach { d => d.mkdirs(); d.listFiles().foreach(_.delete()) }
+    def meta(ip1: Int) = FstFormat.Meta("TT", "P", "ODD", 2, 1, 1, 0L, ip1,
+      0, 0, 0, 0, 5, 32, "X", 0, 0, 0, 0, 442998800L, 0, 0)
+    java.nio.file.Files.write(new java.io.File(a, "c.fst").toPath,
+      FstFormat.writeFile(Seq((meta(1), Array(1f, 2f)))))
+    java.nio.file.Files.write(new java.io.File(b, "x.fst").toPath,
+      XdfFormat.writeFile(Seq((meta(2), Array(3.0, 4.0)))))
+    val back = spark.read.format("fstrec")
+      .load(a.getAbsolutePath, b.getAbsolutePath)
+      .select("ip1", "path", "d").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getSeq[Float](2)))
+      .sortBy(_._1).toSeq
+    assert(back.map(_._1) == Seq(1, 2))
+    assert(back(0)._2.endsWith("we\"ird,dir/c.fst"), back(0)._2)
+    assert(back(1)._2.endsWith("back\\slash/x.fst"), back(1)._2)
+    assert(back.map(_._3) == Seq(Seq(1f, 2f), Seq(3f, 4f)))
+  }
+
+  test("a truncated file fails the read, naming the file and the offset") {
+    import graft.sources.fst.{FstFormat, XdfFormat}
+    import org.scalatest.concurrent.TimeLimits._
+    import org.scalatest.time.SpanSugar._
+    def meta(ip1: Int) = FstFormat.Meta("TT", "P", "CUT", 4, 4, 1, 0L, ip1,
+      0, 0, 0, 0, 5, 32, "X", 0, 0, 0, 0, 442998800L, 0, 0)
+    val recs = (1 to 3).map(i => (meta(i), Array.tabulate(16)(_ + i * 100.0)))
+    val compact = FstFormat.writeFile(recs.map { case (m, d) =>
+      (m, d.map(_.toFloat)) })
+    val xdf = XdfFormat.writeFile(recs)
+    val compactDir = java.nio.ByteBuffer.wrap(compact).getInt(20)
+    val xdfEntries = (XdfFormat.HeaderLng64 * 8 + 32).toLong
+    val lastPayload = XdfFormat.scanEntries(XdfFormat.byteReader(xdf))
+      .map(_._1.addrWords).max.toLong * 8 - 8 +
+      XdfFormat.RecordHeaderWords * 4
+    // (container, image, truncated length, offset of the failing read);
+    // a compact file keeps its directory after the payloads, so a cut
+    // inside a payload loses the directory too and that read fails first
     val cases = Seq(
-      Nil,
-      Seq("file:/tmp/a.fst"),
-      Seq("file:/tmp/a.fst", "file:/tmp/b.fst"),
-      Seq("""file:/tmp/we"ird","x.fst""", "file:/tmp/back\\slash.fst"))
-    cases.foreach { files =>
-      val off = FstOffset(files)
-      assert(FstOffset.fromJson(off.json) == off, off.json)
+      ("compact_dir", compact, compactDir + 100, compactDir.toLong),
+      ("compact_payload", compact, compactDir - 40, compactDir.toLong),
+      ("xdf_dir", xdf, xdfEntries.toInt + 100, xdfEntries),
+      ("xdf_payload", xdf, lastPayload.toInt + 20, lastPayload))
+    cases.foreach { case (name, image, cut, offset) =>
+      val dir = new java.io.File(s"/tmp/graft_scan_spec_trunc/$name")
+      dir.mkdirs(); dir.listFiles().foreach(_.delete())
+      java.nio.file.Files.write(new java.io.File(dir, s"$name.fst").toPath,
+        image.take(cut))
+      failAfter(10.seconds) {
+        val err = intercept[org.apache.spark.SparkException] {
+          spark.read.format("fstrec").load(dir.getPath).collect()
+        }
+        val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+          .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+          .toSeq
+        assert(msgs.exists(m => m.contains(s"$name.fst") &&
+          m.contains(s"offset $offset")), msgs.mkString("\n"))
+      }
     }
   }
 

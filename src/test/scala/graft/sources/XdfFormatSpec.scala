@@ -220,6 +220,40 @@ class XdfFormatSpec extends AnyFunSuite with TimeLimits {
     }
   }
 
+  test("in-place entry patch updates page entry, record header and datev word") {
+    val n = XdfFormat.EntriesPerPage + 2 // the patched record is on page 1
+    val recs = (0 until n).map(i =>
+      (meta(i, 2, 1, 5, 32), Array(i.toDouble, -i.toDouble)))
+    val img = XdfFormat.writeFile(recs)
+    val rd = XdfFormat.byteReader(img)
+    val entries = XdfFormat.scanEntries(rd)
+    val key = XdfFormat.handle(1, 1)
+    val (old, _) = entries.find(_._2 == key).get
+    val payloadAt = (old.addrWords - 1) * 8 + XdfFormat.RecordHeaderWords * 4
+    val payloadBefore = img.slice(payloadAt, payloadAt + 8)
+    XdfFormat.patchEntries(img, Seq(key -> ((m: Meta) =>
+      m.copy(etiket = "UPDATED", ip2 = 99, datev = 443001200L))))
+    val after = XdfFormat.scanEntries(rd)
+    val (m, _) = after.find(_._2 == key).get
+    assert(m.etiket == "UPDATED" && m.ip2 == 99 && m.datev == 443001200L)
+    assert(m.addrWords == old.addrWords && m.lng32 == old.lng32)
+    assert(after.filter(_._2 != key) == entries.filter(_._2 != key))
+    // the record header at swa repeats the page entry; aux word 1 is datev
+    val buf = ByteBuffer.wrap(img)
+    val pageAt = (XdfFormat.dirPageAddrs(rd)(1) - 1) * 8 + 32 + 72
+    val recAt = (m.addrWords - 1) * 8
+    (0 until 18).foreach { i =>
+      assert(buf.getInt(recAt + 4 * i) == buf.getInt(pageAt + 4 * i), s"word $i")
+    }
+    assert(buf.getInt(recAt + 72) == FstFormat.stampToRaw(443001200L))
+    assert(img.slice(payloadAt, payloadAt + 8).sameElements(payloadBefore))
+    assert(XdfFormat.readPayload(rd, m).toSeq ==
+      Seq(recs(XdfFormat.EntriesPerPage + 1)._2: _*))
+    intercept[IllegalArgumentException] {
+      XdfFormat.patchEntries(img, Seq(XdfFormat.handle(1, 2) -> ((m: Meta) => m)))
+    }
+  }
+
   test("turbopack token codec round-trips and compresses smooth runs") {
     val smooth = (0 until 1000).map(i => 5000 + (i % 37)).toArray
     val words = XdfFormat.compressTokens(smooth)

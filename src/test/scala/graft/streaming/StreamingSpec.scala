@@ -166,16 +166,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = restarted.planInputPartitions(FstLogOffset(-1), latest)
       .flatMap(_.asInstanceOf[graft.sources.fst.FstInputPartition].files)
     assert(all.length == 12) // every published file re-plannable
-    // pre-log checkpoint replay: a legacy (file-list) offset pair —
-    // an uncommitted batch from before the log existed — still plans
-    // exactly its file difference
-    import graft.sources.fst.FstOffset
-    val f1 = new java.io.File(dir, "r001.fst").getAbsolutePath
-    val f2 = new java.io.File(dir, "r002.fst").getAbsolutePath
-    val legacy = restarted.planInputPartitions(
-      FstOffset(Seq(f1)), FstOffset(Seq(f1, f2)))
-      .flatMap(_.asInstanceOf[graft.sources.fst.FstInputPartition].files)
-    assert(legacy.toSeq == Seq(f2))
   }
 
   test("maxFilesPerTrigger drains a backlog in bounded batches") {
