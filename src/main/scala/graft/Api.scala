@@ -18,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * loops, the hot-bucket guard semantics
   * (LshBucketCap/EmbClusterCap rank-block sub-bucketing), and the
   * sub-file scan-split behavior — each claim cited to its
-  * adversarial soak log.
+  * adversarial soak log and to the spec that asserts it.
   */
 object Api {
 
@@ -129,9 +129,10 @@ object Api {
     * `NearDup.writeIndexBucketed(corpus, indexPath, table)` and pass
     * the same table name — probes go through
     * [[pipeline.NearDup.dedupAgainstBucketedIndex]] and appends
-    * through `appendIndexBucketed` (IndexSoak phase 5 proves the two
-    * layouts elect identical survivors in lockstep, including across
-    * a mid-loop compaction). `compactEvery = Some(n)` runs the
+    * through `appendIndexBucketed` (the two layouts elect identical
+    * survivors, including across a mid-loop compaction: ApiSpec
+    * "bucketed layout + compactEvery cadence", INDEXSOAK_r12.log
+    * phase 5). `compactEvery = Some(n)` runs the
     * matching compaction after every n-th batch (by streaming
     * batchId, so the cadence survives restarts) — the small-files
     * and tombstone debt stays bounded without a separate maintenance

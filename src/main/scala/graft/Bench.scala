@@ -7,6 +7,9 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // optional query filter for local profiling (comma-separated
+    // name prefixes, see SparkEntry.selectQueries)
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
     val spark = GraftSession()
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""
@@ -37,13 +40,6 @@ object Bench {
     val calib = calibrate()
 
     var failures = 0
-    // optional comma-separated query-name filter for local profiling
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names(q._1))
-      case None => SparkEntry.queries
-    }
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.US, v)
     // host-contention self-defense (round 8's driver artifact showed a
     // contiguous p62→q27 stretch at 3-25x local medians that could only
@@ -56,7 +52,7 @@ object Bench {
     val calibs = scala.collection.mutable.ArrayBuffer[(Int, Double)]()
     calibs += ((0, calib))
     val startEpoch = System.currentTimeMillis() / 1000.0
-    val results = selected.toSeq.sortBy(_._1).zipWithIndex.map {
+    val results = selected.zipWithIndex.map {
       case ((name, fn), i) =>
         if (i > 0 && i % calibEvery == 0) calibs += ((i, calibrate()))
         val startOff = System.currentTimeMillis() / 1000.0 - startEpoch

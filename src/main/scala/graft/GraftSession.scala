@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session builder behind every entry point — Bench, Verify,
-  * [[Tool]] and the soaks — so a plan dumped or timed by a dev tool is
+/** The one session builder behind every entry point — Bench, Verify
+  * and [[Tool]] — so a plan dumped or timed by a dev tool is
   * planned exactly as the bench times it and the gate verifies it.
   * This is the documented deployment conf (README "Running at scale"):
   *

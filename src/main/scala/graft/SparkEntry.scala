@@ -26,6 +26,25 @@ object SparkEntry {
       FstQueries.queries ++
       PipelineQueries.queries
 
+  /** The queries, sorted by name, whose names start with one of the
+    * comma-separated prefixes in `only` (an exact name is its own
+    * prefix); all of them when `only` is None. This is the one query
+    * filter of Bench, Verify and Tool. A prefix that matches no query
+    * is an error, so a typo cannot pass as an empty run.
+    */
+  def selectQueries(only: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries.toSeq.sortBy(_._1)
+    only.fold(all) { f =>
+      val prefixes = f.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val unmatched = prefixes.filterNot(p => all.exists(_._1.startsWith(p)))
+      require(prefixes.nonEmpty && unmatched.isEmpty,
+        s"query filter '$f' matches no query for: " +
+          (if (prefixes.isEmpty) "(empty)" else unmatched.mkString(", ")))
+      all.filter { case (name, _) => prefixes.exists(name.startsWith) }
+    }
+  }
+
   def oracleSql: Map[String, String] =
     RelationalQueries.oracles ++
       FstQueries.oracles ++

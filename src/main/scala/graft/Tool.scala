@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** The dev tool, on the [[GraftSession]] conf the bench and gate run:
   *
   *  - `time <sfDir> <reps> <q,..|all>` runs each query `reps` times in
-  *    one warm JVM. Run 1 carries the per-plan fixed cost (Catalyst,
-  *    codegen compile, JIT); later runs are the data work.
+  *    one warm JVM; `q,..` are name prefixes
+  *    ([[SparkEntry.selectQueries]]). Run 1 carries the per-plan fixed
+  *    cost (Catalyst, codegen compile, JIT); later runs are the data
+  *    work.
   *  - `ab <sfDir> <q> <reps> <spark.key> <a> <b>` is a PAIRED A/B of one
   *    session conf. The local host's throughput drifts ±40% over hours
   *    (DESIGN.md round 7), so unpaired runs cannot resolve sub-second
@@ -32,9 +34,8 @@ object Tool {
 
   def run(spark: SparkSession, args: List[String]): Unit = args match {
     case "time" :: sfDir :: reps :: which :: Nil =>
-      val names =
-        if (which == "all") SparkEntry.queries.keys.toSeq.sorted
-        else which.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val names = SparkEntry.selectQueries(
+        if (which == "all") None else Some(which)).map(_._1)
       warmUp(spark, sfDir)
       names.foreach { q =>
         try {

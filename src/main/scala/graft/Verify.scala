@@ -5,16 +5,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession()
-    new java.io.File(outDir).mkdirs()
     // dev filter: SPARK_GRAFT_ONLY=f51,f52 runs just those queries
     // (comma-separated name prefixes); unset = full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        only.forall(_.exists(name.startsWith))
-      }.foreach { case (name, fn) =>
+    val selected = SparkEntry.selectQueries(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = GraftSession()
+    new java.io.File(outDir).mkdirs()
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -303,13 +303,13 @@ object NearDup {
     // the touched-bucket POPULATION: <= batch_size x bands keys,
     // each carrying that bucket's full corpus membership. Honest
     // bound (round 12 wording): for a FIXED batch this is a roughly
-    // constant FRACTION of the band table (IndexSoak phase 2
-    // measures ~2.6% across a 1x -> 16x corpus replication that
+    // constant FRACTION of the band table (INDEXSOAK_r11.log phase 2
+    // measured ~2.6% across a 1x -> 16x corpus replication that
     // grows every touched bucket), i.e. still linear in corpus
     // dup-density — "batch-proportional" holds only under bounded
     // per-bucket populations. What scales with the batch itself is
-    // the number of touched buckets (IndexSoak's batch-scaling phase
-    // measures window input tracking batch size at fixed corpus);
+    // the number of touched buckets (the soak's batch-scaling phase,
+    // INDEXSOAK_r12.log, measured window input tracking batch size);
     // the residual per-bucket sort cost on hot buckets is what the
     // bucketed + compacted layout eliminates.
     // The touched-key set is broadcast: it is tiny next to the
@@ -332,17 +332,16 @@ object NearDup {
     // (round 10; subsumes round 9's keep-largest, which closed the
     // one-sided endpoint misses). Guarantee: a member whose
     // shingle-set size is unique within its factor-2 window — the
-    // adversarial shape StrideSoak constructs, a lone qualifier
+    // adversarial shape STRIDE_r11.log constructs, a lone qualifier
     // whose size must differ from the hot mass by > 1/threshold to
     // defeat the probe's size-ratio prefilter — is BOTH endpoints of
     // its window and always kept, closing the measured mid-gap
-    // residual (StrideSoak was 2/6, the endpoint-keep phases are now
-    // 6/6). The remaining residual requires the unique qualifier to
+    // residual (the stride rule was 2/6, the endpoint keep is 6/6). The remaining residual requires the unique qualifier to
     // be strictly INTERIOR to its size window — >= 2 other
     // band-invisible members within factor 2 of its size bracketing
     // it — in EVERY band bucket it shares with the probe; then
-    // survival is stride luck (~cap/bn), measured honestly by
-    // StrideSoak phase 3. QUANTIFIED multi-band bound (round 11):
+    // survival is stride luck (~cap/bn), measured in STRIDE_r11.log
+    // phase 3. QUANTIFIED multi-band bound (round 11):
     // the keep decision runs independently per (band, bkey) bucket,
     // and one surviving bucket suffices (the candidate join is a
     // union over bands). Per shared band, the qualifier survives
@@ -352,8 +351,8 @@ object NearDup {
     // bracketing construction to hold in ALL B shared bands
     // simultaneously. The B band keys come from disjoint minhash
     // rows, so for any corpus whose would-be bracketing docs are not
-    // adversarially grown to preserve every band minimum (StrideSoak
-    // grows its junk with a greedy per-band search — nature does
+    // adversarially grown to preserve every band minimum (the stride
+    // fixture grows its junk with a greedy per-band search — nature does
     // not), membership of a junk doc in the qualifier's bucket is
     // independent across bands and P(miss) <= prod_b max(0,
     // 1 - cap/bn_b) <= (1 - cap/bn_max)^B — at cap 64, B = 8 and
@@ -362,8 +361,10 @@ object NearDup {
     // qualifier, and vanishes when any band is clean. The sharpest
     // testable corollary — junk invisible in only 7 of 8 bands must
     // restore recall to 1.0 because the one clean band pins the
-    // qualifier as its window endpoint — is hard-asserted by
-    // StrideSoak phase 4 (6/6). Cost: <= 2 rows per non-empty window, and
+    // qualifier as its window endpoint — measured 6/6 in
+    // STRIDE_r11.log phase 4. PipelineSpec "over-cap keep: a
+    // band-invisible qualifier at every stride phase" asserts all four
+    // phases at cap 4 for K = 8..13. Cost: <= 2 rows per non-empty window, and
     // window count is <= bit length of the largest shingle set
     // (~2·log2(maxNsh) extra rows per over-cap bucket vs cap kept by
     // the stride); the lag/lead markers share the existing
@@ -1090,9 +1091,10 @@ object NearDup {
     * foreachBatch body of a bucketed-index streaming build:
     * survivors = dedupAgainstBucketedIndex(...);
     * appendIndexBucketed(survivors, path, table);
-    * CacheRegistry.releaseAll(). IndexSoak phase 5 runs this loop in
-    * LOCKSTEP with the plain-layout loop and asserts the survivor
-    * sets are identical batch-for-batch.
+    * CacheRegistry.releaseAll(). Its survivors equal the plain-layout
+    * loop's, across a mid-loop compaction too (ApiSpec "bucketed
+    * layout + compactEvery cadence"; INDEXSOAK_r12.log phase 5 ran
+    * both loops in lockstep for 10 batches).
     */
   def dedupAgainstBucketedIndex(spark: org.apache.spark.sql.SparkSession,
                                 path: String, table: String,

@@ -130,7 +130,8 @@ object PipelineOps {
     *
     * Both are far above every bucket/cluster size the test scales
     * produce (dormant locally — the oracles mirror the guards, so
-    * this is checked); the 10× hot-vector soak exercises them.
+    * this is checked); the 10× hot-vector soak exercised them
+    * (EMBSOAK_r08.log) and PipelineSpec fires them at cap 4.
     */
   val EmbClusterCap = 4096
   val EmbBucketCap = 4096
@@ -211,11 +212,10 @@ object PipelineOps {
   }
 
   /** Census-gated within-group pair probe over (cluster, vec_id, v,
-    * nrm) rows — p12's live path, factored (round 10) so the
-    * adversarial soak runs the SAME code guarded (cap =
-    * [[EmbBucketCap]]) and as its own unguarded oracle (cap =
-    * Int.MaxValue, census finds nothing, plain self-join) and
-    * cross-checks the two. With no over-cap group (natural data) the
+    * nrm) rows — p12's live path, factored (round 10) so the SAME
+    * code runs guarded (cap = [[EmbBucketCap]]) and as its own
+    * unguarded oracle (cap = Int.MaxValue, census finds nothing,
+    * plain self-join); PipelineSpec cross-checks the two. With no over-cap group (natural data) the
     * plan is the plain bucket self-join, unchanged from round 8;
     * otherwise over-cap groups sub-bucket through
     * [[rankBlockProbes]]. Returns one row per candidate pair with

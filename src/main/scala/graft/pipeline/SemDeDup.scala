@@ -5,14 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The SemDeDup-style semantic-dedup building blocks behind the p42
-  * driver query, factored out so the adversarial soak
-  * ([[graft.EmbSoak]]) runs the EXACT same rep-election code the
-  * query runs and cross-checks [[PipelineOps.semanticCanonicals]]'
-  * census-gated two-pass election against [[uncappedCanonicals]], a
-  * brute-force no-cap/no-block oracle — the Spark-internal second
+  * driver query, plus [[uncappedCanonicals]], a brute-force
+  * no-cap/no-block oracle for [[PipelineOps.semanticCanonicals]]'
+  * census-gated two-pass election — the Spark-internal second
   * computation of the over-cap live path that DuckDB cannot host
   * (the minimal over-cap fixture defeated it twice with >92 GB of
-  * join spill; see DESIGN.md "p42 live-parity attempts").
+  * join spill; see DESIGN.md "p42 live-parity attempts"). PipelineSpec
+  * checks the election against it where pass 2 fires; EMBSOAK_r10.log
+  * records the same check on the 5x soak fixture.
   *
   * Scale shape: identical to p42's — assignment is a broadcast
   * cross-join against k centroid rows, the class collapse is one
@@ -78,14 +78,14 @@ object SemDeDup {
     * a dev ORACLE, never a production path) and each rep elects its
     * min-id partner at cosine >= minCos. On a fixture whose over-cap
     * mass is MUTUALLY similar (every pair of mass members clears
-    * minCos — EmbSoak's planted masses by construction), the two-pass
+    * minCos — the planted masses by construction), the two-pass
     * rank-block election is provably row-identical to this: in-cap
     * clusters run the same all-pairs election by construction, and
     * an over-cap mutual mass collapses to its min id under both (the
     * one-hop min of a complete similarity graph IS the global min;
     * pass 2's all-pairs over pass-1 canonicals composes the
-    * per-block chains to exactly that). EmbSoak hard-asserts the
-    * equality where pass 2 LIVE-fires.
+    * per-block chains to exactly that). PipelineSpec asserts the
+    * equality on seeded reps where pass 2 fires.
     */
   def uncappedCanonicals(reps: DataFrame, minCos: Double): DataFrame = {
     val a = reps.select(col("cluster"), col("vec_id").as("a"),

@@ -443,8 +443,8 @@ object PipelineQueries {
         .withColumn("nrm", norm(col("embedding")))
         .transform(graft.core.CacheRegistry.persist(_))
       // census-gated pair probe (the p42 pattern, factored into
-      // PipelineOps.bucketPairs in round 10 so EmbSoak cross-checks
-      // this exact code against its own unguarded oracle): with no
+      // PipelineOps.bucketPairs in round 10 so PipelineSpec checks
+      // this exact code against its own unguarded run): with no
       // over-cap bucket (natural data) the plain bucket self-join
       // plan is unchanged from round 8; the rank-block probe
       // scaffolding is built only when a bucket exceeds the cap
@@ -2229,8 +2229,8 @@ object PipelineQueries {
       // consumes it four ways (pair probes, over-cap census,
       // canonical re-attach, pass-2 probes); no count() — the
       // election's census action materializes it. Factored into
-      // SemDeDup (round 10) so EmbSoak cross-checks THIS code, not a
-      // replica, against the brute-force uncapped oracle.
+      // SemDeDup (round 10); PipelineSpec checks the election against
+      // the brute-force uncapped oracle (EMBSOAK_r10.log at scale).
       val (withRep, reps) = graft.pipeline.SemDeDup.memberReps(e, 8)
       // backstop (EmbClusterCap): a cluster still holding more
       // DISTINCT rep vectors than the cap — near-identical but not

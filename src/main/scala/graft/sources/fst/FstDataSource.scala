@@ -482,8 +482,7 @@ class FstMicroBatchStream(path: String, required: StructType,
   import FstMicroBatchStream.CompactInterval
 
   private val logDir = new Path(checkpointLocation, "graft-files")
-  private lazy val srcFs =
-    FileSystem.get(new java.net.URI(path), new Configuration())
+  private lazy val srcFs = new Path(path).getFileSystem(new Configuration())
   // the checkpoint may live on a different filesystem than the data
   private lazy val ckptFs =
     logDir.getFileSystem(new Configuration())

@@ -127,7 +127,7 @@ object FstBatchWrite {
     */
   def publish(path: String,
               messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = new Path(path).getFileSystem(new Configuration())
     messages.collect { case m: FstCommitMessage => m.renames }
       .flatten.foreach { case (tmp, fin) => renameOverwrite(fs, tmp, fin) }
   }
@@ -135,7 +135,7 @@ object FstBatchWrite {
   /** Job abort: best-effort delete of uncommitted temp files. */
   def discard(path: String,
               messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = new Path(path).getFileSystem(new Configuration())
     messages.collect { case m: FstCommitMessage => m.renames }
       .flatten.foreach { case (tmp, _) =>
         fs.delete(new Path(tmp), false)
@@ -158,7 +158,7 @@ class FstBatchWrite(path: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : FstDataWriterFactory = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = new Path(path).getFileSystem(new Configuration())
     val dir = new Path(path)
     if (truncate && fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
@@ -224,8 +224,7 @@ class FstDataWriter(path: String, ordinals: Array[Int],
   // the record format carries its own magic + directory structure, and
   // skipping .crc files halves the small-file create/rename syscalls
   private val fs = {
-    val f = FileSystem.newInstance(new java.net.URI(path),
-      new Configuration())
+    val f = FileSystem.newInstance(new Path(path).toUri, new Configuration())
     f.setWriteChecksum(false)
     f
   }

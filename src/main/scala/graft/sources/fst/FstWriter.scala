@@ -113,7 +113,8 @@ object FstWriter {
           scala.collection.mutable.Map.empty[String, FileSystem]
         val files = it.toSeq.groupBy(_.getString(0))
         try files.foreach { case (file, rows) =>
-          val uri = new java.net.URI(file)
+          val p = new Path(file)
+          val uri = p.toUri
           // key by scheme AND authority: two clusters of one scheme
           // must not share an instance ("Wrong FS" otherwise)
           val scheme = Option(uri.getScheme).getOrElse("file") + "://" +
@@ -123,7 +124,6 @@ object FstWriter {
             f.setWriteChecksum(false)
             f
           })
-          val p = new Path(file)
           // Crash recovery from a previous interrupted update: a
           // missing data file with a leftover backup means the crash
           // hit between the two publish renames — restore the backup;

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GRAFT_*_DEBUG` env switch, and no session built anywhere but
   * [[GraftSession]]. Keeps each record container's byte layout behind
   * its own module: only the format modules and the `Container`
-  * dispatch sniff a header or compare a container name.
+  * dispatch sniff a header or compare a container name. Keeps the jar
+  * a library: only the three entry points define a `main`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -17,6 +18,9 @@ class SourceGuardSpec extends AnyFunSuite {
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     walk(new java.io.File("src/main/scala"))
   }
+
+  private def read(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
 
   private val rules = Seq(
     "a graft.* system-property read" ->
@@ -41,11 +45,30 @@ class SourceGuardSpec extends AnyFunSuite {
     val hits = for {
       f <- files
       if !containerFiles(f.getName)
-      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      text = read(f)
       (what, re) <- containerRules
       m <- re.findAllMatchIn(text)
     } yield s"${f.getPath}: $what: ${m.matched}"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("the fst source resolves filesystems from Hadoop paths, not URIs") {
+    // java.net.URI rejects a space, quote or backslash in a local path
+    val hits = for {
+      f <- sources
+      if f.getPath.contains("/sources/fst/")
+      text = read(f)
+      m <- """new\s+(java\.net\.)?URI\(""".r.findAllMatchIn(text)
+    } yield s"${f.getPath}: ${m.matched}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("only Bench, Verify and Tool define a main") {
+    val mains = sources.filter(f =>
+      """\bdef\s+main\s*\(""".r.findFirstIn(read(f)).isDefined)
+      .map(_.getName).sorted
+    assert(mains == Seq("Bench.scala", "Tool.scala", "Verify.scala"),
+      mains.mkString(", "))
   }
 
   test("src/main reads no knob and builds sessions only in GraftSession") {
@@ -53,7 +76,7 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(files.exists(_.getName == "GraftSession.scala"))
     val hits = for {
       f <- files
-      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      text = read(f)
       (what, re) <- rules
       if !(what.startsWith("a SparkSession") &&
         f.getName == "GraftSession.scala")

@@ -33,6 +33,23 @@ class ToolSpec extends AnyFunSuite {
       plan.contains("Physical Plan"), plan)
   }
 
+  test("one query filter: name prefixes, and no match fails loudly") {
+    def names(only: String) = SparkEntry.selectQueries(Some(only)).map(_._1)
+    assert(SparkEntry.selectQueries(None).map(_._1) ==
+      SparkEntry.queries.keys.toSeq.sorted)
+    assert(names(q) == Seq(q))
+    val f1 = names("f1")
+    assert(f1.nonEmpty && f1.forall(_.startsWith("f1")) && f1 == f1.sorted)
+    assert(names(s" $q , q01") == Seq(q) ++ names("q01"))
+    Seq("zz_nope", s"$q,zz_nope", " , ").foreach { f =>
+      val e = intercept[IllegalArgumentException](SparkEntry.selectQueries(Some(f)))
+      assert(e.getMessage.contains("matches no query"), e.getMessage)
+    }
+    // Tool time selects before it starts any work
+    intercept[IllegalArgumentException](
+      Tool.run(null, List("time", dir, "1", "zz_nope")))
+  }
+
   test("bad arguments fail with the usage line") {
     val e = intercept[IllegalArgumentException](
       Tool.run(null, List("time", dir)))

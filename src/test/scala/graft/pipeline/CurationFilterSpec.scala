@@ -123,6 +123,11 @@ class CurationFilterSpec extends AnyFunSuite with BeforeAndAfterAll {
     val viaDirect = SemDecon
       .probe(SemDecon.suiteTable(suite), batch).collect()
     assert(viaIndex.map(_.toSeq).toSet == viaDirect.map(_.toSeq).toSet)
+    // the probe is per vector: a 3x replica of the batch gives 3x the rows
+    val replica = (0 until 3).map(k => batch.select(
+      (col("vec_id") + k * 1000L).as("vec_id"), col("v"))).reduce(_ unionByName _)
+    assert(SemDecon.decontaminateAgainstIndex(spark, idx, replica).count() ==
+      3 * viaIndex.length)
     assert(viaIndex.exists(r => r.getLong(0) == 10L && r.getBoolean(3)))
     // fail fast on a non-index table instead of mis-joining
     val junk = graft.core.Scratch.path("graft_semdecon_spec_junk")

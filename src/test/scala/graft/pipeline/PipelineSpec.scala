@@ -328,6 +328,56 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.core.CacheRegistry.releaseAll()
   }
 
+  /** Seeded reps: cluster 1 is a planted mass of nine near-copies of
+    * one direction (every pair at cosine > 0.99, over cap 4); cluster 2
+    * holds three random directions and a near-copy of the first (in cap).
+    * Shuffled ids, so id order is not rank order.
+    */
+  private def plantedReps(): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(42)
+    def near(v: Seq[Double]) = v.map(_ + 1e-3 * rnd.nextGaussian())
+    val dir = Seq.fill(8)(rnd.nextGaussian())
+    val others = Seq.fill(3)(Seq.fill(8)(rnd.nextGaussian()))
+    val vs = Seq.fill(9)(1 -> near(dir)) ++
+      (others :+ near(others.head)).map(2 -> _)
+    vs.zip(rnd.shuffle((1L to vs.size).toList)).map { case ((c, v), id) =>
+      (c, id, v, math.sqrt(v.map(x => x * x).sum))
+    }.toDF("cluster", "vec_id", "v", "nrm")
+  }
+
+  test("semantic canonicals equal the uncapped oracle where pass 2 fires") {
+    val reps = plantedReps()
+    assert(reps.groupBy("cluster").count().filter(col("count") > 4)
+      .count() == 1, "no over-cap cluster: pass 2 would stay dormant")
+    val guarded = semanticCanonicals(reps, cap = 4, block = 2, minCos = 0.99)
+    val uncapped = SemDeDup.uncappedCanonicals(reps, 0.99)
+    assert(guarded.exceptAll(uncapped).isEmpty &&
+      uncapped.exceptAll(guarded).isEmpty,
+      s"guarded ${guarded.collect().mkString(" ")} != " +
+        s"uncapped ${uncapped.collect().mkString(" ")}")
+    graft.core.CacheRegistry.releaseAll()
+  }
+
+  test("capped bucket pairs are uncapped pairs; the planted mass stays " +
+    "one component") {
+    val e = plantedReps()
+    def pairs(cap: Int) = bucketPairs(e, cap, block = 2)
+      .filter(dot(col("va"), col("vb")) / (col("na_") * col("nb_")) >= 0.99)
+      .select("a", "b")
+    val (capped, uncapped) = (pairs(4), pairs(Int.MaxValue))
+    val extra = capped.exceptAll(uncapped).collect()
+    assert(extra.isEmpty, s"pairs the uncapped join lacks: ${extra.mkString}")
+    val ids = e.select(col("vec_id").as("id"))
+    val mass = e.filter(col("cluster") === 1).select(col("vec_id").as("id"))
+    Seq(capped, uncapped).foreach { p =>
+      val comps = Clusters.connectedComponents(ids, p, trustedEndpoints = true)
+        .join(mass, Seq("id")).select("label").distinct().count()
+      assert(comps == 1, s"planted mass split into $comps components")
+    }
+    graft.core.CacheRegistry.releaseAll()
+  }
+
   test("hot corpus bucket still matches an incoming near-dup") {
     import spark.implicits._
     // 100 IDENTICAL corpus docs put > LshBucketCap rows in every band
@@ -354,6 +404,79 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // smallest (nsh, doc_id), and all hot docs tie on jaccard
     assert(got(1000L)._2 == 1L, s"expected match_id 1: $got")
     assert(!got(1001L)._1, s"novel doc falsely matched: $got")
+  }
+
+  test("over-cap keep: a band-invisible qualifier at every stride phase") {
+    import spark.implicits._
+    // (band keys, shingle count) from the scan's own signature kernel
+    def sig(text: String): (Seq[String], Int) = {
+      val r = graft.functions.ShingleSig.compute(
+        org.apache.spark.unsafe.types.UTF8String.fromString(text))
+      (r.getArray(1).toObjectArray(org.apache.spark.sql.types.StringType)
+        .map(_.toString).toSeq, r.getArray(0).numElements())
+    }
+    val h = (1 to 40).map(i => s"h$i").mkString(" ")
+    val (hBks, hNsh) = sig(h)
+    val bands = hBks.indices
+    // greedy growth: append a word only if its trailing shingle
+    // displaces no minhash minimum of the `kept` bands, so the text
+    // stays in H's bucket of each of them
+    def grow(base: String, target: Int, prefix: String,
+             kept: Seq[Int] = bands): (String, Int) = {
+      var (text, n) = (base, sig(base)._2)
+      var j = 0
+      while (n < target) {
+        assert(j < 5000, s"greedy search stalled at $n of $target shingles")
+        val (bks, m) = sig(s"$text $prefix$j")
+        if (kept.forall(b => bks(b) == hBks(b))) { text = s"$text $prefix$j"; n = m }
+        j += 1
+      }
+      (text, n)
+    }
+    // invisible in all bands but the last, which must leave H's bucket
+    def partial(target: Int, prefix: String): (String, Int) = {
+      val t = grow(h, target, prefix, bands.init)._1
+      (t +: (0 until 5000).map(j => s"$t ${prefix}x$j")).iterator
+        .map(x => (x, sig(x))).collectFirst {
+          case (x, (bks, n)) if bks(bands.last) != hBks(bands.last) &&
+            bands.init.forall(b => bks(b) == hBks(b)) => (x, n)
+        }.getOrElse(fail("no word moves the last band"))
+    }
+    // D: the unique qualifier of probe P (the size prefilter excludes
+    // H); L: a 4x non-qualifier; J1/J2 bracket D inside its
+    // power-of-two size window, in every band (J1'/J2': all but one)
+    val (d, dNsh) = grow(h, (2.2 * hNsh).toInt, "zf")
+    val p = grow(d, dNsh + 2, "yq")._1
+    val l = grow(h, (4.2 * hNsh).toInt, "wk")._1
+    val Seq((j1, n1), (j2, n2)) = Seq((1.7, "ga"), (2.9, "qb"))
+      .map { case (f, px) => grow(h, (f * hNsh).toInt, px) }
+    val Seq((j1p, n1p), (j2p, n2p)) = Seq((1.7, "gc"), (2.9, "qd"))
+      .map { case (f, px) => partial((f * hNsh).toInt, px) }
+    def win(n: Int) = 32 - Integer.numberOfLeadingZeros(n)
+    assert(Seq(n1, n2, n1p, n2p).forall(win(_) == win(dNsh)))
+
+    def probe(k: Int, planted: (Long, String)*)(cap: Int = 4): (Boolean, Long) = {
+      val corpus = ((1L to k).map(_ -> h) ++ planted).toDF("doc_id", "text")
+      val r = NearDup.matchesAgainst(corpus,
+        Seq(5000L -> p).toDF("doc_id", "text"), 0.5, bucketCap = cap)
+        .collect().head
+      graft.core.CacheRegistry.releaseAll()
+      (r.getBoolean(1), r.getLong(2))
+    }
+    val hit = (true, 999L)
+    (8 to 13).foreach { k =>
+      assert(probe(k, 999L -> d)() == hit, s"lone qualifier, K=$k")
+      assert(probe(k, 999L -> d)(1 << 30) == hit, s"uncapped, K=$k")
+      assert(probe(k, 999L -> d, 1500L -> l)() == hit, s"window-isolated, K=$k")
+      assert(probe(k, 998L -> j1p, 999L -> d, 1501L -> j2p)() == hit,
+        s"one clean band, K=$k")
+      // bracketed in every band, D (rank K+2 of K+3) survives only
+      // on its stride rank
+      val strideKeeps = (k + 1) % math.ceil((k + 3) / 4.0).toInt == 0
+      val got = probe(k, 998L -> j1, 999L -> d, 1501L -> j2)()
+      assert(got == (if (strideKeeps) hit else (false, -1L)),
+        s"bracketed, K=$k: $got")
+    }
   }
 
   test("precomputed index probe is row-identical to the in-session " +

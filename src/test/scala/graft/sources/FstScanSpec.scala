@@ -256,6 +256,17 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back(0)._2.endsWith("we\"ird,dir/c.fst"), back(0)._2)
     assert(back(1)._2.endsWith("back\\slash/x.fst"), back(1)._2)
     assert(back.map(_._3) == Seq(Seq(1f, 2f), Seq(3f, 4f)))
+    // write, update and stream-read a name holding a space too
+    val c = new java.io.File(root, "sp ace\"q\\b").getAbsolutePath
+    graft.sources.fst.FstWriter.write(spark.read.format("fstrec")
+      .load(a.getAbsolutePath, b.getAbsolutePath), c, cleanup = false)
+    graft.sources.fst.FstWriter.update(spark.read.format("fstrec").load(c)
+      .withColumn("etiket", lit("UPD")))
+    val streamed = graft.streaming.StreamDrain.drain(spark,
+      spark.readStream.format("fstrec").load(c).select("ip1", "etiket"),
+      "append", "oddpath", shufflePartitions = 1)
+      .collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(streamed == Seq((1, "UPD"), (2, "UPD")), streamed)
   }
 
   test("a truncated file fails the read, naming the file and the offset") {
@@ -381,6 +392,7 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // relative to target (at defaults a 60 KB file correctly stays
     // whole under the 4 MB open-cost floor).
     val len = dataFiles.head.length()
+    assert(spark.read.format("fstrec").load(path).rdd.getNumPartitions == 1)
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
     spark.conf.set("spark.sql.files.maxPartitionBytes", s"${len / 3}")
     try {
@@ -410,6 +422,9 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(back.select("path", "key").distinct().count() == rows)
       assert(back.agg(sum(element_at(col("d"), 1))).as[Double].head() ==
         (1 to rows).map(_.toDouble).sum)
+      // a metadata-only read keeps the split plan
+      val meta = spark.read.format("fstrec").load(path).select("nomvar", "ip1")
+      assert(meta.rdd.getNumPartitions > 1 && meta.count() == rows)
     } finally {
       spark.conf.unset("spark.sql.files.openCostInBytes")
       spark.conf.unset("spark.sql.files.maxPartitionBytes")
@@ -466,6 +481,9 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(back.select("key").distinct().count() == rows)
       assert(back.agg(sum(element_at(col("d"), 1))).as[Double].head() ==
         (1 to rows).map(_.toDouble).sum)
+      // a metadata-only read keeps the split plan
+      val meta = spark.read.format("fstrec").load(path).select("nomvar", "ip1")
+      assert(meta.rdd.getNumPartitions > 1 && meta.count() == rows)
       // keys are the global record handles, unchanged by slicing
       val keys = back.select("key").as[Int].collect().sorted
       assert(keys.toSeq == (0 until rows).map(_ << 10),
