@@ -18,11 +18,13 @@ object Constants {
 
   val DatypInverse: Map[String, Int] = DatypDict.map(_.swap)
 
-  /** kind int -> printable suffix (already stripped). Kinds in
-    * [-1, 3, 15, 17, 100] print as the empty string
-    * (kind_to_string, /root/reference/fstpy/std_io.py:817-818).
+  /** kind int -> printable suffix (already stripped), in kind order.
+    * Kinds in [-1, 3, 15, 17, 100] print as the empty string
+    * (kind_to_string, /root/reference/fstpy/std_io.py:817-818). Its
+    * inverse is ip_from_value_and_kind's letter map
+    * (/root/reference/fstpy/utils.py:79-108).
     */
-  val KindDict: Map[Int, String] = Map(
+  val KindDict: Map[Int, String] = scala.collection.immutable.SortedMap(
     0 -> "m", 1 -> "sg", 2 -> "mb", 4 -> "M", 5 -> "hy", 6 -> "th",
     10 -> "H", 21 -> "mp")
 
@@ -61,14 +63,4 @@ object Constants {
     "nomvar", "typvar", "etiket", "ni", "nj", "nk", "dateo", "ip1",
     "ip2", "ip3", "deet", "npas", "datyp", "nbits", "grtyp", "ig1",
     "ig3", "ig4", "datev")
-
-  /** (datyp, nbits) -> element dtype name
-    * (get_field_dtype, /root/reference/fstpy/std_io.py:633-644).
-    */
-  def fieldDtype(datyp: Int, nbits: Int): String =
-    if (Set(1, 5, 6, 133, 134).contains(datyp) && nbits <= 32) "float32"
-    else if (Set(1, 5, 6, 133, 134).contains(datyp)) "float64"
-    else if (Set(2, 130).contains(datyp) && nbits > 1) "int32"
-    else if (Set(2, 130).contains(datyp) && nbits == 1) "uint32"
-    else "float32"
 }

@@ -1,6 +1,10 @@
 package graft.core
 
-/** ip1/ip2/ip3 "convip" codec.
+/** ip1/ip2/ip3 "convip" codec: the one JVM implementation, run by the
+  * codegen'd `graft_encode_ip` / `graft_decode_ip_value` /
+  * `graft_decode_ip_kind` expressions ([[graft.functions.EncodeIpExpr]])
+  * and by the fixture generators. Its DuckDB twins
+  * (`IpColumns.decodeValueSql` / `decodeKindSql`) are the gate's oracle.
   *
   * The reference delegates to librmn's `convertIp`
   * (/root/reference/fstpy/std_io.py:841-851,
@@ -20,37 +24,43 @@ package graft.core
   * pressure in mb for [0,12000] except the sigma carve-out
   * [2000,3000] (sigma = (ip-2000)/1000), and height
   * `5*(ip-12001) - 20000` metres for (12000, 32000].
+  *
+  * The per-ip special cases of decode_ip123 (coordinate records, ip2
+  * hours, ip3 user codes, intervals) live in `Decode.addIpInfo`.
   */
 object IpCodec {
 
-  /** One decoded ip: value(s), kind, printable kind. v2 is set only by
-    * interval recognition in [[decodeIp123]].
+  /** 10^-11 .. 10^4 as parsed literals, so 10^(4-exp) is
+    * `Pow10Literals(15 - exp)`. The JVM decode and the DuckDB twin
+    * read the same parsed doubles (no libm pow() 1-ulp divergence
+    * between engines).
     */
-  final case class DecodedIp(v1: Float, v2: Float, hasV2: Boolean,
-                             kind: Int, kinds: String)
+  val Pow10Literals: IndexedSeq[String] = (-11 to 4).map(e => s"1e$e")
+  private val Pow10: Array[Double] = Pow10Literals.map(_.toDouble).toArray
 
-  private def dec(v1: Float, kind: Int): DecodedIp =
-    DecodedIp(v1, 0f, hasV2 = false, kind, Constants.kindToString(kind))
-
-  /** Decode a single ip -> (value, kind). */
-  def decode(ip: Int): (Float, Int) = {
-    if (ip < 0) (ip.toFloat, -1)
+  /** Decoded value of one ip. */
+  def decodeValue(ip: Int): Float =
+    if (ip < 0) ip.toFloat
     else if (ip <= 32767) {
-      // old style
-      if (ip >= 2000 && ip <= 3000) (((ip - 2000) / 1000.0).toFloat, 1)
-      else if (ip <= 12000) (ip.toFloat, 2)
-      else if (ip <= 32000) ((5.0 * (ip - 12001) - 20000.0).toFloat, 0)
-      else (ip.toFloat, 3)
+      if (ip >= 2000 && ip <= 3000) ((ip - 2000) / 1000.0).toFloat
+      else if (ip <= 12000) ip.toFloat
+      else if (ip <= 32000) (5.0 * (ip - 12001) - 20000.0).toFloat
+      else ip.toFloat
     } else {
-      val kind = (ip >> 24) & 31
-      val exp = (ip >> 20) & 15
       val mantissa = ip & 0xFFFFF
-      val v =
-        if (mantissa > 1000000) -(mantissa - 1000000) * math.pow(10, 4 - exp)
-        else mantissa * math.pow(10, 4 - exp)
-      (v.toFloat, kind)
+      val signed = if (mantissa > 1000000) -(mantissa - 1000000) else mantissa
+      (signed * Pow10(15 - ((ip >> 20) & 15))).toFloat
     }
-  }
+
+  /** Kind of one ip (-1 for a negative ip). */
+  def decodeKind(ip: Int): Int =
+    if (ip < 0) -1
+    else if (ip <= 32767) {
+      if (ip >= 2000 && ip <= 3000) 1
+      else if (ip <= 12000) 2
+      else if (ip <= 32000) 0
+      else 3
+    } else (ip >> 24) & 31
 
   /** Encode (value, kind) -> new-style ip. Returns -1 on overflow. */
   def encode(value: Float, kind: Int): Int = {
@@ -70,96 +80,4 @@ object IpCodec {
     val field = if (neg) 1000000L + mantissa else mantissa
     (((kind & 31) << 24) | (iexp << 20) | field.toInt)
   }
-
-  /** C5 printable-kind letters accepted by ip_from_value_and_kind
-    * (/root/reference/fstpy/utils.py:79-108).
-    */
-  val PrintableKinds: Map[String, Int] = Map(
-    "m" -> 0, "sg" -> 1, "mb" -> 2, "M" -> 4, "hy" -> 5, "th" -> 6,
-    "H" -> 10, "mp" -> 21)
-
-  /** C5: encode an ip from a value and a printable kind letter. */
-  def ipFromValueAndKind(value: Float, pkind: String): Int =
-    encode(value, PrintableKinds(pkind.trim))
-
-  /** Full three-ip decode with the reference's special-casing
-    * (decode_ip123, /root/reference/fstpy/std_io.py:814-872):
-    *  - coordinate records (>>,^^,^>,!!): raw values, kind 100;
-    *  - ip2 < 32768 is old-style forecast hours -> kind forced to 10;
-    *  - ip3 < 32768 -> kind forced to 100 (arbitrary user code);
-    *  - encoded ip3 with matching kind flags a time interval (swap into
-    *    ip2.v1/v2) or a height interval (into ip1.v1/v2).
-    */
-  /** Static scalar twins of [[decode]] for codegen'd expressions
-    * (one value per call; the tuple form can't cross a static-call
-    * codegen boundary without boxing).
-    */
-  def decodeValue(ip: Int): Float = decode(ip)._1
-  def decodeKind(ip: Int): Int = decode(ip)._2
-
-  def decodeIp123(nomvar: String, ip1: Int, ip2: Int, ip3: Int)
-      : (DecodedIp, DecodedIp, DecodedIp) = {
-    val nv = nomvar.trim
-    if (Constants.RawIpNomvars.contains(nv)) {
-      (DecodedIp(ip1.toFloat, 0f, false, 100, ""),
-       DecodedIp(ip2.toFloat, 0f, false, 100, ""),
-       DecodedIp(ip3.toFloat, 0f, false, 100, ""))
-    } else {
-      val (v1, k1) = decode(ip1)
-      var i1 = dec(v1, k1)
-
-      val (v2, k2raw) = decode(ip2)
-      val k2 = if (ip2 >= 32768) k2raw else 10
-      var i2 = dec(v2, k2)
-
-      val (v3, k3raw) = decode(ip3)
-      val k3 = if (ip3 >= 32768) k3raw else 100
-      val i3 = dec(v3, k3)
-
-      if (!Constants.NoIntervalNomvars.contains(nv) && ip3 >= 32768) {
-        if (i3.kind == i2.kind)
-          i2 = i2.copy(v1 = i3.v1, v2 = i2.v1, hasV2 = true)
-        else if (i3.kind == i1.kind)
-          i1 = i1.copy(v2 = i3.v1, hasV2 = true)
-      }
-      (i1, i2, i3)
-    }
-  }
-
-  /** Interval detection (get_interval,
-    * /root/reference/fstpy/std_dec.py:44-69): returns
-    * (ipName, low, high, kind) when ip3 is an encoded bound whose kind
-    * matches ip1 or ip2.
-    */
-  def interval(ip1: Int, ip2: Int, ip3: Int,
-               i1: DecodedIp, i2: DecodedIp, i3: DecodedIp)
-      : Option[(String, Float, Float, Int)] = {
-    if (ip3 >= 32768) {
-      if (ip1 >= 32768 && i1.kind == i3.kind)
-        Some(("ip1", i1.v1, i1.v2, i1.kind))
-      else if (ip2 >= 32768 && i2.kind == i3.kind)
-        Some(("ip2", i2.v1, i2.v2, i2.kind))
-      else None
-    } else None
-  }
-
-  /** Level sort order by kind (get_level_sort_order,
-    * /root/reference/fstpy/std_dec.py:71-85): true = ascending.
-    */
-  def levelSortAscending(kind: Int): Boolean =
-    Set(0, 3, 4, 21, 100).contains(kind)
-
-  /** is_surface (/root/reference/fstpy/std_dec.py:191-212). */
-  def isSurface(kind: Int, level: Float): Boolean = {
-    val meterLevels = (0 to 20).map(_ * 0.5f).toSet
-    if (kind == 5 && level == 1f) true
-    else if (kind == 4 && meterLevels.contains(level)) true
-    else if (kind == 1 && level == 1f) true
-    else false
-  }
-
-  /** level_type_follows_topography
-    * (/root/reference/fstpy/std_dec.py:215-233).
-    */
-  def followsTopography(kind: Int): Boolean = Set(1, 4, 5).contains(kind)
 }

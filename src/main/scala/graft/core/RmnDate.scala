@@ -1,8 +1,9 @@
 package graft.core
 
-import java.time.{Instant, LocalDateTime, ZoneOffset}
-
-/** CMC/RMN date-stamp codec.
+/** CMC/RMN date-stamp constants and the scalar helpers the fixture
+  * generators and format oracles use. The catalog decodes stamps with
+  * `IpColumns.stampToTimestamp` and encodes them with
+  * `Encode.stampFromTimestamp`.
   *
   * New-style stamps encode time in 5-second ticks since
   * 1980-01-01T00:00:00Z packed as `stamp = (ticks/8)*10 + ticks%8 +
@@ -19,32 +20,12 @@ import java.time.{Instant, LocalDateTime, ZoneOffset}
 object RmnDate {
   val EpochSeconds: Long = 315532800L // 1980-01-01T00:00:00Z
   val StampOffset: Long = 123200000L
-  val DummyStamps: Set[Long] = Set(0L, 10101011L)
-
-  /** stamp -> seconds since Unix epoch; None for dummy or pre-1980
-    * old-style stamps (out of scope for this engine).
-    */
-  def toEpochSeconds(stamp: Long): Option[Long] = {
-    if (DummyStamps.contains(stamp) || stamp < StampOffset) None
-    else {
-      val s = stamp - StampOffset
-      val ticks = (s / 10) * 8 + (s % 10)
-      Some(EpochSeconds + ticks * 5)
-    }
-  }
-
-  def toLocalDateTime(stamp: Long): Option[LocalDateTime] =
-    toEpochSeconds(stamp).map(s =>
-      LocalDateTime.ofInstant(Instant.ofEpochSecond(s), ZoneOffset.UTC))
 
   /** seconds since Unix epoch -> stamp (truncates to the 5 s grid). */
   def fromEpochSeconds(epochSeconds: Long): Long = {
     val ticks = (epochSeconds - EpochSeconds) / 5
     (ticks / 8) * 10 + (ticks % 8) + StampOffset
   }
-
-  def fromLocalDateTime(dt: LocalDateTime): Long =
-    fromEpochSeconds(dt.toEpochSecond(ZoneOffset.UTC))
 
   /** dateo from datev: stamps tick every 5 s, so subtract
     * deet*npas/5 ticks (/root/reference/fstpy/std_io.py:782-786).

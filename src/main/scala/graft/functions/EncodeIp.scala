@@ -39,10 +39,11 @@ case class EncodeIpExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Native decode twins of [[EncodeIpExpr]]: CONVIP decode split into
-  * its value and kind halves (the tuple can't cross a codegen
-  * static-call boundary unboxed). SQL users get the full codec without
-  * any Scala: `SELECT graft_decode_ip_value(ip1), ...`.
+/** Native CONVIP decode, split into its value and kind halves so each
+  * is one unboxed static call in generated code. These are the
+  * catalog's only ip decode (`IpColumns.decodeValue` / `decodeKind`
+  * return them); SQL users get the same codec without any Scala:
+  * `SELECT graft_decode_ip_value(ip1), ...`.
   */
 case class DecodeIpValueExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = FloatType
@@ -147,19 +148,43 @@ object GraftFunctions {
         name, builder, "scala_udf")
     }
 
+  /** [[install]] on the active session, unless it has every function
+    * already (re-registering each one logs a warning).
+    */
+  private def installActive(): Unit =
+    SparkSession.getActiveSession.foreach { spark =>
+      val registry = spark.sessionState.functionRegistry
+      if (!all.forall(f => registry.functionExists(
+          new org.apache.spark.sql.catalyst.FunctionIdentifier(f._1))))
+        install(spark)
+    }
+
   /** (value, kind) -> new-style ip as a Column, via the native
     * expression (installs it on the active session on first use).
     */
   def encodeIp(value: Column, kind: Column): Column = {
-    SparkSession.getActiveSession.foreach(install)
+    installActive()
     call_function("graft_encode_ip", value, kind)
+  }
+
+  /** ip -> decoded value / kind as Columns, via the native expressions
+    * (install them on the active session on first use).
+    */
+  def decodeIpValue(ip: Column): Column = {
+    installActive()
+    call_function("graft_decode_ip_value", ip)
+  }
+
+  def decodeIpKind(ip: Column): Column = {
+    installActive()
+    call_function("graft_decode_ip_kind", ip)
   }
 
   /** text -> struct(sh: array<long>, bks: array<string>) via the fused
     * native LSH kernel (installs it on the active session on first use).
     */
   def shingleSig(text: Column): Column = {
-    SparkSession.getActiveSession.foreach(install)
+    installActive()
     call_function("graft_shingle_sig", text)
   }
 
@@ -167,7 +192,7 @@ object GraftFunctions {
     * codegen kernel (bit-identical to the HOF form it replaces).
     */
   def dot(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(install)
+    installActive()
     call_function("graft_dot", a, b)
   }
 
@@ -175,7 +200,7 @@ object GraftFunctions {
     * codegen kernel (bit-identical to the `aggregate` form).
     */
   def arraySum(a: Column): Column = {
-    SparkSession.getActiveSession.foreach(install)
+    installActive()
     call_function("graft_array_sum", a)
   }
 
@@ -185,7 +210,7 @@ object GraftFunctions {
     */
   def unitConvert(d: Column, fromName: Column, fromFactor: Column,
                   toName: String, toFactor: Double): Column = {
-    SparkSession.getActiveSession.foreach(install)
+    installActive()
     call_function("graft_unit_convert", d, fromName, fromFactor,
       lit(toName), lit(toFactor))
   }
@@ -194,7 +219,7 @@ object GraftFunctions {
     * primitive-hash kernel.
     */
   def jaccardLong(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(install)
+    installActive()
     call_function("graft_jaccard_long", a, b)
   }
 }

@@ -9,9 +9,10 @@ import graft.meta.Lookups
   * metadata columns, composed by [[decodeMetadata]]
   * (reference: /root/reference/fstpy/dataframe.py:20-629).
   *
-  * All transformers are pure Column expressions (whole-stage codegen,
-  * no UDFs) and recompute unconditionally — Catalyst prunes unused
-  * columns, so recomputation is free when a column is dropped later.
+  * All transformers are Column expressions (whole-stage codegen, no
+  * UDFs; the ip decode is the native `graft_decode_ip_*` pair) and
+  * recompute unconditionally — Catalyst prunes unused columns, so
+  * recomputation is free when a column is dropped later.
   */
 object Decode {
 
@@ -156,7 +157,14 @@ object Decode {
   /** P9 ip decode columns (/root/reference/fstpy/dataframe.py:500-578
     * + decode_ip123 /root/reference/fstpy/std_io.py:814-872):
     * level/ip1_kind/ip1_pkind, ip2_dec/kind/pkind, ip3_dec/kind/pkind,
-    * surface, follow_topography, ascending, and interval bounds.
+    * surface, follow_topography, ascending, and interval bounds. The
+    * decode_ip123 special cases live here and nowhere else:
+    *  - coordinate records (>>,^^,^>,!!): raw values, kind 100;
+    *  - ip2 < 32768 is old-style forecast hours -> kind forced to 10;
+    *  - ip3 < 32768 -> kind forced to 100 (arbitrary user code);
+    *  - an encoded ip3 whose kind matches ip2's is a time interval
+    *    (ip3 swaps into ip2_dec); else one matching ip1's is a height
+    *    interval.
     */
   def addIpInfo(df: DataFrame): DataFrame = {
     val rawIp = col("nomvar").isin(RawIpNomvars: _*)
@@ -184,19 +192,13 @@ object Decode {
 
     df.withColumn("level", v1)
       .withColumn("ip1_kind", k1)
-      .withColumn("ip1_pkind",
-        when(k1.isin(-1, 3, 15, 17, 100), lit(""))
-          .otherwise(IpColumns.kindToString(k1)))
+      .withColumn("ip1_pkind", IpColumns.kindToString(k1))
       .withColumn("ip2_dec", when(timeInterval, v3).otherwise(v2))
       .withColumn("ip2_kind", k2)
-      .withColumn("ip2_pkind",
-        when(k2.isin(-1, 3, 15, 17, 100), lit(""))
-          .otherwise(IpColumns.kindToString(k2)))
+      .withColumn("ip2_pkind", IpColumns.kindToString(k2))
       .withColumn("ip3_dec", v3)
       .withColumn("ip3_kind", k3)
-      .withColumn("ip3_pkind",
-        when(k3.isin(-1, 3, 15, 17, 100), lit(""))
-          .otherwise(IpColumns.kindToString(k3)))
+      .withColumn("ip3_pkind", IpColumns.kindToString(k3))
       .withColumn("surface", IpColumns.isSurface(k1, v1))
       .withColumn("follow_topography", IpColumns.followsTopography(k1))
       .withColumn("ascending", IpColumns.ascending(k1))
@@ -228,12 +230,4 @@ object Decode {
       addDecodedDates, addForecastHour, addDataTypeStr, addIpInfo)
     steps.foldLeft(df)((d, f) => f(d))
   }
-
-  /** P13 voir column ordering
-    * (/root/reference/fstpy/dataframe.py:634-650).
-    */
-  val VoirOrder: Seq[String] = Seq(
-    "nomvar", "typvar", "etiket", "ni", "nj", "nk", "dateo", "ip1",
-    "ip2", "ip3", "deet", "npas", "datyp", "nbits", "grtyp", "ig1",
-    "ig2", "ig3", "ig4")
 }

@@ -6,13 +6,15 @@ import org.apache.spark.sql.types.IntegerType
 import graft.core.{Constants, IpCodec}
 
 /** Encode layer (C4-C11): inverses of the decode transformers
-  * (/root/reference/fstpy/std_enc.py).
+  * (/root/reference/fstpy/std_enc.py), and the only implementation of
+  * each encode.
   *
   * The ip encoder needs a normalization loop, so it is a compact Scala
-  * native expression over the unit-tested [[IpCodec.encode]]
-  * ([[graft.functions.EncodeIpExpr]]); everything else is
-  * native Columns. Correctness is driver-checked via re-encode
-  * round-trips (encode∘decode = identity against the original column).
+  * native expression over [[IpCodec.encode]]
+  * ([[graft.functions.EncodeIpExpr]]); everything else is plain
+  * Columns. `CodecSpec` / `CodecPropertySpec` pin these against the
+  * decode transformers (build∘parse identities and goldens), and the
+  * gate checks re-encode round-trips against the original columns.
   */
 object Encode {
 
@@ -21,6 +23,17 @@ object Encode {
     */
   def encodeIp(value: Column, kind: Column): Column =
     graft.functions.GraftFunctions.encodeIp(value, kind)
+
+  /** C5 ip_from_value_and_kind (/root/reference/fstpy/utils.py:79-108):
+    * the printable kind letter, inverted through [[Constants.KindDict]],
+    * picks the kind; an unknown letter gives kind -1.
+    */
+  def ipFromValueAndKind(value: Column, pkind: Column): Column = {
+    val p = trim(pkind)
+    encodeIp(value, Constants.KindDict.foldLeft(lit(-1)) {
+      case (acc, (k, l)) => when(p === l, lit(k)).otherwise(acc)
+    })
+  }
 
   /** C6: timestamp -> CMC stamp (inverse of stampToTimestamp). */
   def stampFromTimestamp(ts: Column): Column = {

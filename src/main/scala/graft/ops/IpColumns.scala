@@ -2,46 +2,30 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.core.{Constants, IpCodec, RmnDate}
+import graft.functions.GraftFunctions
 
-/** Native-Column (codegen-friendly, no UDF) implementations of the ip
-  * and date codecs, with DuckDB SQL twins for the oracle. Every
-  * function here has a `*Sql` twin generated from the same constants so
-  * the Spark plan and the oracle can never drift.
-  *
-  * Semantics: IpCodec.scala / RmnDate.scala (pure-Scala reference
-  * implementations, unit-tested); ultimately
+/** Column forms of the ip and date codecs, each with a DuckDB `*Sql`
+  * twin for the oracle. The ip decode is the codegen'd native
+  * expression over [[IpCodec]] (`graft_decode_ip_value` /
+  * `graft_decode_ip_kind`); the `*Sql` twins restate its arithmetic
+  * independently, so the gate compares two implementations. Everything
+  * else here is a plain Column formula (no UDF) built from the same
+  * constants as its twin. Decode semantics:
   * /root/reference/fstpy/std_io.py:814-872.
   */
 object IpColumns {
 
-  /** Powers of ten as parsed literals (identical parse in JVM and
-    * DuckDB — avoids libm pow() 1-ulp divergence between engines).
-    * Index i holds 10^(i-12), i in 1..16, so 10^(4-exp) = P10(16-exp).
-    */
-  private val P10Strings: IndexedSeq[String] =
-    (-11 to 4).map(e => s"1e$e")
-  private val p10Array: Column =
-    array(P10Strings.map(s => lit(s.toDouble)): _*)
   private def p10Sql(idxExpr: String): String =
-    s"list_extract([${P10Strings.mkString(", ")}], $idxExpr)"
+    s"list_extract([${IpCodec.Pow10Literals.mkString(", ")}], $idxExpr)"
 
-  // ---- single-ip decode: value ----
+  // ---- single-ip decode ----
 
-  def decodeValue(ip: Column): Column = {
-    val mant = ip.bitwiseAND(lit(0xFFFFF))
-    val exp = shiftright(ip, 20).bitwiseAND(lit(15))
-    val raw = when(mant > 1000000, -(mant - lit(1000000))).otherwise(mant)
-    val newStyle = raw.cast("double") * element_at(p10Array, lit(16) - exp)
-    val oldStyle =
-      when(ip.between(2000, 3000), (ip - lit(2000)).cast("double") / lit(1000))
-        .when(ip <= 12000, ip.cast("double"))
-        .when(ip <= 32000, lit(5.0) * (ip - lit(12001)) - lit(20000.0))
-        .otherwise(ip.cast("double"))
-    when(ip < 0, ip.cast("double"))
-      .when(ip <= 32767, oldStyle)
-      .otherwise(newStyle)
-      .cast("float")
-  }
+  /** Decoded value of an int ip column (native [[IpCodec.decodeValue]]). */
+  def decodeValue(ip: Column): Column = GraftFunctions.decodeIpValue(ip)
+
+  /** Kind of an int ip column (native [[IpCodec.decodeKind]]). */
+  def decodeKind(ip: Column): Column = GraftFunctions.decodeIpKind(ip)
 
   def decodeValueSql(ip: String): String = {
     val mant = s"($ip & 1048575)"
@@ -57,17 +41,6 @@ object IpColumns {
       s"WHEN $ip <= 32767 THEN $oldStyle ELSE $newStyle END AS FLOAT)"
   }
 
-  // ---- single-ip decode: kind ----
-
-  def decodeKind(ip: Column): Column =
-    when(ip < 0, lit(-1))
-      .when(ip <= 32767,
-        when(ip.between(2000, 3000), lit(1))
-          .when(ip <= 12000, lit(2))
-          .when(ip <= 32000, lit(0))
-          .otherwise(lit(3)))
-      .otherwise(shiftright(ip, 24).bitwiseAND(lit(31)))
-
   def decodeKindSql(ip: String): String =
     s"(CASE WHEN $ip < 0 THEN -1 WHEN $ip <= 32767 THEN " +
       s"(CASE WHEN $ip BETWEEN 2000 AND 3000 THEN 1 " +
@@ -76,36 +49,38 @@ object IpColumns {
 
   // ---- kind -> printable suffix (KIND_DICT) ----
 
-  private val KindStrings: Seq[(Int, String)] = Seq(
-    0 -> "m", 1 -> "sg", 2 -> "mb", 4 -> "M", 5 -> "hy", 6 -> "th",
-    10 -> "H", 21 -> "mp")
-
   def kindToString(kind: Column): Column =
-    KindStrings.foldLeft(lit(""): Column) { case (acc, (k, s)) =>
+    Constants.KindDict.foldLeft(lit(""): Column) { case (acc, (k, s)) =>
       when(kind === k, lit(s)).otherwise(acc)
     }
 
   def kindToStringSql(kind: String): String =
-    "(CASE " + KindStrings.map { case (k, s) =>
+    "(CASE " + Constants.KindDict.map { case (k, s) =>
       s"WHEN $kind = $k THEN '$s' "
     }.mkString + "ELSE '' END)"
 
   // ---- RMN date stamp -> timestamp ----
 
+  import RmnDate.{EpochSeconds, StampOffset}
+
+  /** Stamps that decode to null (/root/reference/fstpy/std_dec.py:183-184). */
+  private val DummyStamps = Seq(0, 10101011)
+
   def stampToTimestamp(stamp: Column): Column = {
-    val s = stamp.cast("long") - lit(123200000L)
+    val s = stamp.cast("long") - lit(StampOffset)
     val sDiv10 = ((s - pmod(s, lit(10))) / lit(10)).cast("long")
     val t = sDiv10 * lit(8) + pmod(s, lit(10))
-    val secs = lit(315532800L) + t * lit(5)
-    when(stamp.isin(0, 10101011) || stamp < 123200000L, lit(null))
+    val secs = lit(EpochSeconds) + t * lit(5)
+    when(stamp.isin(DummyStamps: _*) || stamp < StampOffset, lit(null))
       .otherwise(timestamp_seconds(secs))
   }
 
   def stampToTimestampSql(stamp: String): String = {
-    val s = s"(CAST($stamp AS BIGINT) - 123200000)"
+    val s = s"(CAST($stamp AS BIGINT) - $StampOffset)"
     val t = s"(($s // 10) * 8 + ($s % 10))"
-    s"(CASE WHEN $stamp IN (0, 10101011) OR $stamp < 123200000 THEN NULL " +
-      s"ELSE make_timestamp((315532800 + $t * 5) * 1000000) END)"
+    s"(CASE WHEN $stamp IN (${DummyStamps.mkString(", ")}) OR " +
+      s"$stamp < $StampOffset THEN NULL " +
+      s"ELSE make_timestamp(($EpochSeconds + $t * 5) * 1000000) END)"
   }
 
   // ---- surface / topography / ascending rules ----

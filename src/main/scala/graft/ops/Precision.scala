@@ -40,8 +40,8 @@ object Precision {
       max(datypPriority(col("datyp"))).as("datyp_priority"),
       max(col("nbits")).as("max_nbits"))
 
-  /** C13: (datyp, nbits) -> element dtype name (Column twin of
-    * [[graft.core.Constants.fieldDtype]]).
+  /** C13: (datyp, nbits) -> element dtype name
+    * (get_field_dtype, /root/reference/fstpy/std_io.py:633-644).
     */
   def fieldDtype(datyp: Column, nbits: Column): Column = {
     val fl = datyp.isin(1, 5, 6, 133, 134)

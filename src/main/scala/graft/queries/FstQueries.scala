@@ -236,8 +236,8 @@ object FstQueries {
 
     // §2.11 native expressions through the correctness gate: the
     // codegen'd decode/encode SQL functions (graft_decode_ip_value/
-    // _kind, graft_encode_ip) must match the DuckDB twin of the
-    // pure-Column decode rules AND round-trip new-style ips
+    // _kind, graft_encode_ip) must match the DuckDB twins of the
+    // decode rules AND round-trip new-style ips
     "f50_native_functions" -> ((s, dir) => {
       graft.functions.GraftFunctions.install(s)
       cat(s, dir).filter(col("rid") > 0)
@@ -902,13 +902,9 @@ object FstQueries {
     // (roundtrip identity; letters per utils.py:79-108)
     "f55_ip_from_pkind" -> ((s, dir) => {
       val d = Decode.addIpInfo(cat(s, dir)).filter(col("rid") > 0)
-      val kindFromP = graft.core.IpCodec.PrintableKinds
-        .toSeq.sortBy(_._2).foldLeft(lit(-1)) {
-          case (acc, (l, k)) =>
-            when(col("ip1_pkind") === l, lit(k)).otherwise(acc)
-        }
       d.select(col("rid"), col("ip1"), col("ip1_pkind"),
-        Encode.encodeIp(col("level"), kindFromP).as("ip1_reenc"))
+        Encode.ipFromValueAndKind(col("level"), col("ip1_pkind"))
+          .as("ip1_reenc"))
     }),
 
     // P5/J4 over the FULL bundled dictionary (928-nomvar STDVAR,

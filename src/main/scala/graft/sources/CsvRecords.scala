@@ -102,7 +102,8 @@ object CsvRecords {
   /** Parse the `"a,b;c,d"` payload string column `d` into ni/nj and
     * the Fortran-flat float array, in place. ONE implementation shared
     * by the batch CSV reader and the streaming record source, so the
-    * two paths cannot diverge.
+    * two paths cannot diverge. A null or blank payload fails the read
+    * with an error naming `d` and the row's nomvar.
     *
     * The double-split `rows` array is LET-BOUND (PipelineOps.bind)
     * inside every expression that consumes it. Round-10 RCA of f21
@@ -119,9 +120,15 @@ object CsvRecords {
     * ~4.8 s -> ~1.3 s (F21Rca / Profile, DESIGN.md round 10).
     */
   def parsePayload(df: DataFrame): DataFrame = {
+    // a null or blank cell fails the read here, naming the record,
+    // instead of reaching the catalog as null d/ni/nj
+    val payload = when(trim(col("d")) =!= "", col("d"))
+      .otherwise(raise_error(concat(
+        lit("csv: empty payload in column d for nomvar '"),
+        coalesce(col("nomvar"), lit("null")), lit("'"))))
     def bound[A](f: Column => Column): Column =
       graft.pipeline.PipelineOps.bind(
-        transform(split(col("d"), ";"), r => split(r, ",")))(f)
+        transform(split(payload, ";"), r => split(r, ",")))(f)
     df.withColumn("ni", bound(rb => size(rb)))
       .withColumn("nj", bound(rb => size(element_at(rb, 1))))
       .withColumn("d", bound { rb =>

@@ -773,10 +773,17 @@ class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
     readAt = in.readAt
     val hdr = in.header
     container = Container.sniff(hdr, file)
-    entries = container.scanEntries(hdr, readAt, slice.unitStart,
-      slice.unitEnd, slice.startAddr).filter { case (m, key) =>
-        pushed.forall(f => FstFilters.eval(f, m, file, key))
+    // the format modules see bytes, not paths: a corrupt directory
+    // fails here, where the file is known
+    val scanned =
+      try container.scanEntries(hdr, readAt, slice.unitStart,
+        slice.unitEnd, slice.startAddr)
+      catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"${e.getMessage}: $file", e)
       }
+    entries = scanned.filter { case (m, key) =>
+      pushed.forall(f => FstFilters.eval(f, m, file, key))
+    }
     true
   }
 

@@ -91,4 +91,21 @@ class PlanLintSpec extends AnyFunSuite with BeforeAndAfterAll {
         "graft_unit_convert(")
     })
   }
+
+  test("decodeMetadata decodes ips with the native codec, not a Column CASE tree") {
+    import graft.sources.fst.FstFormat
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_lint_ip")
+    val recs = (1 to 2).map(i => (FstFormat.Meta("TT", "P", "R1_V710_N", 2,
+      1, 1, 0L, graft.core.IpCodec.encode(i * 100f, 2), 6, 0, 0, 0, 5, 32,
+      "X", 0, 0, 0, 0, 442998800L, 0, 0), Array(1f, 2f)))
+    java.nio.file.Files.write(dir.resolve("ip.fst"),
+      FstFormat.writeFile(recs))
+    val plan = graft.ops.Decode.decodeMetadata(
+      spark.read.format("fstrec").load(dir.toString))
+      .queryExecution.optimizedPlan
+      .treeString(verbose = false, maxFields = Int.MaxValue)
+    assert(plan.contains("graft_decode_ip_value(") &&
+      plan.contains("graft_decode_ip_kind(") && !plan.contains("1.0E-11"),
+      plan)
+  }
 }

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[GraftSession]]. Keeps each record container's byte layout behind
   * its own module: only the format modules and the `Container`
   * dispatch sniff a header or compare a container name. Keeps the jar
-  * a library: only the three entry points define a `main`.
+  * a library: only the three entry points define a `main`, and every
+  * `graft.core` object is used by other library code, not only by
+  * tests.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -61,6 +63,20 @@ class SourceGuardSpec extends AnyFunSuite {
       m <- """new\s+(java\.net\.)?URI\(""".r.findAllMatchIn(text)
     } yield s"${f.getPath}: ${m.matched}"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("every object in graft.core is used by other library code") {
+    // an object that only tests call is a twin the catalog never runs
+    val files = sources
+    val core = files.filter(_.getPath.contains("/graft/core/"))
+    assert(core.nonEmpty)
+    val unused = for {
+      f <- core
+      name <- """(?m)^object\s+(\w+)""".r.findAllMatchIn(read(f)).map(_.group(1))
+      if !files.exists(o => o != f &&
+        s"\\b$name\\b".r.findFirstIn(read(o)).isDefined)
+    } yield s"${f.getPath}: object $name"
+    assert(unused.isEmpty, unused.mkString("\n", "\n", ""))
   }
 
   test("only Bench, Verify and Tool define a main") {

@@ -1,14 +1,28 @@
 package graft.core
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
+import graft.ops.{Decode, Encode, IpColumns}
+import graft.sources.CsvRecords
 
-/** Round-trip property tests per SURVEY.md §5 / FIXTURES.md §7.
-  * Uses raw ScalaCheck Gen with deterministic seeded sampling (the
-  * scalatest-plus bridge is not on the offline classpath).
+/** Round-trip property tests per SURVEY.md §5 / FIXTURES.md §7, over
+  * the codecs the catalog runs (Column transformers and native
+  * expressions). Uses raw ScalaCheck Gen with deterministic seeded
+  * sampling (the scalatest-plus bridge is not on the offline
+  * classpath). Each property evaluates all its samples in one frame,
+  * repartitioned so the codecs run in generated code rather than being
+  * folded into the local relation.
   */
-class CodecPropertySpec extends AnyFunSuite {
+class CodecPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  lazy val spark: SparkSession = GraftSession(2)
+
+  override def afterAll(): Unit = spark.stop()
 
   private def samples[T](g: Gen[T], n: Int = 300): Seq[T] =
     (0 until n).flatMap(i =>
@@ -19,15 +33,21 @@ class CodecPropertySpec extends AnyFunSuite {
     else math.abs((a - b).toDouble) / math.abs(a.toDouble)
 
   test("encode∘decode ip round-trip per kind domain") {
+    import spark.implicits._
     val cases: Gen[(Float, Int)] = Gen.oneOf(
       Gen.choose(0f, 1100f).map((_, 2)),        // pressure mb
       Gen.choose(0f, 1f).map((_, 1)),           // sigma
       Gen.choose(0f, 1f).map((_, 5)),           // hybrid
       Gen.choose(-500f, 80000f).map((_, 0)),    // metres asl
       Gen.choose(0f, 384f).map((_, 10)))        // hours
-    samples(cases).foreach { case (v, k) =>
-      val ip = IpCodec.encode(v, k)
-      val (v2, k2) = IpCodec.decode(ip)
+    val got = samples(cases).toDF("v", "k").repartition(2)
+      .withColumn("ip", Encode.encodeIp(col("v"), col("k")))
+      .select(col("v"), col("k"), col("ip"), IpColumns.decodeValue(col("ip")),
+        IpColumns.decodeKind(col("ip")))
+      .as[(Float, Int, Int, Float, Int)].collect()
+    assert(got.length == 300)
+    got.foreach { case (v, k, ip, v2, k2) =>
+      assert(ip == IpCodec.encode(v, k))
       assert(k2 == k, s"kind mismatch for ($v, $k) -> $ip -> ($v2, $k2)")
       // 6 significant digits positive, 4 negative
       assert(relErr(v, v2) < (if (v < 0) 5e-4 else 5e-6),
@@ -36,13 +56,17 @@ class CodecPropertySpec extends AnyFunSuite {
   }
 
   test("RmnDate decode∘encode identity on the 5 s grid") {
-    samples(Gen.choose(0L, 3_000_000_000L)).foreach { secs =>
-      val t = (secs / 5) * 5 + RmnDate.EpochSeconds
-      assert(RmnDate.toEpochSeconds(RmnDate.fromEpochSeconds(t)).contains(t))
-    }
+    import spark.implicits._
+    val ts = samples(Gen.choose(0L, 3_000_000_000L))
+      .map(secs => (secs / 5) * 5 + RmnDate.EpochSeconds)
+    val back = ts.map(RmnDate.fromEpochSeconds).toDF("stamp").repartition(2)
+      .select(unix_seconds(IpColumns.stampToTimestamp(col("stamp"))))
+      .as[Long].collect()
+    assert(back.sorted.toSeq == ts.sorted)
   }
 
   test("Etiket build∘parse identity on generated etikets") {
+    import spark.implicits._
     val run = for {
       a <- Gen.oneOf("RGPEAIMWNC_".toSeq)
       b <- Gen.oneOf("0123456789RLHMEA_".toSeq)
@@ -55,40 +79,59 @@ class CodecPropertySpec extends AnyFunSuite {
       imp <- Gen.oneOf("N", "P", "X")
       ens <- Gen.oneOf(Gen.const(""), wstr(3))
     } yield (lbl, r, imp, ens)
-    samples(gen).foreach { case (lbl, r, imp, ens) =>
-      val parsed = Etiket.parse(Etiket.build(lbl, r, imp, ens))
-      assert(parsed == Etiket.Parsed(lbl, r, imp, ens),
-        s"etiket round-trip failed for ($lbl, $r, $imp, $ens)")
+    val parts = samples(gen)
+    val pieces = Seq("label", "run", "implementation", "ensemble_member")
+    val built = parts.toDF(pieces: _*).repartition(2)
+      .select(pieces.map(col) :+ Encode.etiketFromParts(col("label"),
+        col("run"), col("implementation"), col("ensemble_member"))
+        .as("etiket"): _*)
+    val back = Decode.addParsedEtiket(
+      built.withColumnsRenamed(pieces.map(p => p -> s"in_$p").toMap))
+      .select((pieces.map(p => col(s"in_$p")) ++ pieces.map(col)): _*)
+      .as[(String, String, String, String, String, String, String, String)]
+      .collect()
+    assert(back.length == parts.length)
+    back.foreach { case (l, r, i, e, l2, r2, i2, e2) =>
+      assert((l2, r2, i2, e2) == ((l, r, i, e)),
+        s"etiket round-trip failed for ($l, $r, $i, $e)")
     }
   }
 
   test("CsvArray string round-trip on random dims") {
+    import spark.implicits._
     val gen = for {
       ni <- Gen.choose(1, 8)
       nj <- Gen.choose(1, 8)
       vals <- Gen.listOfN(ni * nj, Gen.choose(-1000, 1000).map(_ / 2f))
-    } yield (vals.toArray, ni, nj)
-    samples(gen).foreach { case (flat, ni, nj) =>
-      val (back, ni2, nj2) = CsvArrayCodec.parse(
-        CsvArrayCodec.serialize(flat, ni, nj))
-      assert(ni2 == ni && nj2 == nj && back.sameElements(flat))
-    }
+    } yield (vals, ni, nj)
+    val fields = samples(gen).zipWithIndex.map { case ((d, ni, nj), i) =>
+      (i, ni, nj, d) }
+    val path = java.nio.file.Files.createTempDirectory("graft_codec_prop")
+      .resolve("csv").toString
+    CsvRecords.write(fields.toDF("ip1", "ni", "nj", "d")
+      .withColumn("nomvar", lit("TT")), path)
+    val back = CsvRecords.read(spark, path, validateDims = false)
+      .select("ip1", "ni", "nj", "d").as[(Int, Int, Int, Seq[Float])]
+      .collect().sortBy(_._1).toSeq
+    assert(back == fields)
   }
 
   test("RmnDate consistency: datev - dateo = deet*npas seconds") {
+    import spark.implicits._
     val gen = for {
       t <- Gen.choose(100_000_000L, 2_000_000_000L).map(s => (s / 5) * 5)
       deet <- Gen.oneOf(60L, 300L, 450L, 3600L)
       npas <- Gen.choose(0L, 500L)
     } yield (t, deet, npas)
-    samples(gen).foreach { case (t, deet, npas) =>
-      if (deet * npas % 5 == 0) {
-        val datev = RmnDate.fromEpochSeconds(t + RmnDate.EpochSeconds)
-        val dateo = RmnDate.dateoFromDatev(datev, deet, npas)
-        val diff = RmnDate.toEpochSeconds(datev).get -
-          RmnDate.toEpochSeconds(dateo).get
-        assert(diff == deet * npas)
-      }
+    val rows = samples(gen).collect { case (t, deet, npas)
+        if deet * npas % 5 == 0 =>
+      val datev = RmnDate.fromEpochSeconds(t + RmnDate.EpochSeconds)
+      (datev, RmnDate.dateoFromDatev(datev, deet, npas), deet * npas)
     }
+    val bad = rows.toDF("datev", "dateo", "fh").repartition(2)
+      .filter(unix_seconds(IpColumns.stampToTimestamp(col("datev"))) -
+        unix_seconds(IpColumns.stampToTimestamp(col("dateo"))) =!= col("fh"))
+      .count()
+    assert(rows.nonEmpty && bad == 0)
   }
 }

@@ -1,129 +1,216 @@
 package graft.core
 
+import java.time.Instant
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.time.LocalDateTime
+import graft.GraftSession
+import graft.ops.{Decode, Encode, IpColumns, Precision}
+import graft.sources.CsvRecords
 
 /** Golden-value tests pinned by the reference docstrings
   * (/root/reference/fstpy/std_dec.py) and well-known public FST
-  * encodings.
+  * encodings. Every golden runs the codec the catalog runs: the Column
+  * transformers of `Decode` / `Encode` / `IpColumns`, the native ip
+  * expressions, and `CsvRecords.parsePayload`.
   */
-class CodecSpec extends AnyFunSuite {
+class CodecSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  lazy val spark: SparkSession = GraftSession(2)
+
+  override def afterAll(): Unit = spark.stop()
+
+  /** One row of `cols` over a one-row frame. */
+  private def eval(cols: Column*): Row =
+    spark.range(1).select(cols: _*).head()
+
+  private def stamp(s: Long): Column = IpColumns.stampToTimestamp(lit(s))
+
+  /** `Decode.addIpInfo` over one record. */
+  private def ipInfo(nomvar: String, ip1: Int, ip2: Int, ip3: Int): Row = {
+    import spark.implicits._
+    Decode.addIpInfo(Seq((nomvar, ip1, ip2, ip3))
+      .toDF("nomvar", "ip1", "ip2", "ip3")).head()
+  }
+
+  /** `Decode.addParsedEtiket` -> (label, run, implementation, ensemble). */
+  private def parsed(etikets: String*): Seq[(String, String, String, String)] = {
+    import spark.implicits._
+    Decode.addParsedEtiket(etikets.toDF("etiket"))
+      .select("label", "run", "implementation", "ensemble_member")
+      .as[(String, String, String, String)].collect().toSeq
+  }
 
   test("RmnDate golden: 442998800 -> 2020-07-14T12:00") {
-    assert(RmnDate.toLocalDateTime(442998800L)
-      .contains(LocalDateTime.of(2020, 7, 14, 12, 0)))
+    assert(eval(stamp(442998800L)).getTimestamp(0).toInstant ==
+      Instant.parse("2020-07-14T12:00:00Z"))
   }
 
   test("RmnDate dummy stamps decode to None") {
-    assert(RmnDate.toLocalDateTime(0L).isEmpty)
-    assert(RmnDate.toLocalDateTime(10101011L).isEmpty)
+    val r = eval(stamp(0L), stamp(10101011L), stamp(123199999L))
+    assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2), r)
   }
 
   test("RmnDate encode inverts decode") {
-    assert(RmnDate.fromLocalDateTime(LocalDateTime.of(2020, 7, 14, 12, 0))
-      == 442998800L)
+    val ts = lit(java.sql.Timestamp.from(Instant.parse("2020-07-14T12:00:00Z")))
+    val r = eval(Encode.stampFromTimestamp(ts),
+      Encode.stampFromTimestamp(stamp(442998800L)))
+    assert(r.getLong(0) == 442998800L && r.getLong(1) == 442998800L, r)
   }
 
   test("RmnDate dateo reconstruction: deet*npas shift") {
     // 6 h = deet 300 * npas 72 = 21600 s = 4320 ticks
     val datev = 442998800L
     val dateo = RmnDate.dateoFromDatev(datev, 300, 72)
-    val tv = RmnDate.toEpochSeconds(datev).get
-    val to = RmnDate.toEpochSeconds(dateo).get
-    assert(tv - to == 21600L)
+    assert(eval(unix_seconds(stamp(datev)) - unix_seconds(stamp(dateo)))
+      .getLong(0) == 21600L)
   }
 
   test("IpCodec new-style known encodings: 500 mb and hybrid 1.0") {
     assert(IpCodec.encode(500f, 2) == 41394464)
-    assert(IpCodec.decode(41394464) == ((500f, 2)))
     assert(IpCodec.encode(1.0f, 5) == 93423264)
-    assert(IpCodec.decode(93423264) == ((1.0f, 5)))
+    val r = eval(Encode.encodeIp(lit(500f), lit(2)),
+      IpColumns.decodeValue(lit(41394464)), IpColumns.decodeKind(lit(41394464)),
+      IpColumns.decodeValue(lit(93423264)), IpColumns.decodeKind(lit(93423264)))
+    assert(r == Row(41394464, 500f, 2, 1.0f, 5), r)
   }
 
   test("IpCodec old-style decode rules") {
-    assert(IpCodec.decode(500) == ((500f, 2)))    // pressure mb
-    assert(IpCodec.decode(2500) == ((0.5f, 1)))   // sigma carve-out
-    assert(IpCodec.decode(12001) == ((-20000f, 0))) // height base
-    assert(IpCodec.decode(16001) == ((0f, 0)))      // sea level
+    import spark.implicits._
+    val got = Seq(500, 2500, 12001, 16001, -7).toDF("ip")
+      .select(IpColumns.decodeValue(col("ip")), IpColumns.decodeKind(col("ip")))
+      .as[(Float, Int)].collect().toSeq
+    assert(got == Seq(
+      (500f, 2),      // pressure mb
+      (0.5f, 1),      // sigma carve-out
+      (-20000f, 0),   // height base
+      (0f, 0),        // sea level
+      (-7f, -1)), got)
   }
 
   test("decodeIp123 coordinate records are raw with kind 100") {
-    val (i1, i2, i3) = IpCodec.decodeIp123(">>", 33792, 77761, 0)
-    assert(i1.v1 == 33792f && i1.kind == 100 && i1.kinds == "")
-    assert(i2.v1 == 77761f && i2.kind == 100)
-    assert(i3.v1 == 0f && i3.kind == 100)
+    val r = ipInfo(">>", 33792, 77761, 0)
+    assert(r.getAs[Float]("level") == 33792f && r.getAs[Int]("ip1_kind") == 100 &&
+      r.getAs[String]("ip1_pkind") == "")
+    assert(r.getAs[Float]("ip2_dec") == 77761f && r.getAs[Int]("ip2_kind") == 100)
+    assert(r.getAs[Float]("ip3_dec") == 0f && r.getAs[Int]("ip3_kind") == 100)
+    assert(r.isNullAt(r.fieldIndex("interval_kind")))
   }
 
   test("decodeIp123 ip2 old-style hours and ip3 user code") {
-    val (i1, i2, i3) = IpCodec.decodeIp123("TT", IpCodec.encode(850f, 2), 6, 0)
-    assert(i1.v1 == 850f && i1.kind == 2 && i1.kinds == "mb")
-    assert(i2.v1 == 6f && i2.kind == 10 && i2.kinds == "H")
-    assert(i3.kind == 100 && i3.kinds == "")
+    val r = ipInfo("TT", IpCodec.encode(850f, 2), 6, 0)
+    assert(r.getAs[Float]("level") == 850f && r.getAs[Int]("ip1_kind") == 2 &&
+      r.getAs[String]("ip1_pkind") == "mb")
+    assert(r.getAs[Float]("ip2_dec") == 6f && r.getAs[Int]("ip2_kind") == 10 &&
+      r.getAs[String]("ip2_pkind") == "H")
+    assert(r.getAs[Int]("ip3_kind") == 100 && r.getAs[String]("ip3_pkind") == "")
   }
 
   test("decodeIp123 time-interval swap (ip2/ip3 same kind)") {
-    val ip2 = IpCodec.encode(6f, 10)
-    val ip3 = IpCodec.encode(0f, 10)
-    val (_, i2, _) = IpCodec.decodeIp123("PR", IpCodec.encode(0f, 0), ip2, ip3)
-    assert(i2.hasV2 && i2.v1 == 0f && i2.v2 == 6f && i2.kind == 10)
+    val r = ipInfo("PR", IpCodec.encode(0f, 0), IpCodec.encode(6f, 10),
+      IpCodec.encode(0f, 10))
+    assert(r.getAs[Float]("ip2_dec") == 0f && r.getAs[Int]("ip2_kind") == 10)
+    assert(r.getAs[Float]("interval_low") == 0f &&
+      r.getAs[Float]("interval_high") == 6f &&
+      r.getAs[Int]("interval_kind") == 10, r)
   }
 
   test("surface/topography/sort-order rules") {
-    assert(!IpCodec.isSurface(5, 0.36116f))
-    assert(IpCodec.isSurface(5, 1f))
-    assert(IpCodec.isSurface(4, 1.5f))
-    assert(IpCodec.followsTopography(5))
-    assert(!IpCodec.followsTopography(2))
-    assert(IpCodec.levelSortAscending(0))
-    assert(!IpCodec.levelSortAscending(2))
+    def rules(ip1: Int): (Boolean, Boolean, Boolean) = {
+      val r = ipInfo("TT", ip1, 0, 0)
+      (r.getAs[Boolean]("surface"), r.getAs[Boolean]("follow_topography"),
+        r.getAs[Boolean]("ascending"))
+    }
+    assert(!rules(IpCodec.encode(0.36116f, 5))._1)
+    assert(rules(IpCodec.encode(1f, 5))._1)
+    assert(rules(IpCodec.encode(1.5f, 4))._1)
+    assert(rules(IpCodec.encode(0.5f, 5))._2)
+    assert(!rules(IpCodec.encode(500f, 2))._2)
+    assert(rules(IpCodec.encode(10f, 0))._3)
+    assert(!rules(IpCodec.encode(500f, 2))._3)
   }
 
   test("Etiket golden: R1_V710_N and empty") {
-    assert(Etiket.parse("R1_V710_N") ==
-      Etiket.Parsed("_V710_", "R1", "N", ""))
-    assert(Etiket.parse("") == Etiket.Parsed("", "", "", ""))
-    assert(Etiket.parse("G133K80P") == Etiket.Parsed("33K80", "G1", "P", ""))
-    assert(Etiket.parse("G133K80P001") ==
-      Etiket.Parsed("33K80", "G1", "P", "001"))
+    assert(parsed("R1_V710_N", "", "G133K80P", "G133K80P001") == Seq(
+      ("_V710_", "R1", "N", ""),
+      ("", "", "", ""),
+      ("33K80", "G1", "P", ""),
+      ("33K80", "G1", "P", "001")))
   }
 
-  test("Etiket.build null-guards every piece") {
-    assert(Etiket.build(null, "R1", "N", "") == "R1N")
-    assert(Etiket.build("_V710_", "R1", "N", null) == "R1_V710_N")
-    assert(Etiket.build(null, null, null, null) == "")
+  test("etiketFromParts null-guards every piece") {
+    val none = lit(null).cast("string")
+    val r = eval(
+      Encode.etiketFromParts(none, lit("R1"), lit("N"), lit("")),
+      Encode.etiketFromParts(lit("_V710_"), lit("R1"), lit("N"), none),
+      Encode.etiketFromParts(none, none, none, none),
+      Encode.etiketFromParts(lit("None"), lit("None"), lit("N"), lit("None")))
+    assert(r == Row("R1N", "R1_V710_N", "", "NoneN"), r)
   }
 
-  test("CsvArrayCodec.parse maps an empty payload to an empty field") {
-    val (flat, ni, nj) = CsvArrayCodec.parse("")
-    assert(flat.isEmpty && ni == 0 && nj == 0)
-    assert(CsvArrayCodec.parse("  ")._1.isEmpty)
+  test("parsePayload fails on a null or blank payload, naming d and the nomvar") {
+    import org.scalatest.concurrent.TimeLimits._
+    import org.scalatest.time.SpanSugar._
+    val dir = java.nio.file.Files.createTempDirectory("graft_codec_csv")
+    // an empty cell reads as null; the good row of the same nomvar used
+    // to let the null record through the group dimension check
+    val cases = Seq(
+      "empty" -> "nomvar,level,d\nUU,500,\"1,2;3,4\"\nUU,850,\n",
+      "blank" -> "nomvar,level,d\nVV,500,\"  \"\n")
+    cases.foreach { case (name, text) =>
+      val f = dir.resolve(s"$name.csv")
+      java.nio.file.Files.write(f, text.getBytes("UTF-8"))
+      failAfter(30.seconds) {
+        val err = intercept[Exception] {
+          CsvRecords.read(spark, f.toString).collect()
+        }
+        val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+          .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+        val nomvar = if (name == "empty") "UU" else "VV"
+        assert(msgs.exists(m => m.contains("column d") &&
+          m.contains(s"nomvar '$nomvar'")), msgs.mkString("\n"))
+      }
+    }
   }
 
   test("Typvar flags parse/build") {
-    assert(TypvarFlags.parse("PU").unitConverted)
-    assert(TypvarFlags.parse("PM").multipleModifications)
-    assert(!TypvarFlags.parse("P").zapped)
-    assert(TypvarFlags.toTypvar2(true, false, false, false, false, false,
-      false) == "Z")
-    assert(TypvarFlags.toTypvar2(true, true, false, false, false, false,
-      false) == "M")
-    assert(TypvarFlags.toTypvar2(false, false, false, false, false, false,
-      false) == "")
+    import spark.implicits._
+    // every settable letter survives parse (addFlags) then build
+    // (typvar2FromFlags); none, or more than one, builds "" / "M"
+    val letters = Seq("Z", "F", "I", "U", "B", "!", "M")
+    val flags = Decode.addFlags((letters.map("P" + _) :+ "P").toDF("typvar"))
+    val t2 = flags.select(col("typvar"), Encode.typvar2FromFlags(
+      col("zapped"), col("filtered"), col("interpolated"),
+      col("unit_converted"), col("bounded"), col("ensemble_extra_info"),
+      col("multiple_modifications"))).as[(String, String)].collect().toMap
+    assert(t2 == (letters.map(l => ("P" + l) -> l) :+ ("P" -> "")).toMap, t2)
+    val r = flags.filter(col("typvar") === "PU").head()
+    assert(r.getAs[Boolean]("unit_converted") && !r.getAs[Boolean]("zapped"))
+    assert(eval(Encode.typvar2FromFlags(lit(true), lit(true), lit(false),
+      lit(false), lit(false), lit(false), lit(false))).getString(0) == "M")
   }
 
-  test("CsvArrayCodec parse/serialize round-trip with Fortran layout") {
-    val (flat, ni, nj) = CsvArrayCodec.parse("11.5,22;33,44.5;55,66")
-    assert(ni == 3 && nj == 2)
-    // element (i=1, j=1) = 44.5 lives at Fortran index 1 + 1*3 = 4
-    assert(flat(4) == 44.5f)
-    assert(CsvArrayCodec.serialize(flat, ni, nj) == "11.5,22;33,44.5;55,66")
+  test("parsePayload/write round-trip with Fortran layout") {
+    import spark.implicits._
+    val df: DataFrame = CsvRecords.parsePayload(
+      Seq(("TT", "11.5,22;33,44.5;55,66")).toDF("nomvar", "d"))
+    val r = df.select("ni", "nj", "d").as[(Int, Int, Seq[Float])].head()
+    // element (i, j) of the 3 x 2 field lives at Fortran index i + j*3
+    assert(r == ((3, 2, Seq(11.5f, 33f, 55f, 22f, 44.5f, 66f))), r)
+    val path = java.nio.file.Files.createTempDirectory("graft_codec_rt")
+      .resolve("csv").toString
+    CsvRecords.write(df.withColumn("ip1", lit(1)), path)
+    val back = CsvRecords.read(spark, path).select("ni", "nj", "d")
+      .as[(Int, Int, Seq[Float])].head()
+    assert(back == r, back)
   }
 
   test("Constants datyp aliases") {
     assert(Constants.DatypDict(5) == "E")
     assert(Constants.DatypInverse("f") == 134)
-    assert(Constants.fieldDtype(5, 32) == "float32")
-    assert(Constants.fieldDtype(1, 64) == "float64")
-    assert(Constants.fieldDtype(2, 1) == "uint32")
+    val dtype = (d: Int, n: Int) => Precision.fieldDtype(lit(d), lit(n))
+    assert(eval(dtype(5, 32), dtype(1, 64), dtype(2, 1), dtype(2, 16)) ==
+      Row("float32", "float64", "uint32", "int32"))
   }
 }

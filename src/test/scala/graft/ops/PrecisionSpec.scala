@@ -1,12 +1,19 @@
 package graft.ops
 
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.lit
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.IpCodec
 
 /** Golden values for the precision/dtype rules and the C5 printable
   * kind encode (/root/reference/fstpy/utils.py:79-108, 206-218).
   */
-class PrecisionSpec extends AnyFunSuite {
+class PrecisionSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  lazy val spark: SparkSession = graft.GraftSession(2)
+
+  override def afterAll(): Unit = spark.stop()
 
   test("datyp priority ranking matches the reference table") {
     val m = Precision.DatypPriority.toMap
@@ -26,13 +33,10 @@ class PrecisionSpec extends AnyFunSuite {
   }
 
   test("ip_from_value_and_kind letter map") {
-    assert(IpCodec.ipFromValueAndKind(500f, "mb") ==
-      IpCodec.encode(500f, 2))
-    assert(IpCodec.ipFromValueAndKind(1.0f, " hy ") ==
-      IpCodec.encode(1.0f, 5))
-    assert(IpCodec.ipFromValueAndKind(12f, "H") ==
-      IpCodec.encode(12f, 10))
-    assert(IpCodec.ipFromValueAndKind(0.85f, "sg") ==
-      IpCodec.encode(0.85f, 1))
+    val enc = (v: Float, p: String) => Encode.ipFromValueAndKind(lit(v), lit(p))
+    val r = spark.range(1).select(enc(500f, "mb"), enc(1.0f, " hy "),
+      enc(12f, "H"), enc(0.85f, "sg")).head()
+    assert(r == Row(IpCodec.encode(500f, 2), IpCodec.encode(1.0f, 5),
+      IpCodec.encode(12f, 10), IpCodec.encode(0.85f, 1)), r)
   }
 }

@@ -310,6 +310,40 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a corrupt directory header fails the read, naming the file") {
+    import graft.sources.fst.{FstFormat, XdfFormat}
+    import org.scalatest.concurrent.TimeLimits._
+    import org.scalatest.time.SpanSugar._
+    def meta(ip1: Int) = FstFormat.Meta("TT", "P", "BAD", 4, 4, 1, 0L, ip1,
+      0, 0, 0, 0, 5, 32, "X", 0, 0, 0, 0, 442998800L, 0, 0)
+    val recs = (1 to 3).map(i => (meta(i), Array.tabulate(16)(_ + i * 100.0)))
+    val compact = FstFormat.writeFile(recs.map { case (m, d) =>
+      (m, d.map(_.toFloat)) })
+    java.nio.ByteBuffer.wrap(compact).putInt(16, -1) // record count
+    val xdf = XdfFormat.writeFile(recs)
+    val firstPage = 1 + (java.nio.ByteBuffer.wrap(xdf).getInt(0) & 0xFFFFFF)
+    java.nio.ByteBuffer.wrap(xdf).putInt((firstPage - 1) * 8 + 20, -5) // nent
+    spark.sparkContext // session start stays outside the time limit
+    Seq(("compact_count", compact, "corrupt header (record count -1"),
+      ("xdf_nent", xdf, "has nent -5")).foreach {
+      case (name, image, what) =>
+        val dir = new java.io.File(s"/tmp/graft_scan_spec_corrupt/$name")
+        dir.mkdirs(); dir.listFiles().foreach(_.delete())
+        val file = new java.io.File(dir, s"$name.fst")
+        java.nio.file.Files.write(file.toPath, image)
+        failAfter(10.seconds) {
+          val err = intercept[org.apache.spark.SparkException] {
+            spark.read.format("fstrec").load(dir.getPath).collect()
+          }
+          val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+            .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+            .toSeq
+          assert(msgs.exists(m => m.contains(file.getPath) &&
+            m.contains(what)), msgs.mkString("\n"))
+        }
+    }
+  }
+
   test("pushed filter drops records before payload decode") {
     val path = "/tmp/graft_scan_spec_filter"
     writeSmallFiles(path, rows = 100, perFile = 10)
