@@ -426,6 +426,61 @@ class XdfFormatSpec extends AnyFunSuite with TimeLimits {
     }
   }
 
+  /** Seeded 70-value payloads (longer than one 64-token turbopack
+    * block): a smooth run for the first block, noise after it, so
+    * block widths differ and tokens straddle word boundaries.
+    */
+  private def goldenPayloads: Seq[(String, Int, Int, Array[Double])] = {
+    def gen(seed: Long)(f: (Int, java.util.Random) => Double) = {
+      val r = new java.util.Random(seed)
+      Array.tabulate(70)(i => f(i, r))
+    }
+    def smooth(i: Int, r: java.util.Random, amp: Double, noise: Double) =
+      amp * math.sin(i / 9.0) + (if (i < 64) 0.0 else noise * r.nextGaussian())
+    Seq(
+      ("1", 1, 17, gen(1)((i, r) => 250.0 + smooth(i, r, 30, 40))),
+      ("2", 2, 12, gen(2)((_, r) => r.nextInt(4096).toDouble)),
+      ("4", 4, 20, gen(4)((_, r) => (r.nextInt(1 << 20) - (1 << 19)).toDouble)),
+      ("5/32", 5, 32, gen(5)((i, r) => smooth(i, r, 1e3, 1e4) + r.nextDouble())),
+      ("5/64", 5, 64, gen(6)((i, r) => smooth(i, r, 1e9, 1e12) + r.nextDouble())),
+      ("6", 6, 13, gen(7)((i, r) => smooth(i, r, 50, 200))),
+      ("7", 7, 8, gen(8)((_, r) => r.nextInt(256).toDouble)),
+      ("129", 129, 16, gen(9)((i, r) => 1000.0 + smooth(i, r, 20, 500))),
+      ("130", 130, 16, gen(10)((i, r) =>
+        math.round(30000 + smooth(i, r, 100, 9000)).toDouble)),
+      ("133", 133, 32, gen(11)((i, r) => smooth(i, r, 1e2, 1e5))),
+      ("134", 134, 12, gen(12)((i, r) => smooth(i, r, 3, 700))))
+  }
+
+  private def hex(bytes: Array[Byte]): String =
+    bytes.map(b => f"${b & 0xFF}%02x").mkString
+
+  test("golden layout: encodePayload words and a writeFile image are pinned") {
+    // round-trip tests cannot see a refactor that reorders bits
+    // consistently on both sides; these digests pin the stored layout
+    val want = Map(
+      "1" -> "ca8e76b2", "2" -> "d17d9954", "4" -> "34931311",
+      "5/32" -> "b380a193", "5/64" -> "8e79dfd2", "6" -> "fbc5aaff",
+      "7" -> "750a8ea7", "129" -> "4311f9a0", "130" -> "8e4f840a",
+      "133" -> "40106b8e", "134" -> "7820de31")
+    val got = goldenPayloads.map { case (label, datyp, nbits, vals) =>
+      val words = XdfFormat.encodePayload(datyp, nbits, vals)
+      val bb = ByteBuffer.allocate(words.length * 4)
+      words.foreach(bb.putInt)
+      val crc = new java.util.zip.CRC32
+      crc.update(bb.array())
+      label -> f"${crc.getValue}%08x"
+    }.toMap
+    assert(got == want, s"encodePayload digests changed: $got")
+    val img = XdfFormat.writeFile(goldenPayloads.zipWithIndex.map {
+      case ((_, datyp, nbits, vals), i) => (meta(i, 7, 10, datyp, nbits), vals)
+    })
+    val sha = hex(java.security.MessageDigest.getInstance("SHA-256")
+      .digest(img))
+    assert(sha == "35f5581b8abcc7880455745d5854ffd8" +
+      "b5e64447c070dd399dd7e2397883360e", s"writeFile image digest changed: $sha")
+  }
+
   test("datyp 1/129 encode rejects a non-finite value, naming it") {
     // an infinite bound used to walk the step exponent down from
     // Int.MaxValue (minutes) and a NaN one to quantize with step 1.0
