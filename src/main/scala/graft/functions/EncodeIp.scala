@@ -142,28 +142,24 @@ object GraftFunctions {
       exprs => ArraySumExpr(exprs.head), classOf[ArraySumExpr]),
     ("graft_unit_convert", unitConvertBuilder, classOf[UnitConvertExpr]))
 
-  def install(spark: SparkSession): Unit =
-    all.foreach { case (name, builder, _) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
-    }
-
-  /** [[install]] on the active session, unless it has every function
-    * already (re-registering each one logs a warning).
+  /** Registers every native function on `spark`, unless it has them
+    * all already (re-registering each one logs a warning, and a
+    * streaming loop installs on every micro-batch).
     */
-  private def installActive(): Unit =
-    SparkSession.getActiveSession.foreach { spark =>
-      val registry = spark.sessionState.functionRegistry
-      if (!all.forall(f => registry.functionExists(
-          new org.apache.spark.sql.catalyst.FunctionIdentifier(f._1))))
-        install(spark)
-    }
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!all.forall(f => registry.functionExists(
+        new org.apache.spark.sql.catalyst.FunctionIdentifier(f._1))))
+      all.foreach { case (name, builder, _) =>
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+      }
+  }
 
   /** (value, kind) -> new-style ip as a Column, via the native
     * expression (installs it on the active session on first use).
     */
   def encodeIp(value: Column, kind: Column): Column = {
-    installActive()
+    SparkSession.getActiveSession.foreach(install)
     call_function("graft_encode_ip", value, kind)
   }
 
@@ -171,12 +167,12 @@ object GraftFunctions {
     * (install them on the active session on first use).
     */
   def decodeIpValue(ip: Column): Column = {
-    installActive()
+    SparkSession.getActiveSession.foreach(install)
     call_function("graft_decode_ip_value", ip)
   }
 
   def decodeIpKind(ip: Column): Column = {
-    installActive()
+    SparkSession.getActiveSession.foreach(install)
     call_function("graft_decode_ip_kind", ip)
   }
 
@@ -184,7 +180,7 @@ object GraftFunctions {
     * native LSH kernel (installs it on the active session on first use).
     */
   def shingleSig(text: Column): Column = {
-    installActive()
+    SparkSession.getActiveSession.foreach(install)
     call_function("graft_shingle_sig", text)
   }
 
@@ -192,7 +188,7 @@ object GraftFunctions {
     * codegen kernel (bit-identical to the HOF form it replaces).
     */
   def dot(a: Column, b: Column): Column = {
-    installActive()
+    SparkSession.getActiveSession.foreach(install)
     call_function("graft_dot", a, b)
   }
 
@@ -200,7 +196,7 @@ object GraftFunctions {
     * codegen kernel (bit-identical to the `aggregate` form).
     */
   def arraySum(a: Column): Column = {
-    installActive()
+    SparkSession.getActiveSession.foreach(install)
     call_function("graft_array_sum", a)
   }
 
@@ -210,7 +206,7 @@ object GraftFunctions {
     */
   def unitConvert(d: Column, fromName: Column, fromFactor: Column,
                   toName: String, toFactor: Double): Column = {
-    installActive()
+    SparkSession.getActiveSession.foreach(install)
     call_function("graft_unit_convert", d, fromName, fromFactor,
       lit(toName), lit(toFactor))
   }
@@ -219,7 +215,7 @@ object GraftFunctions {
     * primitive-hash kernel.
     */
   def jaccardLong(a: Column, b: Column): Column = {
-    installActive()
+    SparkSession.getActiveSession.foreach(install)
     call_function("graft_jaccard_long", a, b)
   }
 }

@@ -171,26 +171,4 @@ object Lookups {
       LevelTypes.map { case (l, k, f, s) => Row(l, k, f, s) }.asJava,
       schema)
   }
-
-  def stationsFbDf(spark: SparkSession): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("station_intl_id", IntegerType, false),
-      StructField("station_alpha_id", StringType, false),
-      StructField("can_reg_code", StringType, false),
-      StructField("station_name", StringType, false),
-      StructField("latitude", DoubleType, false),
-      StructField("longitude", DoubleType, false)))
-    spark.createDataFrame(
-      StationsFb.map { case (i, a, c, n, la, lo) =>
-        Row(i, a, c, n, la, lo)
-      }.asJava, schema)
-  }
-
-  def thermoConstantsDf(spark: SparkSession): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("const_name", StringType, false),
-      StructField("const_value", DoubleType, false)))
-    spark.createDataFrame(
-      ThermoConstants.map { case (n, v) => Row(n, v) }.asJava, schema)
-  }
 }

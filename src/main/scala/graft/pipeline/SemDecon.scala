@@ -63,13 +63,6 @@ object SemDecon {
                       planes: Seq[Seq[Double]] = DefaultPlanes): Unit =
     indexTable(suite, planes).write.mode("overwrite").parquet(path)
 
-  /** Add suite vectors (a new benchmark) to an existing index —
-    * partition-local file adds, nothing existing is read.
-    */
-  def appendSuiteIndex(suite: DataFrame, path: String,
-                       planes: Seq[Seq[Double]] = DefaultPlanes): Unit =
-    indexTable(suite, planes).write.mode("append").parquet(path)
-
   /** Probe: flag every train vector whose sign-bucket holds a suite
     * vector above the cosine threshold. Output: (vec_id,
     * n_candidates, max_cos, contaminated) — one row per train vector

@@ -205,15 +205,7 @@ object PipelineQueries {
     */
   private def lshPairs(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    lshPairsOf(corpus(s, dir))
-
-  /** The LSH chain over ANY (doc_id, text) source — the public
-    * [[graft.pipeline.NearDup.lshPairs]] API, shared by the
-    * corpus-doubled queries above and the funnel's survivor set (p47).
-    */
-  private def lshPairsOf(source: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) =
-    graft.pipeline.NearDup.lshPairs(source)
+    graft.pipeline.NearDup.lshPairs(corpus(s, dir))
 
   val queries: Map[String, Q] = Map(
     // exact dedup by content hash (input doubled to prove collapse)
@@ -1421,7 +1413,7 @@ object PipelineQueries {
     // justifies (or indicts) the band/row operating point.
     "p69_lsh_scurve" -> ((s, dir) => {
       val d = docs(s, dir).select("doc_id", "text")
-      val (sh, cand, _) = lshPairsOf(d)
+      val (sh, cand, _) = graft.pipeline.NearDup.lshPairs(d)
       val ex0 = sh.select(col("doc_id"), explode(col("sh")).as("h"))
       // hot-shingle guard as a window count: HERE (unlike p04) the
       // intersection self-join keys on exactly the window's
@@ -3135,8 +3127,9 @@ object PipelineQueries {
   private def lshPairsCtes: String =
     s"$corpusSql,\n${lshPairsCtesFrom("corpus")}"
 
-  /** The SQL twin of [[lshPairsOf]]: the CTE chain (sh/sh2/bands0/
-    * bsz/bands/cand/lshpairs) over any (doc_id, text) source CTE.
+  /** The SQL twin of [[graft.pipeline.NearDup.lshPairs]]: the CTE
+    * chain (sh/sh2/bands0/bsz/bands/cand/lshpairs) over any (doc_id,
+    * text) source CTE.
     */
   private def lshPairsCtesFrom(src: String): String = {
     val sh = hashedShinglesSql(shinglesSql(wordsSql("text")))

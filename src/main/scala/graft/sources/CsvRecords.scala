@@ -102,8 +102,9 @@ object CsvRecords {
   /** Parse the `"a,b;c,d"` payload string column `d` into ni/nj and
     * the Fortran-flat float array, in place. ONE implementation shared
     * by the batch CSV reader and the streaming record source, so the
-    * two paths cannot diverge. A null or blank payload fails the read
-    * with an error naming `d` and the row's nomvar.
+    * two paths cannot diverge. A null, blank, ragged or non-numeric
+    * payload fails the read with an error naming `d` and the row's
+    * nomvar.
     *
     * The double-split `rows` array is LET-BOUND (PipelineOps.bind)
     * inside every expression that consumes it. Round-10 RCA of f21
@@ -120,24 +121,33 @@ object CsvRecords {
     * ~4.8 s -> ~1.3 s (F21Rca / Profile, DESIGN.md round 10).
     */
   def parsePayload(df: DataFrame): DataFrame = {
-    // a null or blank cell fails the read here, naming the record,
-    // instead of reaching the catalog as null d/ni/nj
+    // a blank, ragged or non-numeric payload fails the read here,
+    // naming the record, instead of reaching the catalog as null
+    // d/ni/nj or failing as an index or cast error that names neither
+    def fail(what: String): Column = raise_error(concat(
+      lit(s"csv: $what in column d for nomvar '"),
+      coalesce(col("nomvar"), lit("null")), lit("'")))
     val payload = when(trim(col("d")) =!= "", col("d"))
-      .otherwise(raise_error(concat(
-        lit("csv: empty payload in column d for nomvar '"),
-        coalesce(col("nomvar"), lit("null")), lit("'"))))
+      .otherwise(fail("empty payload"))
+    // every row as long as the first: a shorter one would fail the
+    // element lookup below, a longer one would lose its tail
+    val rows = graft.pipeline.PipelineOps.bind(
+      transform(split(payload, ";"), r => split(r, ","))) { rb =>
+      when(forall(rb, r => size(r) === size(element_at(rb, 1))), rb)
+        .otherwise(fail("ragged payload rows"))
+    }
     def bound[A](f: Column => Column): Column =
-      graft.pipeline.PipelineOps.bind(
-        transform(split(payload, ";"), r => split(r, ",")))(f)
+      graft.pipeline.PipelineOps.bind(rows)(f)
     df.withColumn("ni", bound(rb => size(rb)))
       .withColumn("nj", bound(rb => size(element_at(rb, 1))))
       .withColumn("d", bound { rb =>
         val ni = size(rb)
         transform(
           sequence(lit(0), ni * size(element_at(rb, 1)) - 1),
-          k => element_at(
+          k => coalesce(element_at(
             element_at(rb, pmod(k, ni).cast("int") + 1),
-            (k / ni).cast("int") + 1).cast("float"))
+            (k / ni).cast("int") + 1).try_cast("float"),
+            fail("non-numeric payload element")))
       })
   }
 

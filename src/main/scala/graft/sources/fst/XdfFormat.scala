@@ -34,12 +34,16 @@ import java.nio.ByteBuffer
   * appended in page order.
   *
   * Payload codecs per datyp (get_data_fast recipe, std_io.py:492-563):
+  * raw IEEE words, or a header then one token stream. Every packed
+  * datyp is a quantize step followed by that one stream — MSB-first
+  * bits in big-endian 32-bit words, fixed-width or GT16-compressed
+  * (the "bit stream and token layer" block below has the layout):
   *  - 0 (binary) and 5 (IEEE): raw big-endian IEEE float32, or
   *    float64 pairs when nbits > 32 (std_io.py:541-542 + the
   *    get_field_dtype 64-bit rule, std_io.py:633-644);
-  *  - 2 / 4 (unsigned / signed integers): nbits-wide fields packed
-  *    MSB-first into big-endian words (compact_integer semantics,
-  *    std_io.py:536-540);
+  *  - 2 / 4 (unsigned / signed integers): nbits-wide tokens, no
+  *    header (compact_integer semantics, std_io.py:536-540); 7
+  *    (characters): 8-bit tokens whatever the declared nbits;
   *  - 1 (packed float): nbits-quantized fixed point with a
   *    power-of-two step and a 3-word header (min as IEEE float32,
   *    signed step exponent, nelm). The reference delegates the exact
@@ -54,15 +58,16 @@ import java.nio.ByteBuffer
   *    this library's own — sign-magnitude mantissas aligned to the
   *    corpus's maximum binary exponent ('FLP' marker word, reference
   *    exponent, nelm);
-  *  - 129/130/133/134 (turbopack family): read AND written — as a
-  *    compressed stream of <=16-bit quantization tokens replacing
-  *    the fixed-width token stream of the matching base datyp (see
-  *    the codec block comment below). librmn's exact armn_compress
+  *  - 129/130/133/134 (turbopack family): read AND written — the
+  *    token stream of the matching base datyp (129 ~ 1, 134 ~ 6, 130
+  *    ~ 16-bit unsigned, 133 ~ IEEE 32 as 16-bit halves), compressed
+  *    into <=16-bit min/width blocks. librmn's exact armn_compress
   *    bitstream (std_io.py:548-563) lives only in its C sources and
   *    stays the one declared external boundary: this library's OWN
   *    magic-prefixed token codec round-trips exactly within the
   *    library, and a future bit-exact armn_compress port swaps in
-  *    behind exactly two functions, [[XdfFormat.compressTokens]] /
+  *    behind the token layer's compressed branch, whose whole-array
+  *    entry points are [[XdfFormat.compressTokens]] /
   *    [[XdfFormat.decompressTokens]]. A genuine librmn-compressed
   *    record fails loudly on the missing magic word — it is never
   *    silently mis-decoded.
@@ -121,7 +126,6 @@ object XdfFormat {
   def packedWords(nelm: Int, nbits: Int): Int =
     ((nelm.toLong * nbits + 31) / 32).toInt
 
-  /** Stored payload length in 32-bit words for one record. */
   /** Compressed (turbopack-family) encodings: base datyp + 128
     * (129/130/133/134, std_io.py:548-563). Their stored length is
     * VARIABLE, carried by the directory entry's lng — use
@@ -131,6 +135,7 @@ object XdfFormat {
   def isTurboDatyp(datyp: Int): Boolean =
     Set(129, 130, 133, 134)(baseDatyp(datyp))
 
+  /** Stored payload length in 32-bit words for one record. */
   def payloadWords(datyp: Int, nbits: Int, nelm: Int): Int =
     baseDatyp(datyp) match {
       case 0 => if (nbits > 32) 2 * nelm else nelm
@@ -151,197 +156,189 @@ object XdfFormat {
     }
 
   // ---------------------------------------------------------------
-  // turbopack-family token compression (datyps 129/130/133/134)
+  // bit stream and token layer
   //
-  // The reference decodes these via librmn's armn_compress /
-  // c_armn_uncompress32 (std_io.py:548-563), whose exact bitstream
-  // lives only in librmn's C sources (not part of the reference, not
-  // available here) — librmn-WRITTEN compressed records therefore
-  // remain a declared external boundary. What IS public is the
-  // FORMAT STRUCTURE: a compressed stream of <=16-bit quantization
-  // tokens replacing the fixed-width token stream of the matching
-  // base datyp (129 ~ datyp 1 quantization, 134 ~ datyp 6 float
-  // tokens, 130 ~ 16-bit unsigned ints, 133 ~ raw IEEE 32 split into
-  // 16-bit halves). This library implements that structure with its
-  // OWN documented token codec, so compressed datyps round-trip
-  // within the library and a future bit-exact armn_compress port
-  // swaps in behind compressTokens/decompressTokens only.
-  //
-  // Token codec: word 0 = magic 'GT16' (0x47543136 — distinguishes
-  // this library's stream from a librmn armn_compress bitstream,
-  // which is rejected loudly instead of mis-decoded); word 1 = token
-  // count; then an MSB-first bit stream of 64-token blocks, each
-  // [blockMin:16][width:5] followed by (token - blockMin) at `width`
-  // bits — the min-offset + per-block bit-width reduction that makes
-  // smooth fields (the meteorological common case) compress well,
-  // with worst-case overhead bounded at 21 bits per 64 tokens over
-  // the uncompressed packing.
+  // Every packed datyp (1, 2, 4, 6, 7 and the turbopack family
+  // 129/130/133/134) stores its header words (3 for datyps 1/6/129/
+  // 134, none otherwise) followed by ONE token stream: MSB-first bits
+  // in big-endian 32-bit words, written by [[BitSink]] and read by
+  // [[BitSource]]. The stream is either
+  //  - fixed-width: every token at nbits (compact_integer packing,
+  //    std_io.py:536-540), or
+  //  - compressed (the turbopack family): word 0 = magic 'GT16'
+  //    (0x47543136), word 1 = token count, then 64-token blocks, each
+  //    [blockMin:16][width:5] followed by (token - blockMin) at
+  //    `width` bits, for unsigned 16-bit tokens. The min-offset +
+  //    per-block width reduction is what makes smooth fields (the
+  //    meteorological common case) compress well; the worst case
+  //    costs 21 bits per 64 tokens over the fixed-width packing. The
+  //    magic tells this stream from a librmn armn_compress bitstream
+  //    (the declared external boundary, see the object doc), which is
+  //    rejected loudly instead of mis-decoded.
   // ---------------------------------------------------------------
 
   /** Leading word of this library's turbopack token stream. */
   val TurboMagic: Int = 0x47543136 // 'GT16'
 
-  private final class BitWriter {
-    private val words = scala.collection.mutable.ArrayBuffer.empty[Int]
-    private var acc = 0L
-    private var nAcc = 0
-    def put(v: Int, width: Int): Unit = {
-      if (width == 0) return
-      val mask = if (width == 32) 0xFFFFFFFFL else (1L << width) - 1
-      acc = (acc << width) | (v & mask)
-      nAcc += width
-      while (nAcc >= 32) {
-        words += ((acc >>> (nAcc - 32)) & 0xFFFFFFFFL).toInt
-        nAcc -= 32
-      }
-    }
-    def result(): Array[Int] = {
-      if (nAcc > 0) {
-        words += (((acc & ((1L << nAcc) - 1)) << (32 - nAcc))
-          & 0xFFFFFFFFL).toInt
-        nAcc = 0
-      }
-      words.toArray
-    }
-  }
+  private val BlockTokens = 64
+  private val NoHeader = Array.emptyIntArray
 
-  private final class BitReader(words: Array[Int]) {
-    private var pos = 0L
-    def get(width: Int): Int = {
-      if (width == 0) return 0
-      // explicit end-of-stream check: a truncated or foreign stream
-      // raises a clean codec error, not ArrayIndexOutOfBoundsException
-      require(pos + width <= words.length.toLong * 32,
-        s"xdf: turbopack stream truncated (read past word ${words.length})")
-      var v = 0L
-      var rem = width
-      while (rem > 0) {
-        val w = (pos / 32).toInt
-        val off = (pos % 32).toInt
-        val avail = 32 - off
-        val take = math.min(avail, rem)
-        val mask = if (take == 32) 0xFFFFFFFFL else (1L << take) - 1
-        v = (v << take) | ((words(w) >>> (avail - take)) & mask)
-        pos += take
-        rem -= take
-      }
-      v.toInt
-    }
-  }
-
-  /** Compress unsigned <=16-bit tokens (library-own bitstream, see
-    * block comment above).
+  /** MSB-first writer into a pre-sized word array from word `from`;
+    * widths 0-64 bits, each value masked to its width.
     */
-  def compressTokens(tokens: Array[Int]): Array[Int] = {
-    val bw = new BitWriter
-    bw.put(TurboMagic, 32)
-    bw.put(tokens.length, 32)
-    var i = 0
-    while (i < tokens.length) {
-      val end = math.min(i + 64, tokens.length)
-      var mn = Int.MaxValue
-      var mx = 0
-      var j = i
-      while (j < end) {
-        val t = tokens(j)
+  private final class BitSink(out: Array[Int], from: Int) {
+    private var w = from
+    private var acc = 0L // pending bits: the low nAcc bits of acc
+    private var nAcc = 0
+    def put(v: Long, width: Int): Unit =
+      if (width > 32) { put(v >>> 32, width - 32); put(v, 32) }
+      else {
+        acc = (acc << width) | (v & ((1L << width) - 1))
+        nAcc += width
+        if (nAcc >= 32) {
+          nAcc -= 32
+          out(w) = (acc >>> nAcc).toInt
+          w += 1
+        }
+      }
+    /** Writes the last partial word, zero-filled on the right. */
+    def close(): Unit = if (nAcc > 0) out(w) = (acc << (32 - nAcc)).toInt
+  }
+
+  /** MSB-first reader from word `from`; widths 0-64 bits. A read past
+    * the last word raises a codec error, not an index exception, so a
+    * truncated or foreign stream fails cleanly.
+    */
+  private final class BitSource(words: Array[Int], from: Int) {
+    private var pos = from * 32L
+    private val limit = words.length * 32L
+    def get(width: Int): Long =
+      if (width > 32) { val hi = get(width - 32); (hi << 32) | get(32) }
+      else if (width == 0) 0L
+      else {
+        val end = pos + width
+        if (end > limit) throw new IllegalArgumentException(
+          s"xdf: packed token stream truncated (read past word ${words.length})")
+        val w = (pos >>> 5).toInt
+        val off = (pos & 31).toInt
+        pos = end
+        // the token lies in the 64-bit window of words w and w + 1
+        val window = (words(w).toLong << 32) |
+          (if (off + width > 32) words(w + 1) & 0xFFFFFFFFL else 0L)
+        (window << off) >>> (64 - width)
+      }
+  }
+
+  /** `header`, then `ks` as one token stream (nbits-wide, or GT16
+    * compressed), in one exactly sized array.
+    */
+  private def writeTokens(header: Array[Int], ks: Array[Long], nbits: Int,
+                          compressed: Boolean): Array[Int] = {
+    val n = ks.length
+    // compressed: each block's min and width, found once for both the
+    // stream's size and its writing
+    val nblocks = if (compressed) (n + BlockTokens - 1) / BlockTokens else 0
+    val mins = new Array[Long](nblocks)
+    val widths = new Array[Int](nblocks)
+    var bits = if (compressed) 64L else n.toLong * nbits
+    var b = 0
+    while (b < nblocks) {
+      val lo = b * BlockTokens
+      val hi = math.min(lo + BlockTokens, n)
+      var mn = Long.MaxValue
+      var mx = 0L
+      var j = lo
+      while (j < hi) {
+        val t = ks(j)
         require(t >= 0 && t < 65536,
           s"xdf: turbopack token $t outside the unsigned 16-bit domain")
-        if (t < mn) mn = t
-        if (t > mx) mx = t
+        mn = math.min(mn, t)
+        mx = math.max(mx, t)
         j += 1
       }
-      val width = 32 - Integer.numberOfLeadingZeros(mx - mn)
-      bw.put(mn, 16)
-      bw.put(width, 5)
-      j = i
-      while (j < end) { bw.put(tokens(j) - mn, width); j += 1 }
-      i = end
+      mins(b) = mn
+      widths(b) = 64 - java.lang.Long.numberOfLeadingZeros(mx - mn)
+      bits += 21 + widths(b).toLong * (hi - lo)
+      b += 1
     }
-    bw.result()
+    val out = new Array[Int](header.length + ((bits + 31) / 32).toInt)
+    System.arraycopy(header, 0, out, 0, header.length)
+    val sink = new BitSink(out, header.length)
+    if (compressed) { sink.put(TurboMagic, 32); sink.put(n, 32) }
+    var i = 0
+    b = 0
+    while (i < n) {
+      var mn = 0L
+      var width = nbits
+      var end = n
+      if (compressed) {
+        mn = mins(b)
+        width = widths(b)
+        end = math.min(i + BlockTokens, n)
+        sink.put(mn, 16)
+        sink.put(width, 5)
+        b += 1
+      }
+      while (i < end) { sink.put(ks(i) - mn, width); i += 1 }
+    }
+    sink.close()
+    out
   }
 
-  /** Inverse of [[compressTokens]]; `expected` cross-checks the
-    * stream's own token count against the directory's nelm.
+  /** Inverse of [[writeTokens]]: `n` tokens from word `from` on. A
+    * compressed stream's magic word and token count are checked first.
     */
-  def decompressTokens(words: Array[Int], expected: Int): Array[Int] = {
-    val br = new BitReader(words)
-    val magic = br.get(32)
-    if (magic != TurboMagic) throw new IllegalArgumentException(
-      "xdf: librmn armn_compress bitstream unsupported — this " +
-        "record was not written by this library's turbopack token " +
-        f"codec (leading word 0x$magic%08x, expected 0x$TurboMagic%08x " +
-        "'GT16'); the bit-exact armn_compress port is a declared " +
-        "external boundary (std_io.py:548-563). NOTE: records written " +
-        "by a pre-GT16 build of this library (no magic word) also land " +
-        "here — that format break is deliberate and unversioned; " +
-        "rewrite such files with the current writer")
-    val n = br.get(32)
-    require(n == expected,
-      s"xdf: turbopack stream token count $n != directory $expected")
-    val out = new Array[Int](n)
+  private def readTokens(words: Array[Int], from: Int, nbits: Int, n: Int,
+                         compressed: Boolean): Array[Long] = {
+    val in = new BitSource(words, from)
+    if (compressed) {
+      val magic = in.get(32).toInt
+      if (magic != TurboMagic) throw new IllegalArgumentException(
+        "xdf: librmn armn_compress bitstream unsupported — this " +
+          "record was not written by this library's turbopack token " +
+          f"codec (leading word 0x$magic%08x, expected 0x$TurboMagic%08x " +
+          "'GT16'); the bit-exact armn_compress port is a declared " +
+          "external boundary (std_io.py:548-563). NOTE: records written " +
+          "by a pre-GT16 build of this library (no magic word) also land " +
+          "here — that format break is deliberate and unversioned; " +
+          "rewrite such files with the current writer")
+      val count = in.get(32).toInt
+      require(count == n,
+        s"xdf: turbopack stream token count $count != directory $n")
+    }
+    val out = new Array[Long](n)
     var i = 0
     while (i < n) {
-      val end = math.min(i + 64, n)
-      val mn = br.get(16)
-      val width = br.get(5)
-      var j = i
-      while (j < end) { out(j) = mn + br.get(width); j += 1 }
-      i = end
+      var mn = 0L
+      var width = nbits
+      var end = n
+      if (compressed) {
+        mn = in.get(16)
+        width = in.get(5).toInt
+        end = math.min(i + BlockTokens, n)
+      }
+      while (i < end) { out(i) = mn + in.get(width); i += 1 }
     }
     out
   }
 
   /** Pack `ks` as nbits-wide fields, MSB-first, into 32-bit words. */
-  def packBits(ks: Array[Long], nbits: Int): Array[Int] = {
-    val out = new Array[Int](packedWords(ks.length, nbits))
-    var bitPos = 0L
-    var i = 0
-    while (i < ks.length) {
-      val k = ks(i) & ((1L << nbits) - 1)
-      var remaining = nbits
-      var pos = bitPos
-      while (remaining > 0) {
-        val word = (pos / 32).toInt
-        val offset = (pos % 32).toInt
-        val take = math.min(32 - offset, remaining)
-        val shifted =
-          ((k >>> (remaining - take)) & ((1L << take) - 1)).toInt
-        out(word) |= shifted << (32 - offset - take)
-        pos += take
-        remaining -= take
-      }
-      bitPos += nbits
-      i += 1
-    }
-    out
-  }
+  def packBits(ks: Array[Long], nbits: Int): Array[Int] =
+    writeTokens(NoHeader, ks, nbits, compressed = false)
 
-  /** Inverse of [[packBits]]. */
-  def unpackBits(words: Array[Int], nbits: Int, nelm: Int)
-      : Array[Long] = {
-    val out = new Array[Long](nelm)
-    var bitPos = 0L
-    var i = 0
-    while (i < nelm) {
-      var k = 0L
-      var remaining = nbits
-      var pos = bitPos
-      while (remaining > 0) {
-        val word = (pos / 32).toInt
-        val offset = (pos % 32).toInt
-        val take = math.min(32 - offset, remaining)
-        val bits =
-          (words(word) >>> (32 - offset - take)) & ((1L << take) - 1).toInt
-        k = (k << take) | (bits & 0xFFFFFFFFL)
-        pos += take
-        remaining -= take
-      }
-      out(i) = k
-      bitPos += nbits
-      i += 1
-    }
-    out
-  }
+  /** Inverse of [[packBits]]; widths up to 64 bits. */
+  def unpackBits(words: Array[Int], nbits: Int, nelm: Int): Array[Long] =
+    readTokens(words, 0, nbits, nelm, compressed = false)
+
+  /** Compress unsigned <=16-bit tokens into a GT16 stream. */
+  def compressTokens(tokens: Array[Int]): Array[Int] =
+    writeTokens(NoHeader, tokens.map(_.toLong), 16, compressed = true)
+
+  /** Inverse of [[compressTokens]]; `expected` cross-checks the
+    * stream's own token count against the directory's nelm.
+    */
+  def decompressTokens(words: Array[Int], expected: Int): Array[Int] =
+    readTokens(words, 0, 16, expected, compressed = true).map(_.toInt)
 
   /** Quantization step exponent for datyp 1: the smallest j with
     * `range <= (2^nbits - 1) * 2^j` (power-of-two step, so values
@@ -378,28 +375,9 @@ object XdfFormat {
     out
   }
 
-  private def toInts(ks: Array[Long]): Array[Int] = {
-    val out = new Array[Int](ks.length)
-    var i = 0
-    while (i < ks.length) { out(i) = ks(i).toInt; i += 1 }
-    out
-  }
-
-  private def toLongs(ts: Array[Int]): Array[Long] = {
-    val out = new Array[Long](ts.length)
-    var i = 0
-    while (i < ts.length) { out(i) = ts(i).toLong; i += 1 }
-    out
-  }
-
-  private def toDoubles(ks: Array[Long]): Array[Double] = {
-    val out = new Array[Double](ks.length)
-    var i = 0
-    while (i < ks.length) { out(i) = ks(i).toDouble; i += 1 }
-    out
-  }
-
-  /** Encode one record's payload to stored words. */
+  /** Encode one record's payload to stored words: a quantize step per
+    * datyp, then the one token stream.
+    */
   def encodePayload(datyp: Int, nbits: Int, values: Array[Double])
       : Array[Int] = baseDatyp(datyp) match {
     case 0 | 5 =>
@@ -425,7 +403,7 @@ object XdfFormat {
     case 2 =>
       // encode caps at 32 bits (compact_integer's packing domain; a
       // wider nbits would also wrap the 1L << nbits range masks) —
-      // decode handles any width since unpackBits masks per-chunk
+      // decode handles any width up to 64
       require(nbits >= 1 && nbits <= 32,
         s"xdf: datyp 2 nbits $nbits outside the 1-32 packing range")
       val lim = if (nbits == 32) 1L << 32 else 1L << nbits
@@ -482,18 +460,18 @@ object XdfFormat {
           math.round((values(i) - minS.toDouble) / step)))
         i += 1
       }
-      Array(java.lang.Float.floatToIntBits(minS), j, values.length) ++
-        (if (turbo) compressTokens(toInts(ks))
-         else packBits(ks, nbits))
+      writeTokens(Array(java.lang.Float.floatToIntBits(minS), j,
+        values.length), ks, nbits, turbo)
     case 130 =>
       // compressed unsigned-short field: tokens ARE the values
-      compressTokens(toInts(
-        roundChecked(values, 0, 65536, 130, "unsigned 16-bit")))
+      writeTokens(NoHeader,
+        roundChecked(values, 0, 65536, 130, "unsigned 16-bit"), 16,
+        compressed = true)
     case 133 =>
       // compressed IEEE 32: lossless — each float's bits split into
       // 16-bit halves; the hi halves (sign+exponent+mantissa head) of
       // a smooth field are where the compression lands
-      val toks = new Array[Int](2 * values.length)
+      val toks = new Array[Long](2 * values.length)
       var i = 0
       while (i < values.length) {
         val bits = java.lang.Float.floatToIntBits(values(i).toFloat)
@@ -501,7 +479,7 @@ object XdfFormat {
         toks(2 * i + 1) = bits & 0xFFFF
         i += 1
       }
-      compressTokens(toks)
+      writeTokens(NoHeader, toks, 16, compressed = true)
     case 6 | 134 =>
       // float_packer-shaped codec: the reference's decode call is
       // `c_float_unpacker(work, data, data[3:], nelm, &nbits)`
@@ -514,10 +492,10 @@ object XdfFormat {
       // quantization step (= 2^(refExpo-150+25-nbits)) round-trip
       // exactly; everything else truncates toward zero, bounded by
       // one step.
-      val turbo6 = baseDatyp(datyp) == 134
+      val turbo = baseDatyp(datyp) == 134
       require(nbits >= 2 && nbits <= 25,
         s"xdf: datyp 6 nbits $nbits outside the 2-25 token range")
-      require(!turbo6 || nbits <= 16,
+      require(!turbo || nbits <= 16,
         s"xdf: datyp 134 nbits $nbits > 16 (compressed tokens are " +
           "16-bit, std_io.py:558-560)")
       var refExpo = 0
@@ -544,18 +522,20 @@ object XdfFormat {
           }
         i += 1
       }
-      Array(FlpMagic | nbits, refExpo, values.length) ++
-        (if (turbo6) compressTokens(toInts(ks))
-         else packBits(ks, nbits))
+      writeTokens(Array(FlpMagic | nbits, refExpo, values.length), ks,
+        nbits, turbo)
     case other => throw new UnsupportedOperationException(
       s"xdf: cannot encode datyp $other " +
         "(not a documented FST encoding, std_io.py:492-563)")
   }
 
-  /** Decode one record's stored words back to values. */
+  /** Decode one record's stored words back to values: the one token
+    * stream, then a dequantize step per datyp.
+    */
   def decodePayload(datyp: Int, nbits: Int, nelm: Int,
-                    words: Array[Int]): Array[Double] =
-    baseDatyp(datyp) match {
+                    words: Array[Int]): Array[Double] = {
+    val base = baseDatyp(datyp)
+    base match {
       case 0 | 5 =>
         if (nbits > 32) {
           val out = new Array[Double](nelm)
@@ -576,47 +556,34 @@ object XdfFormat {
           }
           out
         }
-      case 2 =>
-        toDoubles(unpackBits(words, nbits, nelm))
-      case 7 =>
-        toDoubles(unpackBits(words, 8, nelm))
-      case 4 =>
-        val lim = 1L << (nbits - 1)
-        val ks = unpackBits(words, nbits, nelm)
+      case 2 | 4 | 7 | 130 =>
+        // integers: unsigned (2; 130's compressed 16-bit tokens),
+        // 8-bit characters (7, whatever the declared nbits), and two's
+        // complement nbits wide (4, sign-extended by the shift pair)
+        val ks = readTokens(words, 0, if (base == 7) 8 else nbits, nelm,
+          compressed = base == 130)
+        val ext = if (base == 4) 64 - nbits else 0
         val out = new Array[Double](nelm)
         var i = 0
-        while (i < nelm) {
-          val k = ks(i)
-          out(i) = (if (k >= lim) k - (lim << 1) else k).toDouble
-          i += 1
-        }
+        while (i < nelm) { out(i) = ((ks(i) << ext) >> ext).toDouble; i += 1 }
         out
       case 1 | 129 =>
         val min = java.lang.Float.intBitsToFloat(words(0)).toDouble
         val step = math.pow(2, words(1).toDouble)
         require(words(2) == nelm,
           s"xdf: datyp 1 header nelm ${words(2)} != directory $nelm")
-        val ks =
-          if (baseDatyp(datyp) == 129)
-            toLongs(decompressTokens(words.drop(3), nelm))
-          else unpackBits(words.drop(3), nbits, nelm)
+        val ks = readTokens(words, 3, nbits, nelm, compressed = base == 129)
         val out = new Array[Double](nelm)
         var i = 0
         while (i < nelm) { out(i) = min + ks(i) * step; i += 1 }
         out
-      case 130 =>
-        val toks = decompressTokens(words, nelm)
-        val out = new Array[Double](nelm)
-        var i = 0
-        while (i < nelm) { out(i) = toks(i).toDouble; i += 1 }
-        out
       case 133 =>
-        val toks = decompressTokens(words, 2 * nelm)
+        val ks = readTokens(words, 0, 16, 2 * nelm, compressed = true)
         val out = new Array[Double](nelm)
         var i = 0
         while (i < nelm) {
           out(i) = java.lang.Float.intBitsToFloat(
-            (toks(2 * i) << 16) | toks(2 * i + 1)).toDouble
+            ((ks(2 * i) << 16) | ks(2 * i + 1)).toInt).toDouble
           i += 1
         }
         out
@@ -631,10 +598,7 @@ object XdfFormat {
         val refExpo = words(1)
         val magBits = nbits - 1
         val step = math.pow(2, (refExpo - 126 - magBits).toDouble)
-        val ks =
-          if (baseDatyp(datyp) == 134)
-            toLongs(decompressTokens(words.drop(3), nelm))
-          else unpackBits(words.drop(3), nbits, nelm)
+        val ks = readTokens(words, 3, nbits, nelm, compressed = base == 134)
         val out = new Array[Double](nelm)
         var i = 0
         while (i < nelm) {
@@ -649,6 +613,7 @@ object XdfFormat {
         s"xdf: cannot decode datyp $other " +
           "(not a documented FST encoding, std_io.py:492-563)")
     }
+  }
 
   // ---------------------------------------------------------------
   // container write

@@ -8,17 +8,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[GraftSession]]. Keeps each record container's byte layout behind
   * its own module: only the format modules and the `Container`
   * dispatch sniff a header or compare a container name. Keeps the jar
-  * a library: only the three entry points define a `main`, and every
+  * a library: only the three entry points define a `main`, every
   * `graft.core` object is used by other library code, not only by
-  * tests.
+  * tests, and every `def` is named somewhere besides its declaration.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
-  private def sources: Seq[java.io.File] = {
+  private def sources: Seq[java.io.File] = scalaFiles("src/main/scala")
+
+  private def scalaFiles(root: String): Seq[java.io.File] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    walk(new java.io.File("src/main/scala"))
+    walk(new java.io.File(root))
   }
 
   private def read(f: java.io.File): String =
@@ -76,6 +78,27 @@ class SourceGuardSpec extends AnyFunSuite {
       if !files.exists(o => o != f &&
         s"\\b$name\\b".r.findFirstIn(read(o)).isDefined)
     } yield s"${f.getPath}: object $name"
+    assert(unused.isEmpty, unused.mkString("\n", "\n", ""))
+  }
+
+  test("every def in src/main is named outside its own declaration") {
+    // a def that nothing names, in the library, its tests or the
+    // benchmark, is dead code; an override is called by its framework
+    val ident = """[A-Za-z_][A-Za-z0-9_]*""".r
+    val lines = Seq("src/main/scala", "src/test/scala", "perfbench/src")
+      .flatMap(scalaFiles).flatMap(f =>
+        read(f).split("\n").zipWithIndex.map { case (l, i) => (f, i, l) })
+    val uses = lines.flatMap(l => ident.findAllIn(l._3))
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val unused = for {
+      (f, i, line) <- lines
+      if f.getPath.startsWith("src/main/")
+      m <- """\bdef\s+([A-Za-z_][A-Za-z0-9_]*)""".r.findAllMatchIn(line)
+      if !line.take(m.start).contains("override")
+      name = m.group(1)
+      if uses(name) == ident.findAllIn(line).count(_ == name)
+    } yield s"${f.getPath}:${i + 1}: def $name"
+    assert(lines.exists(_._1.getPath.startsWith("perfbench/")))
     assert(unused.isEmpty, unused.mkString("\n", "\n", ""))
   }
 

@@ -174,6 +174,34 @@ class CodecSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("parsePayload fails on a ragged row or a non-numeric element, naming d and the nomvar") {
+    import org.scalatest.concurrent.TimeLimits._
+    import org.scalatest.time.SpanSugar._
+    val dir = java.nio.file.Files.createTempDirectory("graft_codec_csv_bad")
+    // these used to fail as INVALID_ARRAY_INDEX_IN_ELEMENT_AT and
+    // CAST_INVALID_INPUT, naming neither the column nor the record
+    val cases = Seq(
+      ("ragged", "UU", "ragged payload rows",
+        "nomvar,level,d\nTT,500,\"1,2;3,4\"\nUU,500,\"1,2;3\"\n"),
+      ("longer", "VV", "ragged payload rows",
+        "nomvar,level,d\nVV,500,\"1,2;3,4,5\"\n"),
+      ("numeric", "WW", "non-numeric payload element",
+        "nomvar,level,d\nWW,500,\"1,x\"\n"))
+    cases.foreach { case (name, nomvar, what, text) =>
+      val f = dir.resolve(s"$name.csv")
+      java.nio.file.Files.write(f, text.getBytes("UTF-8"))
+      failAfter(30.seconds) {
+        val err = intercept[Exception] {
+          CsvRecords.read(spark, f.toString).collect()
+        }
+        val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+          .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+        assert(msgs.exists(m => m.contains(s"csv: $what in column d") &&
+          m.contains(s"nomvar '$nomvar'")), msgs.mkString("\n"))
+      }
+    }
+  }
+
   test("Typvar flags parse/build") {
     import spark.implicits._
     // every settable letter survives parse (addFlags) then build

@@ -69,4 +69,22 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(r.getInt(2) == IpCodec.decodeKind(r.getInt(0)))
     }
   }
+
+  test("install leaves a session that has every function as it is") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val registry = spark.sessionState.functionRegistry
+    def dot = spark.sql("SELECT graft_dot(array(1.0D), array(2.0D))")
+      .collect()(0).getDouble(0)
+    val sentinel: Seq[Expression] => Expression = _ => Literal(42.0)
+    registry.createOrReplaceTempFunction("graft_dot", sentinel, "scala_udf")
+    // every function is registered: install must not touch any of them
+    GraftFunctions.install(spark)
+    assert(dot == 42.0)
+    // one function missing: install registers the whole set again
+    registry.dropFunction(FunctionIdentifier("graft_array_sum"))
+    GraftFunctions.install(spark)
+    assert(dot == 2.0)
+    assert(registry.functionExists(FunctionIdentifier("graft_array_sum")))
+  }
 }
