@@ -19,7 +19,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Every timed run is a full `write.format("noop")` of the query's
   * result, so no projection or aggregate is pruned away as under
-  * `count()`, and each timing line ends in the median.
+  * `count()`. Each `time` line gives the median, then the Janino
+  * compiles over the query's runs and their milliseconds
+  * (`compiles=N compile_ms=M`): a query that compiles on every run is
+  * thrashing Spark's code cache.
   *
   * Usage: runMain graft.Tool time|ab|plan <args..>
   */
@@ -39,9 +42,12 @@ object Tool {
       warmUp(spark, sfDir)
       names.foreach { q =>
         try {
+          val (n0, ns0) = compiles()
           val ts = (1 to reps.toInt).map(_ => timed(spark, sfDir, q))
+          val (n1, ns1) = compiles()
           println(s"[tool] time $q ${ts.map(f2).mkString(" ")} " +
-            s"median=${f2(median(ts))}")
+            s"median=${f2(median(ts))} compiles=${n1 - n0} " +
+            s"compile_ms=${(ns1 - ns0) / 1000000}")
         } catch { case e: Exception => println(s"[tool] time $q ERR $e") }
       }
     case "ab" :: sfDir :: q :: reps :: key :: a :: b :: Nil =>
@@ -88,6 +94,16 @@ object Tool {
         timeoutMs = 60000L).count()
     } catch { case _: Throwable => () }
   }
+
+  /** Janino compiles so far in this JVM and their total nanoseconds.
+    * Spark's code cache holds a fixed number of generated classes, so a
+    * run that keeps compiling is evicting classes it needs again.
+    */
+  private def compiles(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+      .compileTime)
 
   /** True median: the two middle values averaged for an even count. */
   def median(xs: Seq[Double]): Double = {

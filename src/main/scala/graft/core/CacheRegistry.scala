@@ -4,8 +4,8 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
 /** Registry for DataFrames persisted *inside* lazily-returned
-  * operator plans (metadata_cleanup summaries, QuickPressure level
-  * sets, LSH signature tables). The operator cannot unpersist them —
+  * operator plans (QuickPressure level sets, mask and grid tables, LSH
+  * signature tables). The operator cannot unpersist them —
   * the caller has not run its action yet — so without a release point
   * a long-lived session accumulates cached blocks across repeated
   * operator invocations.

@@ -1,19 +1,25 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Metadata-aware selection algebra: select_meta / select_with_meta /
   * metadata_cleanup (reference:
   * /root/reference/fstpy/dataframe_utils.py:21-110, 232-459).
   *
-  * Scale notes: the data side (`noMeta`) is never shuffled on payload —
-  * the cleanup derives three SMALL per-grid summaries (kind flags,
-  * dims, match groups) via partial aggregations and broadcasts them
-  * into the meta side, which is tiny by construction. At 100 TB the
-  * only wide exchange is the distinct on (grid,dateo,deet,npas), whose
-  * cardinality is bounded by grids x output times, not by records.
+  * Scale notes: the cleanup decides which coordinate records to keep
+  * from two small collects, as the reference reasons over a handful of
+  * rows: the per-(grid, dateo, deet, npas) summary of the data side,
+  * bounded by grids x output times, and the metadata columns (no `d`)
+  * of the meta records, few by construction. The data side is never
+  * shuffled on payload and nothing is persisted; the returned plan is
+  * the data side unioned with the meta side semi-joined to a broadcast
+  * of the kept records. Its shape depends on the catalog's columns,
+  * not on its records (unless duplicate records need one more dedup),
+  * so its generated classes are reused from call to call (DESIGN.md
+  * "Metadata cleanup on the driver: the codegen cache").
   */
 object Select {
 
@@ -67,136 +73,180 @@ object Select {
     * data records present. `dataPredicate` restricts the data side
     * only (select_with_meta semantics: meta candidates always come
     * from the full catalog).
+    *
+    * Unlike the other operators this one runs two small Spark jobs
+    * when it is called: the data-side summary and the meta records'
+    * metadata columns are collected, and plain Scala computes the kept
+    * set. The returned frame reads `df` again when it is evaluated, so
+    * `df` must be a deterministic batch frame (the callers are
+    * `FstWriter.write` and the f-queries; a streaming frame is
+    * rejected).
     */
   def metadataCleanup(df: DataFrame,
                       dataPredicate: Column = lit(true)): DataFrame = {
     graft.core.Checks.requireColumns(df, "metadata_cleanup", "nomvar",
       "ip1", "ip2", "ig1", "ig2", "ni", "nj", "dateo", "deet", "npas")
+    require(!df.isStreaming,
+      "metadata_cleanup collects its kept set and needs a batch frame")
     val g = ensureGrid(df)
-    val cols = g.columns
     val noMeta = antiMeta(g).filter(dataPredicate)
-    // The meta side is tiny by construction (coordinate/descriptor
-    // records only) but feeds five kept-set branches — cache it so the
-    // catalog is not re-scanned per branch.
-    val metaDf = selectMeta(g)
-      .transform(graft.core.CacheRegistry.persist(_))
+    val metaSide = selectMeta(g)
 
-    // ONE aggregation pass over the (large) data side produces a tiny
-    // per-(grid, output-time) summary; every per-grid/global summary
-    // below derives from it. The summary is persisted — its size is
-    // bounded by grids x output times, never by record count — so the
-    // heavy scan + partial aggregation runs once, not once per
-    // consumer (column pruning makes the consumers' subplans differ,
-    // which defeats ReuseExchange).
-    val summary = noMeta
+    // ONE aggregation pass over the (large) data side: its size is
+    // bounded by grids x output times, never by record count
+    val groups = noMeta
       .withColumn("k", IpColumns.decodeKind(col("ip1")))
       .groupBy("grid", "dateo", "deet", "npas").agg(
-        max(col("k") === 1).as("s_sigma"),
-        max(col("k") === 5).as("s_hybrid"),
-        max(col("k") === 2).as("s_pressure"),
-        min("ni").as("sni"), min("nj").as("snj"))
-      .transform(graft.core.CacheRegistry.persist(_))
+        max(col("k") === 1), max(col("k") === 5), max(col("k") === 2),
+        min("ni"), min("nj"))
+      .collect().toSeq.map(r => r.toSeq.take(4) -> Kinds(
+        r.get(4) == true, r.get(5) == true, r.get(6) == true,
+        r.get(7), r.get(8)))
 
-    // ONE per-grid roll-up carrying both the vertical-kind flags (A5
-    // bucketing) and the field dims (reference takes the first row's
-    // ni/nj, dataframe_utils.py:404-406; grids are dimensionally
-    // homogeneous) — one aggregation instead of two plus a join.
-    val perGrid = summary.groupBy("grid").agg(
-      max("s_sigma").as("has_sigma"),
-      max("s_hybrid").as("has_hybrid"),
-      max("s_pressure").as("has_pressure"),
-      min("sni").as("gni"), min("snj").as("gnj"))
+    // every column the kept rules and the pick read
+    val tie = tieColumns(g.columns.toSeq)
+    val idCols = (Seq("grid") ++ MetaSubset ++ DeformSubset ++ tie).distinct
+    val ids = metaSide.select(idCols.map(col): _*)
+    val meta = ids.collect().toSeq
+    val kept = keptRows(groups, meta, idCols, tie)
+    if (kept.isEmpty) return noMeta
 
-    // J3: 3-tier fallback match of deformation records to data groups
-    val groups = summary.select(col("grid"), col("dateo").as("gdateo"),
-      col("deet").as("gdeet"), col("npas").as("gnpas"))
-    val coord = metaDf.filter(col("nomvar").isin("^^", ">>", "^>"))
-    val tier =
-      when(col("dateo") === col("gdateo") && col("deet") === col("gdeet")
-        && col("npas") === col("gnpas"), 1)
-        .when(col("dateo") === col("gdateo"), 2)
-        .otherwise(3)
-    val w = Window.partitionBy(
-      col("grid"), col("gdateo"), col("gdeet"), col("gnpas"), col("nomvar"))
+    // does a kept record share its values in `cs` with another record?
+    def ambiguous(cs: Seq[String]): Boolean = {
+      val ix = cs.map(idCols.indexOf)
+      def of(r: Row) = ix.map(r.get)
+      val n = meta.groupMapReduce(of)(_ => 1)(_ + _)
+      kept.exists(r => n(of(r)) > 1)
+    }
+    // The semi-join matches on the metadata alone where that tells the
+    // kept records apart. A `(path, key)` is not stable across the two
+    // evaluations of `df`: Api.read's dropDuplicates keeps any one of
+    // a duplicated record's copies.
+    val on = Some(idCols.filterNot(Seq("path", "key").contains))
+      .filterNot(ambiguous).getOrElse(idCols)
+    val keys = g.sparkSession.createDataFrame(kept.asJava, ids.schema)
+      .select(on.map(c => col(c).as("kept_" + c)): _*)
+    val metaKept = metaSide.join(broadcast(keys),
+      on.map(c => col(c) <=> col("kept_" + c)).reduce(_ && _), "left_semi")
+    // records alike in every matched column are one pick: the semi-join
+    // returns them all, so keep one per MetaSubset key
+    noMeta.unionByName(
+      if (ambiguous(on)) metaKept.dropDuplicates(MetaSubset) else metaKept)
+  }
+
+  /** Vertical-kind flags and smallest dims of a (grid, dateo, deet,
+    * npas) group of the data side, or of a whole grid. A null flag
+    * reads false: every rule below is a filter over AND/OR, which keeps
+    * a row only when it is true.
+    */
+  private final case class Kinds(sigma: Boolean, hybrid: Boolean,
+                                 pressure: Boolean, ni: Any, nj: Any)
+
+  /** Deterministic pick tiebreak: rid when the catalog carries one
+    * (fixture catalogs; oracle parity), else the scan identity
+    * (path, key), else the remaining record-identity columns — a
+    * catalog read straight off the source must clean up without a
+    * synthetic row id.
+    */
+  private def tieColumns(cols: Seq[String]): Seq[String] =
+    if (cols.contains("rid")) Seq("rid")
+    else if (cols.contains("path") && cols.contains("key"))
+      Seq("path", "key")
+    else Seq("typvar", "etiket", "ip3", "datev", "datyp", "nbits",
+      "grtyp", "ig3", "ig4").filter(cols.contains)
+
+  /** Spark's `===`: a null on either side is not a match. */
+  private def same(a: Any, b: Any): Boolean =
+    a != null && b != null && a == b
+
+  /** Spark's ascending sort order: nulls first, strings by UTF-8 bytes. */
+  private object ValueOrder extends Ordering[Any] {
+    def compare(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    }
+  }
+
+  private def minOf(xs: Seq[Any]): Any =
+    xs.filter(_ != null).minOption(ValueOrder).orNull
+
+  /** The kept meta records, one per MetaSubset key: the J3 deformation
+    * match and the P0/PT/HY/!! rules over the collected rows. Grouping
+    * keys compare nulls as equal, as Spark's group and window keys do.
+    */
+  private def keptRows(groups: Seq[(Seq[Any], Kinds)], meta: Seq[Row],
+                       cols: Seq[String], tie: Seq[String]): Seq[Row] = {
+    val at = cols.zipWithIndex.toMap
+    def v(r: Row, c: String): Any = r.get(at(c))
+    val byTie: Ordering[Row] = Ordering.by((r: Row) => tie.map(v(r, _)))(
+      Ordering.Implicits.seqOrdering(ValueOrder))
+    // final meta-assembly dedup (dataframe_utils.py:296-297), min tie
+    def onePerKey(rs: Seq[Row]): Seq[Row] =
+      rs.groupBy(r => MetaSubset.map(v(r, _))).values.map(_.min(byTie)).toSeq
+    // a null grid never matches (an equi-join key)
+    val gridGroups = groups.filter(_._1.head != null).groupBy(_._1.head)
+
+    // J3: 3-tier fallback match of deformation records to data groups;
+    // per (group, nomvar) only the best tier found is kept
+    val cand = for {
+      r <- meta if Seq("^^", ">>", "^>").contains(v(r, "nomvar"))
+      (k, _) <- gridGroups.getOrElse(v(r, "grid"), Nil)
+    } yield {
+      val dateoEq = same(v(r, "dateo"), k(1))
+      val tier =
+        if (dateoEq && same(v(r, "deet"), k(2)) &&
+          same(v(r, "npas"), k(3))) 1
+        else if (dateoEq) 2 else 3
+      (r, k, tier)
+    }
+    val best = cand.groupBy { case (r, k, _) => (k, v(r, "nomvar")) }
+      .values.toSeq.flatMap { cs =>
+        val mt = cs.map(_._3).min
+        cs.collect { case (r, k, `mt`) => (r, k, mt) }
+      }
     // tier-dependent dedup subset (dataframe_utils.py:371-392): the
     // very-strict match dedups on the full subset; the strict match
-    // drops deet/npas from it; the loose match also drops dateo.
-    // Masked key columns express that declaratively, and row_number
-    // ordered by rid makes the pick DETERMINISTIC on both the Spark
-    // side and the DuckDB twin (dropDuplicates picks an arbitrary
-    // row, which an oracle cannot reproduce).
-    val maskedKeys = Seq(
-      when(col("mt") <= 2, col("dateo")),
-      when(col("mt") === 1, col("deet")),
-      when(col("mt") === 1, col("npas")))
-    // Deterministic pick tiebreak: rid when the catalog carries one
-    // (fixture catalogs; oracle parity), else the scan identity
-    // (path, key), else the remaining record-identity columns — a
-    // catalog read straight off the source must clean up without a
-    // synthetic row id.
-    val tieCols: Seq[Column] =
-      if (cols.contains("rid")) Seq(col("rid"))
-      else if (cols.contains("path") && cols.contains("key"))
-        Seq(col("path"), col("key"))
-      else Seq("typvar", "etiket", "ip3", "datev", "datyp", "nbits",
-        "grtyp", "ig3", "ig4").filter(cols.contains).map(col)
-    val wd = Window.partitionBy(
-      (Seq(col("grid"), col("gdateo"), col("gdeet"), col("gnpas")) ++
-        DeformSubset.filterNot(Seq("dateo", "deet", "npas").contains)
-          .map(col) ++ maskedKeys): _*)
-      .orderBy(tieCols: _*)
-    // final meta-assembly dedup (dataframe_utils.py:296-297), min-rid
-    val wm = Window.partitionBy(MetaSubset.map(col): _*)
-      .orderBy(tieCols: _*)
-    val deform = coord
-      .join(broadcast(groups), Seq("grid"))
-      .withColumn("tier", tier)
-      .withColumn("mt", min("tier").over(w))
-      .filter(col("tier") === col("mt"))
-      .withColumn("rn", row_number().over(wd))
-      .filter(col("rn") === 1)
-      .withColumn("rn2", row_number().over(wm))
-      .filter(col("rn2") === 1)
-      .select(cols.map(col): _*)
+    // drops deet/npas from it; the loose match also drops dateo
+    val deform = best.groupBy { case (r, k, mt) =>
+      (k, DeformSubset.map {
+        case "dateo" if mt > 2 => null
+        case "deet" | "npas" if mt > 1 => null
+        case c => v(r, c)
+      })
+    }.values.map(_.map(_._1).min(byTie)).toSeq
 
-    // HY's keep rule is grid-less: hybrid levels anywhere (1 row)
-    val hybridAny = summary.agg(max("s_hybrid").as("any_hybrid"))
-
-    // r14 optimization (guide §2.4, r13 verdict #2): the P0 / PT /
-    // HY / !! kept sets used to be four separate branches, each a
-    // broadcast join plus its own dropDuplicates(MetaSubset)
-    // exchange over the SAME persisted meta cache. The four rules
-    // are disjoint by nomvar and MetaSubset contains nomvar, so one
-    // filtered pass with a per-nomvar predicate and a SINGLE
-    // MetaSubset dedup keeps exactly the same rows: per key the
-    // dedup candidates are identical (no cross-nomvar collapse is
-    // possible), and the left join + null-propagating predicates
-    // reproduce the inner-join semantics (a null has_* flag fails
-    // every conjunct that needs it).
+    // P0/PT and !! need their grid's vertical kinds (and P0/PT its
+    // dims: the reference takes the first row's ni/nj,
+    // dataframe_utils.py:404-406; grids are dimensionally homogeneous);
+    // HY's keep rule is grid-less: hybrid levels anywhere
+    val anyHybrid = groups.exists(_._2.hybrid)
+    val perGrid = gridGroups.map { case (grid, gs) =>
+      val ks = gs.map(_._2)
+      grid -> Kinds(ks.exists(_.sigma), ks.exists(_.hybrid),
+        ks.exists(_.pressure), minOf(ks.map(_.ni)), minOf(ks.map(_.nj)))
+    }
     val hv = graft.meta.Lookups.HybridVcodes
     val sv = graft.meta.Lookups.SigmaVcodes
     val pv = graft.meta.Lookups.PressureVcodes
-    val dimsOk =
-      col("ni") === col("gni") && col("nj") === col("gnj")
-    val kept = metaDf
-      .filter(col("nomvar").isin("P0", "PT", "HY", "!!"))
-      .join(broadcast(perGrid
-        .withColumnRenamed("grid", "kgrid")),
-        col("grid") === col("kgrid"), "left")
-      .crossJoin(broadcast(hybridAny))
-      .filter(
-        (col("nomvar") === "P0" &&
-          (col("has_sigma") || col("has_hybrid")) && dimsOk) ||
-        (col("nomvar") === "PT" && col("has_sigma") && dimsOk) ||
-        (col("nomvar") === "HY" && col("any_hybrid")) ||
-        (col("nomvar") === "!!" && (
-          (col("has_hybrid") && col("ig1").isin(hv: _*)) ||
-          (col("has_sigma") && col("ig1").isin(sv: _*)) ||
-          (col("has_pressure") && col("ig1").isin(pv: _*)))))
-      .select(cols.map(col): _*)
-      .dropDuplicates(MetaSubset)
-
-    noMeta.unionByName(deform).unionByName(kept)
+    def justified(r: Row): Boolean = {
+      val k = perGrid.get(v(r, "grid"))
+      def dimsOk(p: Kinds) =
+        same(v(r, "ni"), p.ni) && same(v(r, "nj"), p.nj)
+      def ig1In(codes: Seq[Int]) = codes.exists(same(_, v(r, "ig1")))
+      v(r, "nomvar") match {
+        case "P0" => k.exists(p => (p.sigma || p.hybrid) && dimsOk(p))
+        case "PT" => k.exists(p => p.sigma && dimsOk(p))
+        case "HY" => anyHybrid
+        case "!!" => k.exists(p => (p.hybrid && ig1In(hv)) ||
+          (p.sigma && ig1In(sv)) || (p.pressure && ig1In(pv)))
+        case _ => false
+      }
+    }
+    onePerKey(deform) ++ onePerKey(meta.filter(justified))
   }
 
   // ---------- DuckDB twin ----------

@@ -132,8 +132,10 @@ object XdfFormat {
     * [[readPayload]] (which reads `lng32 - RecordHeaderWords`), not
     * [[payloadWords]].
     */
-  def isTurboDatyp(datyp: Int): Boolean =
-    Set(129, 130, 133, 134)(baseDatyp(datyp))
+  def isTurboDatyp(datyp: Int): Boolean = baseDatyp(datyp) match {
+    case 129 | 130 | 133 | 134 => true
+    case _ => false
+  }
 
   /** Stored payload length in 32-bit words for one record. */
   def payloadWords(datyp: Int, nbits: Int, nelm: Int): Int =

@@ -102,6 +102,21 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(unused.isEmpty, unused.mkString("\n", "\n", ""))
   }
 
+  test("core ops call CacheRegistry only at the listed sites") {
+    // the list may only shrink (a removed site must leave it too):
+    // each site is a persist inside a lazily returned plan that the
+    // caller has to release
+    val allowed = Map("VCoord.scala" -> 3, "Masks.scala" -> 2,
+      "Grids.scala" -> 1)
+    def code(f: java.io.File) = read(f).split("\n").map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("//"))
+    val calls = sources.filter(_.getPath.contains("/graft/ops/"))
+      .map(f => f.getName -> code(f).map(l =>
+        """CacheRegistry\s*\.\s*\w+""".r.findAllIn(l).size).sum)
+      .filter(_._2 > 0).toMap
+    assert(calls == allowed, s"CacheRegistry calls per file: $calls")
+  }
+
   test("only Bench, Verify and Tool define a main") {
     val mains = sources.filter(f =>
       """\bdef\s+main\s*\(""".r.findFirstIn(read(f)).isDefined)

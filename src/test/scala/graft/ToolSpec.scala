@@ -18,7 +18,8 @@ class ToolSpec extends AnyFunSuite {
   test("time, ab and plan run a query under the session conf") {
     assume(new java.io.File(dir).exists())
     val time = tool("time", dir, "1", q)
-    assert(s"""\\[tool\\] time $q \\d+\\.\\d\\d median=\\d+\\.\\d\\d""".r
+    assert((s"""\\[tool\\] time $q \\d+\\.\\d\\d median=\\d+\\.\\d\\d""" +
+      """ compiles=\d+ compile_ms=\d+""").r
       .findFirstIn(time).isDefined, time)
 
     val key = "spark.sql.shuffle.partitions"
