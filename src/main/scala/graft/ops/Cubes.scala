@@ -31,27 +31,29 @@ object Cubes {
       df.withColumn("rid", struct(col("path"), col("key")))
     }
 
-  /** r14 optimization (guide §2.3 "aggregate before you shuffle"):
-    * the representative-record pick used to be a row_number window —
-    * which shuffles EVERY payload-bearing row to its group partition
-    * and SORTS it there — when all that is needed is the min-rid
-    * row's `d` per group. A grouped min_by runs partial (map-side)
-    * aggregation, so each map task ships at most one candidate row
-    * per group and the per-partition sort disappears; rid is unique
-    * (record id / (path,key)), so min_by picks exactly the row the
-    * window's rank-1 filter picked, and both order rid structs
-    * lexicographically.
+  /** The min-rid row's `d` per `keys` group, hash-partitioned on `by`,
+    * the caller's next grouping (a prefix of `keys`). min_by's array
+    * buffer makes Spark plan a SortAggregate, whose partial and final
+    * steps would otherwise sit on two sides of an exchange of their
+    * own; partitioning first lets the pick and the caller's
+    * collect_list share one exchange. The map side therefore no longer
+    * drops duplicate records before the exchange: a catalog with many
+    * records per level ships them all once, and the sort spills, so
+    * memory stays bounded. rid is unique (record id / (path, key)), so
+    * min_by picks exactly the row a rank-1 window filter would, and
+    * both order rid structs lexicographically.
     *
     * A null rid fails the query: min_by skips null orderings, so a
     * group of null rids would otherwise yield a null `d`. The check
     * folds away when the rid column is not nullable.
     */
-  private def pickMinRid(data: DataFrame, keys: Seq[String])
-      : DataFrame =
+  private def pickMinRid(data: DataFrame, keys: Seq[String],
+                         by: Seq[String]): DataFrame =
     data.withColumn("rid", when(col("rid").isNull,
         raise_error(lit("to_cube: a record has a null rid; the " +
           "representative pick needs a unique non-null record id")))
       .otherwise(col("rid")))
+      .repartition(by.map(col): _*)
       .groupBy(keys.map(col): _*)
       .agg(min_by(col("d"), col("rid")).as("d"))
 
@@ -61,7 +63,8 @@ object Cubes {
     val g = if (g0.columns.contains("level")) g0 else Decode.addIpInfo(g0)
     val data = g.filter(!col("nomvar").isin(CubeSkip: _*))
     val picked = pickMinRid(data,
-      Seq("grid", "nomvar", "ip1_kind", "level"))
+      Seq("grid", "nomvar", "ip1_kind", "level"),
+      Seq("grid", "nomvar", "ip1_kind"))
     picked.groupBy("grid", "nomvar", "ip1_kind")
       .agg(sort_array(collect_list(struct(col("level"), col("d"))))
         .as("asc_layers"))
@@ -91,7 +94,8 @@ object Cubes {
     val g = if (g0.columns.contains("level")) g0 else Decode.addIpInfo(g0)
     val data = g.filter(!col("nomvar").isin(CubeSkip: _*))
     val picked = pickMinRid(data,
-      Seq("grid", "nomvar", "ip1_kind", "level", "datev"))
+      Seq("grid", "nomvar", "ip1_kind", "level", "datev"),
+      Seq("grid", "nomvar", "ip1_kind", "level"))
     picked.groupBy("grid", "nomvar", "ip1_kind", "level")
       .agg(sort_array(collect_list(struct(col("datev"), col("d"))))
         .as("frames"))

@@ -11,15 +11,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale notes: the cleanup decides which coordinate records to keep
   * from two small collects, as the reference reasons over a handful of
-  * rows: the per-(grid, dateo, deet, npas) summary of the data side,
-  * bounded by grids x output times, and the metadata columns (no `d`)
-  * of the meta records, few by construction. The data side is never
-  * shuffled on payload and nothing is persisted; the returned plan is
-  * the data side unioned with the meta side semi-joined to a broadcast
-  * of the kept records. Its shape depends on the catalog's columns,
-  * not on its records (unless duplicate records need one more dedup),
-  * so its generated classes are reused from call to call (DESIGN.md
-  * "Metadata cleanup on the driver: the codegen cache").
+  * rows: the metadata columns (no `d`) of the meta records, few by
+  * construction, and, only when there are any, the per-(grid, dateo,
+  * deet, npas) summary of the data side, bounded by grids x output
+  * times. The data side is never shuffled on payload and nothing is
+  * persisted; the returned plan is the data side unioned with the meta
+  * side semi-joined to a broadcast of the kept records. Its shape
+  * depends on the catalog's columns, not on its records (unless
+  * duplicate records need one more dedup), so its generated classes
+  * are reused from call to call (DESIGN.md "Metadata cleanup on the
+  * driver: the codegen cache").
   */
 object Select {
 
@@ -74,13 +75,14 @@ object Select {
     * only (select_with_meta semantics: meta candidates always come
     * from the full catalog).
     *
-    * Unlike the other operators this one runs two small Spark jobs
-    * when it is called: the data-side summary and the meta records'
-    * metadata columns are collected, and plain Scala computes the kept
-    * set. The returned frame reads `df` again when it is evaluated, so
-    * `df` must be a deterministic batch frame (the callers are
-    * `FstWriter.write` and the f-queries; a streaming frame is
-    * rejected).
+    * Unlike the other operators this one runs small Spark jobs when it
+    * is called: the meta records' metadata columns are collected and,
+    * when there are any, the data-side summary too; plain Scala then
+    * computes the kept set. A catalog without coordinate records costs
+    * one job and comes back as its data side. The returned frame reads
+    * `df` again when it is evaluated, so `df` must be a deterministic
+    * batch frame (the callers are `FstWriter.write` and the f-queries;
+    * a streaming frame is rejected).
     */
   def metadataCleanup(df: DataFrame,
                       dataPredicate: Column = lit(true)): DataFrame = {
@@ -91,6 +93,14 @@ object Select {
     val g = ensureGrid(df)
     val noMeta = antiMeta(g).filter(dataPredicate)
     val metaSide = selectMeta(g)
+
+    // every column the kept rules and the pick read
+    val tie = tieColumns(g.columns.toSeq)
+    val idCols = (Seq("grid") ++ MetaSubset ++ DeformSubset ++ tie).distinct
+    val ids = metaSide.select(idCols.map(col): _*)
+    val meta = ids.collect().toSeq
+    // no coordinate record, nothing to justify: skip the data pass
+    if (meta.isEmpty) return noMeta
 
     // ONE aggregation pass over the (large) data side: its size is
     // bounded by grids x output times, never by record count
@@ -103,11 +113,6 @@ object Select {
         r.get(4) == true, r.get(5) == true, r.get(6) == true,
         r.get(7), r.get(8)))
 
-    // every column the kept rules and the pick read
-    val tie = tieColumns(g.columns.toSeq)
-    val idCols = (Seq("grid") ++ MetaSubset ++ DeformSubset ++ tie).distinct
-    val ids = metaSide.select(idCols.map(col): _*)
-    val meta = ids.collect().toSeq
     val kept = keptRows(groups, meta, idCols, tie)
     if (kept.isEmpty) return noMeta
 

@@ -179,18 +179,38 @@ object FstScan {
         else Seq((FstFileSlice(f), len))
     }
 
-    val parts = scala.collection.mutable.ArrayBuffer.empty[Seq[FstFileSlice]]
-    val cur = scala.collection.mutable.ArrayBuffer.empty[FstFileSlice]
-    var curBytes = 0L
-    slices.foreach { case (sl, len) =>
-      val cost = len + openCost
-      if (curBytes + cost > target && cur.nonEmpty) {
-        parts += cur.toSeq; cur.clear(); curBytes = 0L
+    // contiguous runs in listing order, so a scan's row order does not
+    // depend on the packing. Filling each run up to `target` can leave
+    // one run too many (12 equal files for 4 cores pack 3,3,2,2,2:
+    // five tasks, two waves), so the runs are balanced instead: the
+    // smallest budget that needs no more runs than total / target,
+    // unless a run would then exceed maxPartitionBytes
+    val units = slices.toIndexedSeq
+    val costs = units.map(_._2 + openCost)
+    def runs(budget: Long): Seq[Int] = { // run lengths, in order
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+      var n = 0
+      var bytes = 0L
+      costs.foreach { c =>
+        if (bytes + c > budget && n > 0) { out += n; n = 0; bytes = 0L }
+        n += 1; bytes += c
       }
-      cur += sl; curBytes += cost
+      if (n > 0) out += n
+      out.toSeq
     }
-    if (cur.nonEmpty) parts += cur.toSeq
-    parts.map(fs => FstInputPartition(fs): InputPartition).toArray
+    val want = (total + target - 1) / target
+    var lo = costs.maxOption.getOrElse(0L)
+    var hi = math.max(lo, costs.sum)
+    while (lo < hi) {
+      val mid = lo + (hi - lo) / 2
+      if (runs(mid).size <= want) hi = mid else lo = mid + 1
+    }
+    val lengths = if (lo <= maxBytes) runs(lo) else runs(target)
+    val starts = lengths.scanLeft(0)(_ + _)
+    lengths.indices.map { i =>
+      FstInputPartition(units.slice(starts(i), starts(i + 1)).map(_._1))
+        : InputPartition
+    }.toArray
   }
 
   /** Split-unit memo for the sub-file splitter: committed record

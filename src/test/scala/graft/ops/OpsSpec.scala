@@ -300,6 +300,19 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(5f, 6f, 7f, 8f, 1f, 2f, 3f, 4f))
   }
 
+  test("cube pick keeps the min-rid record of a duplicated level") {
+    // later copies of both TT levels, with other payloads, spread over
+    // partitions: each level's pick is still its lowest rid
+    val dup = mkCatalog().filter(col("nomvar") === "TT")
+      .withColumn("rid", col("rid") + 10)
+      .withColumn("d", transform(col("d"), x => x + 100f))
+    val cat = dup.unionByName(mkCatalog()).repartition(3)
+    val cube = Cubes.toCube(cat).filter(col("nomvar") === "TT").head()
+    assert(cube.getSeq[Float](cube.fieldIndex("levels")) == Seq(1.0f, 0.5f))
+    assert(cube.getSeq[Float](cube.fieldIndex("cube")) ==
+      Seq(5f, 6f, 7f, 8f, 1f, 2f, 3f, 4f))
+  }
+
   test("cube pick fails loudly on a null rid") {
     // min_by skips a null rid, which would leave a group of null rids
     // with a null `d`; the pick rejects it instead

@@ -52,6 +52,20 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.select("ip1").distinct().count() == 400)
   }
 
+  test("near-equal files pack into one balanced run per core, in order") {
+    import graft.sources.fst.{FstInputPartition, FstScan}
+    spark // packPartitions reads the active session's conf
+    // filling runs up to the target packs these 3,3,2,2,2: five tasks
+    // on four cores
+    val files = (0 until 12).map(i =>
+      (s"/nonexistent/part-$i%03d.fst", 3700000L + i * 1000L, 0L))
+    val parts = FstScan.packPartitions(files)
+      .map(_.asInstanceOf[FstInputPartition])
+    assert(parts.map(_.slices.size).toSeq == Seq(3, 3, 3, 3))
+    assert(parts.flatMap(_.slices.map(_.path)).toSeq == files.map(_._1))
+    assert(parts.forall(_.slices.forall(_.wholeFile)))
+  }
+
   test("one scan reads a directory mixing compact and XDF containers") {
     import graft.sources.fst.{FstFormat, XdfFormat}
     val path = "/tmp/graft_scan_spec_mixed"
