@@ -1,6 +1,8 @@
 package graft
 
+import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 
 /** The dev tool, on the [[GraftSession]] conf the bench and gate run:
   *
@@ -15,7 +17,9 @@ import org.apache.spark.sql.SparkSession
   *    deltas: the two values alternate run by run (A B A B ...) so both
   *    see the same drift, after one untimed run of each (plan codegen is
   *    per-variant and must not land on either's run 1).
-  *  - `plan <sfDir> <q..>` prints each query's formatted physical plan.
+  *  - `plan <sfDir> <q..>` prints each query's formatted physical plan,
+  *    with the ids that vary between runs of the same code renumbered
+  *    ([[stableIds]]), so two dumps of the same code diff empty.
   *
   * Every timed run is a full `write.format("noop")` of the query's
   * result, so no projection or aggregate is pruned away as under
@@ -71,9 +75,46 @@ object Tool {
     case "plan" :: sfDir :: names if names.nonEmpty =>
       names.foreach { q =>
         println(s"\n========== $q ==========")
-        SparkEntry.queries(q)(spark, sfDir).explain("formatted")
+        println(stableIds(SparkEntry.queries(q)(spark, sfDir)
+          .queryExecution.explainString(ExplainMode.fromString("formatted"))))
       }
     case _ => throw new IllegalArgumentException(usage)
+  }
+
+  /** `plan` with its run-dependent ids renumbered in order of first
+    * appearance: AQE query-stage ids (the `Arguments` of a
+    * `...QueryStage` node), whole-stage-codegen ids, exchange
+    * `plan_id`s and expression ids. AQE creates sibling stages, and
+    * plans their codegen stages, in whichever order their inputs
+    * finish, and the other two count every plan the session made.
+    */
+  def stableIds(plan: String): String = {
+    final class Ids(first: Int) {
+      private val seen = mutable.Map[String, Int]()
+      def apply(id: String): String =
+        seen.getOrElseUpdate(id, first + seen.size).toString
+    }
+    val (stage, codegen, exchange, expr) =
+      (new Ids(0), new Ids(1), new Ids(0), new Ids(0))
+    val node = """^\(\d+\) (\w+)""".r.unanchored
+    var inStage = false
+    plan.split("\n", -1).map { line =>
+      line match {
+        case node(name) => inStage = name.endsWith("QueryStage")
+        case _ =>
+      }
+      val l = if (inStage) """^Arguments: (\d+)$""".r.replaceAllIn(line,
+        m => s"Arguments: ${stage(m.group(1))}") else line
+      Seq[(scala.util.matching.Regex, String => String)](
+        """(\[codegen id : )(\d+)""".r -> (codegen(_)),
+        """(\*\()(\d+)(?=\))""".r -> (codegen(_)),
+        """(\[plan_id=)(\d+)""".r -> (exchange(_)),
+        """(#)(\d+)""".r -> (expr(_))
+      ).foldLeft(l) { case (acc, (re, ids)) =>
+        re.replaceAllIn(acc, m => scala.util.matching.Regex.quoteReplacement(
+          m.group(1) + ids(m.group(2))))
+      }
+    }.mkString("\n")
   }
 
   /** Untimed warm-up: JVM, codegen and session start-up must not land

@@ -164,19 +164,23 @@ object Select {
   private def same(a: Any, b: Any): Boolean =
     a != null && b != null && a == b
 
-  /** Spark's ascending sort order: nulls first, strings by UTF-8 bytes. */
-  private object ValueOrder extends Ordering[Any] {
+  /** Spark's ascending sort order: nulls first, strings by UTF-8 bytes,
+    * structs field by field.
+    */
+  private[ops] object ValueOrder extends Ordering[Any] {
     def compare(a: Any, b: Any): Int = (a, b) match {
       case (null, null) => 0
       case (null, _) => -1
       case (_, null) => 1
       case (x: String, y: String) =>
         UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case (x: Row, y: Row) => x.toSeq.iterator.zip(y.toSeq)
+        .map { case (p, q) => compare(p, q) }.find(_ != 0).getOrElse(0)
       case (x, y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
     }
   }
 
-  private def minOf(xs: Seq[Any]): Any =
+  private[ops] def minOf(xs: Seq[Any]): Any =
     xs.filter(_ != null).minOption(ValueOrder).orNull
 
   /** The kept meta records, one per MetaSubset key: the J3 deformation

@@ -79,19 +79,18 @@ object UnitConvert {
         throw new IllegalArgumentException(s"unknown unit $toUnit"))
     val g = if (df.columns.contains("unit")) df
             else Decode.addUnitAndDescription(df)
-    val meta = g.filter(col("nomvar").isin(VCoord.VcMeta: _*))
-    val data = g.filter(!col("nomvar").isin(VCoord.VcMeta: _*))
 
     val units = broadcast(Lookups.unitsDf(g.sparkSession).select(
       col("unit_name").as("fu_name"),
       col("unit_expression").as("fu_expr"),
       col("unit_factor").as("fu_factor")))
 
-    val joined = data.join(units, col("unit") === col("fu_name"), "left")
-    val convertible = col("fu_name").isNotNull &&
+    // one pass over the input: meta records are never convertible
+    val convertible = !col("nomvar").isin(VCoord.VcMeta: _*) &&
+      col("fu_name").isNotNull &&
       col("unit") =!= toUnit && col("unit") =!= "scalar" &&
       lit(toUnit) =!= "scalar" && col("fu_expr") === toExpr
-    val converted = joined
+    g.join(units, col("unit") === col("fu_name"), "left")
       .withColumn("d",
         when(convertible, GraftFunctions.unitConvert(col("d"),
           col("fu_name"), col("fu_factor"), toName, toFactor))
@@ -100,10 +99,6 @@ object UnitConvert {
       .withColumn("unit",
         when(convertible, lit(toUnit)).otherwise(col("unit")))
       .drop("fu_name", "fu_expr", "fu_factor")
-
-    converted.unionByName(
-      meta.withColumn("unit_converted", lit(false)),
-      allowMissingColumns = true)
   }
 
   /** `standard_unit=True` mode (/root/reference/fstpy/unit.py:258-313):
@@ -120,8 +115,6 @@ object UnitConvert {
       "nomvar", "d")
     val g = if (df.columns.contains("unit")) df
             else Decode.addUnitAndDescription(df)
-    val meta = g.filter(col("nomvar").isin(VCoord.VcMeta: _*))
-    val data = g.filter(!col("nomvar").isin(VCoord.VcMeta: _*))
 
     def u(prefix: String) = broadcast(
       Lookups.unitsDf(g.sparkSession).select(
@@ -132,11 +125,13 @@ object UnitConvert {
     val std = broadcast(Lookups.stdvarDf(g.sparkSession).select(
       col("nomvar").as("sv_nomvar"), col("unit").as("sv_unit")))
 
-    val joined = data
+    val joined = g
       .join(u("fu"), col("unit") === col("fu_name"), "left")
       .join(std, col("nomvar") === col("sv_nomvar"), "left")
       .join(u("tu"), col("sv_unit") === col("tu_name"), "left")
-    val convertible = col("fu_name").isNotNull &&
+    // one pass over the input: meta records are never convertible
+    val convertible = !col("nomvar").isin(VCoord.VcMeta: _*) &&
+      col("fu_name").isNotNull &&
       col("tu_name").isNotNull && col("unit") =!= col("tu_name") &&
       col("unit") =!= "scalar" && col("tu_name") =!= "scalar" &&
       col("fu_expr") === col("tu_expr")
@@ -152,7 +147,5 @@ object UnitConvert {
       .drop("fu_name", "fu_expr", "fu_bias", "fu_factor",
         "sv_nomvar", "sv_unit",
         "tu_name", "tu_expr", "tu_bias", "tu_factor")
-      .unionByName(meta.withColumn("unit_converted", lit(false)),
-        allowMissingColumns = true)
   }
 }

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.core.IpCodec
 import graft.meta.Lookups
 
 /** Vertical-coordinate classification (M8, set_vertical_coordinate_type,
@@ -9,13 +12,20 @@ import graft.meta.Lookups
   * (M2-M5, /root/reference/fstpy/quick_pressure.py:18-83 + pressure
   * formulas /root/reference/fstpy/std_vgrid.py:328-512).
   *
-  * Scale shape: classification joins a distinct (grid, ip1_kind) set
-  * against per-grid meta summaries and the 26-row rules table — all
-  * broadcast; the wide data side is touched once with a broadcast join
-  * to pick up its vctype. QuickPressure derives one PX row per distinct
-  * (grid, vctype, datev, ip1): the payload math runs on the SMALL
-  * level-set side joined with the single P0/PT field per group, never
-  * shuffling data payloads.
+  * Scale shape: like the reference, both operators decide from a few
+  * descriptor rows, on the driver. When called they collect the
+  * metadata of the `VcMeta` records (QuickPressure with the `!!` tables
+  * and HY's first element, and in the same collect the data side's
+  * per-(grid, ip1_kind, datev, ip1) groups, each with its min-rid
+  * metadata). Plain Scala then classifies the grids and picks the PX
+  * levels. The returned plans carry those results as rows of a small
+  * local frame, never as literals, so their shape and generated code do
+  * not depend on the records, and nothing is persisted. Classification
+  * is one projection of the input with one broadcast join; QuickPressure
+  * meets its PX rows with the lowest-rid P0/PT payload per (grid,
+  * datev) in one aggregation and runs the payload math in Spark. The
+  * input must be a deterministic batch frame: the plans read it again
+  * when evaluated (DESIGN.md "QuickPressure on the driver").
   */
 object VCoord {
 
@@ -26,79 +36,102 @@ object VCoord {
     when(col("nomvar").isin(graft.core.Constants.RawIpNomvars: _*), lit(100))
       .otherwise(IpColumns.decodeKind(col("ip1")))
 
+  /** The input with `grid` and `ip1_kind`, each kept when present. */
+  private def enrich(df: DataFrame): DataFrame = {
+    val g = if (df.columns.contains("grid")) df else Decode.addGrid(df)
+    if (g.columns.contains("ip1_kind")) g
+    else g.withColumn("ip1_kind", ip1KindCol)
+  }
+
+  /** What the VCTYPES rules read of one grid's meta records: the nomvars
+    * present and, when it has `!!` records, their sorted distinct
+    * non-null vcodes (ig1).
+    */
+  private final case class GridMeta(nomvars: Set[String],
+                                    vcodes: Option[Seq[Int]])
+
+  private val NoMeta = GridMeta(Set.empty, None)
+
+  /** Per-grid summaries of collected meta rows (their grid, nomvar and
+    * ig1). A null grid matches no data record (an equi-join key), so it
+    * is left out.
+    */
+  private def gridMeta(rows: Seq[Row]): Map[Any, GridMeta] =
+    rows.filter(_.getAs[Any]("grid") != null).groupBy(_.getAs[Any]("grid"))
+      .map { case (grid, rs) =>
+        val tt = rs.filter(_.getAs[String]("nomvar") == "!!")
+        grid -> GridMeta(rs.map(_.getAs[String]("nomvar")).toSet,
+          if (tt.isEmpty) None
+          else Some(tt.flatMap(r => Option(r.getAs[Any]("ig1")))
+            .map(_.asInstanceOf[Number].intValue).distinct.sorted))
+      }
+
+  /** The rule for a data level of kind `kind` on a grid: the grid's
+    * flags and vcode against the 26-row rules table. The vcode is the
+    * grid's only `!!` vcode, or, among several, the first whose
+    * thousands digit is the level's kind (-1 when none is); a grid
+    * without `!!` reads -1. A grid whose `!!` records have no vcode has
+    * none and stays UNKNOWN. No rule matches: UNKNOWN.
+    */
+  private def vctypeOf(m: GridMeta, kind: Int): String = {
+    val vcodes = m.vcodes.getOrElse(Seq(-1))
+    val vcode =
+      if (vcodes.size > 1)
+        vcodes.find(v => math.floor(v / 1000.0).toInt == kind).orElse(Some(-1))
+      else vcodes.headOption
+    def has(nomvar: String) = m.nomvars(nomvar)
+    Lookups.VcTypes.collectFirst {
+      case (k, tt, p0, e1, pt, hy, sf, code, vctype) if k == kind &&
+        tt == has("!!") && p0 == has("P0") && e1 == has("E1") &&
+        pt == has("PT") && hy == has("HY") && sf == has("!!SF") &&
+        vcode.contains(code) => vctype
+    }.getOrElse("UNKNOWN")
+  }
+
+  private val RuleKinds: Seq[Int] = Lookups.VcTypes.map(_._1).distinct
+
+  /** vctype of a data level on a grid without meta records. It depends
+    * on the kind alone, so it is a fixed expression of the rules table.
+    */
+  private def noMetaVctype(kind: Column): Column =
+    RuleKinds.map(k => k -> vctypeOf(NoMeta, k)).filter(_._2 != "UNKNOWN")
+      .foldLeft(lit("UNKNOWN")) { case (acc, (k, v)) =>
+        when(kind === k, lit(v)).otherwise(acc)
+      }
+
   /** M8: classify each (grid, ip1_kind) data group into a vctype via
     * per-grid meta existence flags + the VCTYPES rules table; meta rows
-    * are tagged UNKNOWN.
+    * are tagged UNKNOWN. Collects the meta records' (grid, nomvar, ig1)
+    * when called.
     */
   def setVerticalCoordinateType(df: DataFrame): DataFrame = {
     graft.core.Checks.requireColumns(df, "set_vertical_coordinate_type",
       "nomvar", "ip1", "ip2", "ig1", "ig2")
-    // Enrich grid/ip1_kind on the WHOLE input up front so the
-    // NaN-repair split below carries identical columns on both
-    // branches (pass-through rows must not end up with null grid).
-    val g0 = if (df.columns.contains("grid")) df else Decode.addGrid(df)
-    val g1 = if (g0.columns.contains("ip1_kind")) g0
-             else g0.withColumn("ip1_kind", ip1KindCol)
-    // NaN-repair path (std_vgrid.py:638-646): when a vctype column is
-    // already present, re-classify only the rows where it is missing
-    // and pass the correctly-tagged rows through.
-    if (g1.columns.contains("vctype")) {
-      val missing = g1.filter(col("vctype").isNull).drop("vctype")
-      val correct = g1.filter(col("vctype").isNotNull)
-      return setVerticalCoordinateType(missing).unionByName(correct)
-    }
-    val g = g1
-    // meta subset is small by construction and feeds three branches
-    // (flags, vcodes, output union): cache it so the input catalog is
-    // not re-scanned per branch and the composed plan stays shallow
-    val meta = g.filter(col("nomvar").isin(VcMeta: _*))
-      .transform(graft.core.CacheRegistry.persist(_))
-    val noMeta = g.filter(!col("nomvar").isin(VcMeta: _*))
-
-    val flags = meta.groupBy("grid").agg(
-      max(col("nomvar") === "!!").as("f_toctoc"),
-      max(col("nomvar") === "P0").as("f_p0"),
-      max(col("nomvar") === "E1").as("f_e1"),
-      max(col("nomvar") === "PT").as("f_pt"),
-      max(col("nomvar") === "HY").as("f_hy"),
-      max(col("nomvar") === "!!SF").as("f_sf"))
-    val vcodes = meta.filter(col("nomvar") === "!!")
-      .groupBy("grid").agg(sort_array(collect_set(col("ig1"))).as("vcodes"))
-
-    val rules = Lookups.vctypesDf(g.sparkSession)
-      .withColumnRenamed("ip1_kind", "r_kind")
-      .withColumnRenamed("vctype", "r_vctype")
-
-    val gk = noMeta.select("grid", "ip1_kind").distinct()
-      .join(flags, Seq("grid"), "left")
-      .join(vcodes, Seq("grid"), "left")
-      .na.fill(false,
-        Seq("f_toctoc", "f_p0", "f_e1", "f_pt", "f_hy", "f_sf"))
-      .withColumn("vcodes", coalesce(col("vcodes"), array(lit(-1))))
-      .withColumn("this_vcode",
-        when(size(col("vcodes")) > 1,
-          coalesce(element_at(
-            filter(col("vcodes"),
-              v => floor(v / lit(1000)).cast("int") === col("ip1_kind")),
-            1), lit(-1)))
-          .otherwise(element_at(col("vcodes"), 1)))
-      .join(broadcast(rules),
-        col("ip1_kind") === col("r_kind") &&
-          col("f_toctoc") === col("toctoc") &&
-          col("f_p0") === col("P0") && col("f_e1") === col("E1") &&
-          col("f_pt") === col("PT") && col("f_hy") === col("HY") &&
-          col("f_sf") === col("SF") &&
-          col("this_vcode") === col("vcode"), "left")
-      .select(col("grid").as("vg_grid"), col("ip1_kind").as("vg_kind"),
-        coalesce(col("r_vctype"), lit("UNKNOWN")).as("vctype"))
-
-    val dataTagged = noMeta
-      .join(broadcast(gk),
+    require(!df.isStreaming, "set_vertical_coordinate_type collects the " +
+      "meta records and needs a batch frame")
+    val g = enrich(df)
+    // NaN-repair path (std_vgrid.py:638-646): a vctype already present
+    // is kept; the other rows are classified from the meta records that
+    // have none
+    val preset = g.columns.contains("vctype")
+    val unset = if (preset) col("vctype").isNull else lit(true)
+    val isMeta = col("nomvar").isin(VcMeta: _*)
+    val grids = gridMeta(g.filter(isMeta && unset)
+      .select("grid", "nomvar", "ig1").collect().toSeq)
+    val table = g.sparkSession.createDataFrame(
+      (for ((grid, m) <- grids.toSeq; k <- RuleKinds)
+        yield Row(grid, k, vctypeOf(m, k))).asJava,
+      StructType(Seq(StructField("vg_grid", g.schema("grid").dataType),
+        StructField("vg_kind", IntegerType),
+        StructField("vg_vctype", StringType))))
+    val classified = when(isMeta || col("grid").isNull, lit("UNKNOWN"))
+      .otherwise(coalesce(col("vg_vctype"), noMetaVctype(col("ip1_kind"))))
+    g.join(broadcast(table),
         col("grid") === col("vg_grid") && col("ip1_kind") === col("vg_kind"),
         "left")
-      .drop("vg_grid", "vg_kind")
-      .withColumn("vctype", coalesce(col("vctype"), lit("UNKNOWN")))
-    dataTagged.unionByName(meta.withColumn("vctype", lit("UNKNOWN")))
+      .select(g.columns.toSeq.filter(_ != "vctype").map(col) :+
+        (if (preset) coalesce(col("vctype"), classified) else classified)
+          .as("vctype"): _*)
   }
 
   /** DuckDB twin: (grid, ip1_kind, vctype) classification rows for the
@@ -147,6 +180,24 @@ object VCoord {
 
   val StandardAtmosphere = 1013.25
 
+  private val HybridToctoc =
+    Seq("HYBRID_5002", "HYBRID_5003", "HYBRID_5004", "HYBRID_5005")
+
+  /** Metadata cloned into a PX record from its group's min-rid record. */
+  private val RepCols = Seq("typvar", "ni", "nj", "nk", "dateo", "ip2",
+    "ip3", "deet", "npas", "grtyp", "ig1", "ig2", "ig3", "ig4")
+
+  /** Spark's `element_at` of a collected array, 1-based, negative from
+    * the end; null when out of range.
+    */
+  private def at(xs: Seq[Any], i: Int): Any = {
+    val j = if (i > 0) i - 1 else xs.size + i
+    if (j >= 0 && j < xs.size) xs(j) else null
+  }
+
+  private def toDouble(x: Any): java.lang.Double =
+    if (x == null) null else x.asInstanceOf[Number].doubleValue
+
   /** M2-M5 QuickPressure: one PX record per (grid, vctype, datev,
     * level), payload from the group's P0/PT fields:
     * sigma 1001 `p = lvl*P0`; eta 1002 `p = lvl*(P0-PT)+PT`;
@@ -155,11 +206,19 @@ object VCoord {
     * round identically for the single-multiply cases).
     * Container metadata is cloned from the group's minimum-rid row
     * (deterministic stand-in for the reference's first-row clone).
+    *
+    * One small collect runs when it is called: the meta records'
+    * metadata with the `!!` tables and HY's first element, together
+    * with the data side's level groups without `d`. The P0 and PT
+    * payloads are picked in the returned plan, by the lowest rid per
+    * (grid, datev).
     */
   def quickPressure(df: DataFrame,
                     standardAtmosphere: Boolean = false): DataFrame = {
     graft.core.Checks.requireColumns(df, "quick_pressure", "nomvar",
       "ip1", "datev", "d", "ni", "nj", "nbits", "datyp")
+    require(!df.isStreaming,
+      "quick_pressure collects its PX levels and needs a batch frame")
     // deterministic clone tiebreak: rid if present, else the FST
     // source's (path, key) pair — key alone is only unique within one
     // file, so a multi-file catalog needs the path in the ordering.
@@ -173,124 +232,165 @@ object VCoord {
             struct(col("path"), col("key").cast("long")))
         else df.withColumn("rid", col("key").cast("long"))
       }
-    val vc = setVerticalCoordinateType(df0)
-    // The meta subset is small (coordinate/descriptor records) but
-    // feeds four lookups below; persisting it keeps the classification
-    // joins + full-catalog scan from re-running per lookup.
-    val meta = vc.filter(col("nomvar").isin(VcMeta: _*))
-      .transform(graft.core.CacheRegistry.persist(_))
-    // r14: EAGER materialization of this cache and perLevel (one
-    // count() each before the plan fans out) was applied and paired-
-    // A/B'd (AbProfile, 7 reps, sf0.1): eager LOST — f19 median 4.11
-    // vs 2.94 s lazy, f46 3.22 vs 2.50 (best-of-7 agrees). The two
-    // extra serialized fill jobs cost more than the lazy "race":
-    // within one action, BlockManager's per-block get-or-compute
-    // locking already makes concurrent legs share each cache fill,
-    // so the feared f20-style duplicate subtree evaluation does not
-    // materialize here. (The eager build also planned 6 SortMergeJoin
-    // as 12 static BroadcastHashJoin from known cache sizes —
-    // plans/r14/f19_quick_pressure_{before,after}.txt — and still
-    // lost: AQE converts those joins at runtime anyway.) Lazy kept.
-    val data = vc.filter(!col("nomvar").isin(VcMeta: _*))
-      .filter(col("ip1") =!= 0 && col("vctype") =!= "UNKNOWN" &&
+    val g = enrich(df0)
+    val preset = g.columns.contains("vctype")
+    // min_by: the value at the lowest non-null rid, if any
+    def minByRid[T](xs: Seq[(Any, T)]): Option[T] = xs.filter(_._1 != null)
+      .minByOption(_._1)(Select.ValueOrder).map(_._2)
+
+    // One collect of two parts. The meta records' metadata, with the
+    // `!!` tables and HY's first element:
+    val metaDf = g.filter(col("nomvar").isin(VcMeta: _*)).select(
+      col("grid"), col("nomvar"), col("ig1"), col("ig2"), col("nj"),
+      col("rid"),
+      (if (preset) col("vctype").isNull else lit(true)).as("unset"),
+      when(col("nomvar") === "!!", col("d")).as("tt_d"),
+      when(col("nomvar") === "HY", element_at(col("d"), 1)).as("hy_top"))
+    // and the data side's levels, one row per group with its min-rid
+    // clone (a null nomvar marks them)
+    val keys = Seq("grid", "ip1_kind") ++
+      (if (preset) Seq("vctype") else Nil) ++ Seq("datev", "ip1")
+    val groupDf = g
+      .filter(!col("nomvar").isin(VcMeta: _*) && col("ip1") =!= 0 &&
         !col("nomvar").isin("PX", "PXSA"))
+      .groupBy(keys.map(col): _*)
+      .agg(min_by(struct((col("rid") +: RepCols.map(col)): _*), col("rid"))
+        .as("rep"))
+    val (meta, groupRows) = metaDf
+      .unionByName(groupDf, allowMissingColumns = true).collect().toSeq
+      .partition(_.getAs[String]("nomvar") != null)
+    def metaOf(nomvar: String) =
+      meta.filter(_.getAs[String]("nomvar") == nomvar)
+    val grids = gridMeta(meta.filter(_.getAs[Boolean]("unset")))
+    // the grid's lowest-rid `!!` table (column j = (ip1, A, B), Fortran
+    // (3 x nj); pref lives at d[1][1] — std_vgrid.py:276-282)
+    val tables: Map[Any, (Seq[Any], Any)] = metaOf("!!")
+      .filter(_.getAs[Any]("grid") != null).groupBy(_.getAs[Any]("grid"))
+      .flatMap { case (grid, rs) =>
+        minByRid(rs.map(r => r.getAs[Any]("rid") -> r)).map(r => grid -> (
+          Option(r.getAs[scala.collection.Seq[Any]]("tt_d")).map(_.toSeq)
+            .orNull, r.getAs[Any]("nj")))
+      }
+    // grid-less HY descriptor: ptop/pref/rcoef (std_vgrid.py:440-445),
+    // each the minimum over the HY records
+    val hyRow = Seq("hy_top", "ig1", "ig2")
+      .map(c => Select.minOf(metaOf("HY").map(_.getAs[Any](c))))
+    val hyPref = hyRow(1)
 
-    val repCols = Seq("typvar", "ni", "nj", "nk", "dateo", "ip2", "ip3",
-      "deet", "npas", "grtyp", "ig1", "ig2", "ig3", "ig4")
-    // ONE aggregation pass over the (large) data side: one row per
-    // distinct level group, carrying that group's min-rid metadata
-    // clone. Both `reps` and `levels` derive from this tiny persisted
-    // table, so payload-bearing rows are scanned once, not twice.
-    val perLevel = data
-      .groupBy("grid", "vctype", "datev", "ip1").agg(
-        min("rid").as("lrid"),
-        min_by(struct(repCols.map(col): _*), col("rid")).as("lrep"))
-      .transform(graft.core.CacheRegistry.persist(_))
-    val reps = perLevel.groupBy("grid", "vctype", "datev").agg(
-      min_by(col("lrep"), col("lrid")).as("rep"))
-      .select(col("grid"), col("vctype"), col("datev"),
-        col("rep.*"))
+    val repType = groupDf.schema("rep").dataType.asInstanceOf[StructType]
+    final case class Level(grid: Any, vctype: String, datev: Any, ip1: Any,
+                           rid: Any, rep: Row)
+    val groups = groupRows.map { r =>
+      val grid = r.getAs[Any]("grid")
+      val kind = r.getAs[Any]("ip1_kind")
+      val given = if (preset) r.getAs[String]("vctype") else null
+      val vctype =
+        if (given != null) given
+        else if (grid == null || kind == null) "UNKNOWN"
+        else vctypeOf(grids.getOrElse(grid, NoMeta),
+          kind.asInstanceOf[Number].intValue)
+      val rep = r.getAs[Row]("rep")
+      Level(grid, vctype, r.getAs[Any]("datev"), r.getAs[Any]("ip1"),
+        Option(rep).map(_.get(0)).orNull, rep)
+    }.filter(l => l.vctype != "UNKNOWN" && l.grid != null && l.datev != null)
+    // a level of two kinds with one vctype is one level; the group of a
+    // (grid, vctype, datev) clones its overall min-rid record
+    val levels = groups.groupBy(l => (l.grid, l.vctype, l.datev, l.ip1))
+      .values.map(ls => minByRid(ls.map(l => l.rid -> l)).getOrElse(ls.head))
+      .toSeq
+    val reps = levels.groupBy(l => (l.grid, l.vctype, l.datev)).map {
+      case (k, ls) => k -> minByRid(ls.map(l => l.rid -> l.rep)).orNull
+    }
 
-    val levels = perLevel.select("grid", "vctype", "datev", "ip1")
-      .withColumn("level", IpColumns.decodeValue(col("ip1")))
+    val rows = levels.flatMap { l =>
+      val ip1 = l.ip1.asInstanceOf[Number].intValue
+      val (ttD, ttNj) = tables.getOrElse(l.grid, (null, null))
+      // J1: the level's column in the `!!` table, 1-based, 0 if absent
+      val jidx =
+        if (ttD == null || ttNj == null) 0
+        else {
+          val last = ttNj.asInstanceOf[Number].intValue - 1
+          val js = if (last >= 0) 0 to last else 0 to last by -1
+          js.map(j => at(ttD, j * 3 + 1)).indexWhere(v =>
+            v != null && v.asInstanceOf[Number].doubleValue.toInt == ip1) + 1
+        }
+      val keep = l.vctype match {
+        case "SIGMA_1001" | "ETA_1002" | "PRESSURE_2001" => true
+        case "HYBRID_5001" => hyPref != null
+        case v => HybridToctoc.contains(v) && ttD != null && jidx > 0
+      }
+      // hybrid 5002-5005 table coefficients (std_vgrid.py:276-295)
+      val tt =
+        if (keep && HybridToctoc.contains(l.vctype))
+          Seq((jidx - 1) * 3 + 2, (jidx - 1) * 3 + 3, 5)
+            .map(i => toDouble(at(ttD, i)))
+        else Seq(null, null, null)
+      val rep = Option(reps((l.grid, l.vctype, l.datev)))
+      if (!keep) None
+      else Some(Row.fromSeq(Seq(l.grid, l.vctype, l.datev, l.ip1,
+        IpCodec.decodeValue(ip1)) ++
+        RepCols.indices.map(i => rep.map(_.get(i + 1)).orNull) ++
+        hyRow ++ tt))
+    }
+    val schema = StructType((
+      Seq("grid", "vctype", "datev", "ip1").map(c => StructField(c,
+        if (c == "vctype") StringType else g.schema(c).dataType)) ++
+      Seq(StructField("level", FloatType)) ++ repType.fields.drop(1) ++
+      Seq(StructField("hy_ptop", metaDf.schema("hy_top").dataType),
+        StructField("hy_pref", metaDf.schema("ig1").dataType),
+        StructField("hy_rc", metaDf.schema("ig2").dataType),
+        StructField("tt_a", DoubleType), StructField("tt_b", DoubleType),
+        StructField("tt_pref", DoubleType))).map(_.copy(nullable = true)))
 
-    // Descriptor sides are deduplicated to one row per join key
-    // (deterministic lowest-rid pick): duplicate P0/PT/!! records —
-    // e.g. overlapping files read before a dedup pass — must not fan
-    // the emitted PX rows out; the reference clones from the single
-    // first matching row.
-    val p0s = meta.filter(col("nomvar") === "P0")
-      .groupBy(col("grid").as("p_grid"), col("datev").as("p_datev"))
-      .agg(min_by(struct(col("d"), col("nbits"), col("datyp")),
-        col("rid")).as("r"))
-      .select(col("p_grid"), col("p_datev"), col("r.d").as("p0_d"),
-        col("r.nbits").as("p0_nbits"), col("r.datyp").as("p0_datyp"))
-    val pts = meta.filter(col("nomvar") === "PT")
-      .groupBy(col("grid").as("t_grid"), col("datev").as("t_datev"))
-      .agg(min_by(col("d"), col("rid")).as("pt_d"))
-    // J1: the `!!` A/B table of the grid (column j = (ip1, A, B),
-    // Fortran (3 x nj); pref lives at d[1][1] — std_vgrid.py:276-282)
-    val tts = meta.filter(col("nomvar") === "!!")
-      .groupBy(col("grid").as("g_tt"))
-      .agg(min_by(struct(col("d"), col("nj")), col("rid")).as("r"))
-      .select(col("g_tt"), col("r.d").as("tt_d"),
-        col("r.nj").as("tt_nj"))
-    // grid-less HY descriptor: ptop/pref/rcoef (std_vgrid.py:440-445);
-    // the global aggregate always yields one row (nulls when absent)
-    val hyAgg = meta.filter(col("nomvar") === "HY").agg(
-      min(element_at(col("d"), 1)).as("hy_ptop"),
-      min(col("ig1")).as("hy_pref"),
-      min(col("ig2")).as("hy_rc"))
+    // The PX rows meet the P0 and PT records of their (grid, datev) in
+    // one aggregation, so the plan has one exchange. It keeps the
+    // lowest-rid P0 and PT, so duplicates (e.g. overlapping files read
+    // before a dedup pass) do not fan the PX rows out. Every PX record
+    // but a pressure one needs its P0 (and an eta one its PT).
+    def lowest(nomvar: String) = when(col("nomvar") === nomvar, col("rid"))
+    val px = g.sparkSession.createDataFrame(rows.asJava, schema)
+    g.filter(col("nomvar").isin("P0", "PT"))
+      .select("grid", "datev", "nomvar", "rid", "d", "nbits", "datyp")
+      .unionByName(px.select(col("grid"), col("datev"),
+        struct(px.columns.toSeq.map(col): _*).as("px")),
+        allowMissingColumns = true)
+      .groupBy("grid", "datev")
+      .agg(min_by(struct(col("d"), col("nbits"), col("datyp")), lowest("P0"))
+          .as("p0"),
+        min_by(col("d"), lowest("PT")).as("pt_d"),
+        collect_list(col("px")).as("pxs"))
+      .select(explode(col("pxs")).as("px"), col("p0.d").as("p0_d"),
+        col("p0.nbits").as("p0_nbits"), col("p0.datyp").as("p0_datyp"),
+        col("pt_d"))
+      .select(col("px.*"), col("p0_d"), col("p0_nbits"), col("p0_datyp"),
+        col("pt_d"))
+      .filter(col("vctype") === "PRESSURE_2001" || (col("p0_d").isNotNull &&
+        (col("vctype") =!= "ETA_1002" || col("pt_d").isNotNull)))
+      .select(
+        lit(if (standardAtmosphere) "PXSA" else "PX").as("nomvar"),
+        col("typvar"), lit("PRESSR").as("etiket"),
+        col("ni"), col("nj"), col("nk"), col("dateo"), col("ip1"),
+        col("ip2"), col("ip3"), col("deet"), col("npas"),
+        when(col("vctype") === "PRESSURE_2001", lit(5))
+          .otherwise(col("p0_datyp")).as("datyp"),
+        when(col("vctype") === "PRESSURE_2001", lit(32))
+          .otherwise(col("p0_nbits")).as("nbits"),
+        col("grtyp"), col("ig1"), col("ig2"), col("ig3"), col("ig4"),
+        col("datev"), col("grid"), col("vctype"), col("level"),
+        pressure(standardAtmosphere).as("d"))
+  }
 
-    val HybridToctoc =
-      Seq("HYBRID_5002", "HYBRID_5003", "HYBRID_5004", "HYBRID_5005")
-
-    // Join strategy (r13 optimization pass, examined and LEFT ALONE):
-    // the descriptor/rep sides here are metadata-bounded and look like
-    // broadcast candidates, but AQE (on in every driving session)
-    // already converts these joins at runtime from their actual sizes;
-    // explicit broadcast()/shuffle_hash hints were paired-A/B'd
-    // (AbProfile, 8 reps, sf0.1) and measured neutral-to-worse — the
-    // extra eager broadcast-build jobs cost more than the saved
-    // conversion. OPTIMIZATION_r13.md "f19/f46" has the numbers.
-    val joined = levels
-      .join(reps, Seq("grid", "vctype", "datev"))
-      .join(p0s, col("grid") === col("p_grid") &&
-        col("datev") === col("p_datev"), "left")
-      .join(pts, col("grid") === col("t_grid") &&
-        col("datev") === col("t_datev"), "left")
-      .join(tts, col("grid") === col("g_tt"), "left")
-      .crossJoin(broadcast(hyAgg))
-      .withColumn("jidx", coalesce(array_position(
-        transform(sequence(lit(0), col("tt_nj") - 1),
-          j => element_at(col("tt_d"), (j * 3 + 1).cast("int"))
-            .cast("int")),
-        col("ip1")), lit(0L)))
-      .filter(
-        (col("vctype") === "SIGMA_1001" && col("p0_d").isNotNull) ||
-        (col("vctype") === "ETA_1002" && col("p0_d").isNotNull &&
-          col("pt_d").isNotNull) ||
-        (col("vctype") === "HYBRID_5001" && col("p0_d").isNotNull &&
-          col("hy_pref").isNotNull) ||
-        (col("vctype").isin(HybridToctoc: _*) &&
-          col("p0_d").isNotNull && col("tt_d").isNotNull &&
-          col("jidx") > 0) ||
-        (col("vctype") === "PRESSURE_2001"))
-
+  /** The PX payload over the PX rows joined with their P0/PT payloads. */
+  private def pressure(standardAtmosphere: Boolean): Column = {
     val lvlD = col("level").cast("double")
     // hybrid 5001 coefficients (std_vgrid.py:464-476)
     val etatop = col("hy_ptop").cast("double") / col("hy_pref")
     val rcoef = col("hy_rc").cast("double") / lit(1000.0)
     val bb5001 = pow((lvlD - etatop) / (lit(1.0) - etatop), rcoef)
     val aa5001 = col("hy_pref") * (lvlD - bb5001)
-    // hybrid 5002-5005 table coefficients (std_vgrid.py:276-295)
-    val aTab = element_at(col("tt_d"),
-      ((col("jidx") - 1) * 3 + 2).cast("int")).cast("double")
-    val bTab = element_at(col("tt_d"),
-      ((col("jidx") - 1) * 3 + 3).cast("int")).cast("double")
-    val prefTab = element_at(col("tt_d"), 5).cast("double")
-
-    val dCol =
+    val aTab = col("tt_a")
+    val bTab = col("tt_b")
+    val prefTab = col("tt_pref")
       if (!standardAtmosphere)
         when(col("vctype") === "SIGMA_1001",
           transform(col("p0_d"),
@@ -333,19 +433,6 @@ object VCoord {
         .otherwise(array_repeat(col("level"),
           (col("ni") * col("nj")).cast("int")))
       }
-
-    joined.select(
-      lit(if (standardAtmosphere) "PXSA" else "PX").as("nomvar"),
-      col("typvar"), lit("PRESSR").as("etiket"),
-      col("ni"), col("nj"), col("nk"), col("dateo"), col("ip1"),
-      col("ip2"), col("ip3"), col("deet"), col("npas"),
-      when(col("vctype") === "PRESSURE_2001", lit(5))
-        .otherwise(col("p0_datyp")).as("datyp"),
-      when(col("vctype") === "PRESSURE_2001", lit(32))
-        .otherwise(col("p0_nbits")).as("nbits"),
-      col("grtyp"), col("ig1"), col("ig2"), col("ig3"), col("ig4"),
-      col("datev"), col("grid"), col("vctype"), col("level"),
-      dCol.as("d"))
   }
 
   /** M16 get_df_from_vgrid (/root/reference/fstpy/std_vgrid.py:749-791):

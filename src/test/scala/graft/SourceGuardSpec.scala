@@ -106,8 +106,7 @@ class SourceGuardSpec extends AnyFunSuite {
     // the list may only shrink (a removed site must leave it too):
     // each site is a persist inside a lazily returned plan that the
     // caller has to release
-    val allowed = Map("VCoord.scala" -> 3, "Masks.scala" -> 2,
-      "Grids.scala" -> 1)
+    val allowed = Map("Masks.scala" -> 2, "Grids.scala" -> 1)
     def code(f: java.io.File) = read(f).split("\n").map(_.trim)
       .filterNot(l => l.startsWith("*") || l.startsWith("//"))
     val calls = sources.filter(_.getPath.contains("/graft/ops/"))

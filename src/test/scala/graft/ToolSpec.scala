@@ -51,6 +51,49 @@ class ToolSpec extends AnyFunSuite {
       Tool.run(null, List("time", dir, "1", "zz_nope")))
   }
 
+  test("plan dumps renumber the ids that vary between runs") {
+    // the same plan twice: AQE created the two sibling stages (and
+    // planned their codegen stages) in the other order, and the session
+    // had made other plans before the second dump
+    def dump(stages: (Int, Int), codegen: (Int, Int), off: Int) = s"""
+      |== Physical Plan ==
+      |AdaptiveSparkPlan (9)
+      |+- == Final Plan ==
+      |   * SortMergeJoin Inner (8)
+      |   :- ShuffleQueryStage (3), Statistics(sizeInBytes=1.0 KiB)
+      |   +- ShuffleQueryStage (6), Statistics(sizeInBytes=2.0 KiB)
+      |(2) Exchange
+      |Input [1]: [k#${101 + off}L]
+      |Arguments: hashpartitioning(k#${101 + off}L, 4), ENSURE_REQUIREMENTS, [plan_id=${40 + off}]
+      |(3) ShuffleQueryStage
+      |Output [1]: [k#${101 + off}L]
+      |Arguments: ${stages._1}
+      |(4) Project [codegen id : ${codegen._1}]
+      |Output [1]: [k#${102 + off}L]
+      |(5) Exchange
+      |Arguments: hashpartitioning(k#${102 + off}L, 4), ENSURE_REQUIREMENTS, [plan_id=${41 + off}]
+      |(6) ShuffleQueryStage
+      |Output [1]: [k#${102 + off}L]
+      |Arguments: ${stages._2}
+      |(7) Sort [codegen id : ${codegen._2}]
+      |Arguments: [k#${101 + off}L ASC NULLS FIRST], false, 0
+      |(8) SortMergeJoin [codegen id : 3]
+      |Arguments: 4""".stripMargin
+    val a = dump((3, 4), (1, 2), 0)
+    val b = dump((4, 3), (2, 1), 7000)
+    assert(a != b)
+    val stable = Tool.stableIds(a)
+    assert(stable == Tool.stableIds(b), stable)
+    Seq("Arguments: 0", "Arguments: 1", "[codegen id : 1]",
+      "[codegen id : 3]", "[plan_id=0]", "[plan_id=1]", "k#0L", "k#1L",
+      // not a query stage's: left as it is
+      "(8) SortMergeJoin [codegen id : 3]\nArguments: 4").foreach { s =>
+      assert(stable.contains(s), s)
+    }
+    // a real difference still shows
+    assert(Tool.stableIds(a.replace("Inner", "LeftOuter")) != stable)
+  }
+
   test("bad arguments fail with the usage line") {
     val e = intercept[IllegalArgumentException](
       Tool.run(null, List("time", dir)))
