@@ -144,6 +144,52 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.core.CacheRegistry.releaseAll()
   }
 
+  test("mixed layout: appendIndex onto a bucketed index is probe-visible") {
+    val path = tmp("graft_mixed_spec")
+    NearDup.writeIndexBucketed(docsDf.filter(col("doc_id") < 20), path,
+      "graft_spec_mixed")
+    NearDup.appendIndex(docsDf.filter(col("doc_id") >= 20), path)
+    val viaIndex = collected(
+      NearDup.matchesAgainstIndex(spark, path, incomingDf))
+    val direct = collected(NearDup.matchesAgainst(docsDf, incomingDf))
+    assert(viaIndex == direct,
+      "an append onto a bucketed index must reach the bands it probes")
+    graft.core.CacheRegistry.releaseAll()
+  }
+
+  test("plain rebuild over a bucketed index leaves no bucketed files") {
+    val path = tmp("graft_relayout_spec")
+    NearDup.writeIndexBucketed(docsDf, path, "graft_spec_relayout")
+    val half = docsDf.filter(col("doc_id") >= 20)
+    NearDup.writeIndex(half, path)
+    val left = new java.io.File(path).list().toSet
+    assert(left == Set("signatures", "bands"),
+      s"a plain rebuild must delete the bucketed layout, left $left")
+    val viaIndex = collected(
+      NearDup.matchesAgainstIndex(spark, path, incomingDf))
+    val direct = collected(NearDup.matchesAgainst(half, incomingDf))
+    assert(viaIndex == direct, "the rebuilt index must serve only `half`")
+    graft.core.CacheRegistry.releaseAll()
+  }
+
+  test("appendIndex leaves no cached frame behind") {
+    import spark.implicits._
+    val path = tmp("graft_appendcache_spec")
+    NearDup.writeIndex(docsDf, path)
+    graft.core.CacheRegistry.releaseAll()
+    val registered = graft.core.CacheRegistry.size
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    (0 until 5).foreach { b =>
+      NearDup.appendIndex(Seq((3000L + b,
+        (1 to 25).map(j => s"ac${j}b$b").mkString(" ")))
+        .toDF("doc_id", "text"), path)
+    }
+    assert(graft.core.CacheRegistry.size == registered,
+      "appendIndex must not register its shingle cache")
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+      "appendIndex must unpersist its shingle cache")
+  }
+
   test("compactIndex: file count drops, probe output bit-identical") {
     val path = tmp("graft_compact_spec")
     NearDup.writeIndex(docsDf, path)
