@@ -124,17 +124,18 @@ object Api {
     * IncrementalCurationSpec verifies batch-for-batch against the
     * re-shingling reference loop.
     *
-    * `bucketedTable` routes the loop through the zero-exchange
-    * bucketed layout instead of the path layout: bootstrap with
-    * `NearDup.writeIndexBucketed(corpus, indexPath, table)` and pass
-    * the same table name — probes go through
-    * [[pipeline.NearDup.dedupAgainstBucketedIndex]] and appends
-    * through `appendIndexBucketed` (the two layouts elect identical
-    * survivors, including across a mid-loop compaction: ApiSpec
-    * "bucketed layout + compactEvery cadence", INDEXSOAK_r12.log
-    * phase 5). `compactEvery = Some(n)` runs the
-    * matching compaction after every n-th batch (by streaming
-    * batchId, so the cadence survives restarts) — the small-files
+    * The bootstrap's [[pipeline.IndexLayout]] carries through the
+    * loop: `NearDup.writeIndex(corpus, indexPath,
+    * IndexLayout.Bucketed(table))` gives a zero-exchange bucketed
+    * probe, and every append and compaction reads the layout back
+    * from `indexPath` (the two layouts elect identical survivors,
+    * including across a mid-loop compaction: ApiSpec "bucketed layout
+    * + compactEvery cadence", INDEXSOAK_r12.log phase 5). A bucketed
+    * index whose table is missing from the session catalog fails the
+    * start, naming `NearDup.registerBucketedIndex`.
+    * `compactEvery = Some(n)` runs a compaction after every n-th
+    * batch (by streaming batchId, so the cadence survives restarts) —
+    * the small-files
     * and tombstone debt stays bounded without a separate maintenance
     * scheduler. `compactAdvice = Some(thresholds)` is the
     * DATA-DRIVEN alternative (or complement): after each batch the
@@ -174,7 +175,6 @@ object Api {
                       threshold: Double = 0.5,
                       trigger: Option[org.apache.spark.sql.streaming
                         .Trigger] = None,
-                      bucketedTable: Option[String] = None,
                       compactEvery: Option[Int] = None,
                       compactAdvice: Option[pipeline.Maintenance
                         .Thresholds] = None)
@@ -182,30 +182,8 @@ object Api {
     require(compactEvery.forall(_ > 0),
       s"continuous_build: compactEvery must be positive, got " +
         s"$compactEvery")
-    // fail fast if the bootstrap is missing: the bucketed appends
-    // and compactions read the table's own bucket count from the
-    // catalog (NearDup.tableNumBuckets — the layout's single source
-    // of truth), so all this entry must check is that the bucketed
-    // table exists at all
-    bucketedTable.foreach { t =>
-      val ss = source.sparkSession
-      // tableExists first: a missing table must surface as THIS
-      // bootstrap message, not as DESCRIBE's raw AnalysisException
-      // (advisor r12); a table that exists (this session or restored
-      // via NearDup.registerBucketedIndex) must also carry the
-      // bucket spec
-      val bucketed = ss.catalog.tableExists(t) && {
-        ss.sql(s"DESCRIBE TABLE EXTENDED $t")
-          .filter(org.apache.spark.sql.functions.col("col_name")
-            === "Num Buckets")
-          .select("data_type").collect().nonEmpty
-      }
-      require(bucketed,
-        s"continuous_build: table $t is missing or not bucketed — " +
-          "bootstrap it with NearDup.writeIndexBucketed (or restore " +
-          "a lost catalog entry with NearDup.registerBucketedIndex) " +
-          "before starting the loop")
-    }
+    pipeline.NearDup.openIndex(source.sparkSession, indexPath,
+      "continuous_build")
     val w = source.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val bs = batch.sparkSession
@@ -228,13 +206,9 @@ object Api {
           .dropLiveTombstoned(batch, indexPath)
         // decide survivors BEFORE growing the index (the append must
         // not feed back into this batch's own probe)
-        val elected = (bucketedTable match {
-          case Some(t) => pipeline.NearDup
-            .dedupAgainstBucketedIndex(bs, indexPath, t, admissible,
-              threshold)
-          case None => pipeline.NearDup
-            .dedupAgainstIndex(bs, indexPath, admissible, threshold)
-        }).select("doc_id", "text")
+        val elected = pipeline.NearDup
+          .dedupAgainstIndex(bs, indexPath, admissible, threshold)
+          .select("doc_id", "text")
         // durable materialization: stage the election to parquet and
         // feed BOTH side effects from the read-back — batch-sized IO
         // that removes any dependence on executor cache retention
@@ -250,11 +224,7 @@ object Api {
         val survivors = bs.read.parquet(staging)
         survivors.write.mode("append").parquet(corpusPath)
         continuousBuildFailpoint(batchId)
-        bucketedTable match {
-          case Some(t) => pipeline.NearDup
-            .appendIndexBucketed(survivors, indexPath, t)
-          case None => pipeline.NearDup.appendIndex(survivors, indexPath)
-        }
+        pipeline.NearDup.appendIndex(survivors, indexPath)
         graft.core.CacheRegistry.releaseAll()
         // the staged batch is consumed — reclaim it (a replay
         // re-stages from scratch, so nothing depends on it now)
@@ -269,13 +239,7 @@ object Api {
           pipeline.NearDup.compactionAdvice(bs, indexPath, th)
             .compactNow
         }
-        if (cadence || advised) {
-          bucketedTable match {
-            case Some(t) => pipeline.NearDup
-              .compactIndexBucketed(bs, indexPath, t)
-            case None => pipeline.NearDup.compactIndex(bs, indexPath)
-          }
-        }
+        if (cadence || advised) pipeline.NearDup.compactIndex(bs, indexPath)
         ()
       }
       .option("checkpointLocation", checkpointDir)

@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Guard for the rename-swap compactions both indexes use
+/** The rename swap both indexes compact through, and its guard
   * (`<dir>` live, `<dir>__compact` the rewrite, `<dir>__old` the
   * displaced original). A crash can interrupt the swap in two
   * distinguishable states, and an UNGUARDED write into `<dir>`
@@ -43,5 +43,22 @@ object Swaps {
       // swap completed; only the post-swap cleanup was lost
       fs.delete(old, true)
     }
+  }
+
+  /** Swap the rewrite at `<dir>__compact` in for `dir`: move the live
+    * dir to `__old`, move the rewrite to `dir`, then delete `__old`.
+    * Until that last delete a crash leaves the data recoverable under
+    * one of the three names, in one of the two states [[guard]] tells
+    * apart.
+    */
+  def swap(spark: SparkSession, dir: String, op: String): Unit = {
+    val live = new org.apache.hadoop.fs.Path(dir)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new org.apache.hadoop.fs.Path(s"${dir}__old")
+    val tmp = new org.apache.hadoop.fs.Path(s"${dir}__compact")
+    fs.delete(old, true)
+    require(fs.rename(live, old), s"$op: cannot move $live")
+    require(fs.rename(tmp, live), s"$op: cannot move $tmp")
+    fs.delete(old, true)
   }
 }

@@ -67,9 +67,7 @@ object AnnIndex {
     } else {
       out.write.partitionBy("bucket").mode("overwrite")
         .parquet(tmp.toString)
-      require(fs.rename(live, old), s"ann rebuild: cannot move $live")
-      require(fs.rename(tmp, live), s"ann rebuild: cannot move $tmp")
-      fs.delete(old, true)
+      graft.core.Swaps.swap(embeddings.sparkSession, path, "ann rebuild")
     }
   }
 
@@ -258,7 +256,6 @@ object AnnIndex {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(s"${path}__compact")
-    val old = new org.apache.hadoop.fs.Path(s"${path}__old")
     def hasParquet(p: org.apache.hadoop.fs.Path): Boolean = {
       if (!fs.exists(p)) return false
       val it = fs.listFiles(p, true)
@@ -291,10 +288,7 @@ object AnnIndex {
       fs.delete(tmp, true)
       return
     }
-    fs.delete(old, true)
-    require(fs.rename(dir, old), s"ann compact: cannot move $dir")
-    require(fs.rename(tmp, dir), s"ann compact: cannot move $tmp")
-    fs.delete(old, true)
+    graft.core.Swaps.swap(spark, path, "ann compact")
     val tdir = new org.apache.hadoop.fs.Path(s"${path}__tombstones")
     tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(tdir, true)

@@ -1,9 +1,59 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.pipeline.PipelineOps.{LshBucketCap, LshRankBlock}
+
+/** Where an LSH index ([[NearDup.writeIndex]]) keeps its band table.
+  * The layout is chosen once, when the index is written, and recorded
+  * beside it; every later append, compaction, probe and dedup on that
+  * path reads it back, so no call can append one layout's bands and
+  * probe the other's. Only [[NearDup]] dispatches on it.
+  *
+  * WHEN TO PREFER WHICH — measured, not asserted (INDEXSOAK_r12.log
+  * phases 5–7, re-measured at production batch sizes in
+  * INDEXSOAK_r13.log). Probe-only, against the compacted serving state
+  * (one sorted file per bucket, under the outputOrdering conf that
+  * [[graft.GraftSession]] sets): bucketed is faster than plain at
+  * EVERY measured corpus scale — wall ratio 0.84–0.89 at 1x/4x/16x/64x
+  * corpus (40 k → 2.56 M band rows, fixed 200-doc batch; 0.66–0.80
+  * with a 5.3k-doc batch). Its append premium is ~0.5 s/append at
+  * 5.3k-doc batches against a probe saving of ~0.1–0.5 s/probe:
+  * break-even ~4–7 probes per append (16x/64x corpus). Choose
+  * [[IndexLayout.Bucketed]] for any mixed or read-leaning workload,
+  * with a compaction cadence keeping buckets one-file
+  * (`Api.continuousBuild(compactEvery)` or the data-driven
+  * `compactAdvice`); [[IndexLayout.Plain]] still wins for write-only
+  * loops that probe rarely (<~4 probes/append), where its shuffle-free
+  * file-add increments are cheapest.
+  */
+sealed abstract class IndexLayout(val bandsDir: String)
+
+object IndexLayout {
+
+  /** `path/bands`: plain parquet; appends are file adds. */
+  case object Plain extends IndexLayout("bands")
+
+  /** `path/bands_table`: the external catalog table `table`, bucketed
+    * and per-bucket sorted on the probe's window spec
+    * (`bucketBy(numBuckets, band, bkey)` + `sortBy(band, bkey, nsh_c,
+    * corpus_id)`), so the probe's keep-rule window reads the scan's own
+    * hash partitioning (no index-side Exchange) and, when each bucket
+    * holds one file, its sort order (no Sort either). The data lives
+    * under the index path, so losing the session catalog never loses
+    * the index ([[NearDup.registerBucketedIndex]] restores the entry).
+    * Signatures stay plain parquet in both layouts (the verify join is
+    * a doc_id hash join; bucketing buys it nothing). `numBuckets` is
+    * the probe's bucket-pruning grain and the bands writers' task
+    * count: size it to the corpus, not to the batch.
+    */
+  final case class Bucketed(table: String, numBuckets: Int = 32)
+      extends IndexLayout("bands_table") {
+    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
+  }
+}
 
 /** Public MinHash-LSH near-duplicate API over any (doc_id, text)
   * DataFrame — the machinery behind the p02/p16/p33/p39/p43/p46/p47
@@ -35,13 +85,11 @@ object NearDup {
     // fused native kernel (graft.functions.ShingleSig): bit-identical
     // to hashedShingles(shingles(words(text))) + bandKeys, one
     // codegen'd call per row instead of five HOFs
-    val sh = shingleify(source)
-      .transform(graft.core.CacheRegistry.persist(_))
-    // materialize BEFORE fan-out: four plan branches (band explode x2,
-    // verify join x2) scan this cache; if the first job races two
+    // materialized BEFORE fan-out: four plan branches (band explode
+    // x2, verify join x2) scan this cache; if the first job races two
     // branches through the uncached plan, the shingle/minhash chain —
     // the dominant per-row cost — executes twice
-    sh.count()
+    val sh = cachedSignatures(source)
     val (cand, pairs) = lshPairsFromSignatures(sh, threshold)
     (sh, cand, pairs)
   }
@@ -221,6 +269,16 @@ object NearDup {
       col("sig.bks").as("bks"))
     .filter(size(col("sh")) > 0)
 
+  /** `df`'s signatures, persisted through [[graft.core.CacheRegistry]]
+    * (the caller releases) and materialized before they fan out into
+    * several plan branches.
+    */
+  private def cachedSignatures(df: DataFrame): DataFrame = {
+    val sh = shingleify(df).transform(graft.core.CacheRegistry.persist(_))
+    sh.count()
+    sh
+  }
+
   /** Asymmetric batch-vs-corpus matching — the production shape for
     * CONTINUOUS corpus builds: the incoming batch's band keys probe
     * the corpus band table (the corpus NEVER self-joins), candidates
@@ -253,16 +311,9 @@ object NearDup {
   def matchesAgainst(corpus: DataFrame, incoming: DataFrame,
                      threshold: Double = 0.5,
                      bucketCap: Int = LshBucketCap): DataFrame = {
-    val corpusSh = shingleify(corpus)
-      .transform(graft.core.CacheRegistry.persist(_))
-    val incSh = shingleify(incoming)
-      .transform(graft.core.CacheRegistry.persist(_))
-    // materialize before fan-out (each cache feeds 2 plan branches)
-    corpusSh.count(); incSh.count()
-    val cb0 = corpusSh.select(col("doc_id").as("corpus_id"),
-      size(col("sh")).as("nsh_c"),
-      posexplode(col("bks")).as(Seq("band", "bkey")))
-    probe(corpusSh, cb0, incSh, threshold, bucketCap)
+    val corpusSh = cachedSignatures(corpus)
+    probe(corpusSh, bandRows(corpusSh), cachedSignatures(incoming),
+      threshold, bucketCap)
   }
 
   /** The batch-vs-corpus probe over prepared tables: `corpusSh` =
@@ -270,10 +321,10 @@ object NearDup {
     * band, bkey) — the UNFILTERED corpus band table (the over-cap
     * keep is applied here, at probe time, so one stored index serves
     * any bucketCap), `incSh` = the incoming batch's signatures.
-    * Shared verbatim by [[matchesAgainst]] (tables built in-session),
-    * [[matchesAgainstIndex]] (tables read from a precomputed index)
-    * and [[matchesAgainstBucketedIndex]] (bands read from a bucketed
-    * table, co-located with the window's partitioning). The probe's
+    * Shared verbatim by [[matchesAgainst]] (tables built in-session)
+    * and [[matchesAgainstIndex]] (tables read from a precomputed index
+    * of either [[IndexLayout]]; a bucketed table arrives co-located
+    * with the window's partitioning). The probe's
     * first move is a broadcast left-semi filter of `cb0` down to the
     * batch's touched (band, bkey) buckets, so per-call cost is
     * bounded by the TOUCHED-BUCKET POPULATION — a function of the
@@ -414,8 +465,8 @@ object NearDup {
   }
 
   /** Build the PRECOMPUTED corpus LSH index a continuous build reuses
-    * across micro-batches: `path/signatures` = (doc_id, sh) and
-    * `path/bands` = (corpus_id, nsh_c, band, bkey), both parquet.
+    * across micro-batches: `path/signatures` = (doc_id, sh) parquet
+    * and the band table (corpus_id, nsh_c, band, bkey) in `layout`.
     * The corpus is shingled ONCE here; every subsequent
     * [[matchesAgainstIndex]] call reads these tables instead of
     * re-computing the corpus's shingles and minhashes per batch —
@@ -426,366 +477,205 @@ object NearDup {
     * written first and bands derive from reading it back, so the
     * expensive shingle pass over the corpus text runs exactly once.
     *
-    * For probe-dominated serving, [[writeIndexBucketed]] is the
-    * faster layout once compacted (the bands table bucketed + sorted
-    * on the probe's exact window spec — zero index-side exchange,
-    * zero sort); see its scaladoc for the measured trade against
-    * this path layout's cheaper appends. The path-based parquet
-    * layout here keeps the API storage-agnostic.
+    * This is the only call that takes a layout ([[IndexLayout]] has
+    * the measured trade between the two). A bucketed write records its
+    * layout beside the index; [[appendIndex]], [[compactIndex]],
+    * [[matchesAgainstIndex]] and [[dedupAgainstIndex]] read it back
+    * from `path`. A full rebuild starts with a clean slate: stale
+    * tombstones from the path's previous life would silently delete
+    * freshly indexed docs, stale __old/__compact leftovers from an
+    * interrupted compaction would make every later append and
+    * compaction refuse with a false mid-swap error (the rebuild
+    * supersedes any interrupted swap), and the previous life's bands
+    * table, of either layout, would be read by no probe but still
+    * counted by [[compactionAdvice]] — all of it is deleted first.
     */
-  def writeIndex(corpus: DataFrame, path: String): Unit = {
+  def writeIndex(corpus: DataFrame, path: String,
+                 layout: IndexLayout = IndexLayout.Plain): Unit = {
     val spark = corpus.sparkSession
-    // a full rebuild starts with a clean slate: stale tombstones
-    // from the path's previous life would silently delete freshly
-    // indexed docs, and stale __old/__compact leftovers from an
-    // interrupted compaction would make every subsequent append and
-    // compaction refuse with a false mid-swap error even though the
-    // rebuilt live dirs are now authoritative — a rebuild SUPERSEDES
-    // any interrupted swap (advisor r12)
-    val tdir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(tdir, true)
-    clearSwapLeftovers(spark, s"$path/signatures", s"$path/bands")
-    shingleify(corpus)
-      .write.mode("overwrite").parquet(s"$path/signatures")
-    spark.read.parquet(s"$path/signatures")
-      .select(col("doc_id").as("corpus_id"),
-        size(col("sh")).as("nsh_c"),
-        posexplode(col("bks")).as(Seq("band", "bkey")))
-      .write.mode("overwrite").parquet(s"$path/bands")
-  }
-
-  /** [[writeIndex]] with the bands table stored as a BUCKETED,
-    * per-bucket-SORTED catalog table. The bucketing spec is exactly
-    * the probe's window spec (`bucketBy(numBuckets, band, bkey)` +
-    * `sortBy(band, bkey, nsh_c, corpus_id)`), so a
-    * [[matchesAgainstBucketedIndex]] probe's keep-rule window reads
-    * the scan's own hash partitioning (no index-side Exchange) and,
-    * when each bucket holds one file (the state
-    * [[compactIndexBucketed]] restores), the scan's own sort order
-    * (no index-side Sort either) — the per-batch plan touches only
-    * the batch's buckets at scan bandwidth. Signatures stay
-    * path-based parquet (the verify join is a doc_id hash join;
-    * bucketing buys it nothing a broadcast of batch candidates
-    * doesn't). The table's data lives under `path/bands_table`
-    * (external), so dropping the session catalog never loses the
-    * index.
-    *
-    * WHEN TO PREFER WHICH LAYOUT — measured, not asserted
-    * (INDEXSOAK_r12.log phases 5–7, re-measured at production batch
-    * sizes in INDEXSOAK_r13.log). Probe-only, against the compacted
-    * serving state (one sorted file per bucket, under the documented
-    * outputOrdering conf): bucketed is consistently faster than the
-    * plain layout at EVERY measured corpus scale — bucketed/plain
-    * wall ratio 0.84–0.89 at 1x/4x/16x/64x corpus (40 k → 2.56 M
-    * band rows, fixed 200-doc batch; 0.66–0.80 with a 5.3k-doc
-    * batch). The r12-measured increment premium (~1 s/append at
-    * 200-doc batches, 3.5–10.7 s at 5.3k-doc batches) turned out to
-    * be mostly a WRITER PATHOLOGY, not the layout: the bucketed
-    * append emitted one file per (input task x non-empty bucket) —
-    * ~1000 files per 32-partition append — fixed in r13 by the same
-    * computed-bucket-id repartition the compaction already used.
-    * With the fix, an append adds at most numBuckets sorted files
-    * and the steady-window premium at 5.3k-doc batches is
-    * ~0.5 s/append against a probe saving of ~0.1-0.5 s/probe:
-    * break-even ~4-7 probes per append (INDEXSOAK_r13 breakeven
-    * mode, 16x/64x corpus). Rule: choose bucketed for any mixed or
-    * read-leaning workload — with a compaction cadence keeping
-    * buckets one-file (`Api.continuousBuild(compactEvery)` or the
-    * data-driven `compactAdvice`) it serves probes with ZERO
-    * index-side exchange; plain [[writeIndex]] still wins for
-    * write-only loops that probe rarely (<~4 probes/append), where
-    * its shuffle-free file-add increments are cheapest.
-    */
-  def writeIndexBucketed(corpus: DataFrame, path: String,
-                         table: String, numBuckets: Int = 32): Unit = {
-    val spark = corpus.sparkSession
-    // a full rebuild starts with a clean slate, same as writeIndex:
-    // stale tombstones from the path's previous life would silently
-    // delete freshly indexed docs on the very next probe, and stale
-    // swap leftovers would false-refuse every later append/compact
-    // (advisor r12 — the rebuild supersedes any interrupted swap)
-    val tdir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(tdir, true)
-    clearSwapLeftovers(spark, s"$path/signatures", s"$path/bands_table")
-    shingleify(corpus)
-      .write.mode("overwrite").parquet(s"$path/signatures")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.read.parquet(s"$path/signatures")
-      .select(col("doc_id").as("corpus_id"),
-        size(col("sh")).as("nsh_c"),
-        posexplode(col("bks")).as(Seq("band", "bkey")))
-      // one task per bucket (the compaction's computed-bucket-id
-      // repartition): without it the bootstrap writes one file per
-      // (scan task x bucket) — at cluster scale thousands of tasks
-      // x nb buckets — and the fresh index pays the multi-file
-      // window sort until its first compaction. With it the index
-      // is BORN in the compacted serving state (one sorted file per
-      // bucket). The trade: bootstrap write parallelism equals
-      // numBuckets, so size numBuckets to the corpus (it is also
-      // the probe's bucket-pruning grain), not to the batch
-      .repartition(numBuckets,
-        pmod(hash(col("band"), col("bkey")), lit(numBuckets)))
-      .write.mode("overwrite")
-      .option("path", s"$path/bands_table")
-      .bucketBy(numBuckets, "band", "bkey")
-      .sortBy("band", "bkey", "nsh_c", "corpus_id")
-      .format("parquet")
-      .saveAsTable(table)
-    writeNumBucketsMarker(spark, path, numBuckets)
-  }
-
-  /** Delete `${dir}__old` / `${dir}__compact` leftovers for each
-    * given dir — called ONLY by the full-rebuild write* paths, whose
-    * fresh write supersedes whatever an interrupted swap left behind
-    * (every other mutation must go through [[graft.core.Swaps.guard]]
-    * and refuse instead).
-    */
-  private def clearSwapLeftovers(spark: org.apache.spark.sql.SparkSession,
-                                 dirs: String*): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    dirs.flatMap(d => Seq(s"${d}__old", s"${d}__compact")).foreach { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(hconf).delete(hp, true)
+    Seq(recordedLayout(spark, path), layout).collect {
+      case IndexLayout.Bucketed(t, _) => t
+    }.distinct.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val stale = Seq("signatures", "bands", "bands_table")
+      .flatMap(d => Seq(d, s"${d}__old", s"${d}__compact"))
+    delete(spark, (stale :+ "tombstones" :+ LayoutMarker)
+      .map(d => s"$path/$d"): _*)
+    shingleify(corpus).write.parquet(s"$path/signatures")
+    val rows = bandRows(spark.read.parquet(s"$path/signatures"))
+    layout match {
+      case IndexLayout.Plain => rows.write.parquet(s"$path/bands")
+      case b @ IndexLayout.Bucketed(t, nb) =>
+        // born in the compacted serving state: one sorted file per
+        // bucket (see bucketedBands)
+        bucketedBands(rows, nb, "overwrite")
+          .option("path", s"$path/${b.bandsDir}").saveAsTable(t)
+        writeLayout(spark, path, b)
     }
   }
 
-  /** Persist the bands table's bucket count BESIDE the data
-    * (`path/bands_numbuckets`): the session catalog is the runtime
-    * source of truth ([[tableNumBuckets]]), but it does not survive a
-    * new SparkSession with an in-memory catalog — this marker is what
-    * lets [[registerBucketedIndex]] re-register the table over the
-    * surviving external files with the CORRECT bucket count (a
-    * guessed count would silently mis-declare the files' hash
-    * partitioning and corrupt every probe's keep-rule window).
+  /** The file a bucketed write leaves beside its index, holding
+    * `bucketed <table> <numBuckets>`. The session catalog does not
+    * survive a new SparkSession with an in-memory catalog; this marker
+    * does, and it is what lets [[registerBucketedIndex]] re-register
+    * the table with the CORRECT bucket count (a guessed count would
+    * silently mis-declare the files' hash partitioning and corrupt
+    * every probe's keep-rule window). A plain index has no marker.
     */
-  private def writeNumBucketsMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      numBuckets: Int): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/bands_numbuckets")
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(mp, true)
-    try out.write(s"$numBuckets\n".getBytes("UTF-8"))
+  private val LayoutMarker = "bands_layout"
+
+  private def recordedLayout(spark: SparkSession,
+                             path: String): IndexLayout = {
+    val m = new Path(s"$path/$LayoutMarker")
+    val fs = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(m)) IndexLayout.Plain
+    else {
+      val in = fs.open(m)
+      val text = try new String(in.readAllBytes(), "UTF-8")
+        finally in.close()
+      text.trim.split("\\s+") match {
+        case Array("bucketed", t, n) if n.forall(_.isDigit) =>
+          IndexLayout.Bucketed(t, n.toInt)
+        case _ => throw new IllegalStateException(
+          s"unreadable index layout marker $m: '${text.trim}'")
+      }
+    }
+  }
+
+  private def writeLayout(spark: SparkSession, path: String,
+                          layout: IndexLayout.Bucketed): Unit = {
+    val m = new Path(s"$path/$LayoutMarker")
+    val out = m.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(m, true)
+    try out.write(s"bucketed ${layout.table} ${layout.numBuckets}\n"
+      .getBytes("UTF-8"))
     finally out.close()
   }
 
-  private def readNumBucketsMarker(
-      spark: org.apache.spark.sql.SparkSession, path: String)
-      : Option[Int] = {
-    val mp = new org.apache.hadoop.fs.Path(s"$path/bands_numbuckets")
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, n, "UTF-8").trim.toInt)
-      } finally in.close()
+  /** The layout recorded at `path`, refusing a bucketed index whose
+    * table is missing from the session catalog while its files live
+    * on (a new session's in-memory catalog, or a manual DROP): a probe
+    * would die on an unresolved table, and an append would silently
+    * CREATE a fresh table and fork every probe away from the
+    * surviving index — truncated to one batch with no error.
+    */
+  private[graft] def openIndex(spark: SparkSession, path: String,
+                               op: String): IndexLayout = {
+    val layout = recordedLayout(spark, path)
+    layout match {
+      case IndexLayout.Bucketed(t, _) =>
+        require(spark.catalog.tableExists(t),
+          s"$op: table $t of the bucketed index at $path is not in " +
+            "the session catalog, but its data survives. Re-register " +
+            s"it first: NearDup.registerBucketedIndex(spark, \"$path\")")
+      case IndexLayout.Plain =>
     }
+    layout
   }
 
-  /** Re-register the catalog entry of a [[writeIndexBucketed]] index
-    * over its surviving external data — the recovery call for the two
-    * ways a bucketed index loses its catalog entry while the files at
+  /** Re-register the catalog entry of a bucketed index over its
+    * surviving external data — the recovery call for the two ways a
+    * bucketed index loses its catalog entry while the files at
     * `path/bands_table` live on: a NEW SparkSession with an in-memory
     * catalog (external data survives, catalog entries don't), or a
     * manual/accidental `DROP TABLE`. Schema comes from the parquet
-    * files; the bucket count comes from the durable
-    * `path/bands_numbuckets` marker (pass `numBuckets` explicitly
-    * only for a pre-marker index, where YOU are asserting the count
-    * the files were written with — a wrong value silently corrupts
-    * every probe). [[appendIndexBucketed]] refuses to run while the
-    * entry is missing and names this call as the recipe.
+    * files; the table name and bucket count come from the layout the
+    * write recorded at `path`. Every index operation refuses to run
+    * while the entry is missing and names this call as the recipe.
     */
-  def registerBucketedIndex(spark: org.apache.spark.sql.SparkSession,
-                            path: String, table: String,
-                            numBuckets: Option[Int] = None): Unit = {
-    val bdir = new org.apache.hadoop.fs.Path(s"$path/bands_table")
-    val fs = bdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(bdir),
-      s"register_bucketed_index: no index data at $bdir — bootstrap " +
-        "with writeIndexBucketed instead")
-    val nb = numBuckets.orElse(readNumBucketsMarker(spark, path))
-      .getOrElse(throw new IllegalArgumentException(
-        s"register_bucketed_index: $path/bands_numbuckets is missing " +
-          "(pre-marker index) — pass numBuckets explicitly, asserting " +
-          "the count the files were written with"))
+  def registerBucketedIndex(spark: SparkSession, path: String): Unit = {
+    val b = recordedLayout(spark, path) match {
+      case b: IndexLayout.Bucketed => b
+      case IndexLayout.Plain => throw new IllegalArgumentException(
+        s"register_bucketed_index: $path records no bucketed layout — " +
+          "bootstrap with writeIndex(corpus, path, " +
+          "IndexLayout.Bucketed(table))")
+    }
+    val bdir = new Path(s"$path/${b.bandsDir}")
+    require(bdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(bdir), s"register_bucketed_index: no index data at $bdir")
     val ddl = spark.read.parquet(bdir.toString).schema.toDDL
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.sql(s"DROP TABLE IF EXISTS ${b.table}")
     spark.sql(
-      s"""CREATE TABLE $table
+      s"""CREATE TABLE ${b.table}
          |($ddl)
          |USING PARQUET
          |CLUSTERED BY (band, bkey)
          |SORTED BY (band, bkey, nsh_c, corpus_id)
-         |INTO $nb BUCKETS
+         |INTO ${b.numBuckets} BUCKETS
          |LOCATION '${bdir.toString}'""".stripMargin)
-    writeNumBucketsMarker(spark, path, nb)
   }
 
-  /** [[matchesAgainstIndex]] over a [[writeIndexBucketed]] layout:
-    * identical output (same probe core), but the bands scan arrives
-    * already partitioned on the keep-rule window's keys — the probe
-    * plan has NO index-side Exchange (BucketedIndexSpec asserts it
-    * on the physical plan).
-    */
-  def matchesAgainstBucketedIndex(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, table: String,
-                                  incoming: DataFrame,
-                                  threshold: Double = 0.5,
-                                  bucketCap: Int = LshBucketCap)
-      : DataFrame = {
-    val incSh = shingleify(incoming)
-      .transform(graft.core.CacheRegistry.persist(_))
-    incSh.count() // materialize before fan-out (2 plan branches)
-    probeBucketedWithSignatures(spark, path, table, incSh, threshold,
-      bucketCap)
-  }
+  /** A signature table's band rows: (corpus_id, nsh_c, band, bkey). */
+  private def bandRows(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id").as("corpus_id"), size(col("sh")).as("nsh_c"),
+      posexplode(col("bks")).as(Seq("band", "bkey")))
 
-  /** The bucketed-layout probe over prepared batch signatures — see
-    * [[probeIndexWithSignatures]].
+  /** A writer of band rows into a table bucketed and per-bucket sorted
+    * on exactly the probe's window spec, with `nb` buckets and ONE task
+    * per bucket. The repartition is on the COMPUTED bucket id
+    * (pmod(murmur3(band, bkey), nb) — identical to the bucketed
+    * writer's file assignment): the writer otherwise emits one file per
+    * (input task x non-empty bucket), measured at ~1000 files PER
+    * APPEND on a 32-partition batch (INDEXSOAK_r13), nearly all of the
+    * old append premium, and probes then paid a 1000-file listing and
+    * sort until the next compaction. Repartitioning on the raw
+    * (band, bkey) columns instead gets ELIDED as redundant against a
+    * bucketed scan's own partitioning and leaves multi-bucket tasks —
+    * measured, not hypothetical. The trade: write parallelism equals
+    * `nb`, so size it to the corpus, not to the batch.
     */
-  private def probeBucketedWithSignatures(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      table: String, incSh: DataFrame, threshold: Double,
-      bucketCap: Int): DataFrame = {
-    val corpusSh0 = spark.read.parquet(s"$path/signatures")
-    graft.core.Checks.requireColumns(corpusSh0,
-      "matches_against_bucketed_index(signatures)", "doc_id", "sh",
-      "bks")
-    val cb00 = spark.table(table)
-    graft.core.Checks.requireColumns(cb00,
-      "matches_against_bucketed_index(bands)", "corpus_id", "nsh_c",
-      "band", "bkey")
-    // same logical-delete contract as matchesAgainstIndex; the
-    // broadcast anti-join preserves the bucketed scan's partitioning
-    // so the zero-exchange window plan survives tombstones
-    val tomb = tombstonesAt(spark, path)
-    val corpusSh = dropTombstoned(corpusSh0, "doc_id", tomb)
-    val cb0 = dropTombstoned(cb00, "corpus_id", tomb)
-    probe(corpusSh, cb0, incSh, threshold, bucketCap)
-  }
-
-  /** [[appendIndex]] for a [[writeIndexBucketed]] layout: the new
-    * docs' band rows append INTO the bucketed catalog table (Spark
-    * validates the bucket spec matches, so the table's
-    * zero-exchange probe contract survives the append; each append
-    * adds one file per non-empty bucket — compaction cadence
-    * applies, same as the path layout). Using plain [[appendIndex]]
-    * on a bucketed index would write to `path/bands`, which the
-    * bucketed probe never reads — this is the correct increment.
-    * Same ID-REUSE-FORBIDDEN guard as [[appendIndex]].
-    */
-  def appendIndexBucketed(newDocs: DataFrame, path: String,
-                          table: String,
-                          numBuckets: Int = 32): Unit = {
-    val spark = newDocs.sparkSession
-    graft.core.Swaps.guard(spark, s"$path/signatures",
-      "append_index_bucketed")
-    graft.core.Swaps.guard(spark, s"$path/bands_table",
-      "append_index_bucketed")
-    // refuse the orphaned-data state: index files exist at
-    // path/bands_table but the catalog entry is gone (a new session's
-    // in-memory catalog, or a manual DROP). Proceeding would let
-    // saveAsTable(append) silently CREATE a fresh table and fork
-    // every probe away from the surviving index — the data is never
-    // lost, but the index is effectively truncated to this batch with
-    // no error (advisor r12, medium). registerBucketedIndex is the
-    // one-call recovery.
-    val creating = !spark.catalog.tableExists(table)
-    if (creating) {
-      val bdir = new org.apache.hadoop.fs.Path(s"$path/bands_table")
-      val fs = bdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(!fs.exists(bdir),
-        s"append_index_bucketed: table $table is not in the session " +
-          s"catalog but index data exists at $bdir — appending now " +
-          "would create a NEW table and fork probes away from the " +
-          "surviving index. Re-register it first: " +
-          s"NearDup.registerBucketedIndex(spark, \"$path\", \"$table\")")
-    }
-    requireNotTombstoned(newDocs, "doc_id", path,
-      "append_index_bucketed")
-    val sh = shingleify(newDocs)
-      .transform(graft.core.CacheRegistry.persist(_))
-    sh.count()
-    sh.write.mode("append").parquet(s"$path/signatures")
-    // the CATALOG owns the bucket count once the table exists —
-    // trusting the parameter instead would fail the append on a
-    // bucket-spec mismatch (numBuckets is only the initial count
-    // when this append creates the table)
-    val nb = tableNumBuckets(spark, table).getOrElse(numBuckets)
-    val w0 = sh.select(col("doc_id").as("corpus_id"),
-        size(col("sh")).as("nsh_c"),
-        posexplode(col("bks")).as(Seq("band", "bkey")))
-      // group each bucket into ONE task (same computed-bucket-id
-      // repartition as compactIndexBucketed): the bucketed writer
-      // otherwise emits one file per (input task x non-empty bucket)
-      // — measured at ~1000 files PER APPEND on a 32-partition batch
-      // (INDEXSOAK_r13), which was nearly all of the append premium
-      // and left probes paying a 1000-file listing+sort until the
-      // next compaction. With the repartition an append adds at most
-      // nb files, each sorted, so the small-files debt grows by the
-      // bucket count, not by batch parallelism x bucket count
-      .repartition(nb, pmod(hash(col("band"), col("bkey")), lit(nb)))
-      .write.mode("append")
+  private def bucketedBands(rows: DataFrame, nb: Int, mode: String) =
+    rows.repartition(nb, pmod(hash(col("band"), col("bkey")), lit(nb)))
+      .write.mode(mode)
       .bucketBy(nb, "band", "bkey")
       .sortBy("band", "bkey", "nsh_c", "corpus_id")
       .format("parquet")
-    // a bootstrap-by-append creates the table EXTERNAL under
-    // path/bands_table, matching writeIndexBucketed — dropping the
-    // session catalog never loses the index (the option is only legal
-    // at creation; an existing table already owns its location)
-    val w = if (creating) w0.option("path", s"$path/bands_table") else w0
-    w.saveAsTable(table)
-    if (creating) writeNumBucketsMarker(spark, path, numBuckets)
-  }
 
-  /** The bucket count the session catalog records for `table`, None
-    * when the table doesn't exist or isn't bucketed — the layout's
-    * single source of truth for appends and compactions (a must-match
-    * parameter would fail only at write time, and a mismatched
-    * compaction would silently relay the table).
-    */
-  private def tableNumBuckets(spark: org.apache.spark.sql.SparkSession,
-                              table: String): Option[Int] =
-    if (!spark.catalog.tableExists(table)) None
-    else spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-      .filter(col("col_name") === "Num Buckets")
-      .select("data_type").collect()
-      .headOption.map(_.getString(0).trim.toInt)
+  private def delete(spark: SparkSession, paths: String*): Unit = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    paths.foreach { p =>
+      val hp = new Path(p)
+      hp.getFileSystem(hconf).delete(hp, true)
+    }
+  }
 
   /** Append NEW documents to an existing [[writeIndex]] — the
     * continuous-build increment: once a batch's survivors are
     * decided, append them so the NEXT batch probes the grown corpus.
-    * Only the new docs are shingled (persisted + materialized once;
-    * both table appends consume the same cache, released here since
-    * nothing lazy escapes). At cluster scale both appends are
-    * partition-local file adds — no read, no shuffle, no compaction
-    * of the existing index.
+    * The band rows go where the recorded layout keeps them: file adds
+    * under `path/bands`, or an append INTO the bucketed table (Spark
+    * validates that the bucket spec matches, so the zero-exchange
+    * probe contract survives; each append adds at most numBuckets
+    * sorted files). Only the new docs are shingled, into a cache
+    * local to this call that both appends read and that is
+    * unpersisted before it returns. At cluster scale both appends are
+    * file adds — no read, no shuffle of the existing index.
     *
     * Contract: `newDocs` ids must not be live-tombstoned (see
     * [[removeFromIndex]] — ID-REUSE-FORBIDDEN); the guard fails the
     * append loudly instead of letting the tombstone silently swallow
-    * the new rows.
+    * the new rows. A mid-swap index (see [[graft.core.Swaps]]: a
+    * replayed append into the missing live dir is how an interrupted
+    * compaction becomes silent truncation) and a bucketed index
+    * missing from the catalog ([[openIndex]]) are refused too.
     */
   def appendIndex(newDocs: DataFrame, path: String): Unit = {
     val spark = newDocs.sparkSession
-    // refuse to write into a mid-swap table (see core.Swaps: a
-    // replayed append into the missing live dir is how an
-    // interrupted compaction becomes silent truncation)
-    graft.core.Swaps.guard(spark, s"$path/signatures", "append_index")
-    graft.core.Swaps.guard(spark, s"$path/bands", "append_index")
+    val layout = openIndex(spark, path, "append_index")
+    Seq("signatures", layout.bandsDir).foreach(d =>
+      graft.core.Swaps.guard(spark, s"$path/$d", "append_index"))
     requireNotTombstoned(newDocs, "doc_id", path, "append_index")
-    val sh = shingleify(newDocs)
-      .transform(graft.core.CacheRegistry.persist(_))
-    sh.count()
-    sh.write.mode("append").parquet(s"$path/signatures")
-    sh.select(col("doc_id").as("corpus_id"),
-        size(col("sh")).as("nsh_c"),
-        posexplode(col("bks")).as(Seq("band", "bkey")))
-      .write.mode("append").parquet(s"$path/bands")
+    val sh = shingleify(newDocs).persist()
+    try {
+      sh.write.mode("append").parquet(s"$path/signatures")
+      val rows = bandRows(sh)
+      layout match {
+        case IndexLayout.Plain =>
+          rows.write.mode("append").parquet(s"$path/bands")
+        case IndexLayout.Bucketed(t, nb) =>
+          bucketedBands(rows, nb, "append").saveAsTable(t)
+      }
+    } finally sh.unpersist()
   }
 
   /** Logically REMOVE documents from a [[writeIndex]] — the takedown
@@ -881,185 +771,105 @@ object NearDup {
       Maintenance.tombstoneRows(spark, s"$path/tombstones"),
       thresholds)
 
-  /** Compact a [[writeIndex]] layout after many [[appendIndex]] /
-    * [[removeFromIndex]] increments: each daily append is a
-    * partition-local file ADD (by design — no read, no shuffle), so
-    * after months the index is a small-files catalog problem — every
-    * probe pays file-listing and per-file open cost proportional to
-    * APPEND COUNT, not data size (the same failure S8's
-    * FstWriter.compact exists for on the FST side). This rewrites
-    * both tables into ~`targetFiles` large files each, APPLIES any
-    * tombstones physically (the rewrite filters them out, then the
-    * tombstone dir is deleted — probes stop paying the anti-join),
-    * and swaps with directory renames; probe output is bit-identical
+  /** Compact an index after many [[appendIndex]] / [[removeFromIndex]]
+    * increments: each daily append is a file ADD (by design — no read,
+    * no shuffle), so after months the index is a small-files catalog
+    * problem — every probe pays file-listing and per-file open cost
+    * proportional to APPEND COUNT, not data size (the same failure
+    * S8's FstWriter.compact exists for on the FST side). This rewrites
+    * both tables, APPLIES any tombstones physically (the rewrite
+    * filters them out, then the tombstone dir is deleted — probes stop
+    * paying the anti-join), and swaps each table in with
+    * [[graft.core.Swaps.swap]]; probe output is bit-identical
     * (IndexMaintenanceSpec asserts it) because the probe never
     * depends on file layout and tombstoned rows were already
-    * invisible logically. Run it off the serving path (the rewrite
-    * reads the whole index once — amortized over the appends it
-    * absorbs).
+    * invisible logically. The rewrite also collapses EXACT duplicate
+    * rows — the artifact a replayed at-least-once append leaves when
+    * it crashed between the signatures and bands writes (same contract
+    * as AnnIndex.compact): duplicates are invisible to probe OUTPUT
+    * (cand is distinct, the best-match agg is max) but waste
+    * verify-join work and, in the bands table, inflate bn counts
+    * toward the over-cap keep rule. Run it off the serving path (the
+    * rewrite reads the whole index once — amortized over the appends
+    * it absorbs).
+    *
+    * `targetFiles` is the file count of the signatures and of plain
+    * bands. A bucketed bands table is rewritten with its own bucket
+    * count, one file per bucket, which buys the probe's LAST plan
+    * node: Spark elides the keep window's SORT whenever every bucket
+    * has one file (the scan's outputOrdering is only trusted then), so
+    * the probe's index side is pure scan bandwidth — no exchange, no
+    * sort (IndexMaintenanceSpec asserts the Sort count drops). The
+    * elision needs `spark.sql.legacy.bucketedTableScan.outputOrdering
+    * =true` (off by default since Spark 3.0; [[graft.GraftSession]]
+    * sets it); without it the probe keeps a per-task sort and still
+    * has no exchange.
     */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String, targetFiles: Int = 32): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
+  def compactIndex(spark: SparkSession, path: String,
+                   targetFiles: Int = 32): Unit = {
+    val layout = openIndex(spark, path, "compact_index")
+    Seq("signatures", layout.bandsDir).foreach(d =>
+      graft.core.Swaps.guard(spark, s"$path/$d", "compact_index"))
     val tomb = tombstonesAt(spark, path)
-    Seq("signatures" -> "doc_id", "bands" -> "corpus_id").foreach {
-      case (sub, idCol) =>
-        graft.core.Swaps.guard(spark, s"$path/$sub", "compact_index")
-        val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
-        val fs = dir.getFileSystem(hconf)
-        val tmp = new org.apache.hadoop.fs.Path(s"$path/${sub}__compact")
-        val old = new org.apache.hadoop.fs.Path(s"$path/${sub}__old")
-        // write the compacted copy BESIDE the live table (reads are
-        // lazy — overwriting in place would read-under-write), then
-        // swap with two renames; __old survives until the end of the
-        // loop body so a crash between renames leaves the data
-        // recoverable under one of the three names. The rewrite also
-        // collapses EXACT duplicate rows — the artifact a replayed
-        // at-least-once append leaves when it crashed between the
-        // signatures and bands writes (same contract as
-        // AnnIndex.compact): duplicates are invisible to probe
-        // OUTPUT (cand is distinct, the best-match agg is max) but
-        // waste verify-join work and, in the bands table, inflate bn
-        // counts toward the over-cap keep rule.
-        dropTombstoned(spark.read.parquet(dir.toString), idCol, tomb)
-          .distinct()
+    def rewrite(df: DataFrame, idCol: String): DataFrame =
+      dropTombstoned(df, idCol, tomb).distinct()
+    // each table is rewritten BESIDE the live one (reads are lazy —
+    // overwriting in place would read-under-write), then swapped in
+    val sig = s"$path/signatures"
+    rewrite(spark.read.parquet(sig), "doc_id").repartition(targetFiles)
+      .write.mode("overwrite").parquet(s"${sig}__compact")
+    graft.core.Swaps.swap(spark, sig, "compactIndex")
+    val bands = s"$path/${layout.bandsDir}"
+    layout match {
+      case IndexLayout.Plain =>
+        rewrite(spark.read.parquet(bands), "corpus_id")
           .repartition(targetFiles)
-          .write.mode("overwrite").parquet(tmp.toString)
-        fs.delete(old, true)
-        require(fs.rename(dir, old), s"compactIndex: cannot move $dir")
-        require(fs.rename(tmp, dir), s"compactIndex: cannot move $tmp")
-        fs.delete(old, true)
+          .write.mode("overwrite").parquet(s"${bands}__compact")
+        graft.core.Swaps.swap(spark, bands, "compactIndex")
+      case IndexLayout.Bucketed(t, nb) =>
+        // the bucketed writer names files by bucket id, so the rewrite
+        // goes through a temp TABLE. The swap changes NOTHING the live
+        // entry records — location, schema and bucket spec (the
+        // rewrite preserves types, so an INT-id corpus stays INT) — so
+        // a REFRESH of its cached file listing is all the catalog
+        // needs, and the entry never disappears (a DROP -> CREATE
+        // would open a window where a crash loses the entry and a
+        // replayed append recreates the table away from the
+        // compacted data)
+        val tmpTable = s"${t}__compact"
+        spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
+        delete(spark, s"${bands}__compact")
+        bucketedBands(rewrite(spark.table(t), "corpus_id"), nb,
+          "overwrite")
+          .option("path", s"${bands}__compact").saveAsTable(tmpTable)
+        spark.sql(s"DROP TABLE $tmpTable")
+        graft.core.Swaps.swap(spark, bands, "compactIndex")
+        spark.sql(s"REFRESH TABLE $t")
     }
     // tombstones are now physical — clear them AFTER both tables
     // swapped (a crash before this point leaves them applied
     // logically AND physically, which is harmless: the anti-join of
     // an already-absent id is a no-op)
-    val tdir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tdir.getFileSystem(hconf).delete(tdir, true)
-  }
-
-  /** [[compactIndex]] for a [[writeIndexBucketed]] layout. Beyond the
-    * small-files cure, this buys the LAST plan node: the rewrite
-    * hash-repartitions on the bucket columns with the table's own
-    * bucket count, so each task holds exactly one bucket and writes
-    * exactly ONE per-bucket-sorted file — and Spark elides the
-    * probe's window SORT whenever every bucket has one file (the
-    * scan's outputOrdering is only trusted then). Post-compaction the
-    * probe's index side is pure scan bandwidth: no exchange (the
-    * bucketed scan's partitioning), no sort (the files' own order) —
-    * IndexMaintenanceSpec asserts the Sort node count drops and the
-    * output is bit-identical. Tombstones apply physically and clear,
-    * same contract as [[compactIndex]].
-    *
-    * The sort elision needs
-    * `spark.sql.legacy.bucketedTableScan.outputOrdering=true` (off
-    * by default since Spark 3.0; Spark still self-guards by ONLY
-    * exposing the order when every bucket has exactly one file —
-    * the state this compaction establishes). Without the conf the
-    * probe keeps a per-task sort (no exchange either way); with it,
-    * post-compaction probes read the index at scan bandwidth.
-    */
-  def compactIndexBucketed(spark: org.apache.spark.sql.SparkSession,
-                           path: String, table: String,
-                           numBuckets: Int = 32): Unit = {
-    graft.core.Swaps.guard(spark, s"$path/signatures",
-      "compact_index_bucketed")
-    graft.core.Swaps.guard(spark, s"$path/bands_table",
-      "compact_index_bucketed")
-    require(spark.catalog.tableExists(table),
-      s"compact_index_bucketed: table $table is not in the session " +
-        "catalog — restore a lost entry with " +
-        s"NearDup.registerBucketedIndex(spark, \"$path\", \"$table\")")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val tomb = tombstonesAt(spark, path)
-    // the live table's OWN layout drives the rewrite (see
-    // tableNumBuckets — the parameter is only a fallback for a table
-    // the catalog has lost)
-    val nb = tableNumBuckets(spark, table).getOrElse(numBuckets)
-    // signatures: same rewrite as the path layout (incl. the exact-
-    // duplicate collapse — see compactIndex)
-    val sdir = new org.apache.hadoop.fs.Path(s"$path/signatures")
-    val sfs = sdir.getFileSystem(hconf)
-    val stmp = new org.apache.hadoop.fs.Path(s"$path/signatures__compact")
-    val sold = new org.apache.hadoop.fs.Path(s"$path/signatures__old")
-    dropTombstoned(spark.read.parquet(sdir.toString), "doc_id", tomb)
-      .distinct()
-      .repartition(nb)
-      .write.mode("overwrite").parquet(stmp.toString)
-    sfs.delete(sold, true)
-    require(sfs.rename(sdir, sold), s"compact: cannot move $sdir")
-    require(sfs.rename(stmp, sdir), s"compact: cannot move $stmp")
-    sfs.delete(sold, true)
-    // bands: rewrite through a temp TABLE (bucket-id file names are
-    // assigned by the bucketed writer), then swap directories and
-    // REFRESH the live catalog entry — its location/schema/bucket
-    // spec are untouched by the swap, only the files changed
-    val bdir = new org.apache.hadoop.fs.Path(s"$path/bands_table")
-    val bfs = bdir.getFileSystem(hconf)
-    val btmp = new org.apache.hadoop.fs.Path(s"$path/bands_table__compact")
-    val bold = new org.apache.hadoop.fs.Path(s"$path/bands_table__old")
-    val tmpTable = s"${table}__compact"
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    bfs.delete(btmp, true)
-    dropTombstoned(spark.table(table), "corpus_id", tomb)
-      .distinct()
-      // group each bucket into ONE task by repartitioning on the
-      // COMPUTED bucket id (pmod(murmur3(band,bkey), n) — verified
-      // identical to the bucketed writer's file assignment): all of
-      // a bucket's rows share the value, so the writer emits exactly
-      // one file per bucket. Repartitioning on the raw (band, bkey)
-      // columns instead gets ELIDED as redundant against the
-      // bucketed scan's own partitioning and leaves multi-bucket
-      // tasks — measured, not hypothetical
-      .repartition(nb,
-        pmod(hash(col("band"), col("bkey")), lit(nb)))
-      .write.mode("overwrite")
-      .option("path", btmp.toString)
-      .bucketBy(nb, "band", "bkey")
-      .sortBy("band", "bkey", "nsh_c", "corpus_id")
-      .format("parquet")
-      .saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE $tmpTable")
-    bfs.delete(bold, true)
-    require(bfs.rename(bdir, bold), s"compact: cannot move $bdir")
-    require(bfs.rename(btmp, bdir), s"compact: cannot move $btmp")
-    bfs.delete(bold, true)
-    // the swap changes NOTHING the catalog records — location, schema
-    // and bucket spec are all identical (nb came FROM the table; the
-    // rewrite preserves types, so an INT-id corpus stays INT) — so a
-    // REFRESH of the cached file listing is all the catalog needs.
-    // (An earlier DROP -> CREATE re-registration here had an
-    // unguarded window: a crash between the two left no catalog
-    // entry and no __old marker, and a replayed appendIndexBucketed
-    // would then silently recreate the table away from the compacted
-    // data — advisor r12, medium. REFRESH is atomic from the catalog
-    // reader's point of view: the entry never disappears.)
-    spark.sql(s"REFRESH TABLE $table")
-    // refresh the durable bucket-count marker too — pre-marker
-    // indexes gain it at their first compaction, making
-    // registerBucketedIndex's recovery self-sufficient from then on
-    writeNumBucketsMarker(spark, path, nb)
-    val tdir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    tdir.getFileSystem(hconf).delete(tdir, true)
+    delete(spark, s"$path/tombstones")
   }
 
   /** The index-backed [[dedupAgainst]]: survivors of the incoming
     * batch vs the PRECOMPUTED corpus index, then deduped within the
     * batch. The foreachBatch body of an index-backed streaming
     * corpus build is: survivors = dedupAgainstIndex(...);
-    * appendIndex(survivors, path); CacheRegistry.releaseAll().
+    * appendIndex(survivors, path); CacheRegistry.releaseAll(). The two
+    * layouts elect identical survivors, across a mid-loop compaction
+    * too (ApiSpec "bucketed layout + compactEvery cadence";
+    * INDEXSOAK_r12.log phase 5 ran both loops in lockstep for 10
+    * batches).
     */
-  def dedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                        indexPath: String, incoming: DataFrame,
-                        threshold: Double = 0.5,
+  def dedupAgainstIndex(spark: SparkSession, indexPath: String,
+                        incoming: DataFrame, threshold: Double = 0.5,
                         bucketCap: Int = LshBucketCap): DataFrame = {
-    val incSh = shingleify(incoming)
-      .transform(graft.core.CacheRegistry.persist(_))
-    incSh.count()
-    val matched = probeIndexWithSignatures(spark, indexPath, incSh,
+    val (probed, incSh) = probeIndex(spark, indexPath, incoming,
       threshold, bucketCap)
-      .filter(col("matched")).select(col("new_id"))
-    electSurvivors(incoming, incSh, matched, threshold)
+    electSurvivors(incoming, incSh,
+      probed.filter(col("matched")).select(col("new_id")), threshold)
   }
 
   /** The shared back half of the dedupAgainst* family: drop the
@@ -1087,30 +897,6 @@ object NearDup {
       Seq("doc_id"), "left_semi")
   }
 
-  /** [[dedupAgainstIndex]] for a [[writeIndexBucketed]] layout — the
-    * foreachBatch body of a bucketed-index streaming build:
-    * survivors = dedupAgainstBucketedIndex(...);
-    * appendIndexBucketed(survivors, path, table);
-    * CacheRegistry.releaseAll(). Its survivors equal the plain-layout
-    * loop's, across a mid-loop compaction too (ApiSpec "bucketed
-    * layout + compactEvery cadence"; INDEXSOAK_r12.log phase 5 ran
-    * both loops in lockstep for 10 batches).
-    */
-  def dedupAgainstBucketedIndex(spark: org.apache.spark.sql.SparkSession,
-                                path: String, table: String,
-                                incoming: DataFrame,
-                                threshold: Double = 0.5,
-                                bucketCap: Int = LshBucketCap)
-      : DataFrame = {
-    val incSh = shingleify(incoming)
-      .transform(graft.core.CacheRegistry.persist(_))
-    incSh.count()
-    val matched = probeBucketedWithSignatures(spark, path, table,
-      incSh, threshold, bucketCap)
-      .filter(col("matched")).select(col("new_id"))
-    electSurvivors(incoming, incSh, matched, threshold)
-  }
-
   /** [[matchesAgainst]] against a [[writeIndex]]-precomputed corpus:
     * identical output (same probe core, same keep rule, same
     * verify), but the per-batch cost is ONLY the incoming batch's
@@ -1119,43 +905,47 @@ object NearDup {
     * incoming batch's signatures are pinned (corpus tables stream
     * from parquet); the caller still releases per batch.
     */
-  def matchesAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                          indexPath: String, incoming: DataFrame,
-                          threshold: Double = 0.5,
-                          bucketCap: Int = LshBucketCap): DataFrame = {
-    val incSh = shingleify(incoming)
-      .transform(graft.core.CacheRegistry.persist(_))
-    incSh.count() // materialize before fan-out (2 plan branches)
-    probeIndexWithSignatures(spark, indexPath, incSh, threshold,
-      bucketCap)
-  }
+  def matchesAgainstIndex(spark: SparkSession, indexPath: String,
+                          incoming: DataFrame, threshold: Double = 0.5,
+                          bucketCap: Int = LshBucketCap): DataFrame =
+    probeIndex(spark, indexPath, incoming, threshold, bucketCap)._1
 
-  /** The path-layout index probe over PREPARED batch signatures
-    * (persisted + materialized by the caller) — shared by
+  /** The index probe and the batch signatures it cached — shared by
     * [[matchesAgainstIndex]] and [[dedupAgainstIndex]] so the latter
     * shingles the batch exactly once for both the probe and the
-    * within-batch election.
+    * within-batch election. The index is checked before the batch is
+    * shingled. The bands come from the recorded layout. A bucketed
+    * table's scan
+    * arrives already partitioned on the keep-rule window's keys, so
+    * that probe plan has NO index-side Exchange (IndexMaintenanceSpec
+    * asserts it on the physical plan).
     */
-  private def probeIndexWithSignatures(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      incSh: DataFrame, threshold: Double, bucketCap: Int)
-      : DataFrame = {
-    // fail fast with a named error if the path is not a writeIndex
-    // layout — a wrong path would otherwise surface as an unresolved
-    // column three joins deep
+  private def probeIndex(spark: SparkSession, indexPath: String,
+                         incoming: DataFrame, threshold: Double,
+                         bucketCap: Int): (DataFrame, DataFrame) = {
+    val layout = openIndex(spark, indexPath, "matches_against_index")
+    // fail fast with a named error if the path is not an index — a
+    // wrong path would otherwise surface as an unresolved column
+    // three joins deep
     val corpusSh0 = spark.read.parquet(s"$indexPath/signatures")
     graft.core.Checks.requireColumns(corpusSh0,
       "matches_against_index(signatures)", "doc_id", "sh", "bks")
-    val cb00 = spark.read.parquet(s"$indexPath/bands")
+    val cb00 = layout match {
+      case IndexLayout.Plain => spark.read.parquet(s"$indexPath/bands")
+      case IndexLayout.Bucketed(t, _) => spark.table(t)
+    }
     graft.core.Checks.requireColumns(cb00,
       "matches_against_index(bands)", "corpus_id", "nsh_c", "band",
       "bkey")
     // logical deletes first: a tombstoned doc may neither claim a
-    // match nor occupy a keep-rule slot (see removeFromIndex)
+    // match nor occupy a keep-rule slot (see removeFromIndex); the
+    // broadcast anti-join preserves a bucketed scan's partitioning,
+    // so the zero-exchange window plan survives tombstones
     val tomb = tombstonesAt(spark, indexPath)
-    val corpusSh = dropTombstoned(corpusSh0, "doc_id", tomb)
-    val cb0 = dropTombstoned(cb00, "corpus_id", tomb)
-    probe(corpusSh, cb0, incSh, threshold, bucketCap)
+    val incSh = cachedSignatures(incoming)
+    (probe(dropTombstoned(corpusSh0, "doc_id", tomb),
+      dropTombstoned(cb00, "corpus_id", tomb), incSh, threshold,
+      bucketCap), incSh)
   }
 
   /** The survivors of [[matchesAgainst]], additionally deduped
@@ -1170,15 +960,10 @@ object NearDup {
   def dedupAgainst(corpus: DataFrame, incoming: DataFrame,
                    threshold: Double = 0.5,
                    bucketCap: Int = LshBucketCap): DataFrame = {
-    val corpusSh = shingleify(corpus)
-      .transform(graft.core.CacheRegistry.persist(_))
-    val incSh = shingleify(incoming)
-      .transform(graft.core.CacheRegistry.persist(_))
-    corpusSh.count(); incSh.count()
-    val cb0 = corpusSh.select(col("doc_id").as("corpus_id"),
-      size(col("sh")).as("nsh_c"),
-      posexplode(col("bks")).as(Seq("band", "bkey")))
-    val matched = probe(corpusSh, cb0, incSh, threshold, bucketCap)
+    val corpusSh = cachedSignatures(corpus)
+    val incSh = cachedSignatures(incoming)
+    val matched = probe(corpusSh, bandRows(corpusSh), incSh, threshold,
+      bucketCap)
       .filter(col("matched")).select(col("new_id"))
     electSurvivors(incoming, incSh, matched, threshold)
   }

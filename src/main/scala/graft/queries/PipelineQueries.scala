@@ -2303,11 +2303,12 @@ object PipelineQueries {
 
     // the CLUSTER-SCALE index layout: p84's probe against a bands
     // table stored bucketed + per-bucket-sorted on the keep-rule
-    // window's exact spec (NearDup.writeIndexBucketed) — the probe
-    // plan reads the scan's own hash partitioning, so the index side
-    // has NO exchange at all (BucketedIndexSpec asserts it on the
-    // physical plan). Shares p43/p84's oracle: the gate asserts the
-    // bucketed round-trip is hash-identical to the in-session probe.
+    // window's exact spec (NearDup.writeIndex with
+    // IndexLayout.Bucketed) — the probe plan reads the scan's own hash
+    // partitioning, so the index side has NO exchange at all
+    // (IndexMaintenanceSpec asserts it on the physical plan). Shares
+    // p43/p84's oracle: the gate asserts the bucketed round-trip is
+    // hash-identical to the in-session probe.
     "p91_bucketed_lsh_index" -> ((s, dir) => {
       val d = docs(s, dir).select("doc_id", "text")
       val incoming = d.filter(pmod(col("doc_id"), lit(5)) === 0)
@@ -2320,9 +2321,9 @@ object PipelineQueries {
         .replaceAll("\\.", "_")
       val idx = graft.core.Scratch.path(s"graft_lshb_index_$tag")
       val table = s"graft_lsh_bands_$tag"
-      graft.pipeline.NearDup.writeIndexBucketed(d, idx, table)
-      graft.pipeline.NearDup.matchesAgainstBucketedIndex(
-        s, idx, table, incoming)
+      graft.pipeline.NearDup.writeIndex(d, idx,
+        graft.pipeline.IndexLayout.Bucketed(table))
+      graft.pipeline.NearDup.matchesAgainstIndex(s, idx, incoming)
     }),
 
     // index deletions (takedown / PII purge): build the full-corpus

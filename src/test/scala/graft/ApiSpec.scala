@@ -163,8 +163,9 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((1L, cbDoc(3)), (2L, cbDoc(5))),
       Seq((3L, cbDoc(3) + " zzz tail"), (4L, cbDoc(11))),
       Seq((5L, cbDoc(5)), (6L, cbDoc(13)), (7L, cbDoc(13) + " tail x")))
-    pipeline.NearDup.writeIndexBucketed(
-      Seq.empty[(Long, String)].toDF("doc_id", "text"), idx, table)
+    pipeline.NearDup.writeIndex(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), idx,
+      pipeline.IndexLayout.Bucketed(table))
     batches.foreach { rows =>
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(srcDir)
@@ -173,7 +174,7 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
         idx, corpus, ck,
         trigger = Some(org.apache.spark.sql.streaming.Trigger
           .AvailableNow()),
-        bucketedTable = Some(table), compactEvery = Some(2))
+        compactEvery = Some(2))
       assert(q.awaitTermination(120000), "bucketed drain timed out")
     }
     val ids = spark.read.parquet(corpus)

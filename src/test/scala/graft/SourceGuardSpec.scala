@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GRAFT_*_DEBUG` env switch, and no session built anywhere but
   * [[GraftSession]]. Keeps each record container's byte layout behind
   * its own module: only the format modules and the `Container`
-  * dispatch sniff a header or compare a container name. Keeps the jar
+  * dispatch sniff a header or compare a container name, and only
+  * `NearDup` dispatches on an LSH index layout. Keeps the jar
   * a library: only the three entry points define a `main`, every
   * `graft.core` object is used by other library code, not only by
   * tests, and every `def` is named somewhere besides its declaration.
@@ -53,6 +54,28 @@ class SourceGuardSpec extends AnyFunSuite {
       (what, re) <- containerRules
       m <- re.findAllMatchIn(text)
     } yield s"${f.getPath}: $what: ${m.matched}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("only NearDup knows the LSH index layouts") {
+    // the layout is read back from the index, so no caller picks an
+    // entry point per layout and no caller dispatches on it
+    val files = sources
+    assert(files.exists(_.getName == "NearDup.scala"))
+    val layoutCase = ("""(case\s+(\w+\s*[@:]\s*)?|isInstanceOf\[)""" +
+      """(IndexLayout\s*\.\s*)?(Plain|Bucketed)\b""").r
+    val publicBucketed =
+      """(?m)^(?!.*\bprivate\b).*\bdef\s+(\w*Bucketed\w*)""".r
+    val hits = files.flatMap { f =>
+      val text = read(f)
+      val cases =
+        if (f.getName == "NearDup.scala") Nil
+        else layoutCase.findAllIn(text).map(m => s"a layout match: $m")
+          .toSeq
+      val defs = publicBucketed.findAllMatchIn(text).map(_.group(1))
+        .filter(_ != "registerBucketedIndex").map(d => s"def $d").toSeq
+      (cases ++ defs).map(h => s"${f.getPath}: $h")
+    }
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 

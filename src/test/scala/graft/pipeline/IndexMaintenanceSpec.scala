@@ -21,7 +21,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the documented deployment conf (README "Running at scale"):
     // lets a one-file-per-bucket bucketed scan expose its sort
     // order, so the probe's keep window plans NEITHER exchange NOR
-    // sort after compactIndexBucketed — asserted below
+    // sort after a bucketed compactIndex — asserted below
     .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
@@ -68,12 +68,12 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bucketed bands layout: identical output, no index-side exchange") {
     val path = tmp("graft_lshb_spec")
     val pathPlain = tmp("graft_lshp_spec")
-    NearDup.writeIndexBucketed(docsDf, path, "graft_spec_bands")
+    NearDup.writeIndex(docsDf, path,
+      IndexLayout.Bucketed("graft_spec_bands"))
     NearDup.writeIndex(docsDf, pathPlain)
     val direct = NearDup.matchesAgainst(docsDf, incomingDf)
     val viaPlain = NearDup.matchesAgainstIndex(spark, pathPlain, incomingDf)
-    val viaBucketed = NearDup.matchesAgainstBucketedIndex(
-      spark, path, "graft_spec_bands", incomingDf)
+    val viaBucketed = NearDup.matchesAgainstIndex(spark, path, incomingDf)
     val d = collected(direct)
     assert(d.nonEmpty && d.exists(_._2), "fixture must produce matches")
     assert(collected(viaPlain) == d, "plain index diverged from direct")
@@ -85,15 +85,14 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     def exchanges(df: DataFrame): Int =
       "Exchange hashpartitioning".r.findAllIn(
         df.queryExecution.executedPlan.toString).length
-    val eb = exchanges(NearDup.matchesAgainstBucketedIndex(
-      spark, path, "graft_spec_bands", incomingDf))
+    val eb = exchanges(NearDup.matchesAgainstIndex(
+      spark, path, incomingDf))
     val ep = exchanges(NearDup.matchesAgainstIndex(
       spark, pathPlain, incomingDf))
     assert(eb < ep,
       s"bucketed probe plans $eb exchanges, path-based $ep — the " +
         "bucketed layout must remove the index-side exchange")
-    val planB = NearDup.matchesAgainstBucketedIndex(
-      spark, path, "graft_spec_bands", incomingDf)
+    val planB = NearDup.matchesAgainstIndex(spark, path, incomingDf)
       .queryExecution.executedPlan.toString
     assert(planB.contains("Bucketed: true"),
       "bucketed probe plan does not read the bucketed scan")
@@ -105,18 +104,19 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val path = tmp("graft_lshba_spec")
     val firstHalf = docsDf.filter(col("doc_id") < 20)
     val secondHalf = docsDf.filter(col("doc_id") >= 20)
-    NearDup.writeIndexBucketed(firstHalf, path, "graft_spec_ba")
-    NearDup.appendIndexBucketed(secondHalf, path, "graft_spec_ba")
+    NearDup.writeIndex(firstHalf, path,
+      IndexLayout.Bucketed("graft_spec_ba"))
+    NearDup.appendIndex(secondHalf, path)
     graft.core.CacheRegistry.releaseAll()
-    val viaBucketed = collected(NearDup.matchesAgainstBucketedIndex(
-      spark, path, "graft_spec_ba", incomingDf))
+    val viaBucketed = collected(NearDup.matchesAgainstIndex(
+      spark, path, incomingDf))
     val direct = collected(NearDup.matchesAgainst(docsDf, incomingDf))
     assert(viaBucketed == direct,
       "append into the bucketed table diverged from the full corpus")
     // the appended table still carries the bucket spec (the probe's
     // zero-exchange contract): the scan must stay bucketed
-    def plan(): String = NearDup.matchesAgainstBucketedIndex(
-      spark, path, "graft_spec_ba", incomingDf)
+    def plan(): String = NearDup.matchesAgainstIndex(
+      spark, path, incomingDf)
       .queryExecution.executedPlan.toString
     val planAfterAppend = plan()
     assert(planAfterAppend.contains("Bucketed: true"),
@@ -129,7 +129,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sortsBefore = sorts(planAfterAppend)
     assert(sortsBefore >= 1,
       "multi-file buckets should plan a window sort before compaction")
-    NearDup.compactIndexBucketed(spark, path, "graft_spec_ba")
+    NearDup.compactIndex(spark, path)
     graft.core.CacheRegistry.releaseAll()
     val planCompacted = plan()
     assert(planCompacted.contains("Bucketed: true"),
@@ -137,8 +137,8 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sorts(planCompacted) < sortsBefore,
       "one-file-per-bucket compaction must elide the window sort " +
         s"(before $sortsBefore, after ${sorts(planCompacted)})")
-    val viaCompacted = collected(NearDup.matchesAgainstBucketedIndex(
-      spark, path, "graft_spec_ba", incomingDf))
+    val viaCompacted = collected(NearDup.matchesAgainstIndex(
+      spark, path, incomingDf))
     assert(viaCompacted == direct,
       "bucketed compaction changed the probe output")
     graft.core.CacheRegistry.releaseAll()
@@ -146,8 +146,8 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("mixed layout: appendIndex onto a bucketed index is probe-visible") {
     val path = tmp("graft_mixed_spec")
-    NearDup.writeIndexBucketed(docsDf.filter(col("doc_id") < 20), path,
-      "graft_spec_mixed")
+    NearDup.writeIndex(docsDf.filter(col("doc_id") < 20), path,
+      IndexLayout.Bucketed("graft_spec_mixed"))
     NearDup.appendIndex(docsDf.filter(col("doc_id") >= 20), path)
     val viaIndex = collected(
       NearDup.matchesAgainstIndex(spark, path, incomingDf))
@@ -159,7 +159,8 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("plain rebuild over a bucketed index leaves no bucketed files") {
     val path = tmp("graft_relayout_spec")
-    NearDup.writeIndexBucketed(docsDf, path, "graft_spec_relayout")
+    NearDup.writeIndex(docsDf, path,
+      IndexLayout.Bucketed("graft_spec_relayout"))
     val half = docsDf.filter(col("doc_id") >= 20)
     NearDup.writeIndex(half, path)
     val left = new java.io.File(path).list().toSet
@@ -170,6 +171,29 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val direct = collected(NearDup.matchesAgainst(half, incomingDf))
     assert(viaIndex == direct, "the rebuilt index must serve only `half`")
     graft.core.CacheRegistry.releaseAll()
+  }
+
+  test("a bucketed index missing from the catalog refuses probes and " +
+      "the loop's start") {
+    val path = tmp("graft_uncat_spec")
+    val table = "graft_spec_uncat"
+    NearDup.writeIndex(docsDf, path, IndexLayout.Bucketed(table))
+    spark.sql(s"DROP TABLE $table")
+    val src = java.nio.file.Files.createTempDirectory("graft_uncat_src")
+    val registered = graft.core.CacheRegistry.size
+    val calls = Seq[() => Any](
+      () => NearDup.matchesAgainstIndex(spark, path, incomingDf),
+      () => NearDup.dedupAgainstIndex(spark, path, incomingDf),
+      () => graft.Api.continuousBuild(
+        spark.readStream.schema(docsDf.schema).parquet(src.toString),
+        path, tmp("graft_uncat_out"), tmp("graft_uncat_ck")))
+    calls.foreach { call =>
+      val err = intercept[IllegalArgumentException](call())
+      assert(err.getMessage.contains("registerBucketedIndex"),
+        s"the refusal must name the recovery call, got: ${err.getMessage}")
+    }
+    assert(graft.core.CacheRegistry.size == registered,
+      "a refused probe must not shingle the batch first")
   }
 
   test("appendIndex leaves no cached frame behind") {
@@ -303,12 +327,12 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.core.CacheRegistry.releaseAll()
     // same guard on the bucketed append path
     val bpath = tmp("graft_reuse_b_spec")
-    NearDup.writeIndexBucketed(docsDf, bpath, "graft_spec_reuse_b")
+    NearDup.writeIndex(docsDf, bpath,
+      IndexLayout.Bucketed("graft_spec_reuse_b"))
     NearDup.removeFromIndex(Seq(7L).toDF("doc_id"), bpath)
     intercept[IllegalArgumentException] {
-      NearDup.appendIndexBucketed(
-        Seq((7L, "x y z")).toDF("doc_id", "text"), bpath,
-        "graft_spec_reuse_b")
+      NearDup.appendIndex(
+        Seq((7L, "x y z")).toDF("doc_id", "text"), bpath)
     }
     graft.core.CacheRegistry.releaseAll()
   }
@@ -317,16 +341,16 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val path = tmp("graft_bstale_spec")
     val table = "graft_spec_bstale"
-    NearDup.writeIndexBucketed(docsDf, path, table)
+    NearDup.writeIndex(docsDf, path, IndexLayout.Bucketed(table))
     // tombstone family 0, then REBUILD the index at the same path:
     // the rebuild is a clean slate — the old tombstones must not
     // silently delete freshly indexed docs
     NearDup.removeFromIndex(
       docsDf.filter(pmod(col("doc_id"), lit(8)) === 0)
         .select("doc_id"), path)
-    NearDup.writeIndexBucketed(docsDf, path, table)
-    val after = collected(NearDup.matchesAgainstBucketedIndex(
-      spark, path, table, incomingDf))
+    NearDup.writeIndex(docsDf, path, IndexLayout.Bucketed(table))
+    val after = collected(
+      NearDup.matchesAgainstIndex(spark, path, incomingDf))
     val direct = collected(NearDup.matchesAgainst(docsDf, incomingDf))
     assert(after == direct,
       "a full bucketed rebuild must not inherit the previous life's " +
@@ -487,7 +511,7 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val path = tmp("graft_orphan_spec")
     val table = "graft_spec_orphan"
-    NearDup.writeIndexBucketed(docsDf, path, table)
+    NearDup.writeIndex(docsDf, path, IndexLayout.Bucketed(table))
     val direct = collected(NearDup.matchesAgainst(docsDf, incomingDf))
     graft.core.CacheRegistry.releaseAll()
     // simulate the catalog-loss states (a NEW session's in-memory
@@ -500,31 +524,30 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // probes away from the surviving index — the guard must refuse
     // and name the recovery call
     val err = intercept[IllegalArgumentException] {
-      NearDup.appendIndexBucketed(nd, path, table)
+      NearDup.appendIndex(nd, path)
     }
     assert(err.getMessage.contains("registerBucketedIndex"),
       s"guard must name the recovery recipe, got: ${err.getMessage}")
     graft.core.CacheRegistry.releaseAll()
     // the same state must not slip through the compaction path either
     val cerr = intercept[IllegalArgumentException] {
-      NearDup.compactIndexBucketed(spark, path, table)
+      NearDup.compactIndex(spark, path)
     }
     assert(cerr.getMessage.contains("registerBucketedIndex"))
     // one-call recovery: re-register over the surviving external
     // files (bucket count from the durable path marker), probe output
     // identical, and the append contract is back
-    NearDup.registerBucketedIndex(spark, path, table)
-    val restored = collected(NearDup.matchesAgainstBucketedIndex(
-      spark, path, table, incomingDf))
+    NearDup.registerBucketedIndex(spark, path)
+    val restored = collected(
+      NearDup.matchesAgainstIndex(spark, path, incomingDf))
     assert(restored == direct,
       "re-registered index diverged from the pre-loss output")
     graft.core.CacheRegistry.releaseAll()
-    NearDup.appendIndexBucketed(nd, path, table)
+    NearDup.appendIndex(nd, path)
     graft.core.CacheRegistry.releaseAll()
     val probe = Seq((5001L, (1 to 25).map(j => s"orph${j}w")
       .mkString(" ") + " tail")).toDF("doc_id", "text")
-    val hit = collected(NearDup.matchesAgainstBucketedIndex(
-      spark, path, table, probe))
+    val hit = collected(NearDup.matchesAgainstIndex(spark, path, probe))
     assert(hit.head._2 && hit.head._3 == 900L,
       s"post-recovery append must be probe-visible, got $hit")
     graft.core.CacheRegistry.releaseAll()
@@ -549,13 +572,13 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // bucketed layout
     val bpath = tmp("graft_superb_spec")
     val table = "graft_spec_superb"
-    NearDup.writeIndexBucketed(docsDf, bpath, table)
+    NearDup.writeIndex(docsDf, bpath, IndexLayout.Bucketed(table))
     mkdir(s"$bpath/signatures__old"); mkdir(s"$bpath/signatures__compact")
     mkdir(s"$bpath/bands_table__old"); mkdir(s"$bpath/bands_table__compact")
-    NearDup.writeIndexBucketed(docsDf, bpath, table)
-    NearDup.appendIndexBucketed(
+    NearDup.writeIndex(docsDf, bpath, IndexLayout.Bucketed(table))
+    NearDup.appendIndex(
       Seq((902L, (1 to 25).map(j => s"supb${j}w").mkString(" ")))
-        .toDF("doc_id", "text"), bpath, table)
+        .toDF("doc_id", "text"), bpath)
     graft.core.CacheRegistry.releaseAll()
     // ANN index
     def vec(seed: Int): Seq[Float] =
@@ -669,13 +692,13 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val table = "graft_spec_intid"
     val intDocs = docsDf.select(col("doc_id").cast("int").as("doc_id"),
       col("text"))
-    NearDup.writeIndexBucketed(intDocs, path, table)
-    NearDup.compactIndexBucketed(spark, path, table)
+    NearDup.writeIndex(intDocs, path, IndexLayout.Bucketed(table))
+    NearDup.compactIndex(spark, path)
     // the re-registered table must still scan (a hardcoded BIGINT
     // corpus_id would throw a parquet int32->bigint conversion error
     // on the very next probe)
-    val probed = NearDup.matchesAgainstBucketedIndex(spark, path,
-      table, incomingDf
+    val probed = NearDup.matchesAgainstIndex(spark, path,
+      incomingDf
         .select(col("doc_id").cast("int").as("doc_id"), col("text")))
       .collect()
     assert(probed.nonEmpty && probed.exists(_.getBoolean(1)),
