@@ -135,9 +135,8 @@ object Api {
     * start, naming `NearDup.registerBucketedIndex`.
     * `compactEvery = Some(n)` runs a compaction after every n-th
     * batch (by streaming batchId, so the cadence survives restarts) —
-    * the small-files
-    * and tombstone debt stays bounded without a separate maintenance
-    * scheduler. `compactAdvice = Some(thresholds)` is the
+    * the small-files and tombstone debt stays bounded without a
+    * separate maintenance scheduler. `compactAdvice = Some(thresholds)` is the
     * DATA-DRIVEN alternative (or complement): after each batch the
     * loop consults [[pipeline.NearDup.compactionAdvice]] — a
     * control-plane-cheap file/tombstone census — and compacts only

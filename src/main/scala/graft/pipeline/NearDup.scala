@@ -84,11 +84,11 @@ object NearDup {
       : (DataFrame, DataFrame, DataFrame) = {
     // fused native kernel (graft.functions.ShingleSig): bit-identical
     // to hashedShingles(shingles(words(text))) + bandKeys, one
-    // codegen'd call per row instead of five HOFs
-    // materialized BEFORE fan-out: four plan branches (band explode
-    // x2, verify join x2) scan this cache; if the first job races two
-    // branches through the uncached plan, the shingle/minhash chain —
-    // the dominant per-row cost — executes twice
+    // codegen'd call per row instead of five HOFs. Materialized BEFORE
+    // fan-out: four plan branches (band explode x2, verify join x2)
+    // scan this cache; if the first job races two branches through the
+    // uncached plan, the shingle/minhash chain — the dominant per-row
+    // cost — executes twice
     val sh = cachedSignatures(source)
     val (cand, pairs) = lshPairsFromSignatures(sh, threshold)
     (sh, cand, pairs)
@@ -493,9 +493,6 @@ object NearDup {
   def writeIndex(corpus: DataFrame, path: String,
                  layout: IndexLayout = IndexLayout.Plain): Unit = {
     val spark = corpus.sparkSession
-    Seq(recordedLayout(spark, path), layout).collect {
-      case IndexLayout.Bucketed(t, _) => t
-    }.distinct.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     val stale = Seq("signatures", "bands", "bands_table")
       .flatMap(d => Seq(d, s"${d}__old", s"${d}__compact"))
     delete(spark, (stale :+ "tombstones" :+ LayoutMarker)
@@ -505,6 +502,7 @@ object NearDup {
     layout match {
       case IndexLayout.Plain => rows.write.parquet(s"$path/bands")
       case b @ IndexLayout.Bucketed(t, nb) =>
+        spark.sql(s"DROP TABLE IF EXISTS $t")
         // born in the compacted serving state: one sorted file per
         // bucket (see bucketedBands)
         bucketedBands(rows, nb, "overwrite")

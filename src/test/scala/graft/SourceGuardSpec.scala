@@ -63,7 +63,7 @@ class SourceGuardSpec extends AnyFunSuite {
     val files = sources
     assert(files.exists(_.getName == "NearDup.scala"))
     val layoutCase = ("""(case\s+(\w+\s*[@:]\s*)?|isInstanceOf\[)""" +
-      """(IndexLayout\s*\.\s*)?(Plain|Bucketed)\b""").r
+      """([\w.]*IndexLayout\s*\.\s*)?(Plain|Bucketed)\b""").r
     val publicBucketed =
       """(?m)^(?!.*\bprivate\b).*\bdef\s+(\w*Bucketed\w*)""".r
     val hits = files.flatMap { f =>
