@@ -12,6 +12,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** S1-S5: DataSource V2 for the standard-record binary format.
@@ -148,6 +149,17 @@ object FstScan {
   def hidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
+  /** The active session's Hadoop conf (`spark.hadoop.*` and
+    * `sparkContext.hadoopConfiguration` included), built once per scan
+    * or stream: every `new Configuration()` re-parses the default XML
+    * resources and ignores the session's settings. The readers get it
+    * inside their factory, so it rides the task binary each stage
+    * broadcasts anyway; a broadcast of its own per scan raised peak
+    * memory (DESIGN.md "Api.read decides duplicates on the driver").
+    */
+  def sessionHadoopConf(): Configuration =
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+
   /** Bin-pack (file, length) pairs into read partitions (the
     * FileSourceScan recipe): per-file cost = size + openCost, target
     * partition size bounded by maxPartitionBytes and sized so the scan
@@ -156,9 +168,10 @@ object FstScan {
     * of one task per file; and a single multi-GB XDF file splits into
     * independently scannable directory-page runs (see
     * [[splitByPages]]) instead of serializing on one core. Used by
-    * both the batch scan and the micro-batch stream.
+    * both the batch scan and the micro-batch stream; `hconf` opens the
+    * oversized files the sub-file split probes.
     */
-  def packPartitions(files: Seq[(String, Long, Long)])
+  def packPartitions(files: Seq[(String, Long, Long)], hconf: Configuration)
       : Array[InputPartition] = {
     val conf = org.apache.spark.sql.SparkSession.active.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
@@ -175,7 +188,7 @@ object FstScan {
     // partition budget pay the header sniff
     val slices: Seq[(FstFileSlice, Long)] = files.flatMap {
       case (f, len, mtime) =>
-        if (len > target) splitByPages(f, len, mtime, target)
+        if (len > target) splitByPages(f, len, mtime, target, hconf)
         else Seq((FstFileSlice(f), len))
     }
 
@@ -259,7 +272,8 @@ object FstScan {
     * real error with full context.
     */
   private def splitByPages(f: String, len: Long, mtime: Long,
-                           target: Long): Seq[(FstFileSlice, Long)] = {
+                           target: Long, hconf: Configuration)
+      : Seq[(FstFileSlice, Long)] = {
     val key = (f, len, mtime)
     val cached = splitUnitsMemo.get(key)
     val units =
@@ -271,7 +285,7 @@ object FstScan {
         // retries, instead of pinning a multi-GB file to one core
         // for the process lifetime
         try {
-          val rf = new RecordFile(f, new Configuration())
+          val rf = new RecordFile(f, hconf)
           try {
             val v = Container.splitUnits(rf.header, rf.readAt)
             if (splitUnitsMemo.size > 100000) splitUnitsMemo.clear()
@@ -370,6 +384,10 @@ class FstScan(paths: Seq[String], required: StructType,
   // directory entries exactly like compile-time filters
   @volatile private var pushed: Array[Filter] = pushedInit
 
+  // one Hadoop conf per scan, the session's: the listing and the split
+  // probe use it on the driver, the readers get a serialized copy
+  private lazy val hconf = FstScan.sessionHadoopConf()
+
   // only columns present in the (pruned) read schema: Spark resolves
   // these references against the scan's output, so advertising a
   // pruned-away column fails analysis
@@ -408,7 +426,7 @@ class FstScan(paths: Seq[String], required: StructType,
   private def listWithSizesUncached(): Seq[(String, Long, Long)] =
     paths.flatMap { path =>
       val p = new Path(path)
-      val fs = p.getFileSystem(new Configuration())
+      val fs = p.getFileSystem(hconf)
       val st = fs.getFileStatus(p)
       if (st.isDirectory)
         FstScan.listPruned(fs, st.getPath, pushed).sortBy(_._1)
@@ -438,10 +456,11 @@ class FstScan(paths: Seq[String], required: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] =
-    FstScan.packPartitions(listWithSizes())
+    FstScan.packPartitions(listWithSizes(), hconf)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FstReaderFactory(required, pushed)
+    new FstReaderFactory(required, pushed,
+      new SerializableConfiguration(hconf))
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
@@ -502,10 +521,12 @@ class FstMicroBatchStream(path: String, required: StructType,
   import FstMicroBatchStream.CompactInterval
 
   private val logDir = new Path(checkpointLocation, "graft-files")
-  private lazy val srcFs = new Path(path).getFileSystem(new Configuration())
+  // the session's Hadoop conf, once per stream (see FstScan's)
+  private lazy val hconf = FstScan.sessionHadoopConf()
+  private lazy val hconfShipped = new SerializableConfiguration(hconf)
+  private lazy val srcFs = new Path(path).getFileSystem(hconf)
   // the checkpoint may live on a different filesystem than the data
-  private lazy val ckptFs =
-    logDir.getFileSystem(new Configuration())
+  private lazy val ckptFs = logDir.getFileSystem(hconf)
 
   // rebuilt from the checkpoint log on first use: path -> size
   private val seen = scala.collection.mutable.HashMap.empty[String, Long]
@@ -692,11 +713,12 @@ class FstMicroBatchStream(path: String, required: StructType,
     // the stale-rewrite window the batch path's mtime key closes
     // cannot open here — and a per-batch getFileStatus per file would
     // re-pay the RPCs the split memo exists to avoid
-    FstScan.packPartitions(files.map { case (f, len) => (f, len, -1L) })
+    FstScan.packPartitions(files.map { case (f, len) => (f, len, -1L) },
+      hconf)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FstReaderFactory(required, pushed)
+    new FstReaderFactory(required, pushed, hconfShipped)
 }
 
 object FstMicroBatchStream {
@@ -730,17 +752,24 @@ case class FstInputPartition(slices: Seq[FstFileSlice])
   def files: Seq[String] = slices.map(_.path).distinct
 }
 
-class FstReaderFactory(required: StructType, pushed: Array[Filter])
+class FstReaderFactory(required: StructType, pushed: Array[Filter],
+                       hconf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val slices = partition.asInstanceOf[FstInputPartition].slices
-    new FstPartitionReader(slices, required, pushed)
+    new FstPartitionReader(slices, required, pushed, hconf.value)
   }
 }
 
-/** One open record file. A short positioned read fails naming the
-  * file, the offset, the requested length and the file's length.
+/** One open record file. A short read fails naming the file, the
+  * offset, the requested length and the file's length.
+  *
+  * Reads seek the one open stream, so a `RecordFile` serves one
+  * thread: a positioned `readFully(off, buf)` on Hadoop's checksummed
+  * local filesystem opens the file and its `.crc` anew on every call,
+  * while a seek within the stream's buffer costs nothing (checksums
+  * are verified either way).
   */
 final class RecordFile(path: String, conf: Configuration) {
   private val p = new Path(path)
@@ -748,7 +777,7 @@ final class RecordFile(path: String, conf: Configuration) {
 
   def readAt(off: Long, len: Int): Array[Byte] = {
     val buf = new Array[Byte](len)
-    try in.readFully(off, buf)
+    try { in.seek(off); in.readFully(buf) }
     catch { case e: java.io.EOFException =>
       val fileLen = p.getFileSystem(conf).getFileStatus(p).getLen
       throw new java.io.EOFException(s"fstrec: $path: short read at " +
@@ -764,7 +793,7 @@ final class RecordFile(path: String, conf: Configuration) {
 }
 
 class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
-                         pushed: Array[Filter])
+                         pushed: Array[Filter], hconf: Configuration)
     extends PartitionReader[InternalRow] {
 
   // Streamed access (S2 semantics at scale): per file, only the
@@ -774,7 +803,6 @@ class FstPartitionReader(slices: Seq[FstFileSlice], required: StructType,
   // on demand — directory order is write (key) order, so demand reads
   // advance sequentially through the file. Files in the partition are
   // opened one at a time, in order.
-  private val hconf = new Configuration()
   private val remaining = slices.iterator
   private var in: RecordFile = _
   private var readAt: XdfFormat.ReadAt = _

@@ -59,7 +59,7 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // on four cores
     val files = (0 until 12).map(i =>
       (s"/nonexistent/part-$i%03d.fst", 3700000L + i * 1000L, 0L))
-    val parts = FstScan.packPartitions(files)
+    val parts = FstScan.packPartitions(files, FstScan.sessionHadoopConf())
       .map(_.asInstanceOf[FstInputPartition])
     assert(parts.map(_.slices.size).toSeq == Seq(3, 3, 3, 3))
     assert(parts.flatMap(_.slices.map(_.path)).toSeq == files.map(_._1))
@@ -211,6 +211,45 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("nomvar", "ip1")
     assert(back.count() == 64)
     assert(back.schema.fieldNames.toSeq == Seq("nomvar", "ip1"))
+  }
+
+  test("payload reads of compact files stay within 3x their bytes") {
+    // a positioned read on the checksummed local filesystem reopens the
+    // file and its .crc per record; a seek on the open stream does not
+    val path = "/tmp/graft_scan_spec_readbytes"
+    writeSmallFiles(path, rows = 2000, perFile = 5000)
+    // one file per write task, ~500 records each
+    val size = new java.io.File(path).listFiles()
+      .filter(f => f.isFile && !FstScanSpec.hiddenName(f.getName))
+      .map(_.length()).sum
+    def bytesRead(): Long = {
+      import scala.jdk.CollectionConverters._
+      @annotation.nowarn("cat=deprecation")
+      val all = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      all.filter(_.getScheme == "file").map(_.getBytesRead).sum
+    }
+    val before = bytesRead()
+    val sums = spark.read.format("fstrec").load(path)
+      .select(element_at(col("d"), 1).as("h")).agg(sum("h")).head()
+    val read = bytesRead() - before
+    assert(sums.getDouble(0) == (1 to 2000).sum.toDouble)
+    assert(read <= 3 * size, s"read $read bytes of $size")
+  }
+
+  test("a filesystem known only to the session's Hadoop conf is readable") {
+    val local = "/tmp/graft_scan_spec_sessionfs"
+    writeSmallFiles(local, rows = 40, perFile = 8)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.graftsession.impl", "fs.graftsession.impl.disable.cache")
+    hconf.set(keys(0), classOf[SessionOnlyFs].getName)
+    hconf.set(keys(1), "true")
+    try {
+      val back = spark.read.format("fstrec").load(s"graftsession://$local")
+      assert(back.select("ip1", "d").collect().map(_.getInt(0)).sorted
+        .toSeq == (1 to 40))
+      assert(back.select("path").head().getString(0)
+        .startsWith("graftsession:"))
+    } finally keys.foreach(hconf.unset)
   }
 
   test("DSv2 write path: save/overwrite/append with task-file commit") {
@@ -598,4 +637,14 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.length()).sum
     assert(full == disk, s"full estimate $full != disk $disk")
   }
+}
+
+object FstScanSpec {
+  def hiddenName(n: String): Boolean = n.startsWith(".") || n.startsWith("_")
+}
+
+/** The local filesystem under a scheme no default Hadoop conf maps. */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "graftsession"
+  override def getUri: java.net.URI = java.net.URI.create("graftsession:///")
 }
