@@ -12,23 +12,48 @@ import graft.meta.Lookups
   * All transformers are Column expressions (whole-stage codegen, no
   * UDFs; the ip decode is the native `graft_decode_ip_*` pair) and
   * recompute unconditionally — Catalyst prunes unused columns, so
-  * recomputation is free when a column is dropped later.
+  * recomputation is free when a column is dropped later. Each one is a
+  * list of named columns set in one projection, so
+  * [[decodeMetadata]] is one `select` after the unit join: a chain of
+  * `withColumn`s re-analyzes the growing plan at every step.
   */
 object Decode {
 
   import graft.core.Constants._
 
+  private type Named = Seq[(String, Column)]
+
+  /** `from` projected to `df`'s columns with `cols` set, in one
+    * `select`, as a chain of `withColumn`s over `df` sets them: a name
+    * `df` already has (by the session's resolver) is replaced in
+    * place, a new one is appended in order. `from` is `df` or a join
+    * of it.
+    */
+  private def setColumns(df: DataFrame, cols: Named,
+                         from: DataFrame): DataFrame = {
+    val same = df.sparkSession.sessionState.conf.resolver
+    val kept = df.columns.toSeq.map(c => cols.find(x => same(c, x._1))
+      .fold(df.col("`" + c.replace("`", "``") + "`"))(x => x._2.as(x._1)))
+    val added = cols.filterNot(x => df.columns.exists(same(_, x._1)))
+      .map(x => x._2.as(x._1))
+    from.select(kept ++ added: _*)
+  }
+
+  private def setColumns(df: DataFrame, cols: Named): DataFrame =
+    setColumns(df, cols, df)
+
   /** P1 add_grid_column (/root/reference/fstpy/dataframe.py:20-46):
     * coordinate records key their grid by (ip1,ip2); HY is grid-less;
     * data records key by (ig1,ig2).
     */
-  def addGrid(df: DataFrame): DataFrame =
-    df.withColumn("grid",
-      when(col("nomvar").isin(GridFromIpNomvars: _*),
-        concat(col("ip1").cast("string"), col("ip2").cast("string")))
-        .when(col("nomvar") === "HY", lit("None"))
-        .otherwise(
-          concat(col("ig1").cast("string"), col("ig2").cast("string"))))
+  def addGrid(df: DataFrame): DataFrame = setColumns(df, gridCols)
+
+  private def gridCols: Named = Seq("grid" ->
+    when(col("nomvar").isin(GridFromIpNomvars: _*),
+      concat(col("ip1").cast("string"), col("ip2").cast("string")))
+      .when(col("nomvar") === "HY", lit("None"))
+      .otherwise(
+        concat(col("ig1").cast("string"), col("ig2").cast("string"))))
 
   def gridSql: String =
     "CASE WHEN nomvar IN ('^>', '>>', '^^', '!!', '!!SF') THEN " +
@@ -44,12 +69,12 @@ object Decode {
     "interpolated" -> "I", "unit_converted" -> "U", "bounded" -> "B",
     "missing_data" -> "?", "ensemble_extra_info" -> "!")
 
-  def addFlags(df: DataFrame): DataFrame = {
+  def addFlags(df: DataFrame): DataFrame = setColumns(df, flagCols)
+
+  private def flagCols: Named = {
     val t2 = when(length(col("typvar")) === 2, substring(col("typvar"), 2, 1))
       .otherwise(lit(""))
-    FlagChars.foldLeft(df) { case (acc, (name, ch)) =>
-      acc.withColumn(name, t2 === ch)
-    }
+    FlagChars.map { case (name, ch) => name -> (t2 === ch) }
   }
 
   def flagSql(name: String): String = {
@@ -62,7 +87,10 @@ object Decode {
     * Absent pieces are empty strings (the reference uses None; we keep
     * the columns non-null strings for clean relational behavior).
     */
-  def addParsedEtiket(df: DataFrame): DataFrame = {
+  def addParsedEtiket(df: DataFrame): DataFrame =
+    setColumns(df, etiketCols)
+
+  private def etiketCols: Named = {
     val e = col("etiket")
     val run = "[RGPEAIMWNC_][0-9RLHMEA_]"
     val w = "[A-Za-z0-9_]"
@@ -71,18 +99,19 @@ object Decode {
     val cmcEns = s"^$run$w{5}$impl$w{3}$$"
     val spNo = s"^$run$w{6}$impl$$"
     val spEns = s"^$run$w{6}$impl$w{3}$$"
-    df.withColumn("label",
+    Seq(
+      "label" ->
         when(e.rlike(cmcNo) || e.rlike(cmcEns), substring(e, 3, 5))
           .when(e.rlike(spNo) || e.rlike(spEns), substring(e, 3, 6))
-          .otherwise(e))
-      .withColumn("run",
+          .otherwise(e),
+      "run" ->
         when(e.rlike(cmcNo) || e.rlike(cmcEns) || e.rlike(spNo) ||
-          e.rlike(spEns), substring(e, 1, 2)).otherwise(lit("")))
-      .withColumn("implementation",
+          e.rlike(spEns), substring(e, 1, 2)).otherwise(lit("")),
+      "implementation" ->
         when(e.rlike(cmcNo) || e.rlike(cmcEns), substring(e, 8, 1))
           .when(e.rlike(spNo) || e.rlike(spEns), substring(e, 9, 1))
-          .otherwise(lit("")))
-      .withColumn("ensemble_member",
+          .otherwise(lit("")),
+      "ensemble_member" ->
         when(e.rlike(cmcEns), substring(e, 9, 3))
           .when(e.rlike(spEns), substring(e, 10, 3))
           .otherwise(lit("")))
@@ -115,22 +144,31 @@ object Decode {
     * (/root/reference/fstpy/dataframe.py:358-388).
     */
   def addUnitAndDescription(df: DataFrame): DataFrame = {
+    val (joined, cols) = unitJoin(df)
+    setColumns(df, cols, joined)
+  }
+
+  /** `df` left-joined to the broadcast unit table, and the unit and
+    * description columns over that join.
+    */
+  private def unitJoin(df: DataFrame): (DataFrame, Named) = {
+    // renamed apart, so the decoded columns' `col(...)`s resolve over
+    // the join
     val dims = broadcast(Lookups.stdvarDf(df.sparkSession)
+      .withColumnRenamed("nomvar", "u_nomvar")
       .withColumnRenamed("unit", "u_unit")
       .withColumnRenamed("description", "u_desc"))
-    df.join(dims, df("nomvar") === dims("nomvar"), "left")
-      .drop(dims("nomvar"))
-      .withColumn("unit", coalesce(col("u_unit"), lit("scalar")))
-      .withColumn("description", coalesce(col("u_desc"), lit("")))
-      .drop("u_unit", "u_desc")
+    (df.join(dims, df("nomvar") === dims("u_nomvar"), "left"), Seq(
+      "unit" -> coalesce(dims("u_unit"), lit("scalar")),
+      "description" -> coalesce(dims("u_desc"), lit(""))))
   }
 
   /** P6 decoded dates (/root/reference/fstpy/dataframe.py:390-436). */
-  def addDecodedDates(df: DataFrame): DataFrame =
-    df.withColumn("date_of_observation",
-        IpColumns.stampToTimestamp(col("dateo")))
-      .withColumn("date_of_validity",
-        IpColumns.stampToTimestamp(col("datev")))
+  def addDecodedDates(df: DataFrame): DataFrame = setColumns(df, dateCols)
+
+  private def dateCols: Named = Seq(
+    "date_of_observation" -> IpColumns.stampToTimestamp(col("dateo")),
+    "date_of_validity" -> IpColumns.stampToTimestamp(col("datev")))
 
   /** P7 forecast_hour = deet*npas seconds
     * (/root/reference/fstpy/std_dec.py:89-103). Stored as whole
@@ -138,16 +176,18 @@ object Decode {
     * round-trips and oracle comparison.
     */
   def addForecastHour(df: DataFrame): DataFrame =
-    df.withColumn("forecast_hour",
-      (col("deet").cast("long") * col("npas").cast("long")))
+    setColumns(df, forecastCols)
+
+  private def forecastCols: Named = Seq("forecast_hour" ->
+    (col("deet").cast("long") * col("npas").cast("long")))
 
   /** P8 datyp -> letter (/root/reference/fstpy/dataframe.py:471-496). */
-  def addDataTypeStr(df: DataFrame): DataFrame = {
-    val m = DatypDict.foldLeft(lit(""): Column) { case (acc, (k, v)) =>
+  def addDataTypeStr(df: DataFrame): DataFrame = setColumns(df, datypCols)
+
+  private def datypCols: Named = Seq("data_type_str" ->
+    DatypDict.foldLeft(lit(""): Column) { case (acc, (k, v)) =>
       when(col("datyp") === k, lit(v)).otherwise(acc)
-    }
-    df.withColumn("data_type_str", m)
-  }
+    })
 
   def datypStrSql: String =
     "(CASE " + DatypDict.toSeq.sortBy(_._1).map { case (k, v) =>
@@ -166,7 +206,9 @@ object Decode {
     *    (ip3 swaps into ip2_dec); else one matching ip1's is a height
     *    interval.
     */
-  def addIpInfo(df: DataFrame): DataFrame = {
+  def addIpInfo(df: DataFrame): DataFrame = setColumns(df, ipCols)
+
+  private def ipCols: Named = {
     val rawIp = col("nomvar").isin(RawIpNomvars: _*)
     val noInterval = col("nomvar").isin(NoIntervalNomvars: _*)
 
@@ -190,23 +232,24 @@ object Decode {
     val heightInterval = !noInterval && col("ip3") >= 32768 &&
       !(k3 === k2) && (k3 === k1)
 
-    df.withColumn("level", v1)
-      .withColumn("ip1_kind", k1)
-      .withColumn("ip1_pkind", IpColumns.kindToString(k1))
-      .withColumn("ip2_dec", when(timeInterval, v3).otherwise(v2))
-      .withColumn("ip2_kind", k2)
-      .withColumn("ip2_pkind", IpColumns.kindToString(k2))
-      .withColumn("ip3_dec", v3)
-      .withColumn("ip3_kind", k3)
-      .withColumn("ip3_pkind", IpColumns.kindToString(k3))
-      .withColumn("surface", IpColumns.isSurface(k1, v1))
-      .withColumn("follow_topography", IpColumns.followsTopography(k1))
-      .withColumn("ascending", IpColumns.ascending(k1))
-      .withColumn("interval_low",
-        when(timeInterval, v3).when(heightInterval, v1).otherwise(lit(null)))
-      .withColumn("interval_high",
-        when(timeInterval, v2).when(heightInterval, v3).otherwise(lit(null)))
-      .withColumn("interval_kind",
+    Seq(
+      "level" -> v1,
+      "ip1_kind" -> k1,
+      "ip1_pkind" -> IpColumns.kindToString(k1),
+      "ip2_dec" -> when(timeInterval, v3).otherwise(v2),
+      "ip2_kind" -> k2,
+      "ip2_pkind" -> IpColumns.kindToString(k2),
+      "ip3_dec" -> v3,
+      "ip3_kind" -> k3,
+      "ip3_pkind" -> IpColumns.kindToString(k3),
+      "surface" -> IpColumns.isSurface(k1, v1),
+      "follow_topography" -> IpColumns.followsTopography(k1),
+      "ascending" -> IpColumns.ascending(k1),
+      "interval_low" ->
+        when(timeInterval, v3).when(heightInterval, v1).otherwise(lit(null)),
+      "interval_high" ->
+        when(timeInterval, v2).when(heightInterval, v3).otherwise(lit(null)),
+      "interval_kind" ->
         when(timeInterval, k2).when(heightInterval, k1).otherwise(lit(null)))
   }
 
@@ -222,12 +265,14 @@ object Decode {
     df.withColumn("shape", struct(col("ni"), col("nj")))
 
   /** P12 add_columns orchestrator
-    * (/root/reference/fstpy/dataframe.py:582-629).
+    * (/root/reference/fstpy/dataframe.py:582-629): the columns of
+    * addGrid, addFlags, addParsedEtiket, addUnitAndDescription,
+    * addDecodedDates, addForecastHour, addDataTypeStr and addIpInfo,
+    * in that order, set in one projection over the unit join.
     */
   def decodeMetadata(df: DataFrame): DataFrame = {
-    val steps: Seq[DataFrame => DataFrame] = Seq(
-      addGrid, addFlags, addParsedEtiket, addUnitAndDescription,
-      addDecodedDates, addForecastHour, addDataTypeStr, addIpInfo)
-    steps.foldLeft(df)((d, f) => f(d))
+    val (joined, unitCols) = unitJoin(df)
+    setColumns(df, gridCols ++ flagCols ++ etiketCols ++ unitCols ++
+      dateCols ++ forecastCols ++ datypCols ++ ipCols, joined)
   }
 }

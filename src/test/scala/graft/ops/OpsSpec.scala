@@ -66,6 +66,62 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getAs[Int]("ip1_kind") == 100)
   }
 
+  test("decodeMetadata and each add_* equal their withColumn chain") {
+    import spark.implicits._
+    val hours = IpCodec.encode(6f, 10)
+    val span = IpCodec.encode(12f, 10)
+    val metres = IpCodec.encode(10f, 0)
+    val varied = Seq(
+      // rid, nomvar, typvar, etiket, ip1, ip2, ip3, datyp
+      (11L, "TT", "PM", "R1_V710_N001", IpCodec.encode(850f, 2), hours,
+        span, 1),
+      (12L, "UU", "PZ", "G1ABCDEFX", IpCodec.encode(2f, 0), 6, metres, 5),
+      (13L, "ZZ", "P?", "G1ABCDEFX123", 12000, 30000, 7, 133),
+      (14L, "HY", "X", "", 0, 0, 0, 134),
+      (15L, ">>", "X", "GRID", 100, 200, 0, 5))
+      .toDF("rid", "nomvar", "typvar", "etiket", "ip1", "ip2", "ip3",
+        "datyp")
+      .withColumn("ni", lit(2)).withColumn("nj", lit(1))
+      .withColumn("nk", lit(1)).withColumn("dateo", lit(442998800L))
+      .withColumn("datev", lit(443020400L)).withColumn("deet", lit(300))
+      .withColumn("npas", col("rid").cast("int"))
+      .withColumn("nbits", lit(16)).withColumn("grtyp", lit("Z"))
+      .withColumn("ig1", lit(7)).withColumn("ig2", lit(8))
+      .withColumn("ig3", lit(0)).withColumn("ig4", lit(0))
+      .withColumn("d", array(lit(1f)))
+    // columns the decode sets already present: replaced in place, a
+    // differently cased one renamed
+    val predecoded = mkCatalog().withColumn("grid", lit("stale"))
+      .withColumn("Level", lit(-1f)).withColumn("unit", lit("stale"))
+    def same(got: DataFrame, want: DataFrame, what: String): Unit = {
+      assert(got.schema == want.schema, what)
+      def rows(df: DataFrame) = df.orderBy("rid").collect().map(_.toSeq)
+        .toSeq
+      assert(rows(got) == rows(want), what)
+    }
+    val pairs: Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)] =
+      Seq(("decodeMetadata", Decode.decodeMetadata, ChainedDecode.decodeMetadata),
+        ("addGrid", Decode.addGrid, ChainedDecode.addGrid),
+        ("addFlags", Decode.addFlags, ChainedDecode.addFlags),
+        ("addParsedEtiket", Decode.addParsedEtiket,
+          ChainedDecode.addParsedEtiket),
+        ("addUnitAndDescription", Decode.addUnitAndDescription,
+          ChainedDecode.addUnitAndDescription),
+        ("addDecodedDates", Decode.addDecodedDates,
+          ChainedDecode.addDecodedDates),
+        ("addForecastHour", Decode.addForecastHour,
+          ChainedDecode.addForecastHour),
+        ("addDataTypeStr", Decode.addDataTypeStr, ChainedDecode.addDataTypeStr),
+        ("addIpInfo", Decode.addIpInfo, ChainedDecode.addIpInfo))
+    for {
+      (name, input) <- Seq("mkCatalog" -> mkCatalog(), "varied" -> varied,
+        "predecoded" -> predecoded)
+      (op, got, want) <- pairs
+    } same(got(input), want(input), s"$op on $name")
+    assert(Decode.decodeMetadata(predecoded).columns
+      .count(_.equalsIgnoreCase("level")) == 1)
+  }
+
   test("grid identifier goldens (std_dec.py:254-256)") {
     import spark.implicits._
     // get_grid_identifier('TT', 94733000, 6, 33792, 77761)
