@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, not, udf}
 
 /** One-call facade mirroring the reference's entry-point ergonomics
   * (`StandardFileReader(filenames, decode_metadata, query).to_pandas()`,
@@ -24,6 +25,20 @@ object Api {
 
   /** Read one or more record files/directories.
     *
+    * Duplicate records (equal in every `Constants.DedupColumns`
+    * column) are decided once, when `read` is called: one collect of
+    * the filtered catalog's identity and `(path, key)` handle, no
+    * payload, and plain Scala keeps the copy with the lowest
+    * `(path, key)` (path in UTF-8 byte order), which is fstpy's
+    * keep-first when the files are read in path order. The returned
+    * frame is the filtered catalog itself when nothing repeats, else
+    * that catalog with one filter dropping the other copies' handles:
+    * no aggregate and no shuffle, so each evaluation re-runs only the
+    * scan and keeps the same copy. Files written to `paths` after the
+    * call are read but not deduplicated. The driver holds one row of
+    * 21 metadata values per record while it decides, like the
+    * reference's pandas catalog.
+    *
     * @param query Spark SQL predicate over the catalog columns (the
     *              analog of the reference's pandas `query` string —
     *              e.g. `"nomvar == 'TT'"`). Applied AFTER metadata
@@ -40,7 +55,35 @@ object Api {
       if (decodeMetadata) ops.Decode.decodeMetadata(base)
       else base
     val filtered = query.fold(decoded)(decoded.filter)
-    filtered.dropDuplicates(core.Constants.DedupColumns)
+    val ids = core.Constants.DedupColumns
+    val rows = filtered.select((ids ++ Seq("path", "key")).map(col): _*)
+      .collect()
+    val dropped = droppedHandles(rows, ids.size)
+    if (dropped.isEmpty) filtered
+    else filtered.filter(not(handleIn(dropped)))
+  }
+
+  /** The `(path, key)` handles of every copy but the lowest of each
+    * identity, in Spark's order (`Select.ValueOrder`: path by UTF-8
+    * bytes); a row is its `n` identity values, then path and key.
+    * Identities compare as a grouping key does (nulls alike).
+    */
+  private def droppedHandles(rows: Array[Row], n: Int): Seq[Row] =
+    rows.groupBy(r => r.toSeq.take(n)).valuesIterator
+      .filter(_.length > 1).flatMap(copies => copies
+        .map(r => Row(r.get(n), r.get(n + 1))).sorted(ops.Select.ValueOrder)
+        .tail).toSeq
+
+  /** `(path, key)` is one of `handles`. A lookup in a set the
+    * generated code holds by reference, so its class is the same
+    * whatever the handles; an `isin` of fewer than
+    * `spark.sql.optimizer.inSetConversionThreshold` values would write
+    * each one into the code.
+    */
+  private def handleIn(handles: Seq[Row]): Column = {
+    val set = handles.map(h => (h.getString(0), h.getInt(1))).toSet
+    val in = udf((path: String, key: Int) => set((path, key)))
+    in(col("path"), col("key"))
   }
 
   /** Read with the payload at native precision: the extended schema

@@ -124,9 +124,11 @@ object Select {
       kept.exists(r => n(of(r)) > 1)
     }
     // The semi-join matches on the metadata alone where that tells the
-    // kept records apart. A `(path, key)` is not stable across the two
-    // evaluations of `df`: Api.read's dropDuplicates keeps any one of
-    // a duplicated record's copies.
+    // kept records apart. A `(path, key)` need not be stable across the
+    // two evaluations of `df`: Api.read keeps the same copy of a
+    // duplicated record every time, but a frame from elsewhere
+    // (overlapping files deduplicated by a shuffle, say) may keep
+    // another copy on each evaluation.
     val on = Some(idCols.filterNot(Seq("path", "key").contains))
       .filterNot(ambiguous).getOrElse(idCols)
     val keys = g.sparkSession.createDataFrame(kept.asJava, ids.schema)
@@ -167,7 +169,7 @@ object Select {
   /** Spark's ascending sort order: nulls first, strings by UTF-8 bytes,
     * structs field by field.
     */
-  private[ops] object ValueOrder extends Ordering[Any] {
+  private[graft] object ValueOrder extends Ordering[Any] {
     def compare(a: Any, b: Any): Int = (a, b) match {
       case (null, null) => 0
       case (null, _) => -1

@@ -211,7 +211,10 @@ object VCoord {
     * metadata with the `!!` tables and HY's first element, together
     * with the data side's level groups without `d`. The P0 and PT
     * payloads are picked in the returned plan, by the lowest rid per
-    * (grid, datev).
+    * (grid, datev), not fetched by a `(path, key)` collected here: an
+    * `Api.read` input keeps the same copies on every evaluation, but
+    * an input from elsewhere (overlapping files deduplicated by a
+    * shuffle, say) need not.
     */
   def quickPressure(df: DataFrame,
                     standardAtmosphere: Boolean = false): DataFrame = {

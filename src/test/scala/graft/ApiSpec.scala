@@ -91,6 +91,140 @@ class ApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cube.count() > 0)
   }
 
+  /** Eight records, `r` and `r + 4` alike in every dedup column (ip3 =
+    * r % 4) but ig2 = r; payload (r, tag).
+    */
+  private def writeDuplicated(path: String, tag: Float): Unit = {
+    import spark.implicits._
+    val base = (0 until 8).toDF("r").select(
+      lit("TT").as("nomvar"), lit("P").as("typvar"),
+      lit("R1_V710_N").as("etiket"),
+      lit(2).as("ni"), lit(1).as("nj"), lit(1).as("nk"),
+      lit(442998800L).as("dateo"), lit(500).as("ip1"),
+      lit(0).as("ip2"), (col("r") % 4).cast("int").as("ip3"),
+      lit(0).as("deet"), lit(0).as("npas"), lit(5).as("datyp"),
+      lit(32).as("nbits"), lit("X").as("grtyp"), lit(0).as("ig1"),
+      col("r").as("ig2"), lit(0).as("ig3"), lit(0).as("ig4"),
+      lit(442998800L).as("datev"),
+      array(col("r").cast("float"), lit(tag)).as("d"))
+    sources.fst.FstWriter.write(base, path, cleanup = false)
+  }
+
+  test("Api.read keeps the lowest (path, key) copy, the same on every " +
+      "evaluation") {
+    val root = Files.createTempDirectory("graft_api_dups").toString
+    // listed out of order; within a file the copies differ by key
+    val dirs = Seq(s"$root/b", s"$root/a")
+    dirs.zipWithIndex.foreach { case (d, i) => writeDuplicated(d, i + 1f) }
+    val raw = spark.read.format("fstrec").load(dirs: _*)
+      .select("ip3", "path", "key", "ig2", "d").collect().toSeq
+    def bytes(s: String) = s.getBytes("UTF-8").map(_ & 0xff).toSeq
+    val byHandle: Ordering[org.apache.spark.sql.Row] = Ordering.by(
+      (r: org.apache.spark.sql.Row) => (bytes(r.getString(1)), r.getInt(2)))(
+      Ordering.Tuple2(Ordering.Implicits.seqOrdering[Seq, Int],
+        Ordering.Int))
+    def expected(keep: Int => Boolean) = raw.groupBy(_.getInt(0))
+      .filter(g => keep(g._1)).values.map(_.min(byHandle).toSeq).toSeq
+      .sortBy(_.head.asInstanceOf[Int])
+    assert(raw.size == 16 && expected(_ => true).size == 4)
+    for ((query, keep) <- Seq[(Option[String], Int => Boolean)](
+        None -> (_ => true), Some("ip3 < 2") -> (_ < 2))) {
+      val read = Api.read(spark, dirs, query = query)
+      def kept() = read.select("ip3", "path", "key", "ig2", "d")
+        .orderBy("ip3").collect().map(_.toSeq).toSeq
+      val first = kept()
+      assert(first == expected(keep), query)
+      assert(kept() == first, query)
+      // the kept copies come from the lower directory, first key first
+      assert(first.forall(_(1).toString.contains("/a/")), query)
+    }
+    // decode on: the same kept copies, decoded
+    val decoded = Api.read(spark, dirs, decodeMetadata = true)
+    assert(decoded.select("ip3", "path", "key", "ig2", "d").orderBy("ip3")
+      .collect().map(_.toSeq).toSeq == expected(_ => true))
+    assert(decoded.columns.contains("level"))
+  }
+
+  test("Api.read plans no aggregate, exchange or join for its dedup") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
+      Deduplicate, Join}
+    val root = Files.createTempDirectory("graft_api_plan").toString
+    writeDuplicated(s"$root/a", 1f)
+    writeDuplicated(s"$root/b", 2f)
+    def check(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val opt = df.queryExecution.optimizedPlan
+      assert(opt.collect { case p @ (_: Aggregate | _: Deduplicate |
+        _: Join) => p }.isEmpty, s"$what:\n$opt")
+      df.write.format("noop").mode("overwrite").save()
+      val exec = df.queryExecution.executedPlan.toString
+      assert(!exec.contains("Exchange") && !exec.contains("Aggregate"),
+        s"$what:\n$exec")
+    }
+    // no duplicates: the frame is the scan itself
+    val clean = Api.read(spark, Seq(s"$root/a"), query = Some("ip3 < 4 AND ig2 < 4"))
+    check(clean, "no duplicates")
+    assert(clean.count() == 4)
+    val plain = spark.read.format("fstrec").load(s"$root/a")
+      .filter("ip3 < 4 AND ig2 < 4")
+    def noIds(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.toString.replaceAll("#\\d+L?", "#")
+    assert(noIds(clean) == noIds(plain))
+    // duplicates within and across files: one more filter
+    val dups = Api.read(spark, Seq(s"$root/a", s"$root/b"))
+    check(dups, "duplicates")
+    assert(dups.count() == 4)
+  }
+
+  test("Api.read's dedup filter compiles nothing new for more handles") {
+    // an isin of fewer than inSetConversionThreshold (10) values writes
+    // each value into the generated code
+    val root = Files.createTempDirectory("graft_api_codegen").toString
+    writeDuplicated(s"$root/a", 1f)
+    writeDuplicated(s"$root/b", 2f)
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    def run(paths: String*): Unit = Api.read(spark, paths)
+      .write.format("noop").mode("overwrite").save()
+    run(s"$root/a") // drops 4 handles
+    run(s"$root/a")
+    val before = compiles
+    run(s"$root/b") // other handles
+    run(s"$root/a", s"$root/b") // 12 handles
+    assert(compiles == before)
+  }
+
+  test("Api.read's call-time collect reads no payload") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("graft_api_collect").toString
+    writeDuplicated(s"$root/a", 1f)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "collect") seen.add(qe.optimizedPlan.collect {
+          case r: DataSourceV2ScanRelation => r.scan.readSchema().fieldNames
+        }.flatten)
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Api.read(spark, Seq(s"$root/a"))
+      Api.read(spark, Seq(s"$root/a"), decodeMetadata = true,
+        query = Some("level == 500.0 AND forecast_hour >= 0"))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (seen.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val schemas = seen.asScala.toSeq
+    assert(schemas.size == 2, schemas)
+    schemas.foreach { cols =>
+      assert(cols.contains("path") && cols.contains("key"), cols)
+      assert(!cols.contains("d"), cols)
+    }
+  }
+
   test("Api.continuousBuild: streaming loop accumulates a near-dup-free corpus") {
     import spark.implicits._
     graft.functions.GraftFunctions.install(spark)
