@@ -236,20 +236,72 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(read <= 3 * size, s"read $read bytes of $size")
   }
 
-  test("a filesystem known only to the session's Hadoop conf is readable") {
-    val local = "/tmp/graft_scan_spec_sessionfs"
-    writeSmallFiles(local, rows = 40, perFile = 8)
+  /** Runs `body` with the `graftsession` scheme ([[SessionOnlyFs]])
+    * mapped only in `sparkContext.hadoopConfiguration`.
+    */
+  private def withSessionFs[T](body: => T): T = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val keys = Seq("fs.graftsession.impl", "fs.graftsession.impl.disable.cache")
     hconf.set(keys(0), classOf[SessionOnlyFs].getName)
     hconf.set(keys(1), "true")
-    try {
+    try body finally keys.foreach(hconf.unset)
+  }
+
+  private def ip1s(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+    df.select("ip1").collect().map(_.getInt(0)).sorted.toSeq
+
+  test("a filesystem known only to the session's Hadoop conf is readable") {
+    val local = "/tmp/graft_scan_spec_sessionfs"
+    writeSmallFiles(local, rows = 40, perFile = 8)
+    withSessionFs {
       val back = spark.read.format("fstrec").load(s"graftsession://$local")
       assert(back.select("ip1", "d").collect().map(_.getInt(0)).sorted
         .toSeq == (1 to 40))
       assert(back.select("path").head().getString(0)
         .startsWith("graftsession:"))
-    } finally keys.foreach(hconf.unset)
+    }
+  }
+
+  test("a filesystem known only to the session's Hadoop conf takes write, update and read-back") {
+    val dir = "graftsession:///tmp/graft_scan_spec_sessionfs_write"
+    withSessionFs {
+      writeSmallFiles(dir, rows = 40, perFile = 8)
+      graft.sources.fst.FstWriter.update(spark.read.format("fstrec").load(dir)
+        .withColumn("etiket", lit("UPD")))
+      val back = spark.read.format("fstrec").load(dir)
+      assert(ip1s(back) == (1 to 40))
+      assert(back.filter(col("etiket") === "UPD").count() == 40)
+      assert(back.select("path").head().getString(0)
+        .startsWith("graftsession:"))
+    }
+    val names = new java.io.File("/tmp/graft_scan_spec_sessionfs_write")
+      .listFiles().map(_.getName)
+    assert(names.exists(n => !FstScanSpec.hiddenName(n)), names.mkString(", "))
+    assert(!names.exists(n => n.contains(".inprogress") ||
+      n.contains(".updating") || n.contains(".updbak")), names.mkString(", "))
+  }
+
+  test("a filesystem known only to the session's Hadoop conf takes a compaction") {
+    val local = "/tmp/graft_scan_spec_sessionfs_csrc"
+    writeSmallFiles(local, rows = 40, perFile = 8)
+    val dst = "graftsession:///tmp/graft_scan_spec_sessionfs_cdst"
+    withSessionFs {
+      graft.sources.fst.FstWriter.compact(spark, s"graftsession://$local", dst)
+      assert(ip1s(spark.read.format("fstrec").load(dst)) == (1 to 40))
+    }
+    assert(new java.io.File("/tmp/graft_scan_spec_sessionfs_cdst").listFiles()
+      .count(f => !FstScanSpec.hiddenName(f.getName)) == 1)
+  }
+
+  test("a filesystem known only to the session's Hadoop conf feeds a stream") {
+    val local = "/tmp/graft_scan_spec_sessionfs_stream"
+    writeSmallFiles(local, rows = 40, perFile = 8)
+    withSessionFs {
+      val streamed = graft.streaming.StreamDrain.drain(spark,
+        spark.readStream.format("fstrec").load(s"graftsession://$local")
+          .select("ip1"), "append", "sessionfs", shufflePartitions = 1)
+      assert(ip1s(streamed) == (1 to 40))
+    }
   }
 
   test("DSv2 write path: save/overwrite/append with task-file commit") {
