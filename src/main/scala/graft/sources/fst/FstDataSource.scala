@@ -12,7 +12,6 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** S1-S5: DataSource V2 for the standard-record binary format.
@@ -150,15 +149,17 @@ object FstScan {
     name.startsWith(".") || name.startsWith("_")
 
   /** The active session's Hadoop conf (`spark.hadoop.*` and
-    * `sparkContext.hadoopConfiguration` included), built once per scan
-    * or stream: every `new Configuration()` re-parses the default XML
-    * resources and ignores the session's settings. The readers get it
-    * inside their factory, so it rides the task binary each stage
-    * broadcasts anyway; a broadcast of its own per scan raised peak
-    * memory (DESIGN.md "Api.read decides duplicates on the driver").
+    * `sparkContext.hadoopConfiguration` included), built once per scan,
+    * stream or write: a conf built from scratch re-parses the default
+    * XML resources and ignores the session's settings. Tasks get it as
+    * a [[ShippedConf]] inside their factory, so it rides the task
+    * binary each stage broadcasts anyway; a broadcast of its own per
+    * scan raised peak memory (DESIGN.md "Api.read decides duplicates
+    * on the driver").
     */
-  def sessionHadoopConf(): Configuration =
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+  def sessionHadoopConf(spark: org.apache.spark.sql.SparkSession =
+      org.apache.spark.sql.SparkSession.active): Configuration =
+    spark.sessionState.newHadoopConf()
 
   /** Bin-pack (file, length) pairs into read partitions (the
     * FileSourceScan recipe): per-file cost = size + openCost, target
@@ -385,8 +386,9 @@ class FstScan(paths: Seq[String], required: StructType,
   @volatile private var pushed: Array[Filter] = pushedInit
 
   // one Hadoop conf per scan, the session's: the listing and the split
-  // probe use it on the driver, the readers get a serialized copy
+  // probe use it on the driver, the readers get it as a ShippedConf
   private lazy val hconf = FstScan.sessionHadoopConf()
+  private lazy val shipped = ShippedConf(hconf)
 
   // only columns present in the (pruned) read schema: Spark resolves
   // these references against the scan's output, so advertising a
@@ -459,8 +461,7 @@ class FstScan(paths: Seq[String], required: StructType,
     FstScan.packPartitions(listWithSizes(), hconf)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FstReaderFactory(required, pushed,
-      new SerializableConfiguration(hconf))
+    new FstReaderFactory(required, pushed, shipped)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
@@ -523,7 +524,7 @@ class FstMicroBatchStream(path: String, required: StructType,
   private val logDir = new Path(checkpointLocation, "graft-files")
   // the session's Hadoop conf, once per stream (see FstScan's)
   private lazy val hconf = FstScan.sessionHadoopConf()
-  private lazy val hconfShipped = new SerializableConfiguration(hconf)
+  private lazy val shipped = ShippedConf(hconf)
   private lazy val srcFs = new Path(path).getFileSystem(hconf)
   // the checkpoint may live on a different filesystem than the data
   private lazy val ckptFs = logDir.getFileSystem(hconf)
@@ -718,7 +719,7 @@ class FstMicroBatchStream(path: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FstReaderFactory(required, pushed, hconfShipped)
+    new FstReaderFactory(required, pushed, shipped)
 }
 
 object FstMicroBatchStream {
@@ -753,7 +754,7 @@ case class FstInputPartition(slices: Seq[FstFileSlice])
 }
 
 class FstReaderFactory(required: StructType, pushed: Array[Filter],
-                       hconf: SerializableConfiguration)
+                       hconf: ShippedConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {

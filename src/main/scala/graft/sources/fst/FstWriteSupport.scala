@@ -119,28 +119,6 @@ object FstBatchWrite {
           s"fstrec commit: rename $tmp -> $fin failed")
     }
   }
-
-  /** Job commit: rename every (temp, final) pair reported by the
-    * tasks. Replayed streaming epochs re-commit the same deterministic
-    * final names, so an existing final file is replaced, not
-    * duplicated.
-    */
-  def publish(path: String,
-              messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(new Configuration())
-    messages.collect { case m: FstCommitMessage => m.renames }
-      .flatten.foreach { case (tmp, fin) => renameOverwrite(fs, tmp, fin) }
-  }
-
-  /** Job abort: best-effort delete of uncommitted temp files. */
-  def discard(path: String,
-              messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(new Configuration())
-    messages.collect { case m: FstCommitMessage => m.renames }
-      .flatten.foreach { case (tmp, _) =>
-        fs.delete(new Path(tmp), false)
-      }
-  }
 }
 
 /** The job side of a batch write and of every streaming epoch. */
@@ -155,15 +133,19 @@ class FstBatchWrite(path: String, schema: StructType,
   private val d64Ordinal = FstBatchWrite.resolveD64(schema)
   private val partSpec = FstBatchWrite.resolvePartitionSpec(
     schema, partitionBy)
+  // the session's Hadoop conf, once per write or stream: the job side
+  // truncates and renames with it, the tasks get it as a ShippedConf
+  private val hconf = FstScan.sessionHadoopConf()
+  private def fileSystem(): FileSystem = new Path(path).getFileSystem(hconf)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : FstDataWriterFactory = {
-    val fs = new Path(path).getFileSystem(new Configuration())
     val dir = new Path(path)
+    val fs = fileSystem()
     if (truncate && fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
     new FstDataWriterFactory(path, ordinals, maxRecordsPerFile,
-      partSpec, container, d64Ordinal)
+      partSpec, container, d64Ordinal, ShippedConf(hconf))
   }
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : FstDataWriterFactory = createBatchWriterFactory(info)
@@ -171,16 +153,39 @@ class FstBatchWrite(path: String, schema: StructType,
   override def useCommitCoordinator(): Boolean = true
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    FstBatchWrite.publish(path, messages)
+    publish(messages)
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit =
-    FstBatchWrite.publish(path, messages)
+    publish(messages)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    FstBatchWrite.discard(path, messages)
+    discard(messages)
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit =
-    FstBatchWrite.discard(path, messages)
+    discard(messages)
+
+  private def renames(messages: Array[WriterCommitMessage]) =
+    messages.collect { case m: FstCommitMessage => m.renames }.flatten
+
+  /** Job commit: rename every (temp, final) pair reported by the
+    * tasks. Replayed streaming epochs re-commit the same deterministic
+    * final names, so an existing final file is replaced, not
+    * duplicated.
+    */
+  private def publish(messages: Array[WriterCommitMessage]): Unit = {
+    val fs = fileSystem()
+    renames(messages).foreach { case (tmp, fin) =>
+      FstBatchWrite.renameOverwrite(fs, tmp, fin)
+    }
+  }
+
+  /** Job abort: best-effort delete of uncommitted temp files. */
+  private def discard(messages: Array[WriterCommitMessage]): Unit = {
+    val fs = fileSystem()
+    renames(messages).foreach { case (tmp, _) =>
+      fs.delete(new Path(tmp), false)
+    }
+  }
 }
 
 /** (temp name, final name) per file the task wrote. */
@@ -197,18 +202,19 @@ case class FstCommitMessage(renames: Seq[(String, String)])
 class FstDataWriterFactory(path: String, ordinals: Array[Int],
                            maxRecordsPerFile: Int,
                            partSpec: Seq[(String, Int, DataType)],
-                           container: Container, d64Ordinal: Int)
+                           container: Container, d64Ordinal: Int,
+                           hconf: ShippedConf)
     extends DataWriterFactory with org.apache.spark.sql.connector.write
       .streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new FstDataWriter(path, ordinals, partitionId, taskId,
-      maxRecordsPerFile, null, partSpec, container, d64Ordinal)
+      maxRecordsPerFile, null, partSpec, container, d64Ordinal, hconf.value)
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new FstDataWriter(path, ordinals, partitionId, taskId,
       maxRecordsPerFile, s"part-e$epochId-p$partitionId", partSpec,
-      container, d64Ordinal)
+      container, d64Ordinal, hconf.value)
 }
 
 class FstDataWriter(path: String, ordinals: Array[Int],
@@ -216,7 +222,8 @@ class FstDataWriter(path: String, ordinals: Array[Int],
                     maxRecordsPerFile: Int,
                     namePrefix: String,
                     partSpec: Seq[(String, Int, DataType)],
-                    container: Container, d64Ordinal: Int)
+                    container: Container, d64Ordinal: Int,
+                    hconf: Configuration)
     extends DataWriter[InternalRow] {
 
   // own (non-cached) FS instance so checksum sidecars can be disabled
@@ -224,7 +231,7 @@ class FstDataWriter(path: String, ordinals: Array[Int],
   // the record format carries its own magic + directory structure, and
   // skipping .crc files halves the small-file create/rename syscalls
   private val fs = {
-    val f = FileSystem.newInstance(new Path(path).toUri, new Configuration())
+    val f = FileSystem.newInstance(new Path(path).toUri, hconf)
     f.setWriteChecksum(false)
     f
   }

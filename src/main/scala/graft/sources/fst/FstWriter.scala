@@ -1,6 +1,5 @@
 package graft.sources.fst
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -58,7 +57,7 @@ object FstWriter {
     // directory into itself would duplicate every record. Nesting dst
     // under src is equally self-referential: the write would land new
     // record files inside the tree being read.
-    val conf = new Configuration()
+    val conf = FstScan.sessionHadoopConf(spark)
     val srcQ = {
       val p = new Path(src)
       p.getFileSystem(conf).makeQualified(p).toUri.normalize
@@ -103,9 +102,12 @@ object FstWriter {
       "grtyp", "ig1", "ig2", "ig3", "ig4")
     val prepared = df.select(
       cols.map(c => col(c).cast(FstTable.Schema(c).dataType)): _*)
+    // the session's Hadoop conf, shipped to the tasks as its difference
+    // from the base
+    val shipped = ShippedConf(FstScan.sessionHadoopConf(df.sparkSession))
     prepared.repartition(col("path")).foreachPartition {
       (it: Iterator[org.apache.spark.sql.Row]) =>
-        val conf = new Configuration()
+        val conf = shipped.value
         // FileSystem construction is expensive: one per partition
         // (keyed by scheme), not one per patched file. Own instances
         // so write checksums can be disabled (no .crc sidecars).

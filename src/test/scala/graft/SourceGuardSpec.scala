@@ -91,6 +91,25 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
+  test("the sources ship Hadoop confs only as a ShippedConf") {
+    // a whole shipped conf costs every task milliseconds, and a conf
+    // built from scratch re-parses XML and drops the session's settings;
+    // only ShippedConf builds its base and that base's copies
+    assert(sources.exists(_.getName == "ShippedConf.scala"))
+    val hits = for {
+      f <- sources
+      if f.getPath.contains("/graft/sources/")
+      (l, i) <- read(f).split("\n").zipWithIndex
+      t = l.trim
+      if !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/**"))
+      m <- """SerializableConfiguration|new\s+Configuration\s*\(""".r
+        .findAllMatchIn(l)
+      if m.matched.startsWith("Serializable") ||
+        f.getName != "ShippedConf.scala"
+    } yield s"${f.getPath}:${i + 1}: ${m.matched}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
   test("Api plans no dropDuplicates") {
     // Api.read decides its duplicates on the driver when it is called;
     // a dropDuplicates would shuffle again on every evaluation

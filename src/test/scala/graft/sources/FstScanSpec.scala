@@ -289,8 +289,6 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.sources.fst.FstWriter.compact(spark, s"graftsession://$local", dst)
       assert(ip1s(spark.read.format("fstrec").load(dst)) == (1 to 40))
     }
-    assert(new java.io.File("/tmp/graft_scan_spec_sessionfs_cdst").listFiles()
-      .count(f => !FstScanSpec.hiddenName(f.getName)) == 1)
   }
 
   test("a filesystem known only to the session's Hadoop conf feeds a stream") {
@@ -302,6 +300,60 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
           .select("ip1"), "append", "sessionfs", shufflePartitions = 1)
       assert(ip1s(streamed) == (1 to 40))
     }
+  }
+
+  private def javaBytes(o: AnyRef): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bos)
+    try out.writeObject(o) finally out.close()
+    bos.toByteArray
+  }
+
+  test("a shipped Hadoop conf rebuilds the session's conf on every key") {
+    import graft.sources.fst.{FstScan, ShippedConf}
+    import scala.jdk.CollectionConverters._
+    def entries(c: org.apache.hadoop.conf.Configuration) =
+      c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val hconf = spark.sparkContext.hadoopConfiguration
+    // set only in the context's conf, set as a session spark.hadoop.*
+    // key, and a core-default.xml key the session lacks
+    val hadoopOnly = "graft.spec.hadoop.only"
+    val sessionKey = "spark.hadoop.graft.spec.session"
+    val defaultKey = "hadoop.security.groups.cache.secs"
+    val defaultValue = hconf.get(defaultKey)
+    assert(defaultValue != null)
+    hconf.set(hadoopOnly, "context")
+    hconf.unset(defaultKey)
+    spark.conf.set(sessionKey, "session")
+    try {
+      val session = FstScan.sessionHadoopConf()
+      assert(session.get(hadoopOnly) == "context")
+      assert(session.get(sessionKey) == "session")
+      assert(session.get(defaultKey) == null)
+      val in = new java.io.ObjectInputStream(
+        new java.io.ByteArrayInputStream(javaBytes(ShippedConf(session))))
+      val back = in.readObject().asInstanceOf[ShippedConf].value
+      val (want, got) = (entries(session), entries(back))
+      assert((want.keySet -- got.keySet).isEmpty)
+      assert((got.keySet -- want.keySet).isEmpty)
+      assert(want.filter { case (k, v) => got(k) != v }.isEmpty)
+      assert(back.get(defaultKey) == null)
+    } finally {
+      hconf.set(defaultKey, defaultValue)
+      hconf.unset(hadoopOnly)
+      spark.conf.unset(sessionKey)
+    }
+  }
+
+  test("a plain scan's reader factory serializes to under 16 KB") {
+    import graft.sources.fst.FstScanBuilder
+    val path = "/tmp/graft_scan_spec_factory"
+    writeSmallFiles(path, rows = 8, perFile = 8)
+    val factory = new FstScanBuilder(Seq(path)).build().toBatch
+      .createReaderFactory()
+    val bytes = javaBytes(factory).length
+    info(s"serialized reader factory: $bytes bytes")
+    assert(bytes < 16 * 1024, s"$bytes bytes")
   }
 
   test("DSv2 write path: save/overwrite/append with task-file commit") {
