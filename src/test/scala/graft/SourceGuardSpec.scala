@@ -10,9 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * dispatch sniff a header or compare a container name, and only
   * `NearDup` dispatches on an LSH index layout. Keeps `Api` free of
   * `dropDuplicates`, whose shuffle would re-run per evaluation. Keeps
-  * the jar a library: only the three entry points define a `main`, every
-  * `graft.core` object is used by other library code, not only by
-  * tests, and every `def` is named somewhere besides its declaration.
+  * every Hadoop conf the sources build or ship behind `ShippedConf`.
+  * Keeps the jar a library: only the three entry points define a
+  * `main`, every `graft.core` object is used by other library code,
+  * not only by tests, and every `def` is named somewhere besides its
+  * declaration.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -95,18 +97,15 @@ class SourceGuardSpec extends AnyFunSuite {
     // a whole shipped conf costs every task milliseconds, and a conf
     // built from scratch re-parses XML and drops the session's settings;
     // only ShippedConf builds its base and that base's copies
-    assert(sources.exists(_.getName == "ShippedConf.scala"))
+    val files = sources
+    assert(files.exists(_.getName == "ShippedConf.scala"))
     val hits = for {
-      f <- sources
-      if f.getPath.contains("/graft/sources/")
-      (l, i) <- read(f).split("\n").zipWithIndex
-      t = l.trim
-      if !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/**"))
-      m <- """SerializableConfiguration|new\s+Configuration\s*\(""".r
-        .findAllMatchIn(l)
-      if m.matched.startsWith("Serializable") ||
+      f <- files
+      if f.getPath.contains("/graft/sources/") &&
         f.getName != "ShippedConf.scala"
-    } yield s"${f.getPath}:${i + 1}: ${m.matched}"
+      m <- ("""SerializableConfiguration|""" +
+        """new\s+([\w.]+\.)?Configuration\s*\(""").r.findAllMatchIn(read(f))
+    } yield s"${f.getPath}: ${m.matched}"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
