@@ -136,10 +136,17 @@ object GraftFunctions {
         Cast(exprs(1), org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.LongType))),
       classOf[JaccardLongExpr]),
-    ("graft_array_sum",
+    ("graft_fststat",
       // no cast, like graft_dot: the kernel reads float and double
       // arrays as they are
-      exprs => ArraySumExpr(exprs.head), classOf[ArraySumExpr]),
+      exprs => FstStatExpr(exprs.head), classOf[FstStatExpr]),
+    ("graft_cube",
+      // an aggregate: the analyzer wraps it in an AggregateExpression
+      exprs => {
+        require(exprs.length == 4,
+          s"graft_cube takes 4 arguments, got ${exprs.length}")
+        CubeStack(exprs.head, exprs(1), exprs(2), exprs(3))
+      }, classOf[CubeStack]),
     ("graft_unit_convert", unitConvertBuilder, classOf[UnitConvertExpr]))
 
   /** Registers every native function on `spark`, unless it has them
@@ -192,12 +199,22 @@ object GraftFunctions {
     call_function("graft_dot", a, b)
   }
 
-  /** Left-fold double sum of a float/double array column via the native
-    * codegen kernel (bit-identical to the `aggregate` form).
+  /** fststat's per-record statistics of a float/double array column in
+    * one pass: `struct(min, max, sum, sumsq, min_pos, max_pos)`
+    * ([[FstStat]]).
     */
-  def arraySum(a: Column): Column = {
+  def fstStat(a: Column): Column = {
     SparkSession.getActiveSession.foreach(install)
-    call_function("graft_array_sum", a)
+    call_function("graft_fststat", a)
+  }
+
+  /** Aggregate: the group's cube, `struct(keys, cube)`, stacking the
+    * minimum-`rid` payload `d` of each distinct `key`, keys ascending
+    * or, when `ascending` is false or null, descending ([[CubeStack]]).
+    */
+  def cube(key: Column, rid: Column, d: Column, ascending: Column): Column = {
+    SparkSession.getActiveSession.foreach(install)
+    call_function("graft_cube", key, rid, d, ascending)
   }
 
   /** Per-element conversion of payload `d` from the row's unit

@@ -1,15 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression,
-  TernaryExpression, UnaryExpression, UnsafeArrayData}
+  GenericInternalRow, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType,
-  FloatType, StringType}
+  FloatType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd per-record payload kernels for fststat and unit_convert.
@@ -36,59 +36,88 @@ private[functions] object PayloadKernels {
     }
 }
 
-/** Left-fold sum of a float/double array in DOUBLE.
+/** The per-record statistics of fststat in one pass over a
+  * float/double array: `struct(min, max, sum, sumsq, min_pos, max_pos)`.
   *
-  * Semantically IDENTICAL to
-  * `aggregate(a, 0.0, (acc, x) => acc + x.cast(double))`: elements are
-  * widened to double and added LEFT-TO-RIGHT from 0.0, an empty array
-  * sums to 0.0, and any null element nulls the whole result.
+  *  - `min`/`max` equal `array_min`/`array_max`: null elements are
+  *    skipped, NaN is the largest value (`SQLOrderingUtil`; widening a
+  *    float keeps its order), the first of equal values is kept, and
+  *    both are null when no element is non-null.
+  *  - `sum`/`sumsq` equal `aggregate(a, 0.0, (acc, x) => acc +
+  *    x.cast(double))` and `graft_dot(a, a)`: left folds in DOUBLE
+  *    from 0.0 (an empty array sums to 0.0), null if any element is
+  *    null.
+  *  - `min_pos`/`max_pos` equal `array_position(a, min)` and
+  *    `array_position(a, max)`: the 1-based index of the first element
+  *    holding that value, null when `min`/`max` is null.
   */
-object ArraySum {
-  def compute(a: ArrayData, isFloat: Boolean): java.lang.Double = {
+object FstStat {
+  def compute(a: ArrayData, isFloat: Boolean): InternalRow = {
     val n = a.numElements()
     var sum = 0.0
+    var sumsq = 0.0
+    var anyNull = false
+    var lo = 0.0
+    var hi = 0.0
+    var loAt = -1
+    var hiAt = -1
     var i = 0
     while (i < n) {
-      if (a.isNullAt(i)) return null
-      sum += (if (isFloat) a.getFloat(i).toDouble else a.getDouble(i))
+      if (a.isNullAt(i)) anyNull = true
+      else {
+        val v = if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+        if (loAt < 0 || SQLOrderingUtil.compareDoubles(v, lo) < 0) {
+          lo = v; loAt = i
+        }
+        if (hiAt < 0 || SQLOrderingUtil.compareDoubles(v, hi) > 0) {
+          hi = v; hiAt = i
+        }
+        sum += v
+        sumsq += v * v
+      }
       i += 1
     }
-    java.lang.Double.valueOf(sum)
+    // the extremes are read back from the array, so they keep its bits
+    def at(j: Int): Any =
+      if (j < 0) null else if (isFloat) a.getFloat(j) else a.getDouble(j)
+    def pos(j: Int): Any = if (j < 0) null else j + 1L
+    new GenericInternalRow(Array[Any](at(loAt), at(hiAt),
+      if (anyNull) null else sum, if (anyNull) null else sumsq,
+      pos(loAt), pos(hiAt)))
   }
 }
 
-/** `graft_array_sum(a)` → double, for float/double arrays. */
-case class ArraySumExpr(child: Expression) extends UnaryExpression {
+/** `graft_fststat(a)` → `struct(min, max, sum, sumsq, min_pos,
+  * max_pos)`, for float/double arrays ([[FstStat]]).
+  */
+case class FstStatExpr(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     PayloadKernels.checkFloatingArray(prettyName, child.dataType)
 
-  override def dataType: DataType = DoubleType
+  private def elementType: DataType =
+    child.dataType.asInstanceOf[ArrayType].elementType
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("min", elementType), StructField("max", elementType),
+    StructField("sum", DoubleType), StructField("sumsq", DoubleType),
+    StructField("min_pos", LongType), StructField("max_pos", LongType)))
   override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_array_sum"
+  override def prettyName: String = "graft_fststat"
 
   private def isFloat = PayloadKernels.isFloatArray(child.dataType)
 
   override protected def nullSafeEval(a: Any): Any =
-    ArraySum.compute(a.asInstanceOf[ArrayData], isFloat)
+    FstStat.compute(a.asInstanceOf[ArrayData], isFloat)
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""
-      java.lang.Double ${ev.value}_r =
-        graft.functions.ArraySum.compute($a, $isFloat);
-      if (${ev.value}_r == null) {
-        ${ev.isNull} = true;
-      } else {
-        ${ev.value} = ${ev.value}_r.doubleValue();
-      }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.functions.FstStat.compute($a, $isFloat);")
 
   override protected def withNewChildInternal(
-      newChild: Expression): ArraySumExpr = copy(child = newChild)
+      newChild: Expression): FstStatExpr = copy(child = newChild)
 }
 
 /** Per-element unit conversion of a payload to a fixed target unit.

@@ -21,7 +21,7 @@ object Decode {
 
   import graft.core.Constants._
 
-  private type Named = Seq[(String, Column)]
+  private[ops] type Named = Seq[(String, Column)]
 
   /** `from` projected to `df`'s columns with `cols` set, in one
     * `select`, as a chain of `withColumn`s over `df` sets them: a name
@@ -39,7 +39,7 @@ object Decode {
     from.select(kept ++ added: _*)
   }
 
-  private def setColumns(df: DataFrame, cols: Named): DataFrame =
+  private[ops] def setColumns(df: DataFrame, cols: Named): DataFrame =
     setColumns(df, cols, df)
 
   /** P1 add_grid_column (/root/reference/fstpy/dataframe.py:20-46):
@@ -208,14 +208,25 @@ object Decode {
     */
   def addIpInfo(df: DataFrame): DataFrame = setColumns(df, ipCols)
 
+  /** Only `level` and `ip1_kind` of [[addIpInfo]], for operators that
+    * need no other ip column (the cube assembly).
+    */
+  private[ops] def addLevelAndKind(df: DataFrame): DataFrame =
+    setColumns(df, Seq("level" -> level, "ip1_kind" -> ip1Kind))
+
+  private def rawIp: Column = col("nomvar").isin(RawIpNomvars: _*)
+
+  private def level: Column = when(rawIp, col("ip1").cast("float"))
+    .otherwise(IpColumns.decodeValue(col("ip1")))
+
+  private def ip1Kind: Column = when(rawIp, lit(100))
+    .otherwise(IpColumns.decodeKind(col("ip1")))
+
   private def ipCols: Named = {
-    val rawIp = col("nomvar").isin(RawIpNomvars: _*)
     val noInterval = col("nomvar").isin(NoIntervalNomvars: _*)
 
-    val v1 = when(rawIp, col("ip1").cast("float"))
-      .otherwise(IpColumns.decodeValue(col("ip1")))
-    val k1 = when(rawIp, lit(100))
-      .otherwise(IpColumns.decodeKind(col("ip1")))
+    val v1 = level
+    val k1 = ip1Kind
     val v2 = when(rawIp, col("ip2").cast("float"))
       .otherwise(IpColumns.decodeValue(col("ip2")))
     val k2 = when(rawIp, lit(100))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -8,37 +8,36 @@ import graft.functions.GraftFunctions
   * /root/reference/fstpy/dataframe_utils.py:147-182) and the voir
   * listing projection (:117-140).
   *
-  * All stats are per-row, with no shuffle. The two sums run in the
-  * codegen'd primitive kernels `graft_array_sum` and `graft_dot(d, d)`
-  * (Spark's `aggregate` is `CodegenFallback`, which would box every
-  * element through an interpreted lambda); both fold left in DOUBLE
-  * from 0.0, so the result is deterministic and oracle-reproducible.
-  * argmin/argmax positions are 1-based (i,j) on the (ni,nj) field;
-  * first occurrence in Fortran storage order breaks ties.
+  * All stats are per-row, with no shuffle. fststat reads each payload
+  * once, in the codegen'd kernel `graft_fststat` (min, max, the sum
+  * and the sum of squares, both left folds in DOUBLE from 0.0, and the
+  * extrema positions), so the result is deterministic and
+  * oracle-reproducible. argmin/argmax positions are 1-based (i,j) on
+  * the (ni,nj) field; first occurrence in Fortran storage order breaks
+  * ties.
   */
 object Stats {
 
-  /** A1/M17 fststat: min/max/mean/std + (i,j) extrema positions. */
+  /** A1/M17 fststat: min/max/mean/std + (i,j) extrema positions, set in
+    * one projection (an existing column of the same name is replaced).
+    */
   def fststat(df: DataFrame): DataFrame = {
     graft.core.Checks.requireColumns(df, "fststat", "d", "ni", "nj")
-    val d = col("d")
-    val n = size(d).cast("double")
-    val mean = GraftFunctions.arraySum(d) / n
-    val posMin = array_position(d, array_min(d))
-    val posMax = array_position(d, array_max(d))
-    df.withColumn("min", array_min(d))
-      .withColumn("max", array_max(d))
-      .withColumn("mean", mean)
-      .withColumn("std", sqrt(greatest(lit(0.0),
-        GraftFunctions.dot(d, d) / n - mean * mean)))
-      .withColumn("min_pos_i",
-        (pmod(posMin - 1, col("ni").cast("long")) + 1).cast("int"))
-      .withColumn("min_pos_j",
-        (floor((posMin - 1) / col("ni").cast("long")) + 1).cast("int"))
-      .withColumn("max_pos_i",
-        (pmod(posMax - 1, col("ni").cast("long")) + 1).cast("int"))
-      .withColumn("max_pos_j",
-        (floor((posMax - 1) / col("ni").cast("long")) + 1).cast("int"))
+    val st = GraftFunctions.fstStat(col("d"))
+    val n = size(col("d")).cast("double")
+    val mean = st("sum") / n
+    val ni = col("ni").cast("long")
+    def i(pos: Column) = (pmod(pos - 1, ni) + 1).cast("int")
+    def j(pos: Column) = (floor((pos - 1) / ni) + 1).cast("int")
+    Decode.setColumns(df, Seq(
+      "min" -> st("min"),
+      "max" -> st("max"),
+      "mean" -> mean,
+      "std" -> sqrt(greatest(lit(0.0), st("sumsq") / n - mean * mean)),
+      "min_pos_i" -> i(st("min_pos")),
+      "min_pos_j" -> j(st("min_pos")),
+      "max_pos_i" -> i(st("max_pos")),
+      "max_pos_j" -> j(st("max_pos"))))
   }
 
   /** DuckDB twins of the fststat columns as (expr, alias) pairs. */

@@ -82,8 +82,13 @@ object FstWriter {
       "fstrec compact: src must not be nested under dst " +
         "(overwrite would truncate the source tree)")
     val records = spark.read.format("fstrec").load(src)
-    write(records, dst, maxRecordsPerFile = maxRecordsPerFile,
-      cleanup = false)
+    // a write task fills files of up to maxRecordsPerFile records, so
+    // the task count, not the scan's partition count, should follow
+    // the files the records need; the count reads only the directories
+    val files = math.max(1L,
+      (records.count() + maxRecordsPerFile - 1) / maxRecordsPerFile)
+    write(records.coalesce(math.min(files, Int.MaxValue).toInt), dst,
+      maxRecordsPerFile = maxRecordsPerFile, cleanup = false)
   }
 
   /** S8 `update` mode (/root/reference/fstpy/std_writer.py:102-131):
@@ -94,7 +99,10 @@ object FstWriter {
     * untouched. datev is recomputed from the new dateo + deet*npas
     * (fst_edit_dir keep_dateo=False semantics). Partitioning on `path`
     * guarantees each file is patched by exactly one task — no file is
-    * opened for write by two executors.
+    * opened for write by two executors. The partition count is fixed
+    * at the session's default parallelism: AQE would coalesce the
+    * small row shuffle of a plain `repartition(path)` into one
+    * partition, and one task would patch every file in turn.
     */
   def update(df: DataFrame): Unit = {
     val cols = Seq("path", "key", "nomvar", "typvar", "etiket", "ni",
@@ -105,7 +113,9 @@ object FstWriter {
     // the session's Hadoop conf, shipped to the tasks as its difference
     // from the base
     val shipped = ShippedConf(FstScan.sessionHadoopConf(df.sparkSession))
-    prepared.repartition(col("path")).foreachPartition {
+    prepared.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, col("path"))
+      .foreachPartition {
       (it: Iterator[org.apache.spark.sql.Row]) =>
         val conf = shipped.value
         // FileSystem construction is expensive: one per partition

@@ -87,9 +87,41 @@ class PlanLintSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hof.isEmpty, hof.map { case (op, p) => s"$op:\n$p" }
       .mkString("\n", "\n", ""))
     assert(plans.forall { case (op, p) =>
-      p.contains(if (op == "fststat") "graft_array_sum(" else
+      p.contains(if (op == "fststat") "graft_fststat(" else
         "graft_unit_convert(")
     })
+  }
+
+  test("cube plans stack payloads in one aggregate over one exchange") {
+    // a fixture catalog over a range, as above: two levels of TT with a
+    // duplicate, and one lon and one lat axis record
+    import org.apache.spark.sql.functions._
+    val cat = spark.range(5).select(col("id").as("rid"),
+      element_at(array(lit("TT"), lit("TT"), lit("TT"), lit(">>"),
+        lit("^^")), (col("id") + 1).cast("int")).as("nomvar"),
+      (lit(graft.core.IpCodec.encode(500f, 2)) + col("id") % 2).as("ip1"),
+      lit(0).as("ip2"), lit(7).as("ig1"), lit(8).as("ig2"),
+      lit(442998800L).as("datev"),
+      array(col("id").cast("float"), lit(1.5f)).as("d"))
+    val plans = Seq(
+      "toCube" -> graft.ops.Cubes.toCube(cat),
+      "toCubeTimeseries" -> graft.ops.Cubes.toCubeTimeseries(cat),
+      "toCubeWithCoords" -> graft.ops.Cubes.toCubeWithCoords(cat))
+    val bad = plans.flatMap { case (op, df) =>
+      val optimized = df.queryExecution.optimizedPlan.toString
+      val physical = df.queryExecution.executedPlan.toString
+      // a shuffle exchange, not BroadcastExchange or ReusedExchange
+      val shuffles = "(?<![A-Za-z])Exchange ".r.findAllIn(physical).size
+      Seq(
+        optimized.contains("lambdafunction(") ->
+          "holds a LambdaFunction (a CodegenFallback HOF)",
+        physical.contains("SortAggregate") -> "plans a SortAggregate",
+        !physical.contains("graft_cube(") -> "does not stack with graft_cube",
+        (shuffles != 1) -> s"plans $shuffles shuffle exchanges, not 1")
+        .collect { case (true, why) => s"$op $why:\n$physical" }
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+    assert(plans.forall(_._2.count() >= 1))
   }
 
   test("decodeMetadata decodes ips with the native codec, not a Column CASE tree") {

@@ -82,9 +82,9 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     GraftFunctions.install(spark)
     assert(dot == 42.0)
     // one function missing: install registers the whole set again
-    registry.dropFunction(FunctionIdentifier("graft_array_sum"))
+    registry.dropFunction(FunctionIdentifier("graft_fststat"))
     GraftFunctions.install(spark)
     assert(dot == 2.0)
-    assert(registry.functionExists(FunctionIdentifier("graft_array_sum")))
+    assert(registry.functionExists(FunctionIdentifier("graft_fststat")))
   }
 }

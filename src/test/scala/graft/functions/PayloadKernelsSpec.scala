@@ -155,20 +155,22 @@ class PayloadKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  // ---- graft_array_sum ----
+  // ---- graft_fststat ----
 
-  test("graft_array_sum == aggregate left fold, bit-for-bit") {
+  private def kernelSum = GraftFunctions.fstStat(col("d"))("sum")
+
+  test("graft_fststat sum == aggregate left fold, bit-for-bit") {
     val df = payloads("sum", randomRows ++ special)
-    assert(mismatches(df, GraftFunctions.arraySum(col("d")),
-      hofSum(col("d")), bitsD).isEmpty)
+    assert(mismatches(df, kernelSum, hofSum(col("d")), bitsD).isEmpty)
+    assert(mismatches(df, GraftFunctions.fstStat(col("d"))("sumsq"),
+      hofSumSq(col("d")), bitsD).isEmpty)
   }
 
-  test("graft_array_sum on array<double> and null/empty edge rows") {
+  test("graft_fststat sum on array<double> and null/empty edge rows") {
     val df = payloads("sum_edges", special)
       .withColumn("d", col("d").cast("array<double>"))
-    assert(mismatches(df, GraftFunctions.arraySum(col("d")),
-      hofSum(col("d")), bitsD).isEmpty)
-    val got = df.select(col("id"), GraftFunctions.arraySum(col("d")))
+    assert(mismatches(df, kernelSum, hofSum(col("d")), bitsD).isEmpty)
+    val got = df.select(col("id"), kernelSum)
       .collect().map(r => r.getInt(0) -> r.get(1)).toMap
     assert(got(special.indexOf(Seq())) == 0.0) // empty sums to 0.0
     assert(got(special.size) == null) // null array
@@ -196,6 +198,74 @@ class PayloadKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(bitsD(r.get(1)) == bitsD(r.get(3)), s"mean of id ${r.get(0)}")
       assert(bitsD(r.get(2)) == bitsD(r.get(4)), s"std of id ${r.get(0)}")
     }
+  }
+
+  /** fststat as it was built before `graft_fststat`: a chain of
+    * `withColumn`s over `array_min`/`array_max`, `array_position`,
+    * `graft_array_sum` (here its `aggregate` form, bit-identical to
+    * it) and `graft_dot`.
+    */
+  private def chainedFststat(df: DataFrame): DataFrame = {
+    val d = col("d")
+    val n = size(d).cast("double")
+    val mean = hofSum(d) / n
+    val posMin = array_position(d, array_min(d))
+    val posMax = array_position(d, array_max(d))
+    df.withColumn("min", array_min(d))
+      .withColumn("max", array_max(d))
+      .withColumn("mean", mean)
+      .withColumn("std", sqrt(greatest(lit(0.0),
+        GraftFunctions.dot(d, d) / n - mean * mean)))
+      .withColumn("min_pos_i",
+        (pmod(posMin - 1, col("ni").cast("long")) + 1).cast("int"))
+      .withColumn("min_pos_j",
+        (floor((posMin - 1) / col("ni").cast("long")) + 1).cast("int"))
+      .withColumn("max_pos_i",
+        (pmod(posMax - 1, col("ni").cast("long")) + 1).cast("int"))
+      .withColumn("max_pos_j",
+        (floor((posMax - 1) / col("ni").cast("long")) + 1).cast("int"))
+  }
+
+  private val tiesAndSigns: Seq[Seq[java.lang.Float]] = Seq[Seq[Any]](
+    Seq(0f, -0f), Seq(2f, 1f, 1f, 3f, 3f), Seq(Float.NaN, 1f, Float.NaN),
+    Seq(null, -0f, 0f, null), Seq(Float.NegativeInfinity, null),
+    Seq(Float.NaN)).map(_.map {
+      case null => null
+      case x: Float => java.lang.Float.valueOf(x)
+    })
+
+  test("fststat == the withColumn chain it replaced, bit-for-bit") {
+    val base = payloads("fststat_chain", randomRows ++ special ++ tiesAndSigns)
+      .withColumn("ni", (col("id") % 5 + 1).cast("int"))
+      .withColumn("nj", lit(1))
+    val stats = Seq("min", "max", "mean", "std", "min_pos_i", "min_pos_j",
+      "max_pos_i", "max_pos_j")
+    def bits(v: Any): Any = v match {
+      case f: Float => java.lang.Float.floatToRawIntBits(f)
+      case x: Double => java.lang.Double.doubleToRawLongBits(x)
+      case other => other
+    }
+    def run(df: DataFrame): Map[Int, Seq[Any]] =
+      df.select((col("id") +: stats.map(col)): _*).collect().map(r =>
+        r.getInt(0) -> r.toSeq.tail.map(bits)).toMap
+    // an empty array divides by a zero size, which fails under ANSI,
+    // in both forms; without ANSI its mean and std are null
+    val bad = Seq(true, false).flatMap { ansi =>
+      val df = if (ansi) base.filter(size(col("d")) =!= 0) else base
+      def both(tag: String): Seq[String] = {
+        val (got, want) = (run(graft.ops.Stats.fststat(df)),
+          run(chainedFststat(df)))
+        assert(got.size == df.count())
+        got.keys.toSeq.sorted.filter(i => got(i) != want(i)).map(i =>
+          s"$tag ansi=$ansi id $i: ${got(i)} != ${want(i)}")
+      }
+      withConf("spark.sql.ansi.enabled" -> ansi.toString) {
+        both("generated") ++ withConf(
+          "spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(both("interpreted"))
+      }
+    }
+    assert(bad.isEmpty, bad.take(10).mkString("\n", "\n", ""))
   }
 
   // ---- graft_unit_convert ----
@@ -265,9 +335,10 @@ class PayloadKernelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // no AQE wrapper, and "*(1)" marks WholeStageCodegen stage 1
     // covering the Project that hosts the kernel
     val arr = array(col("id").cast("float"), lit(-2f), lit(0.5f))
-    val sum = spark.range(4).select(GraftFunctions.arraySum(arr).as("s"))
+    val sum = spark.range(4).select(GraftFunctions.fstStat(arr)("sum")
+      .as("s"))
     assert(sum.queryExecution.executedPlan.toString
-      .contains("*(1) Project [graft_array_sum"))
+      .contains("*(1) Project [graft_fststat"))
     assert(sum.collect().map(_.getDouble(0)).max == 3 - 2 + 0.5)
     val conv = spark.range(4).select(GraftFunctions.unitConvert(arr,
       lit("celsius"), lit(1.0), "kelvin", 1.0).as("k"))

@@ -134,10 +134,11 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dst = "/tmp/graft_scan_spec_compact_dst"
     writeSmallFiles(src, rows = 400, perFile = 8)
     graft.sources.fst.FstWriter.compact(spark, src, dst)
-    val files = (d: String) =>
-      new java.io.File(d).listFiles().count(_.isFile)
-    assert(files(dst) < files(src) / 4,
-      s"expected far fewer files, got ${files(dst)} vs ${files(src)}")
+    val files = (d: String) => new java.io.File(d).listFiles()
+      .count(f => f.isFile && !FstScanSpec.hiddenName(f.getName))
+    // 400 records fit one file of maxRecordsPerFile (4096) records
+    assert(files(src) >= 50 && files(dst) == 1,
+      s"expected one file, got ${files(dst)} from ${files(src)}")
     val back = spark.read.format("fstrec").load(dst)
     assert(back.count() == 400)
     assert(back.select("ip1").distinct().count() == 400)
@@ -289,6 +290,53 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.sources.fst.FstWriter.compact(spark, s"graftsession://$local", dst)
       assert(ip1s(spark.read.format("fstrec").load(dst)) == (1 to 40))
     }
+    // the 5 files of 8 records become one: the scan's partition count
+    // (up to the session's 4 cores) does not set the file count
+    val left = new java.io.File("/tmp/graft_scan_spec_sessionfs_cdst")
+      .listFiles().map(_.getName).filterNot(FstScanSpec.hiddenName)
+    assert(left.length == 1, left.mkString(", "))
+  }
+
+  test("update patches files in parallel tasks, each file in one task") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerTaskEnd}
+    val path = "/tmp/graft_scan_spec_update_tasks"
+    writeSmallFiles(path, rows = 48, perFile = 4)
+    def files() = new java.io.File(path).listFiles().map(_.getName)
+    val before = files().count(n => !FstScanSpec.hiddenName(n))
+    assert(before >= 12)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        jobs.decrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          reads.add(m.shuffleReadMetrics.recordsRead))
+    }
+    val rows = spark.read.format("fstrec").load(path)
+      .withColumn("ip2", col("ip2") + 1)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.sources.fst.FstWriter.update(rows)
+      // task ends reach the listener before their job's end
+      val deadline = System.nanoTime() + 10000000000L
+      while (jobs.get() != 0 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the patch tasks read the rows from the path shuffle, each row once
+    val patching = reads.toArray.map(_.asInstanceOf[Long]).filter(_ > 0)
+    assert(patching.length > 1 && patching.sum == 48, patching.mkString(","))
+    // every file patched once: each record's ip2 went up by one, and no
+    // temp or backup file is left
+    val back = spark.read.format("fstrec").load(path)
+    assert(back.count() == 48 && back.filter(col("ip2") === 1).count() == 48)
+    val names = files()
+    assert(names.count(n => !FstScanSpec.hiddenName(n)) == before &&
+      !names.exists(n => n.contains(".updating") || n.contains(".updbak")),
+      names.mkString(", "))
   }
 
   test("a filesystem known only to the session's Hadoop conf feeds a stream") {
