@@ -106,8 +106,7 @@ object Api {
 
   /** Labeled-cube export (the reference's `to_cmc_xarray`):
     * level-stacked by default, validity-time-stacked with
-    * `timeseries = true`. With `coords` (level-stacked only) the grid
-    * axes are picked and collected when this is called.
+    * `timeseries = true`.
     */
   def toCube(df: DataFrame, timeseries: Boolean = false,
              coords: Boolean = true): DataFrame =

@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
 import graft.functions.GraftFunctions
 
 /** G5/§1.5: xarray-style cube assembly — pivot the record catalog into
@@ -14,8 +13,14 @@ import graft.functions.GraftFunctions
   * timeseries) it keeps the minimum-rid record's payload, then copies
   * the payloads, in the kind's level order, into one Fortran-ordered
   * array. The partial aggregate drops duplicate records before the
-  * one exchange. A group's buffer holds one payload per stack key, so
-  * its memory is bounded by one cube, not by the catalog.
+  * one exchange. A group's buffer holds at most one payload per stack
+  * key, so one buffer is bounded by one cube. A task, on the map side
+  * and on the reduce side alike, holds up to
+  * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` (128 by
+  * default) buffers before the aggregate falls back to sorting, and
+  * that heap is not tracked by Spark's memory manager: the per-task
+  * bound is that threshold times one cube (DESIGN.md, "Cubes in one
+  * aggregate, fststat in one pass").
   */
 object Cubes {
 
@@ -80,33 +85,27 @@ object Cubes {
     * lat (`^^`) axis arrays, like the reference's labeled-DataArray
     * export pulls them per grid
     * (/root/reference/fstpy/xarray_utils.py:140-203). One axis record
-    * per grid and axis is chosen deterministically (minimum rid).
-    *
-    * The axes are decided when this is called: one small job stacks
-    * each (grid, axis) group with `graft_cube` (a single layer: its
-    * minimum-rid record) and collects the result, one row per grid,
-    * to the driver. The returned plan broadcast-joins that local table
-    * into the cubes, so the cube aggregate's exchange is its only
-    * shuffle.
+    * per grid is chosen deterministically (minimum rid); the
+    * coordinate side is tiny (one row per grid) and broadcast-joins
+    * into the cube table.
     */
   def toCubeWithCoords(df0: DataFrame): DataFrame = {
     val df = withRid(df0)
     graft.core.Checks.requireColumns(df, "to_cube_with_coords",
       "nomvar", "rid", "d")
     val g = if (df.columns.contains("grid")) df else Decode.addGrid(df)
-    val picked = stacked(g.filter(col("nomvar").isin(">>", "^^")),
-      Seq("grid", "nomvar"), "nomvar", lit(true))
-      .select(col("grid"), col("nomvar"), col("stack.cube")).collect()
-    val axes = picked.groupBy(_.get(0)).toSeq.map { case (grid, rs) =>
-      def axis(nomvar: String) =
-        rs.find(_.getString(1) == nomvar).map(_.get(2)).orNull
-      Row(grid, axis(">>"), axis("^^"))
-    }
-    val d = g.schema("d").dataType
-    val axesDf = g.sparkSession.createDataFrame(
-      java.util.Arrays.asList(axes: _*), StructType(Seq(
-        StructField("grid", g.schema("grid").dataType),
-        StructField("lon", d), StructField("lat", d))))
-    toCube(g).join(broadcast(axesDf), Seq("grid"), "left")
+    // r13 optimization (guide §2.4): one coordinate scan instead of
+    // two — min(struct(rid, d)) picks the min-rid axis per nomvar in
+    // a single grouped pass (min skips the other nomvar's nulls), so
+    // the input is scanned once for both axes and once for the cube.
+    val axes = g.filter(col("nomvar").isin(">>", "^^"))
+      .groupBy("grid").agg(
+        min(when(col("nomvar") === ">>",
+          struct(col("rid"), col("d")))).as("lonr"),
+        min(when(col("nomvar") === "^^",
+          struct(col("rid"), col("d")))).as("latr"))
+      .select(col("grid"), col("lonr.d").as("lon"),
+        col("latr.d").as("lat"))
+    toCube(g).join(broadcast(axes), Seq("grid"), "left")
   }
 }

@@ -84,9 +84,11 @@ object FstWriter {
     val records = spark.read.format("fstrec").load(src)
     // a write task fills files of up to maxRecordsPerFile records, so
     // the task count, not the scan's partition count, should follow
-    // the files the records need; the count reads only the directories
-    val files = math.max(1L,
-      (records.count() + maxRecordsPerFile - 1) / maxRecordsPerFile)
+    // the files the records need; the count reads only the directories.
+    // The writer flushes after every record when the bound is below 1,
+    // so such a bound counts as 1 here.
+    val perFile = math.max(1, maxRecordsPerFile).toLong
+    val files = math.max(1L, (records.count() + perFile - 1) / perFile)
     write(records.coalesce(math.min(files, Int.MaxValue).toInt), dst,
       maxRecordsPerFile = maxRecordsPerFile, cleanup = false)
   }

@@ -160,6 +160,25 @@ class CubeOracleSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 
+  test("an axis record with a null rid is picked, as min(struct(rid, d)) does") {
+    val cat = catalog(6, 200).drop("path", "key")
+      .withColumn("nomvar", when(col("nomvar") === "HY" &&
+        col("rid") % 2 === 0, lit(">>")).otherwise(col("nomvar")))
+    val nullAxis = cat.filter(col("nomvar") === ">>").agg(max("rid")).head()
+      .getLong(0)
+    val withNull = cat.withColumn("rid",
+      when(col("rid") === nullAxis, lit(null)).otherwise(col("rid")))
+    // the null rid orders first, so its grid's lon is that record's d
+    val axis = withNull.filter(col("rid").isNull).select("grid", "d").head()
+    val lons = Cubes.toCubeWithCoords(withNull)
+      .filter(col("grid") === axis.getString(0)).select("lon").collect()
+    assert(lons.nonEmpty &&
+      lons.forall(r => bits(r.get(0)) == bits(axis.get(1))),
+      lons.map(r => bits(r.get(0))).mkString(", "))
+    assert(compare(Cubes.toCubeWithCoords(withNull),
+      CubeOracle.toCubeWithCoords(withNull)).isEmpty)
+  }
+
   test("a null payload nulls its cube and a null rid still fails") {
     val cat = catalog(5, 60).drop("path", "key")
     // the first pick of a cube variable's key: its cube turns null

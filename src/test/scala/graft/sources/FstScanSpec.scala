@@ -129,6 +129,20 @@ class FstScanSpec extends AnyFunSuite with BeforeAndAfterAll {
       Option(e2.getCause).exists(_.getMessage.contains("bogus")))
   }
 
+  test("compaction with maxRecordsPerFile 0 writes one record per file") {
+    // the writer flushes after every record below a bound of 1, and
+    // compaction keeps that
+    val src = "/tmp/graft_scan_spec_compact0_src"
+    val dst = "/tmp/graft_scan_spec_compact0_dst"
+    writeSmallFiles(src, rows = 16, perFile = 8)
+    graft.sources.fst.FstWriter.compact(spark, src, dst, maxRecordsPerFile = 0)
+    val files = new java.io.File(dst).listFiles()
+      .count(f => f.isFile && !FstScanSpec.hiddenName(f.getName))
+    assert(files == 16, s"$files files")
+    assert(spark.read.format("fstrec").load(dst).select("ip1").distinct()
+      .count() == 16)
+  }
+
   test("compaction rewrites many small files into few, verbatim") {
     val src = "/tmp/graft_scan_spec_compact_src"
     val dst = "/tmp/graft_scan_spec_compact_dst"
